@@ -146,34 +146,35 @@ object IndexBuilder {
     toHex(md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
-  /** phase timing to stderr when GRAFT_BUILD_TIMING=1: wall, process CPU,
-    * and effective cores (cpu/wall) — the saturation evidence for the
-    * N->4N scaling analysis in BENCH/BASELINE.md */
-  private val timing = sys.env.get("GRAFT_BUILD_TIMING").contains("1")
-  private def processCpuNs(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
-      case _ => -1L
+  /** Runs `side` on a daemon thread named `sideThread` while `main` runs
+    * on the caller, and returns both results. Both sides are ALWAYS joined
+    * before this returns, even when one fails: an orphaned side job must
+    * not race a retry's staging cleanup. A failure is rethrown as the
+    * original exception (never an ExecutionException wrapper); when both
+    * sides fail, `main`'s failure wins and carries the side's as
+    * suppressed. The side runs inside a FutureTask, so the call sites of
+    * its Spark jobs carry that frame (a per-phase trace attributes the
+    * overlapped jobs by it). */
+  private[graft] def concurrently[A, B](sideThread: String)(main: => A, side: => B): (A, B) = {
+    val task = new java.util.concurrent.FutureTask[B](() => side)
+    val t = new Thread(task, sideThread)
+    t.setDaemon(true)
+    t.start()
+    // every Throwable, fatal ones too: the side is joined whatever happens
+    def attempt[T](f: => T): Either[Throwable, T] =
+      try Right(f) catch { case e: Throwable => Left(e) }
+    val a = attempt(main)
+    val b = attempt(task.get()).left.map {
+      case e: java.util.concurrent.ExecutionException => e.getCause
+      case e => e
     }
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum
-  }
-  private def timed[T](name: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val c0 = processCpuNs()
-    val g0 = gcMs()
-    val r = f
-    if (timing) {
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = (processCpuNs() - c0) / 1e9
-      val gc = (gcMs() - g0) / 1e3
-      System.err.println(
-        f"[build-timing] $name: $wall%.2f s wall, $cpu%.2f s cpu, " +
-          f"${cpu / math.max(wall, 1e-9)}%.1f cores, $gc%.1f s gc-stw")
+    (a, b) match {
+      case (Right(x), Right(y)) => (x, y)
+      case (Left(e), sideResult) =>
+        sideResult.left.foreach(e.addSuppressed)
+        throw e
+      case (_, Left(e)) => throw e
     }
-    r
   }
 
   /** Full build with resume: segments whose manifest exists are skipped.
@@ -211,7 +212,7 @@ object IndexBuilder {
           readManifests(fs, indexDir).map(_.segId)
         } else {
           // resume / explicit checkpoint batching: layout from the row count
-          val numDocs = timed("corpus count")(corpus.count())
+          val numDocs = corpus.count()
           val numSegments = math.max(1, ((numDocs + segSize - 1) / segSize).toInt)
           val remaining = (0 until numSegments).filterNot(done)
           remaining.grouped(cfg.segmentsPerBatch).foreach { batch =>
@@ -229,7 +230,7 @@ object IndexBuilder {
         numSegments = manifests.size,
         segSize = segSize,
         analyzer = cfg.analyzer.asString)
-      timed("lexicon")(writeLexicon(spark, indexDir))
+      writeLexicon(spark, indexDir)
       writeStats(fs, indexDir, stats)
       writeToc(fs, indexDir)
       BuildReport(stats, todo, done.toSeq.sorted)
@@ -301,19 +302,7 @@ object IndexBuilder {
       // against it (guide §2.6 overlap: the small docstats write back-fills
       // executors left idle by the postings job's tail) without racing the
       // cache computation partition by partition
-      if (cfg.persistAnalyzed) timed("analyze(materialize)")(analyzed.count())
-      val docstatsF: java.util.concurrent.FutureTask[Unit] =
-        new java.util.concurrent.FutureTask(() =>
-          timed("docstats write") {
-            analyzed
-              .map(a => DocStat(a.segId, a.docId, a.repo, a.path, a.commit, a.lang,
-                a.sha, a.rawLen, a.lenByte))
-              .write.mode(SaveMode.Overwrite).partitionBy("segId")
-              .parquet(s"$staging/docstats")
-          })
-      val docstatsT = new Thread(docstatsF, "graft-docstats-write")
-      docstatsT.setDaemon(true)
-      docstatsT.start()
+      if (cfg.persistAnalyzed) analyzed.count()
 
       // Phase 1 (map-side combine, G1/G2): per input partition, stream docs
       // in docId order and append each (docId, tf, lenByte, positions) to a
@@ -321,7 +310,7 @@ object IndexBuilder {
       // RUN per term at every segment boundary. Salt = source-partition id:
       // a hot term never materializes more than one input split's postings
       // in memory, and only COMPRESSED runs ever hit the shuffle.
-      val runs: Dataset[Run] = analyzed.mapPartitions { docsIt =>
+      lazy val runs: Dataset[Run] = analyzed.mapPartitions { docsIt =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
         new Iterator[Run] {
           private val pending = new java.util.ArrayDeque[Run]()
@@ -381,7 +370,7 @@ object IndexBuilder {
         if (cfg.phase2Partitions > 0) cfg.phase2Partitions
         else batch.map(b => math.max(1, b.size))
           .getOrElse(spark.sessionState.conf.numShufflePartitions * 4)
-      val segRows = runs
+      lazy val segRows = runs
         .repartition(numParts, $"segId")
         .sortWithinPartitions("segId", "term", "salt")
         .mapPartitions { it =>
@@ -409,44 +398,31 @@ object IndexBuilder {
           }
         }
 
-      // run the big postings job; ALWAYS join the overlapped docstats write
-      // before leaving this frame (even on failure — an orphaned writer
-      // thread must not race a retry's staging cleanup), preferring the
-      // main job's failure when both fail
-      var mainFailure: Throwable = null
-      try {
-        timed("postings agg+encode+write") {
-          segRows.write.mode(SaveMode.Overwrite).partitionBy("segId")
-            .parquet(s"$staging/segments")
-        }
-      } catch { case t: Throwable => mainFailure = t }
-      try docstatsF.get()
-      catch { case t: Throwable => if (mainFailure == null) mainFailure = t }
-      if (mainFailure != null) throw mainFailure
+      // the big postings job, overlapped with the docstats write. The two
+      // Datasets above are lazy so they are built on this thread after the
+      // docstats writer has started: its small job reaches the scheduler
+      // first instead of queueing behind the postings job's tasks.
+      concurrently("graft-docstats-write")(
+        segRows.write.mode(SaveMode.Overwrite).partitionBy("segId")
+          .parquet(s"$staging/segments"),
+        analyzed
+          .map(a => DocStat(a.segId, a.docId, a.repo, a.path, a.commit, a.lang,
+            a.sha, a.rawLen, a.lenByte))
+          .write.mode(SaveMode.Overwrite).partitionBy("segId")
+          .parquet(s"$staging/docstats"))
 
       // per-segment metrics for the manifest, computed from the written
       // files; the two read-backs scan DIFFERENT staging dirs and run
       // concurrently (§2.6 again — docAgg's tiny scan fills segAgg's tail)
-      val docAggF: java.util.concurrent.FutureTask[Map[Int, (Long, Long, Long, Long)]] =
-        new java.util.concurrent.FutureTask(() =>
-          timed("manifest docAgg")(spark.read.parquet(s"$staging/docstats")
-            .groupBy($"segId")
-            .agg(count(lit(1)).as("docCount"), min($"docId").as("lo"),
-              max($"docId").as("hi"), sum($"rawLen").as("rawLenSum"))
-            .collect()
-            .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-            .toMap))
-      val docAggT = new Thread(docAggF, "graft-docagg")
-      docAggT.setDaemon(true)
-      docAggT.start()
-      val segAgg =
-        try timed("manifest segAgg")(postingMetrics(spark, s"$staging/segments"))
-        catch {
-          case t: Throwable =>
-            try docAggF.get() catch { case _: Throwable => () } // join, keep primary
-            throw t
-        }
-      val docAgg = docAggF.get()
+      val (segAgg, docAgg) = concurrently("graft-docagg")(
+        postingMetrics(spark, s"$staging/segments"),
+        spark.read.parquet(s"$staging/docstats")
+          .groupBy($"segId")
+          .agg(count(lit(1)).as("docCount"), min($"docId").as("lo"),
+            max($"docId").as("hi"), sum($"rawLen").as("rawLenSum"))
+          .collect()
+          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          .toMap)
 
       // promote staging -> final, then commit the manifest (the commit point)
       val toCommit = batch.getOrElse((segAgg.keySet ++ docAgg.keySet).toSeq.sorted)
@@ -558,26 +534,16 @@ object IndexBuilder {
       agg.count() // materialize once; both writers below read the cache
       // base lexicon and gram sidecar write to DIFFERENT dirs from the same
       // cached aggregate — overlap them (guide §2.6)
-      val gramsF = new java.util.concurrent.FutureTask[Unit](() =>
+      concurrently("graft-lexgrams-write")(
+        agg.repartitionByRange(lexPartitions, $"term")
+          .sortWithinPartitions("term")
+          .write.mode(SaveMode.Overwrite).parquet(lexiconDir(indexDir)),
         agg.select($"term").as[String]
           .flatMap(t => grams3(t).iterator.map(g => (g, t)))
           .toDF("gram", "term")
           .repartitionByRange(lexPartitions, $"gram")
           .sortWithinPartitions("gram", "term")
           .write.mode(SaveMode.Overwrite).parquet(lexgramsDir(indexDir)))
-      val gramsT = new Thread(gramsF, "graft-lexgrams-write")
-      gramsT.setDaemon(true)
-      gramsT.start()
-      try {
-        agg.repartitionByRange(lexPartitions, $"term")
-          .sortWithinPartitions("term")
-          .write.mode(SaveMode.Overwrite).parquet(lexiconDir(indexDir))
-      } catch {
-        case t: Throwable =>
-          try gramsF.get() catch { case _: Throwable => () } // join, keep primary
-          throw t
-      }
-      gramsF.get()
     } finally { agg.unpersist(); () }
     // the full rebuild covers every live segment, so any pending delta
     // lexicons are superseded — GC them (a crash before this delete leaves
@@ -815,7 +781,7 @@ object IndexBuilder {
           val tok = """"token":"([0-9a-f]+)"""".r.findFirstMatchIn(header).map(_.group(1))
           val n = """"n":(\d+)""".r.findFirstMatchIn(header).map(_.group(1).toInt)
           if (tok.contains(manifestNamesToken(fs, indexDir)) && n.contains(rest.size))
-            return rest.map(parseManifest).sortBy(_.segId)
+            return rest.map(parseManifest(_, p.toString)).sortBy(_.segId)
         case _ => ()
       }
     }
@@ -854,14 +820,23 @@ object IndexBuilder {
         val in = fs.open(s.getPath)
         val txt = scala.io.Source.fromInputStream(in).mkString
         in.close()
-        parseManifest(txt)
+        parseManifest(txt, s.getPath.toString)
       }
       .sortBy(_.segId)
   }
 
-  private def parseManifest(json: String): SegmentManifest = {
-    def l(k: String): Long = s""""$k":(-?\\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    def s(k: String): String = (s""""$k":"([^"]*)"""").r.findFirstMatchIn(json).get.group(1)
+  /** the value of a required `"key":<valueRe>` field of the flat JSON
+    * record `json` read from `path`; a missing key (a truncated or foreign
+    * file) fails naming both */
+  private def requiredField(json: String, path: String, key: String,
+                            valueRe: String): String =
+    s""""$key":$valueRe""".r.findFirstMatchIn(json).map(_.group(1)).getOrElse(
+      throw new IllegalStateException(
+        s"$path: missing or malformed \"$key\" (truncated or foreign file?)"))
+
+  private def parseManifest(json: String, path: String): SegmentManifest = {
+    def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
+    def s(k: String): String = requiredField(json, path, k, "\"([^\"]*)\"")
     def ints(k: String): Seq[Int] = (s""""$k":\\[([0-9,]*)\\]""").r.findFirstMatchIn(json)
       .map(_.group(1)).filter(_.nonEmpty)
       .map(_.split(',').toSeq.map(_.toInt)).getOrElse(Seq.empty)
@@ -886,10 +861,11 @@ object IndexBuilder {
   }
 
   def readStats(fs: FileSystem, indexDir: String): IndexStats = {
-    val in = fs.open(new Path(statsPath(indexDir)))
+    val path = statsPath(indexDir)
+    val in = fs.open(new Path(path))
     val json = scala.io.Source.fromInputStream(in).mkString
     in.close()
-    def l(k: String): Long = s""""$k":(-?\\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
+    def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     val analyzer = """"analyzer":"([^"]*)"""".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(graft.analysis.AnalyzerSpec.Standard.asString)
     // unstamped stats.json = a pre-round-5 (<=v6) layout; callers that care

@@ -5,9 +5,8 @@ import PostingsCodec.TermCursor
 
 /** Partition-local top-k kernel (SURVEY.md §2.6 Q7, §2.7): evaluates the
   * query tree over ONE segment's posting lists and returns that segment's
-  * top-k, to be merged across segments by the driver. Runs inside
-  * `mapGroups`/`mapPartitions` on executors (BASELINE.json:6
-  * "partition-local mapPartitions kernel").
+  * top-k, to be merged across segments by the driver. Runs inside the
+  * per-segment runner's `mapPartitions` on executors (Searcher.perSegment).
   *
   * Pruning (all score-equivalent to exhaustive evaluation — property-tested):
   *  - OR root: WAND pivoting on static per-child maxScore, refined by
@@ -28,6 +27,16 @@ object Kernel {
   /** posting-list map key: multi-field indexes key lists by (field, term);
     * '\u0000' never occurs in analyzed terms (\w and '.') or field names */
   def key(field: String, term: String): String = field + "\u0000" + term
+
+  /** Kernel key of a stored posting row of `field`. A real term keys as
+    * (field, term). The persisted match-all pseudo rows (D14) key as the
+    * lists QEvery looks up: the all-docs row as ("", EveryTerm), the list
+    * of a bare `*`; the field's non-empty row as (field, EveryTerm), the
+    * list of `field:*`. */
+  def rowKey(field: String, term: String): String =
+    if (term == Q.EveryTerm) key("", Q.EveryTerm)
+    else if (term == Q.EveryNonEmptyTerm) key(field, Q.EveryTerm)
+    else key(field, term)
 
   final case class Hit(docId: Long, score: Double)
 
@@ -199,17 +208,14 @@ object Kernel {
   }
 
   /** Single-field segment top-k (lists keyed by plain term, one stats):
-    * the pinned-core surface; delegates to the multi-field kernel with
-    * every term on the default field. */
+    * the pinned-core surface; re-keys every row as a row of the default
+    * field and delegates to the multi-field kernel. */
   def topK(q: Q, lists: Map[String, TermList], stats: BM25.CorpusStats,
            k: Int, prune: Boolean = true,
            deleted: Long => Boolean = NoDeletes,
            w: Weighting = BM25Weighting): Array[Hit] =
-    topKMulti(q, lists.map { case (t, tl) =>
-      // the all-docs pseudo list keys under the EMPTY field (bare `*`)
-      (if (t.startsWith(Q.EveryTerm)) key(t.substring(Q.EveryTerm.length), Q.EveryTerm)
-       else key(Q.DefaultField, t)) -> tl
-    }, _ => stats, k, prune, deleted, w)
+    topKMulti(q, lists.map { case (t, tl) => rowKey(Q.DefaultField, t) -> tl },
+      _ => stats, k, prune, deleted, w)
 
   /** Segment top-k over field-keyed lists. `prune = false` forces
     * exhaustive evaluation (the WAND-equivalence property-test path).
@@ -259,13 +265,11 @@ object Kernel {
 
   /** EVERY matching docId in the segment (the delete-by-query feed):
     * exhaustive matcher traversal, no heap, tombstoned docs excluded.
-    * Lists are plain-term keyed like topK. */
-  def allMatches(q: Q, lists: Map[String, TermList], stats: BM25.CorpusStats,
+    * Lists are field-keyed like topKMulti. */
+  def allMatches(q: Q, lists: Map[String, TermList],
+                 statsOf: String => BM25.CorpusStats,
                  deleted: Long => Boolean = NoDeletes): Iterator[Long] = {
-    val m = buildMatcher(q, lists.map { case (t, tl) =>
-      (if (t.startsWith(Q.EveryTerm)) key(t.substring(Q.EveryTerm.length), Q.EveryTerm)
-       else key(Q.DefaultField, t)) -> tl
-    }, _ => stats)
+    val m = buildMatcher(q, lists, statsOf)
     new Iterator[Long] {
       private var cur = settle(m.docId)
       private def settle(d0: Long): Long = {
@@ -285,13 +289,11 @@ object Kernel {
 
   /** every match WITH its score (the collapse/grouping feed — no top-k
     * heap; same matcher tree as allMatches, scored at each doc) */
-  def allScored(q: Q, lists: Map[String, TermList], stats: BM25.CorpusStats,
+  def allScored(q: Q, lists: Map[String, TermList],
+                statsOf: String => BM25.CorpusStats,
                 deleted: Long => Boolean = NoDeletes,
                 w: Weighting = BM25Weighting): Iterator[Hit] = {
-    val m = buildMatcher(q, lists.map { case (t, tl) =>
-      (if (t.startsWith(Q.EveryTerm)) key(t.substring(Q.EveryTerm.length), Q.EveryTerm)
-       else key(Q.DefaultField, t)) -> tl
-    }, _ => stats, w)
+    val m = buildMatcher(q, lists, statsOf, w)
     new Iterator[Hit] {
       private def settle(): Unit =
         while (m.docId != Long.MaxValue && deleted(m.docId)) m.advance()

@@ -1,20 +1,19 @@
 package graft.search
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.build.MultiFieldIndex
 import graft.build.MultiFieldIndex.FieldSpec
-import graft.model.SegRead
 
 /** Search over a multi-field index (field-qualified queries — `path:term`,
   * `title:"a phrase"` — with per-field BM25 stats and schema/query boosts).
   *
-  * Same shuffle-light plan as the single-field Searcher: per field, one
-  * pruned lexicon lookup + one pruned segment scan restricted to that
-  * field's query terms; the per-field row sets union (docId ranges align
-  * across fields by construction) and one kernel per segment evaluates the
-  * whole tree with field-keyed lists. No corpus-wide shuffle.
+  * Schema concerns only: open-time layout checks, schema boosts, typed-value
+  * encoding and the multifield parse. The query itself runs on Searcher's
+  * one query core with this schema's field handles (per field, one pruned
+  * lexicon lookup + one pruned segment scan; docId ranges align across
+  * fields by construction, so one kernel per segment evaluates the whole
+  * tree with field-keyed lists).
   */
 object MultiFieldSearcher {
 
@@ -70,6 +69,7 @@ object MultiFieldSearcher {
       case QNot(p, n)      => QNot(applyFieldBoosts(p, boostOf), applyFieldBoosts(n, boostOf))
       case QAndMaybe(p, m) => QAndMaybe(applyFieldBoosts(p, boostOf), applyFieldBoosts(m, boostOf))
       case QRequire(p, f)  => QRequire(applyFieldBoosts(p, boostOf), applyFieldBoosts(f, boostOf))
+      case QOtherwise(a, b) => QOtherwise(applyFieldBoosts(a, boostOf), applyFieldBoosts(b, boostOf))
       case other           => other
     }
   }
@@ -105,6 +105,7 @@ object MultiFieldSearcher {
       case QSpanOr(cs)     => QSpanOr(cs.map(rec))
       case QSpanNot(i, e)  => QSpanNot(rec(i), rec(e))
       case QSpanBi(a, b, m) => QSpanBi(rec(a), rec(b), m)
+      case QOtherwise(a, b) => QOtherwise(rec(a), rec(b))
       case other           => other
     }
     rec(q)
@@ -205,95 +206,8 @@ object MultiFieldSearcher {
 
   def searchQ(spark: SparkSession, mh: MultiHandle, qParsed: Q, k: Int = 10,
               prune: Boolean = true,
-              weighting: Weighting = BM25Weighting): Dataset[SearchHit] = {
-    import spark.implicits._
-    val q0 = encodeTyped(applyFieldBoosts(qParsed, mh.boostOf), mh.typeOf)
-    // multiterm expansion against the NODE'S FIELD's lexicon (same pruned
-    // scan regimes as the single-field path)
-    val q = if (q0.hasPrefix) {
-      QueryRewrite.expandPrefixes(q0, mq =>
-        mh.handles.get(mq.field) match {
-          case None    => Seq.empty
-          case Some(h) => Searcher.scanMulti(spark, h, mq)
-        })
-    } else q0
-    val ft = q.fieldTerms
-    if (q == QEmpty || (ft.isEmpty && !q.hasEvery))
-      return spark.emptyDataset[SearchHit]
-
-    // per-field global dfs (pruned lexicon lookups, memoized per handle)
-    val dfs: Map[(String, String), Long] = ft.groupBy(_._1).flatMap {
-      case (fname, pairs) =>
-        mh.handles.get(fname) match {
-          case None    => pairs.map(p => (fname, p._2) -> 0L)
-          case Some(h) =>
-            Searcher.termDfs(spark, h, pairs.map(_._2))
-              .map { case (t, d) => (fname, t) -> d }
-        }
-    }
-    // total function: a query node on an unknown field scores nothing, but
-    // phrase matcher construction reads the field's stats before the lists
-    // miss is detected
-    val statsByField: Map[String, BM25.CorpusStats] =
-      mh.handles.map { case (n, h) => n -> h.stats }
-        .withDefaultValue(BM25.CorpusStats(0, 0))
-    val delRanges = mh.defaultHandle.delRanges
-    val delDir = mh.defaultHandle.indexDir
-    val qLocal = q
-    val kLocal = k
-    val pruneLocal = prune
-    val wLocal = weighting
-
-    // one pruned scan per field, unioned with a field tag; match-all pseudo
-    // lists are PERSISTED reserved-term rows (D14) read through the same
-    // pushed `term IN` scans ("" = the default handle's all-docs list;
-    // `field:*` = that field's non-empty list, re-keyed to EveryTerm so the
-    // kernel finds it under key(field, EveryTerm))
-    val rows = mh.handles.toSeq.sortBy(_._1).flatMap { case (fname, h) =>
-      val terms = ft.collect { case (f, t) if f == fname => t }
-      if (terms.isEmpty) None
-      else Some(h.segments
-        .filter($"term".isin(terms.toSeq: _*))
-        .select(lit(fname).as("field"), $"term", $"df", $"maxTf", $"blocks", $"segId"))
-    } ++ q.everyFields.toSeq.sorted.flatMap {
-      case "" => Some(mh.defaultHandle.segments
-        .filter($"term" === Q.EveryTerm)
-        .select(lit("").as("field"), $"term", $"df", $"maxTf", $"blocks", $"segId"))
-      case f => mh.handles.get(f).map(h =>
-        h.segments
-          .filter($"term" === Q.EveryNonEmptyTerm)
-          .select(lit(f).as("field"), lit(Q.EveryTerm).as("term"),
-            $"df", $"maxTf", $"blocks", $"segId"))
-    }
-    if (rows.isEmpty) return spark.emptyDataset[SearchHit]
-
-    // co-locate each segment's PER-FIELD row sets with one column
-    // repartition + task-local hash-map grouping (r6): the union's rows for
-    // one segId arrive from different field indexes' files, so the exchange
-    // is required here — but groupByKey's per-partition SORT is not
-    val perSegment = rows.reduce(_ unionByName _)
-      .repartition(col("segId"))
-      .as[(String, String, Int, Int, Array[Byte], Int)]
-      .mapPartitions { it =>
-        val bySeg = new java.util.LinkedHashMap[Int,
-          scala.collection.mutable.HashMap[String, Kernel.TermList]]()
-        it.foreach { case (fname, term, df, maxTf, blocks, segId) =>
-          var lists = bySeg.get(segId)
-          if (lists == null) {
-            lists = scala.collection.mutable.HashMap.empty[String, Kernel.TermList]
-            bySeg.put(segId, lists)
-          }
-          Kernel.mergeList(lists, Kernel.key(fname, term),
-            Kernel.TermList(blocks, maxTf, dfs.getOrElse((fname, term), df.toLong)))
-        }
-        import scala.jdk.CollectionConverters._
-        bySeg.entrySet().iterator().asScala.flatMap { e =>
-          val deleted = Searcher.tombstoneProbe(delRanges, delDir, e.getKey)
-          Kernel.topKMulti(qLocal, e.getValue.toMap, statsByField, kLocal,
-              pruneLocal, deleted, wLocal)
-            .iterator.map(h => SearchHit(h.docId, h.score))
-        }
-      }
-    perSegment.orderBy($"score".desc, $"docId".asc).limit(k)
-  }
+              weighting: Weighting = BM25Weighting): Dataset[SearchHit] =
+    Searcher.searchFields(spark, Searcher.Fields(mh.handles, mh.defaultField),
+      encodeTyped(applyFieldBoosts(qParsed, mh.boostOf), mh.typeOf),
+      k, prune, weighting)
 }

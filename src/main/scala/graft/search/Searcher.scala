@@ -9,17 +9,29 @@ import graft.model.{LexRow, SegRead}
 
 /** Distributed BM25 top-k search over the segmented index (SURVEY.md §3.2).
   *
+  * ONE query core serves every search entry point, single- and multi-field
+  * alike: it works on a map from field name to IndexHandle plus a default
+  * field (`Fields`). A single-field index is a schema with one field,
+  * `Map(Q.DefaultField -> handle)`; MultiFieldSearcher calls the same core
+  * with its schema's handles after applying boosts and typed encoding.
+  *
   * Query path — deliberately shuffle-light (the p95 lever):
-  *  1. driver: parse + analyze the query (Q1), read corpus stats;
-  *  2. one pruned scan of the lexicon for the <=|terms| global dfs
+  *  1. driver: parse + analyze the query, expand multiterm nodes against
+  *     their field's lexicon, resolve Otherwise nodes (`prepare`);
+  *  2. per field, one pruned lexicon lookup for the <=|terms| global dfs
   *     (term-sorted parquet -> pushed `term IN (...)` prunes row groups);
-  *  3. one pruned scan of the segments for the query terms' posting rows
-  *     (same pushdown; `content` never read — column pruning);
-  *  4. per-segment mapGroups kernel (block-max WAND) -> k rows per segment;
+  *  3. per field, one pruned scan of the segments for the query terms'
+  *     posting rows (same pushdown; `content` never read — column pruning);
+  *  4. the per-segment runner (`perSegment`) folds each segment's rows into
+  *     field-keyed lists and runs the kernel (block-max WAND) -> k rows per
+  *     segment;
   *  5. driver/TakeOrdered merge of numSegments x k tiny rows, tie rule D4.
   *
-  * The only exchange moves <= numSegments * |terms| compressed posting rows
-  * — no corpus-wide shuffle ever happens at query time.
+  * Two physical shapes, chosen from the layout, never by an option: one
+  * field read from a colocated layout runs the kernel inside the scan's
+  * tasks with no exchange; otherwise one small exchange moves <=
+  * numSegments * |terms| compressed posting rows. No corpus-wide shuffle
+  * ever happens at query time.
   */
 object Searcher {
 
@@ -260,7 +272,7 @@ object Searcher {
     * one suggest scan per unknown term (lexicon-sized, never corpus-sized). */
   def correctQuery(spark: SparkSession, handle: IndexHandle, query: String,
                    maxDist: Int = 2): Q = {
-    val q0 = QueryParser.parse(query, chainOf = _ => handle.chain)
+    val q0 = parse(handle, query)
     val dfs = termDfs(spark, handle, q0.terms)
     val unknown = dfs.collect { case (t, 0L) => t }.toSet
     if (unknown.isEmpty) return q0
@@ -328,45 +340,95 @@ object Searcher {
       .toMap
   }
 
-  /** Pruned posting rows for the query's terms, plus the per-segment
-    * match-all pseudo lists when the query needs them (QEvery).
-    *
-    * The pseudo lists are PERSISTED per segment at build time (decision
-    * D14): two reserved-term rows — Q.EveryTerm (all docs) and
-    * Q.EveryNonEmptyTerm (docs with >= 1 token) — written through the
-    * ordinary run/merge machinery, so they ride THIS same pushed `term IN`
-    * scan. A `NOT x` / `*` / `field:*` query therefore reads a handful of
-    * pruned posting rows, never a corpus-wide docstats scan (the round-3
-    * in-flight builder scanned every live doc's stats per query). Deletes
-    * overlay via the kernel's tombstone probe, so the persisted list stays
-    * a pure function of the segment. Scopes: "" = all docs (bare `*`); the
-    * default field = the non-empty list, re-keyed EveryTerm + field so the
-    * kernel scopes it; any OTHER field ships nothing -> EmptyMatcher
-    * (RefModel: None). */
-  private[search] def queryRows(spark: SparkSession, handle: IndexHandle,
-                                terms: Set[String],
-                                everyFields: Set[String]): Dataset[SegRead] = {
-    import spark.implicits._
-    val wantAll = everyFields.contains("")
-    val wantField = everyFields.contains(Q.DefaultField)
-    val stored = terms ++
-      (if (wantAll) Set(Q.EveryTerm) else Set.empty) ++
-      (if (wantField) Set(Q.EveryNonEmptyTerm) else Set.empty)
-    val rows = handle.segments
-      .filter($"term".isin(stored.toSeq: _*))
-      .select($"term", $"df", $"maxTf", $"blocks", $"segId")
-      .as[SegRead]
-    if (!wantField) rows
-    else rows.map(r =>
-      if (r.term == Q.EveryNonEmptyTerm) r.copy(term = Q.EveryTerm + Q.DefaultField)
-      else r)
+  /** The query core's view of an index: one IndexHandle per field plus the
+    * default field, whose handle serves the all-docs list of a bare `*` and
+    * the tombstones (field indexes share one docId space and one deletes
+    * set). A single-field index is the one-field case `single(handle)`;
+    * MultiFieldSearcher passes its schema's handles after its own rewrites. */
+  private[search] final case class Fields(handles: Map[String, IndexHandle],
+                                          default: String) {
+    def defaultHandle: IndexHandle = handles(default)
+    /** total: a node on an unknown field scores nothing, but phrase matcher
+      * construction reads the field's stats before the lists miss shows */
+    def statsOf: Map[String, BM25.CorpusStats] =
+      handles.map { case (f, h) => f -> h.stats }
+        .withDefaultValue(BM25.CorpusStats(0, 0))
   }
+  private def single(handle: IndexHandle): Fields =
+    Fields(Map(Q.DefaultField -> handle), Q.DefaultField)
+
+  private def parse(handle: IndexHandle, query: String): Q =
+    QueryParser.parse(query, chainOf = _ => handle.chain)
+
+  /** multiterm expansion: one pruned scan per node against the NODE'S
+    * field's lexicon (scanMulti); a field without a handle expands to
+    * nothing */
+  private def expand(spark: SparkSession, fs: Fields, q: Q): Q =
+    if (!q.hasPrefix) q
+    else QueryRewrite.expandPrefixes(q, mq =>
+      fs.handles.get(mq.field).map(scanMulti(spark, _, mq)).getOrElse(Seq.empty))
+
+  private def matchesNothing(q: Q): Boolean =
+    q == QEmpty || (q.terms.isEmpty && !q.hasEvery)
+
+  /** Query preparation, shared by every kernel entry point: expand
+    * multiterm nodes, resolve Otherwise nodes, apply the Every-aware
+    * emptiness rule. None = the query can match nothing. */
+  private def prepare(spark: SparkSession, fs: Fields, q0: Q): Option[Q] =
+    Some(resolveOtherwise(spark, fs, expand(spark, fs, q0))).filterNot(matchesNothing)
+
+  /** Resolve Otherwise nodes ([W] whoosh qcore.Otherwise — round-5, pinned
+    * GLOBAL semantics): use `a` iff it matches anywhere in the INDEX, else
+    * `b`. Resolved driver-side with one bounded existence probe per node —
+    * per-segment resolution would answer from different branches in
+    * different segments. Span subtrees cannot contain Otherwise (spanify
+    * rejects it), so recursion stops at span/leaf nodes. */
+  private def resolveOtherwise(spark: SparkSession, fs: Fields, q: Q): Q = {
+    def rec(q: Q): Q = q match {
+      case QOtherwise(a, b) =>
+        val ar = rec(a)
+        if (hasAnyMatch(spark, fs, ar)) ar else rec(b)
+      case QAnd(cs)        => QAnd(cs.map(rec))
+      case QOr(cs)         => QOr(cs.map(rec))
+      case QDisMax(cs, tb) => QDisMax(cs.map(rec), tb)
+      case QNot(p, n)      => QNot(rec(p), rec(n))
+      case QAndMaybe(p, m) => QAndMaybe(rec(p), rec(m))
+      case QRequire(p, f)  => QRequire(rec(p), rec(f))
+      case QConstantScore(c, sc) => QConstantScore(rec(c), sc)
+      case other           => other
+    }
+    rec(q)
+  }
+
+  /** Does ANY document match q? One pruned kernel pass, lazily stopped at
+    * the first match per segment (allMatches iterator take(1)) and at the
+    * first matching segment (CollectLimit) — the Otherwise probe. */
+  private def hasAnyMatch(spark: SparkSession, fs: Fields, q: Q): Boolean =
+    !matchesNothing(q) && {
+      import spark.implicits._
+      val statsOf = fs.statsOf
+      perSegment[Long](spark, fs, q.fieldTerms, q.everyFields,
+        fieldDfs(spark, fs, q.fieldTerms)) { (lists, deleted) =>
+        Kernel.allMatches(q, lists, statsOf, deleted).take(1)
+      }.head(1).nonEmpty
+    }
+
+  /** global dfs of (field, term) pairs, keyed `Kernel.key(field, term)`:
+    * one pruned, memoized lexicon lookup per field (termDfs) */
+  private def fieldDfs(spark: SparkSession, fs: Fields,
+                       fieldTerms: Set[(String, String)]): Map[String, Long] =
+    fieldTerms.groupBy(_._1).flatMap { case (f, pairs) =>
+      fs.handles.get(f).iterator.flatMap(h =>
+        termDfs(spark, h, pairs.map(_._2)).iterator.map { case (t, d) =>
+          Kernel.key(f, t) -> d
+        })
+    }
 
   /** Executor-side tombstone probe for one segment: loads only the range
     * sidecars the segment's manifest covers (each bounded by segSize
     * entries) — no tombstone set ever rides the driver or a closure. */
-  private[search] def tombstoneProbe(delRanges: Map[Int, Seq[Long]],
-                                     indexDir: String, segId: Int): Long => Boolean =
+  private def tombstoneProbe(delRanges: Map[Int, Seq[Long]],
+                             indexDir: String, segId: Int): Long => Boolean =
     delRanges.get(segId) match {
       case None => Kernel.NoDeletes
       case Some(rids) =>
@@ -378,105 +440,68 @@ object Searcher {
         id => java.util.Arrays.binarySearch(tomb, id) >= 0
     }
 
-  /** Does ANY document match q? One pruned kernel pass, lazily stopped at
-    * the first match per segment (allMatches iterator take(1)) and at the
-    * first matching segment (CollectLimit) — the Otherwise probe. */
-  private[search] def hasAnyMatch(spark: SparkSession, handle: IndexHandle,
-                                  q: Q): Boolean = {
-    import spark.implicits._
-    if (q == QEmpty || (q.terms.isEmpty && !q.hasEvery)) return false
-    val stats = handle.stats
-    val qLocal = q
-    perSegmentKernel[Long](spark, handle, q.terms, q.everyFields,
-      termDfs(spark, handle, q.terms)) { (lists, deleted) =>
-      Kernel.allMatches(qLocal, lists, stats, deleted).take(1)
-    }.head(1).nonEmpty
-  }
-
-  /** Resolve Otherwise nodes ([W] whoosh qcore.Otherwise — round-5, pinned
-    * GLOBAL semantics): use `a` iff it matches anywhere in the INDEX, else
-    * `b`. Resolved driver-side with one bounded existence probe per node —
-    * per-segment resolution would answer from different branches in
-    * different segments. Span subtrees cannot contain Otherwise (spanify
-    * rejects it), so recursion stops at span/leaf nodes. */
-  private def resolveOtherwise(spark: SparkSession, handle: IndexHandle,
-                               q: Q): Q = q match {
-    case QOtherwise(a, b) =>
-      val ar = resolveOtherwise(spark, handle, a)
-      if (hasAnyMatch(spark, handle, ar)) ar
-      else resolveOtherwise(spark, handle, b)
-    case QAnd(cs)        => QAnd(cs.map(resolveOtherwise(spark, handle, _)))
-    case QOr(cs)         => QOr(cs.map(resolveOtherwise(spark, handle, _)))
-    case QDisMax(cs, tb) => QDisMax(cs.map(resolveOtherwise(spark, handle, _)), tb)
-    case QNot(p, n)      => QNot(resolveOtherwise(spark, handle, p),
-                                 resolveOtherwise(spark, handle, n))
-    case QAndMaybe(p, m) => QAndMaybe(resolveOtherwise(spark, handle, p),
-                                      resolveOtherwise(spark, handle, m))
-    case QRequire(p, f)  => QRequire(resolveOtherwise(spark, handle, p),
-                                     resolveOtherwise(spark, handle, f))
-    case QConstantScore(c, sc) => QConstantScore(resolveOtherwise(spark, handle, c), sc)
-    case other           => other
-  }
-
-  /** Shared query-entry scaffold (round-3 self-review: four near-identical
-    * copies had started to drift): parse with the handle's chain, expand
-    * multiterm nodes against the lexicon, resolve Otherwise nodes, and
-    * apply the Every-aware emptiness rule. None = the query can match
-    * nothing. */
-  private def expandedQuery(spark: SparkSession, handle: IndexHandle,
-                            query: String): Option[Q] = {
-    val q0 = QueryParser.parse(query, chainOf = _ => handle.chain)
-    val q1 = if (q0.hasPrefix)
-      QueryRewrite.expandPrefixes(q0, mq => scanMulti(spark, handle, mq))
-    else q0
-    val q = resolveOtherwise(spark, handle, q1)
-    if (q == QEmpty || (q.terms.isEmpty && !q.hasEvery)) None else Some(q)
-  }
-
-  /** Shared per-segment kernel runner: one pruned scan for `terms` (+ the
-    * required Every pseudo lists), the kernel list map k-way-merged, the
-    * executor-side tombstone probe built — then `f` produces the segment's
-    * output rows. Captures only plain locals (never the handle) so the
-    * closure stays serialization-clean.
+  /** The per-segment runner, the one place a query meets the segments.
     *
-    * Two physical shapes (r6):
-    *  - COLOCATED (the common case — open() verified one file + one row
-    *    group per live segment): the kernel runs scan-side in a
-    *    mapPartitions, grouping the task's rows by segId in a hash map. No
-    *    exchange, no sort, no AQE stage barrier — a warm top-k query is ONE
-    *    single-stage job (plans/r06/&lt;q&gt;_after.txt). Safe because a parquet
-    *    row group is consumed by exactly one scan task, so a task always
-    *    holds whole segments.
-    *  - FALLBACK (post-merge multi-file segments, or >1 row group): the
-    *    r1-r5 groupByKey(segId) shuffle, which co-locates split segments
-    *    correctly at one small exchange's cost. */
-  private def perSegmentKernel[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, handle: IndexHandle, terms: Set[String],
+    * Each field with something to read gets ONE pushed `term IN` scan of
+    * its segments: the field's query terms plus the match-all pseudo rows
+    * the query needs. The pseudo lists are PERSISTED per segment at build
+    * time (decision D14) as two reserved-term rows, so `*` / `NOT x` /
+    * `field:*` read a handful of pruned posting rows, never docstats.
+    * Rows fold into the segment's kernel list map under
+    * `Kernel.rowKey(field, term)`: a real term as (field, term), the
+    * all-docs row as ("", EveryTerm) for a bare `*` (read from the default
+    * field only), a field's non-empty row as (field, EveryTerm) for
+    * `field:*`. Duplicate rows of a key k-way-merge (mergeList); df is the
+    * global one from `dfs`. Then `f` produces the segment's output rows,
+    * with the executor-side tombstone probe. The closure captures only
+    * plain locals (never a handle), so it stays serialization-clean.
+    *
+    * Two physical shapes, chosen from the layout:
+    *  - COLOCATED: exactly one field is read and open() verified its
+    *    handle's layout (one file + one row group per live segment). The
+    *    kernel runs scan-side in the scan's mapPartitions, grouping the
+    *    task's rows by segId in a hash map. No exchange, no sort, no AQE
+    *    stage barrier — a warm top-k query is ONE single-stage job. Safe
+    *    because a parquet row group is consumed by exactly one scan task,
+    *    so a task always holds whole segments.
+    *  - EXCHANGE: several fields (a segment's rows come from several field
+    *    indexes' files), or split segments (term-range-partitioned merge
+    *    output, >1 row group). A plain `repartition(segId)` co-locates each
+    *    segment's rows at the cost of one small exchange of pruned posting
+    *    rows; the task-local grouping needs co-located rows, not sorted
+    *    ones, so there is no groupByKey sort. */
+  private def perSegment[T: org.apache.spark.sql.Encoder](
+      spark: SparkSession, fs: Fields, fieldTerms: Set[(String, String)],
       everyFields: Set[String], dfs: Map[String, Long])(
       f: (Map[String, Kernel.TermList], Long => Boolean) => Iterator[T]): Dataset[T] = {
     import spark.implicits._
-    val delRanges = handle.delRanges
-    val dirLocal = handle.indexDir
+    val scans = fs.handles.toSeq.sortBy(_._1).flatMap { case (field, h) =>
+      val stored = fieldTerms.collect { case (`field`, t) => t } ++
+        Option.when(field == fs.default && everyFields(""))(Q.EveryTerm) ++
+        Option.when(everyFields(field))(Q.EveryNonEmptyTerm)
+      Option.when(stored.nonEmpty)(h -> h.segments
+        .filter($"term".isin(stored.toSeq: _*))
+        .select(lit(field).as("field"), $"term", $"df", $"maxTf", $"blocks", $"segId"))
+    }
+    if (scans.isEmpty) return spark.emptyDataset[T]
+    val rows = scans.map(_._2).reduce(_ unionByName _)
+    val src = if (scans.size == 1 && scans.head._1.segColocated) rows
+      else rows.repartition(col("segId"))
+    val delRanges = fs.defaultHandle.delRanges
+    val dirLocal = fs.defaultHandle.indexDir
     val fLocal = f
-    val rows = queryRows(spark, handle, terms, everyFields)
-    // FALLBACK co-location is a plain column repartition, not groupByKey:
-    // the task-local hash-map grouping below needs co-located rows, not
-    // SORTED ones, and groupByKey's plan inserts a per-partition sort the
-    // grouping never uses (r6; the exchange itself is the small pruned-row
-    // shuffle the r1-r5 path always paid)
-    val src = if (handle.segColocated) rows
-      else rows.repartition(org.apache.spark.sql.functions.col("segId"))
-    src.mapPartitions { it =>
+    src.as[(String, String, Int, Int, Array[Byte], Int)].mapPartitions { it =>
       val bySeg = new java.util.LinkedHashMap[Int,
         scala.collection.mutable.HashMap[String, Kernel.TermList]]()
-      it.foreach { r =>
-        var lists = bySeg.get(r.segId)
+      it.foreach { case (field, term, df, maxTf, blocks, segId) =>
+        var lists = bySeg.get(segId)
         if (lists == null) {
           lists = scala.collection.mutable.HashMap.empty[String, Kernel.TermList]
-          bySeg.put(r.segId, lists)
+          bySeg.put(segId, lists)
         }
-        Kernel.mergeList(lists, r.term,
-          Kernel.TermList(r.blocks, r.maxTf, dfs.getOrElse(r.term, r.df.toLong)))
+        val key = Kernel.rowKey(field, term)
+        Kernel.mergeList(lists, key,
+          Kernel.TermList(blocks, maxTf, dfs.getOrElse(key, df.toLong)))
       }
       import scala.jdk.CollectionConverters._
       bySeg.entrySet().iterator().asScala.flatMap { e =>
@@ -491,13 +516,14 @@ object Searcher {
   def matchingIds(spark: SparkSession, handle: IndexHandle,
                   query: String): Dataset[Long] = {
     import spark.implicits._
-    expandedQuery(spark, handle, query) match {
+    val fs = single(handle)
+    prepare(spark, fs, parse(handle, query)) match {
       case None => spark.emptyDataset[Long]
       case Some(q) =>
-        val dfs = termDfs(spark, handle, q.terms)
-        val stats = handle.stats
-        perSegmentKernel[Long](spark, handle, q.terms, q.everyFields, dfs) {
-          (lists, deleted) => Kernel.allMatches(q, lists, stats, deleted)
+        val statsOf = fs.statsOf
+        perSegment[Long](spark, fs, q.fieldTerms, q.everyFields,
+          fieldDfs(spark, fs, q.fieldTerms)) {
+          (lists, deleted) => Kernel.allMatches(q, lists, statsOf, deleted)
         }
     }
   }
@@ -508,16 +534,16 @@ object Searcher {
                     query: String,
                     weighting: Weighting = BM25Weighting): Dataset[SearchHit] = {
     import spark.implicits._
-    expandedQuery(spark, handle, query) match {
+    val fs = single(handle)
+    prepare(spark, fs, parse(handle, query)) match {
       case None => spark.emptyDataset[SearchHit]
       case Some(q) =>
-        val dfs = termDfs(spark, handle, q.terms)
-        val stats = handle.stats
+        val statsOf = fs.statsOf
         val w = weighting
-        perSegmentKernel[SearchHit](spark, handle, q.terms, q.everyFields, dfs) {
-          (lists, deleted) =>
-            Kernel.allScored(q, lists, stats, deleted, w)
-              .map(h => SearchHit(h.docId, h.score))
+        perSegment[SearchHit](spark, fs, q.fieldTerms, q.everyFields,
+          fieldDfs(spark, fs, q.fieldTerms)) { (lists, deleted) =>
+          Kernel.allScored(q, lists, statsOf, deleted, w)
+            .map(h => SearchHit(h.docId, h.score))
         }
     }
   }
@@ -553,22 +579,22 @@ object Searcher {
   def matchedTerms(spark: SparkSession, handle: IndexHandle, query: String,
                    docIds: Seq[Long]): DataFrame = {
     import spark.implicits._
-    val q0 = QueryParser.parse(query, chainOf = _ => handle.chain)
-    val q = if (q0.hasPrefix)
-      QueryRewrite.expandPrefixes(q0, mq => scanMulti(spark, handle, mq))
-    else q0
+    val fs = single(handle)
     // positive branches only: a NOT's negative side never causes a match
-    val terms = q.positiveTerms
-    if (terms.isEmpty || docIds.isEmpty)
+    val fieldTerms = expand(spark, fs, parse(handle, query)).positiveFieldTerms
+    if (fieldTerms.isEmpty || docIds.isEmpty)
       return spark.emptyDataset[(Long, String)].toDF("docid", "term")
     val ids = docIds.distinct.sorted.toArray
-    perSegmentKernel[(Long, String)](spark, handle, terms, Set.empty, Map.empty) {
+    val keys = fieldTerms.toSeq.map { case (f, t) => Kernel.key(f, t) -> t }
+    perSegment[(Long, String)](spark, fs, fieldTerms, Set.empty, Map.empty) {
       (lists, _) =>
-        lists.iterator.flatMap { case (term, tl) =>
-          val cur = new graft.codec.PostingsCodec.TermCursor(tl.bytes)
-          ids.iterator.flatMap { id =>
-            cur.skipTo(id)
-            if (cur.docId == id) Some((id, term)) else None
+        keys.iterator.flatMap { case (key, term) =>
+          lists.get(key).iterator.flatMap { tl =>
+            val cur = new graft.codec.PostingsCodec.TermCursor(tl.bytes)
+            ids.iterator.flatMap { id =>
+              cur.skipTo(id)
+              if (cur.docId == id) Some((id, term)) else None
+            }
           }
         }
     }
@@ -580,40 +606,34 @@ object Searcher {
     * search_documents(..., weighting=...); BM25 is the pinned default). */
   def search(spark: SparkSession, handle: IndexHandle, query: String, k: Int = 10,
              prune: Boolean = true,
-             weighting: Weighting = BM25Weighting): Dataset[SearchHit] = {
-    import spark.implicits._
-    val q = QueryParser.parse(query, chainOf = _ => handle.chain)
-    searchQ(spark, handle, q, k, prune, weighting)
-  }
+             weighting: Weighting = BM25Weighting): Dataset[SearchHit] =
+    searchQ(spark, handle, parse(handle, query), k, prune, weighting)
 
   def searchQ(spark: SparkSession, handle: IndexHandle, q0: Q, k: Int,
               prune: Boolean = true,
-              weighting: Weighting = BM25Weighting): Dataset[SearchHit] = {
+              weighting: Weighting = BM25Weighting): Dataset[SearchHit] =
+    searchFields(spark, single(handle), q0, k, prune, weighting)
+
+  /** top-k over field-keyed lists: per-segment kernel top-k, then the
+    * global top-k — Catalyst plans TakeOrderedAndProject over the tiny
+    * per-segment candidate set */
+  private[search] def searchFields(spark: SparkSession, fs: Fields, q0: Q, k: Int,
+                                   prune: Boolean,
+                                   weighting: Weighting): Dataset[SearchHit] = {
     import spark.implicits._
-    // multiterm expansion: one pruned scan per node (scanMulti — pushed
-    // StartsWith / gram-probe / range), ascending-term, MaxExpand-capped
-    val q1 = if (q0.hasPrefix)
-      QueryRewrite.expandPrefixes(q0, mq => scanMulti(spark, handle, mq))
-    else q0
-    val q = resolveOtherwise(spark, handle, q1)
-    if (q == QEmpty || (q.terms.isEmpty && !q.hasEvery))
-      return spark.emptyDataset[SearchHit]
-    val dfs = termDfs(spark, handle, q.terms)
-    val stats = handle.stats
-    val kLocal = k
-    val pruneLocal = prune
-    val wLocal = weighting
-    // tombstones load INSIDE the kernel (perSegmentKernel), each file
-    // bounded by segSize entries — no tombstone set rides the driver
-    val perSegment =
-      perSegmentKernel[SearchHit](spark, handle, q.terms, q.everyFields, dfs) {
-        (lists, deleted) =>
-          Kernel.topK(q, lists, stats, kLocal, pruneLocal, deleted, wLocal)
+    prepare(spark, fs, q0) match {
+      case None => spark.emptyDataset[SearchHit]
+      case Some(q) =>
+        val statsOf = fs.statsOf
+        val kLocal = k
+        val pruneLocal = prune
+        val wLocal = weighting
+        perSegment[SearchHit](spark, fs, q.fieldTerms, q.everyFields,
+          fieldDfs(spark, fs, q.fieldTerms)) { (lists, deleted) =>
+          Kernel.topKMulti(q, lists, statsOf, kLocal, pruneLocal, deleted, wLocal)
             .iterator.map(h => SearchHit(h.docId, h.score))
-      }
-    // global top-k: Catalyst plans TakeOrderedAndProject over the tiny
-    // per-segment candidate set
-    perSegment.orderBy($"score".desc, $"docId".asc).limit(k)
+        }.orderBy($"score".desc, $"docId".asc).limit(k)
+    }
   }
 
   /** Batch search: evaluate MANY queries in ONE Spark job — the serving-
@@ -630,31 +650,32 @@ object Searcher {
                  prune: Boolean = true,
                  weighting: Weighting = BM25Weighting): DataFrame = {
     import spark.implicits._
+    val fs = single(handle)
     val parsed: Seq[(String, Q)] = queries.flatMap { case (qid, qs) =>
-      expandedQuery(spark, handle, qs).map(qid -> _)
+      prepare(spark, fs, parse(handle, qs)).map(qid -> _)
     }
     if (parsed.isEmpty)
       return spark.emptyDataset[(String, Long, Double)].toDF("qid", "docId", "score")
 
-    val allTerms = parsed.iterator.flatMap(_._2.terms).toSet
-    val dfs = termDfs(spark, handle, allTerms) // ONE pruned lookup for the batch
-    val stats = handle.stats
+    val fieldTerms = parsed.iterator.flatMap(_._2.fieldTerms).toSet
+    val statsOf = fs.statsOf
     val kLocal = k
     val pruneLocal = prune
     val wLocal = weighting
     val parsedLocal = parsed
-    val perSegment = perSegmentKernel[(String, Long, Double)](spark, handle,
-      allTerms, parsed.iterator.flatMap(_._2.everyFields).toSet, dfs) {
-      (lists, deleted) =>
-        parsedLocal.iterator.flatMap { case (qid, q) =>
-          Kernel.topK(q, lists, stats, kLocal, pruneLocal, deleted, wLocal)
-            .iterator.map(h => (qid, h.docId, h.score))
-        }
+    // ONE pruned lexicon lookup and ONE segment scan for the batch
+    val perSeg = perSegment[(String, Long, Double)](spark, fs, fieldTerms,
+      parsed.iterator.flatMap(_._2.everyFields).toSet,
+      fieldDfs(spark, fs, fieldTerms)) { (lists, deleted) =>
+      parsedLocal.iterator.flatMap { case (qid, q) =>
+        Kernel.topKMulti(q, lists, statsOf, kLocal, pruneLocal, deleted, wLocal)
+          .iterator.map(h => (qid, h.docId, h.score))
+      }
     }
       .toDF("qid", "docId", "score")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"qid").orderBy($"score".desc, $"docId".asc)
-    perSegment.withColumn("rn", row_number().over(w))
+    perSeg.withColumn("rn", row_number().over(w))
       .filter($"rn" <= kLocal).drop("rn")
   }
 

@@ -404,4 +404,54 @@ class MultiFieldSpec extends AnyFunSuite {
     intercept[Exception](graft.build.SchemaConfig.fromJson(
       """[{"name":"x","type":"complex"}]"""))
   }
+
+  /** a one-field schema whose field is `content`, over the fixture docs
+    * plus the synthetic rows, and the single-field handle of that field */
+  private lazy val oneField: (MultiFieldSearcher.MultiHandle, Searcher.IndexHandle) = {
+    import spark.implicits._
+    val fixture = TestFixtures.fixture5.map { case (i, c) =>
+      CorpusRow("fx", f"fx$i.txt", f"$i%040x", "text", c)
+    }
+    val root = SparkTestBase.tmpDir("mf1")
+    val fields = Seq(FieldSpec("content", _.content))
+    MultiFieldIndex.build(spark, spark.createDataset(fixture ++ rows), root, fields,
+      IndexConfig(segSize = 40))
+    (MultiFieldSearcher.open(spark, root, fields),
+      Searcher.open(spark, MultiFieldIndex.fieldDir(root, "content")))
+  }
+
+  test("one query core: a one-field schema == the single-field searcher") {
+    val (mh, h) = oneField
+    val queries = TestFixtures.querySet.map(_._2) ++
+      Seq("*", "NOT w0004", "w0000 NEAR/5 w0001")
+    val nonEmpty = queries.count { qs =>
+      val multi = MultiFieldSearcher.search(spark, mh, qs, 10).collect().toSeq
+      val single = Searcher.search(spark, h, qs, 10).collect().toSeq
+      assert(multi == single, s"'$qs': multi-field $multi != single-field $single")
+      single.nonEmpty
+    }
+    assert(nonEmpty >= queries.size - 2, "most queries must match something")
+  }
+
+  test("multi-field Otherwise resolves like the single-field path") {
+    import graft.search.{QTerm => T}
+    val (mh, h) = oneField
+    val cases = Seq(
+      QOtherwise(T("w0000"), T("w0001")) -> T("w0000"),         // a matches -> a
+      QOtherwise(T("zzznope"), T("w0001")) -> T("w0001"),       // a empty -> b
+      QOtherwise(T("w0000", "nosuchfield"), T("w0002")) -> T("w0002"),
+      QOtherwise(T("zzznope"), QOtherwise(T("zzznope2"), T("w0003"))) -> T("w0003"))
+    // the same field under a schema boost: both branches carry the boost
+    val boosted = new MultiFieldSearcher.MultiHandle(mh.root,
+      Seq(FieldSpec("content", _.content, boost = 2.0)), mh.handles)
+    cases.foreach { case (ow, taken) =>
+      val multi = MultiFieldSearcher.searchQ(spark, mh, ow, 10).collect().toSeq
+      assert(multi.nonEmpty, s"$ow matched nothing")
+      assert(multi == Searcher.searchQ(spark, h, ow, 10).collect().toSeq, s"$ow")
+      assert(multi == MultiFieldSearcher.searchQ(spark, mh, taken, 10).collect().toSeq, s"$ow")
+      val b = MultiFieldSearcher.searchQ(spark, boosted, ow, 10).collect().toSeq
+      assert(b == MultiFieldSearcher.searchQ(spark, boosted, taken, 10).collect().toSeq, s"$ow")
+      assert(b.map(_.docId) == multi.map(_.docId) && b.head.score > multi.head.score, s"$ow")
+    }
+  }
 }

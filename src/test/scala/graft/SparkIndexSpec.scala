@@ -743,4 +743,46 @@ class SparkIndexSpec extends AnyFunSuite {
     val manifests = IndexBuilder.readManifests(fsOf(dir), dir)
     manifests.foreach(m => assert(got(m.segId)._3 == m.digest))
   }
+
+  test("concurrently: both sides joined, a failing side rethrown unwrapped") {
+    assert(IndexBuilder.concurrently("graft-test-ok")(1, "a") == ((1, "a")))
+    val side = intercept[IllegalArgumentException] {
+      IndexBuilder.concurrently("graft-test-side")(1, throw new IllegalArgumentException("side"))
+    }
+    assert(side.getMessage == "side")
+    // both fail: main's failure wins, the side's rides along as suppressed,
+    // and the side has finished before concurrently returns
+    val sideDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val both = intercept[IllegalStateException] {
+      IndexBuilder.concurrently("graft-test-both")(
+        throw new IllegalStateException("main"),
+        { Thread.sleep(100); sideDone.set(true); throw new ArithmeticException("side") })
+    }
+    assert(both.getMessage == "main" && sideDone.get())
+    assert(both.getSuppressed.toSeq.map(_.getClass) == Seq(classOf[ArithmeticException]))
+  }
+
+  test("truncated manifest / stats.json: the error names the file and the key") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("trunc")
+    IndexBuilder.build(spark, spark.createDataset(fixtureRows), dir, IndexConfig(segSize = 2))
+    val fs = fsOf(dir)
+    def truncate(p: Path, before: String): Unit = {
+      val in = fs.open(p)
+      val txt = scala.io.Source.fromInputStream(in).mkString
+      in.close()
+      val out = fs.create(p, true)
+      out.write(txt.take(txt.indexOf(before)).getBytes("UTF-8"))
+      out.close()
+    }
+    val mf = new Path(IndexBuilder.manifestsDir(dir), "seg-1.json")
+    truncate(mf, "\"digest\"")
+    val em = intercept[IllegalStateException](IndexBuilder.readManifests(fs, dir))
+    assert(em.getMessage.contains("seg-1.json") && em.getMessage.contains("\"digest\""),
+      em.getMessage)
+    truncate(new Path(IndexBuilder.statsPath(dir)), "\"numSegments\"")
+    val es = intercept[IllegalStateException](IndexBuilder.readStats(fs, dir))
+    assert(es.getMessage.contains("stats.json") && es.getMessage.contains("\"numSegments\""),
+      es.getMessage)
+  }
 }
