@@ -1,8 +1,9 @@
 package graft.build
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.Analyzer
@@ -74,13 +75,51 @@ object IndexBuilder {
   def tocPath(ix: String) = s"$ix/toc.json"
   def stagingDir(ix: String) = s"$ix/staging"
 
+  // ---- table schemas ----
+  //
+  // The schema of every parquet table graft writes, exactly as Spark would
+  // infer it from the files (columns nullable, segId the trailing
+  // partition column). Every read of graft's own files passes its table's
+  // schema (readTable), so no read opens a footer or runs a one-task
+  // schema-inference job; StreamingIngestSpec checks each constant against
+  // a fresh inference, so a writer change cannot silently diverge.
+  private def table(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = true) })
+  /** segments/segId=N: one posting-list row per (segment, term) */
+  val SegmentsSchema: StructType = table("term" -> StringType, "df" -> IntegerType,
+    "maxTf" -> IntegerType, "cf" -> LongType, "blocks" -> BinaryType, "segId" -> IntegerType)
+  /** docstats/segId=N: the per-doc sidecar (DocStat) */
+  val DocstatsSchema: StructType = table("docId" -> LongType, "repo" -> StringType,
+    "path" -> StringType, "commit" -> StringType, "lang" -> StringType, "sha" -> StringType,
+    "rawLen" -> IntegerType, "lenByte" -> IntegerType, "segId" -> IntegerType)
+  /** lexicon/ and every lexdeltas/dN: term -> global df, cf, maxTf */
+  val LexiconSchema: StructType = table("term" -> StringType, "df" -> LongType,
+    "cf" -> LongType, "maxTf" -> LongType)
+  /** lexgrams/: 3-gram -> term */
+  val LexgramsSchema: StructType = table("gram" -> StringType, "term" -> StringType)
+
+  /** One of graft's own tables, read with its known schema. A non-empty
+    * `segIds` narrows the read to those `segId=N` partition dirs of `root`
+    * (only they are listed); segId still comes from the directory names. */
+  private[graft] def readTable(spark: SparkSession, schema: StructType, root: String,
+                               segIds: Seq[Int] = Seq.empty): DataFrame =
+    spark.read.schema(schema).option("basePath", root)
+      .parquet((if (segIds.isEmpty) Seq(root) else segIds.map(id => s"$root/segId=$id")): _*)
+
   /** Deterministic dense docIds (decision D1): global rank in
     * (repo, path, commit) order. Range-partitioned sort keeps it scalable;
     * zipWithIndex assigns per-partition offsets via one lightweight count
     * job (the single, documented RDD drop-down — Dataset has no
     * order-preserving index primitive). The assignment is independent of
     * partition count: boundaries move, global order doesn't. */
-  def stampDocIds(corpus: Dataset[CorpusRow], partitions: Int = 0): Dataset[Doc] = {
+  def stampDocIds(corpus: Dataset[CorpusRow], partitions: Int = 0): Dataset[Doc] =
+    stampDocIdsCounted(corpus, partitions)._1
+
+  /** stampDocIds plus the corpus row count, which the offsets job already
+    * collects per partition (an append sizes its new segments from it
+    * without a count job of its own) */
+  private[graft] def stampDocIdsCounted(corpus: Dataset[CorpusRow],
+                                        partitions: Int = 0): (Dataset[Doc], Long) = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val p = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
@@ -116,7 +155,7 @@ object IndexBuilder {
         d
       }
     }
-    spark.createDataset(stamped)
+    (spark.createDataset(stamped), offsets.last)
   }
 
   private val HexDigits = "0123456789abcdef".toCharArray
@@ -297,12 +336,30 @@ object IndexBuilder {
     if (cfg.persistAnalyzed) analyzed.persist(StorageLevel.MEMORY_AND_DISK)
 
     try {
-      // materialize the analyzed cache with ONE job, so the two consumers
-      // below (docstats sidecar, postings build) can run CONCURRENTLY
-      // against it (guide §2.6 overlap: the small docstats write back-fills
-      // executors left idle by the postings job's tail) without racing the
-      // cache computation partition by partition
-      if (cfg.persistAnalyzed) analyzed.count()
+      // the manifest's per-segment doc metrics (docCount, docId range,
+      // rawLen sum) as per-partition partials merged on the driver: ONE
+      // job, no exchange, three columns decoded. It also materializes the
+      // analyzed cache, so the two consumers below (docstats sidecar,
+      // postings build) can run CONCURRENTLY against it (guide §2.6
+      // overlap: the small docstats write back-fills executors left idle by
+      // the postings job's tail) without racing the cache computation
+      // partition by partition.
+      val docAgg: Map[Int, (Long, Long, Long, Long)] = {
+        // (count, lo, hi, rawLenSum), folded map-side and again on the driver
+        val combine = (a: (Long, Long, Long, Long), b: (Long, Long, Long, Long)) =>
+          (a._1 + b._1, math.min(a._2, b._2), math.max(a._3, b._3), a._4 + b._4)
+        analyzed.select($"segId", $"docId", $"rawLen").as[(Int, Long, Int)]
+          .mapPartitions { it =>
+            val acc = scala.collection.mutable.HashMap.empty[Int, (Long, Long, Long, Long)]
+            it.foreach { case (segId, docId, rawLen) =>
+              val one = (1L, docId, docId, rawLen.toLong)
+              acc(segId) = acc.get(segId).fold(one)(combine(_, one))
+            }
+            acc.iterator
+          }
+          .collect()
+          .groupMapReduce(_._1)(_._2)(combine)
+      }
 
       // Phase 1 (map-side combine, G1/G2): per input partition, stream docs
       // in docId order and append each (docId, tf, lenByte, positions) to a
@@ -411,18 +468,8 @@ object IndexBuilder {
           .write.mode(SaveMode.Overwrite).partitionBy("segId")
           .parquet(s"$staging/docstats"))
 
-      // per-segment metrics for the manifest, computed from the written
-      // files; the two read-backs scan DIFFERENT staging dirs and run
-      // concurrently (§2.6 again — docAgg's tiny scan fills segAgg's tail)
-      val (segAgg, docAgg) = concurrently("graft-docagg")(
-        postingMetrics(spark, s"$staging/segments"),
-        spark.read.parquet(s"$staging/docstats")
-          .groupBy($"segId")
-          .agg(count(lit(1)).as("docCount"), min($"docId").as("lo"),
-            max($"docId").as("hi"), sum($"rawLen").as("rawLenSum"))
-          .collect()
-          .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-          .toMap)
+      // per-segment posting metrics for the manifest, from the written files
+      val segAgg = postingMetrics(spark, s"$staging/segments")
 
       // promote staging -> final, then commit the manifest (the commit point)
       val toCommit = batch.getOrElse((segAgg.keySet ++ docAgg.keySet).toSeq.sorted)
@@ -459,7 +506,7 @@ object IndexBuilder {
     // partial rows. Result is bit-identical (SparkIndexSpec asserts it
     // against an in-test reference fold; the cross-round index digest is
     // the standing witness).
-    spark.read.parquet(path)
+    readTable(spark, SegmentsSchema, path)
       // manifest metrics stay REAL-postings-only: the D14 pseudo rows are
       // derived data (a pure function of the segment's doc set), so
       // excluding them keeps digests comparable across format revisions
@@ -513,7 +560,7 @@ object IndexBuilder {
     val fsLex = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     val liveLex = readManifests(fsLex, indexDir).map(_.segId)
-    val seg = spark.read.parquet(segmentsDir(indexDir))
+    val seg = readTable(spark, SegmentsSchema, segmentsDir(indexDir))
       .filter(col("segId").isin(liveLex: _*))
       .filter(col("term") >= graft.search.Q.RealTermMin) // D14 pseudo rows excluded
     val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
@@ -591,8 +638,7 @@ object IndexBuilder {
     // delta-sized aggregate persisted across its three consumers (range
     // sampler, delta write, gram write) — same r6 pattern as writeLexicon;
     // saves one pruned segments re-scan and one staging re-read per append
-    val agg = spark.read.parquet(segmentsDir(indexDir))
-      .filter(col("segId").isin(newSegIds: _*))
+    val agg = readTable(spark, SegmentsSchema, segmentsDir(indexDir), newSegIds)
       .filter(col("term") >= graft.search.Q.RealTermMin) // D14 pseudo rows excluded
       .groupBy($"term").agg(sum($"df").cast("long").as("df"),
         sum($"cf").cast("long").as("cf"),
@@ -672,8 +718,8 @@ object IndexBuilder {
     // vocab-sized folded aggregate persisted across the range sampler and
     // the write (r6; the fold runs at compaction cadence, but the base is
     // vocab-sized, so one saved union+re-aggregate pass is real money)
-    val foldAgg = live.map(spark.read.parquet(_))
-      .foldLeft(spark.read.parquet(lexiconDir(indexDir)))(_ unionByName _)
+    val foldAgg = live.map(readTable(spark, LexiconSchema, _))
+      .foldLeft(readTable(spark, LexiconSchema, lexiconDir(indexDir)))(_ unionByName _)
       .groupBy($"term").agg(sum($"df").cast("long").as("df"),
         sum($"cf").cast("long").as("cf"),
         max($"maxTf").cast("long").as("maxTf"))
@@ -695,7 +741,7 @@ object IndexBuilder {
     // gram sidecar: physical dedup of append-time duplicates
     val gstaging = s"${stagingDir(indexDir)}/lexgramsfold"
     fs.delete(new Path(gstaging), true)
-    spark.read.parquet(lexgramsDir(indexDir))
+    readTable(spark, LexgramsSchema, lexgramsDir(indexDir))
       .distinct()
       .repartitionByRange(lexPartitions, col("gram"))
       .sortWithinPartitions("gram", "term")

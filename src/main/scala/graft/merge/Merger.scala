@@ -11,22 +11,38 @@ import graft.model._
 /** Segment merge / compaction (SURVEY.md §2.5 M1-M2, §3.3): the reference's
   * `optimize()` — k-way merge of term dictionaries, posting lists of shared
   * terms concatenated in docId order ([W] whoosh/writing.py merge policies).
+  * Because docIds are global and segments are disjoint docId ranges
+  * (decision D1), no docnum remap is needed — runs concatenate in docLo
+  * order (`mergeRuns`).
   *
-  * Spark-native: a sort-merge cogroup on `term`. Because docIds are global
-  * and segments are disjoint docId ranges (decision D1), no docnum remap is
-  * needed — runs concatenate in segId order. Pairwise merges use
-  * KeyValueGroupedDataset.cogroup (BASELINE.json:6); wider groups use one
-  * union + groupByKey pass, i.e. an n-ary cogroup in a single shuffle.
-  * Hierarchy: `compact(groupSize)` repeatedly merges adjacent groups —
-  * log_groupSize(n) levels to a single segment.
+  * Two merge shapes share that per-term concatenation and one commit
+  * protocol; the CALLER picks the shape, no option does:
+  *  - COGROUP (`mergeGroup`, used by `compact`/`optimize`): a sort-merge
+  *    cogroup on `term` — pairwise KeyValueGroupedDataset.cogroup
+  *    (BASELINE.json:6), wider groups one union + groupByKey pass (an n-ary
+  *    cogroup in a single shuffle). Output is `max(2, group.size)`
+  *    term-range-partitioned files, so a full compaction never funnels the
+  *    index through one task; its readers take the exchange query path.
+  *    Hierarchy: `compact(groupSize)` repeatedly merges adjacent groups —
+  *    log_groupSize(n) levels to a single segment.
+  *  - TAIL (`mergeSmall`): a MERGE_SMALL group totals under two segments'
+  *    worth of docs, so ONE task merges it: the members' rows are coalesced
+  *    into one partition and sorted by term (a spillable local sort, no
+  *    exchange), same-term runs fold with `mergeRuns`, and one file with
+  *    one row group is written. The merged segment keeps the colocated
+  *    layout, so queries on it stay exchange-free.
   */
 object Merger {
 
-  /** Merge a group of segIds into one NEW segment (fresh segId = max live
-    * segId + 1 — never an in-place overwrite), optionally dropping a
-    * deletion set (M2: purge at merge).
+  /** Merge a group of segIds into one NEW segment with the COGROUP shape
+    * (fresh segId = max live segId + 1 — never an in-place overwrite),
+    * optionally dropping a deletion set (M2: purge at merge). The merged
+    * postings are written as `max(2, group.size)` term-range-partitioned,
+    * term-sorted files inside the one segment dir (parquet min/max stats on
+    * `term` stay sharp per file).
     *
-    * Crash-safe commit protocol (mirrors the build's promote-then-manifest):
+    * Crash-safe commit protocol (mirrors the build's promote-then-manifest,
+    * shared with the TAIL shape):
     *   1. write merged postings + docstats to staging, promote both into
     *      place under the FRESH segId (no collision with live dirs);
     *   2. write the merged manifest — THE commit point: its `absorbed` list
@@ -34,16 +50,17 @@ object Merger {
     *      resolves supersession), and `covers` carries the transitive
     *      build-layout lineage for resume;
     *   3. delete the old manifests, then the old segment dirs — pure GC;
-    *      a crash anywhere leaves a readable, correct index.
-    *
-    * Merged postings are written as `group.size` term-range-partitioned,
-    * term-sorted files inside the one segment dir (readers do partition/file
-    * discovery; parquet min/max stats on `term` stay sharp per file) — a
-    * full compaction never funnels the index through a single task. */
+    *      a crash anywhere leaves a readable, correct index. */
   def mergeGroup(spark: SparkSession, indexDir: String, group: Seq[Int],
-                 deletes: Set[Long] = Set.empty): Int = {
-    import spark.implicits._
+                 deletes: Set[Long] = Set.empty): Int =
+    merge(spark, indexDir, group, deletes, tail = false)
+
+  /** one merge of `group` in the COGROUP or TAIL shape; returns the fresh
+    * segId */
+  private def merge(spark: SparkSession, indexDir: String, group: Seq[Int],
+                    deletes: Set[Long], tail: Boolean): Int = {
     require(group.nonEmpty)
+    require(!tail || deletes.isEmpty, "a tail merge purges no deletes")
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     val sorted = group.sorted
@@ -87,13 +104,7 @@ object Merger {
       case _ => ()
     }
 
-    val segs = sorted.map { id =>
-      spark.read.parquet(s"${IndexBuilder.segmentsDir(indexDir)}/segId=$id")
-        .select($"term", $"df", $"maxTf", $"blocks", lit(id).as("segId"))
-        .as[SegRead]
-    }
-
-    def mergeRuns(term: String, runs: Seq[SegRead]): Option[SegRow] = {
+    val mergeRuns: (String, Seq[SegRead]) => Option[SegRow] = (term, runs) => {
       // concatenate in docLo order (== docId order); re-encode; drop deletes
       val ordered = runs.sortBy(r => docLoRank(r.segId))
       val dels = delB.value
@@ -104,23 +115,17 @@ object Merger {
       else Some(SegRow(targetId, term, enc.df, enc.maxTf, enc.cf, enc.bytes))
     }
 
-    val merged =
-      if (segs.size == 2) {
-        // the pinned pairwise sort-merge cogroup
-        segs(0).groupByKey(_.term).cogroup(segs(1).groupByKey(_.term)) {
-          (term, as, bs) => mergeRuns(term, (as ++ bs).toSeq).iterator
-        }
-      } else {
-        segs.reduce(_ union _).groupByKey(_.term).flatMapGroups { (term, it) =>
-          mergeRuns(term, it.toSeq).iterator
-        }
-      }
-
     val staging = s"${IndexBuilder.stagingDir(indexDir)}-merge"
+    val dsStaging = s"$staging-docstats"
     fs.delete(new Path(staging), true)
-    merged.repartitionByRange(math.max(2, sorted.size), $"term")
-      .sortWithinPartitions("term")
-      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(staging)
+    fs.delete(new Path(dsStaging), true)
+    val (mergedDocCount, mergedRawLen) =
+      if (tail) {
+        writeTail(spark, fs, indexDir, sorted, targetId, mergeRuns, staging, dsStaging)
+        // nothing purged: the members' manifest sums
+        (manifests.map(_.docCount).sum, manifests.map(_.rawLenSum).sum)
+      } else writeCogroup(spark, indexDir, sorted, targetId, mergeRuns, staging, dsStaging,
+        deletes, delB)
 
     // real metrics for the merged manifest — same digest/row/byte contract
     // as a fresh build (BASELINE.json "per-partition lineage and
@@ -130,28 +135,6 @@ object Merger {
       if (!fs.exists(new Path(s"$staging/segId=$targetId"))) (0L, 0L, "0" * 32)
       else IndexBuilder.postingMetrics(spark, staging)
         .getOrElse(targetId, (0L, 0L, "0" * 32))
-
-    // docstats: the group's sidecars re-keyed under the fresh segId (the
-    // sidecar is keyed by docId; segId is only physical placement)
-    val dsStaging = s"$staging-docstats"
-    fs.delete(new Path(dsStaging), true)
-    val docstats = sorted.map { id =>
-      spark.read.parquet(s"${IndexBuilder.docstatsDir(indexDir)}/segId=$id")
-    }.reduce(_ unionByName _)
-    val filtered = if (deletes.isEmpty) docstats
-      else {
-        // same broadcast binary-search probe as mergeRuns (bounded by the
-        // group's ranges but NOT by literal-count — see delB note above)
-        val docIdIdx = docstats.schema.fieldIndex("docId")
-        docstats.filter((r: org.apache.spark.sql.Row) =>
-          java.util.Arrays.binarySearch(delB.value, r.getLong(docIdIdx)) < 0)
-      }
-    val (mergedDocCount, mergedRawLen) = {
-      val r = filtered.agg(count(lit(1)), sum($"rawLen")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    filtered.withColumn("segId", lit(targetId))
-      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
 
     // 1. promote into place under the fresh segId (a group whose docs were
     // ALL tombstoned writes no partition dir — commit an empty segment)
@@ -197,6 +180,102 @@ object Merger {
     targetId
   }
 
+  /** COGROUP shape: shuffle the group's rows by term, fold each term's runs,
+    * write `max(2, group.size)` term-range files under `staging/segId=N`;
+    * the docstats sidecars are re-keyed under the fresh segId (the sidecar
+    * is keyed by docId; segId is only physical placement) minus the purged
+    * docs. Returns the merged (docCount, rawLenSum). */
+  private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[Int],
+                           targetId: Int, mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
+                           staging: String, dsStaging: String, deletes: Set[Long],
+                           delB: org.apache.spark.broadcast.Broadcast[Array[Long]]): (Long, Long) = {
+    import spark.implicits._
+    val segs = group.map { id =>
+      IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
+          IndexBuilder.segmentsDir(indexDir), Seq(id))
+        .select($"term", $"df", $"maxTf", $"blocks", $"segId")
+        .as[SegRead]
+    }
+    val merged =
+      if (segs.size == 2) {
+        // the pinned pairwise sort-merge cogroup
+        segs(0).groupByKey(_.term).cogroup(segs(1).groupByKey(_.term)) {
+          (term, as, bs) => mergeRuns(term, (as ++ bs).toSeq).iterator
+        }
+      } else {
+        segs.reduce(_ union _).groupByKey(_.term).flatMapGroups { (term, it) =>
+          mergeRuns(term, it.toSeq).iterator
+        }
+      }
+    merged.repartitionByRange(math.max(2, group.size), $"term")
+      .sortWithinPartitions("term")
+      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(staging)
+
+    val docstats = IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
+      IndexBuilder.docstatsDir(indexDir), group)
+    val filtered = if (deletes.isEmpty) docstats
+      else {
+        // same broadcast binary-search probe as mergeRuns (bounded by the
+        // group's ranges but NOT by literal-count — see delB note above)
+        val docIdIdx = docstats.schema.fieldIndex("docId")
+        docstats.filter((r: org.apache.spark.sql.Row) =>
+          java.util.Arrays.binarySearch(delB.value, r.getLong(docIdIdx)) < 0)
+      }
+    val (docCount, rawLen) = {
+      val r = filtered.agg(count(lit(1)), sum($"rawLen")).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+    filtered.withColumn("segId", lit(targetId))
+      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
+    (docCount, rawLen)
+  }
+
+  /** TAIL shape: ONE task merges the whole group — the members' rows are
+    * coalesced into one partition and sorted by term (spillable, no
+    * exchange), consecutive same-term rows fold with `mergeRuns`, and one
+    * file with one row group lands in `staging/segId=N`. The docstats
+    * sidecars are coalesced into one docId-sorted file the same way, in a
+    * concurrent job. */
+  private def writeTail(spark: SparkSession, fs: FileSystem, indexDir: String,
+                        group: Seq[Int], targetId: Int,
+                        mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
+                        staging: String, dsStaging: String): Unit = {
+    import spark.implicits._
+    // one file per segment dir, like a build's partitioned write (no
+    // per-dir `_SUCCESS` marker)
+    def writeOne(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+      df.write.mode(SaveMode.Overwrite).parquet(dir)
+      fs.delete(new Path(dir, "_SUCCESS"), false)
+      ()
+    }
+    IndexBuilder.concurrently("graft-merge-docstats")(
+      writeOne(
+        IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
+            IndexBuilder.segmentsDir(indexDir), group)
+          .select($"term", $"df", $"maxTf", $"blocks", $"segId").as[SegRead]
+          .coalesce(1)
+          .sortWithinPartitions("term")
+          .mapPartitions { it =>
+            val rows = it.buffered
+            Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
+              val term = r.head.term
+              val run = scala.collection.mutable.ArrayBuffer.empty[SegRead]
+              while (r.hasNext && r.head.term == term) run += r.next()
+              mergeRuns(term, run.toSeq)
+            }
+          }
+          .drop("segId"),
+        s"$staging/segId=$targetId"),
+      writeOne(
+        IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
+            IndexBuilder.docstatsDir(indexDir), group)
+          .drop("segId")
+          .coalesce(1)
+          .sortWithinPartitions("docId"),
+        s"$dsStaging/segId=$targetId"))
+    ()
+  }
+
   /** delete segments/docstats `segId=N` dirs whose N has no live manifest
     * (single-writer assumption: no build or merge runs concurrently) */
   private[graft] def gcOrphanDirs(fs: FileSystem, indexDir: String,
@@ -229,6 +308,12 @@ object Merger {
     * concatenation keeps every term's global df, so the lexicon needs no
     * rebuild); purge stays with compact(applyDeletes)/optimize.
     *
+    * Each run merges with the TAIL shape: every member is below `smallDocs`
+    * and a run is flushed once it reaches `smallDocs`, so a run totals
+    * under 2 x `smallDocs` docs — small enough for one task, whose one-file
+    * output keeps the colocated query layout. The commit protocol is
+    * mergeGroup's.
+    *
     * Returns the freshly minted segIds. */
   def mergeSmall(spark: SparkSession, indexDir: String, smallDocs: Long = 0,
                  groupSize: Int = 8): Seq[Int] = {
@@ -242,7 +327,8 @@ object Merger {
     val minted = scala.collection.mutable.ArrayBuffer.empty[Int]
     var run = List.empty[SegmentManifest]
     def flush(): Unit = {
-      if (run.size >= 2) minted += mergeGroup(spark, indexDir, run.map(_.segId))
+      if (run.size >= 2)
+        minted += merge(spark, indexDir, run.map(_.segId), Set.empty, tail = true)
       run = Nil
     }
     ms.sortBy(m => (m.docLo, m.segId)).foreach { m =>
@@ -267,16 +353,16 @@ object Merger {
     minted.toSeq
   }
 
-  /** hierarchical compaction: repeatedly merge adjacent groups of
-    * `groupSize` until one segment remains (reference `optimize_index`).
-    * With `applyDeletes`, the index's tombstone set is purged during the
-    * merge and cleared once fully compacted (M2). */
   /** Whoosh `writer.optimize()` / the reference's optimize endpoint
     * ([R] cockatrice optimize): hierarchically compact the whole index to
     * ONE segment, physically purging tombstones and refreshing stats. */
   def optimize(spark: SparkSession, indexDir: String): Unit =
     compact(spark, indexDir, applyDeletes = true)
 
+  /** hierarchical compaction with the COGROUP shape: repeatedly merge
+    * adjacent groups of `groupSize` until one segment remains (reference
+    * `optimize_index`). With `applyDeletes`, the index's tombstone set is
+    * purged during the merge and cleared once fully compacted (M2). */
   def compact(spark: SparkSession, indexDir: String, groupSize: Int = 8,
               applyDeletes: Boolean = false): Unit = {
     require(groupSize >= 2)

@@ -336,7 +336,10 @@ object Dedup {
     *    across TWO exchanges; the hashed form ships 24-byte rows; the
     *    2^-64-per-pair collision risk is the same trade `ngramJaccardPairs`
     *    and `stripRepeatedLines` already make, and the driver oracle
-    *    verifies the fixture corpus collision-free);
+    *    verifies the fixture corpus collision-free). That bound holds for
+    *    natural text only: the FNV-1a key is not a keyed hash, so a corpus
+    *    an attacker controls can carry crafted colliding spans and mark a
+    *    unique span as duplicated;
     *  - n_spans = max(0, ntok - window + 1) arithmetically from the
     *    token-count pass — the r5 form recomputed the whole span stream and
     *    shuffled it a third time just to count it;
@@ -436,7 +439,10 @@ object Dedup {
     * which must ship text by definition). The r5 form keyed both the agg
     * and the join on full line text. Same 2^-64 collision trade as the
     * other hashed-key ops; driver-oracle-verified collision-free on the
-    * fixtures. Per-group state stays one document's lines. */
+    * fixtures. The trade assumes natural text: xxhash64 with its fixed
+    * seed is not collision-resistant, so an attacker-controlled corpus can
+    * craft a line that collides with a boilerplate line's hash and have it
+    * stripped. Per-group state stays one document's lines. */
   def stripRepeatedLines(df: DataFrame, idCol: String, textCol: String,
                          minDf: Long, sep: String = "\n"): DataFrame = {
     require(minDf >= 2, "minDf < 2 would strip every line")

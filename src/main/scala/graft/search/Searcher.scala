@@ -62,9 +62,10 @@ object Searcher {
                             * time) — the physical invariant that lets the
                             * kernel run scan-side with no exchange, because a
                             * whole row group is always consumed by exactly
-                            * one scan task. False after term-range-partitioned
-                            * merges or for multi-row-group (>~128 MB)
-                            * segments; those fall back to the shuffle path. */
+                            * one scan task. False after compaction's
+                            * term-range-partitioned merges or for
+                            * multi-row-group (>~128 MB) segments; those
+                            * fall back to the shuffle path. */
                           val segColocated: Boolean = false) {
     def hasDeletes: Boolean = delRanges.nonEmpty
     private[search] val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -97,7 +98,8 @@ object Searcher {
       if (liveSegs.isEmpty) {
         import spark.implicits._
         spark.emptyDataset[SegRead].toDF()
-      } else spark.read.parquet(IndexBuilder.segmentsDir(indexDir))
+      } else IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
+          IndexBuilder.segmentsDir(indexDir))
         .filter(col("segId").isin(liveSegs: _*))
     // deletes: one listing; per-segment sidecars resolve through the
     // manifest's build-layout `covers` so tombstones stay addressable after
@@ -110,7 +112,8 @@ object Searcher {
       }.filter(_._2.nonEmpty).toMap
     val lexgrams =
       if (fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.lexgramsDir(indexDir))))
-        Some(spark.read.parquet(IndexBuilder.lexgramsDir(indexDir)))
+        Some(IndexBuilder.readTable(spark, IndexBuilder.LexgramsSchema,
+          IndexBuilder.lexgramsDir(indexDir)))
       else None
     // LSM lexicon (round-5): streaming appends commit term-sorted DELTA
     // files instead of rewriting the vocab-sized base; the handle's lexicon
@@ -124,10 +127,12 @@ object Searcher {
         import spark.implicits._
         spark.emptyDataset[graft.model.LexRow].toDF()
       } else {
-        val base = spark.read.parquet(IndexBuilder.lexiconDir(indexDir))
+        def lex(dir: String) =
+          IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema, dir)
+        val base = lex(IndexBuilder.lexiconDir(indexDir))
         val deltas = IndexBuilder.liveLexDeltaDirs(fs, indexDir)
         if (deltas.isEmpty) base
-        else deltas.map(spark.read.parquet(_)).foldLeft(base)(_ unionByName _)
+        else deltas.map(lex).foldLeft(base)(_ unionByName _)
           .groupBy(col("term"))
           .agg(sum(col("df")).cast("long").as("df"),
             sum(col("cf")).cast("long").as("cf"),
@@ -156,10 +161,10 @@ object Searcher {
     * the exchange-free kernel path requires (a parquet row group is consumed
     * by exactly one scan task, so single-row-group segments can never split
     * across tasks). One listing + one footer read per segment, paid once at
-    * open and capped by ColocCheckMaxSegments. Fresh builds and streaming
-    * appends write exactly this layout; term-range-partitioned merge output
-    * (several files per segId) and multi-row-group segments return false ->
-    * shuffle fallback. */
+    * open and capped by ColocCheckMaxSegments. Fresh builds, streaming
+    * appends and MERGE_SMALL's tail merges write exactly this layout;
+    * compaction's term-range-partitioned output (several files per segId)
+    * and multi-row-group segments return false -> shuffle fallback. */
   private def segmentsColocated(fs: FileSystem, indexDir: String,
                                 liveSegs: Seq[Int]): Boolean = {
     if (liveSegs.isEmpty || liveSegs.size > ColocCheckMaxSegments) return false
@@ -838,16 +843,14 @@ object Searcher {
       .limit(k)
   }
 
-  private def docstatsDirOf(handle: IndexHandle): String =
-    IndexBuilder.docstatsDir(handle.indexDir)
-
   /** the docstats sidecar restricted to LIVE-manifest segments: a crashed
     * merge can leave superseded segId dirs behind until the next GC, and an
     * unfiltered read would double-count their docs (same defense as the
     * segments read in open() and everyRows) */
   private[search] def liveDocstats(spark: SparkSession,
                                    handle: IndexHandle): DataFrame =
-    spark.read.parquet(IndexBuilder.docstatsDir(handle.indexDir))
+    IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
+        IndexBuilder.docstatsDir(handle.indexDir))
       .filter(col("segId").isin(handle.liveSegIds: _*))
 
   /** S4 as an API: the reference's `get_document(id)` point lookup —

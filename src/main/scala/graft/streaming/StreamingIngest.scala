@@ -20,6 +20,13 @@ import graft.model.{CorpusRow, IndexStats}
   * docId layout: every append starts at the next segment boundary
   * (docIdBase = (maxSegId+1) * segSize). Gaps in docId space are harmless —
   * N and avgfl come from manifest doc counts, never from max docId.
+  *
+  * An append runs no separate counting job: the batch's row count (how
+  * many segments it fills) comes from the docId stamp's offsets job, and
+  * the new segments' doc metrics from the job that materializes the
+  * analyzed docs. The small segments appends leave are merged by
+  * MERGE_SMALL's single-task tail merge, which keeps them in the
+  * exchange-free query layout.
   */
 object StreamingIngest {
 
@@ -55,14 +62,13 @@ object StreamingIngest {
     }
     val docIdBase = segIdBase.toLong * segSize
 
-    val n = batch.count()
+    // stamp within the batch (D1 rank), then shift into the fresh range;
+    // the stamp's offsets job also yields the batch's row count
+    val (batchDocs, n) = IndexBuilder.stampDocIdsCounted(batch, cfg.sortPartitions)
     if (n == 0) return IndexBuilder.readStats(fs, indexDir)
     val numNewSegs = ((n + segSize - 1) / segSize).toInt
     val newSegs = segIdBase until (segIdBase + numNewSegs)
-
-    // stamp within the batch (D1 rank), then shift into the fresh range
-    val stamped = IndexBuilder.stampDocIds(batch, cfg.sortPartitions)
-      .map(d => d.copy(docId = d.docId + docIdBase))
+    val stamped = batchDocs.map(d => d.copy(docId = d.docId + docIdBase))
 
     newSegs.grouped(cfg.segmentsPerBatch).foreach { group =>
       IndexBuilder.buildBatchForAppend(spark, fs, stamped, indexDir, group,
@@ -110,7 +116,8 @@ object StreamingIngest {
     // a created-but-empty index has no docstats yet: nothing to replace
     val existing =
       if (liveSegs.isEmpty) Array.empty[Long]
-      else spark.read.parquet(IndexBuilder.docstatsDir(indexDir))
+      else IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
+          IndexBuilder.docstatsDir(indexDir))
         .filter($"segId".isin(liveSegs: _*))
         .select($"docId", $"repo", $"path", $"commit")
         .join(org.apache.spark.sql.functions.broadcast(keys), Seq("repo", "path", "commit"))

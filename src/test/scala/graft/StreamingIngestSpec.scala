@@ -40,6 +40,51 @@ class StreamingIngestSpec extends AnyFunSuite {
     out.toSeq
   }
 
+  private def fsOf(dir: String) = org.apache.hadoop.fs.FileSystem.get(
+    new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
+
+  /** Spark jobs started while `body` runs, on its thread or on threads it
+    * starts. Jobs are tagged through a local property (inherited by child
+    * threads); a tagged sentinel job then marks the end of the run on the
+    * asynchronous listener bus, so every job of `body` has been seen. */
+  private def jobsDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "graft.test.jobTag"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val sentinel = s"$tag-end"
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(sentinel), "listener bus did not deliver the sentinel job")
+      seen.toArray.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** an index with two full segments (segSize 32) and three small appended
+    * ones (8 docs each, segIds 2-4, each with a delta lexicon) */
+  private def tailIndex(name: String, seed: Long): String = {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir(name)
+    val cfg = IndexConfig(segSize = 32)
+    IndexBuilder.build(spark, spark.createDataset(mkRows(seed, 0, 64)), dir, cfg)
+    (0 until 3).foreach { k =>
+      StreamingIngest.append(spark, spark.createDataset(mkRows(seed, 64 + 8 * k, 72 + 8 * k)),
+        dir, cfg)
+    }
+    dir
+  }
+
   test("foreachBatch appends + compaction stay oracle-identical") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -251,5 +296,101 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
       key(IndexBuilder.readManifests(fs, dir)))
     assert(IndexBuilder.readManifestsFast(fs, dir).size == 1)
+  }
+
+  test("job counts: open starts none, a small append and MERGE_SMALL stay lean") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("jobs")
+    val cfg = IndexConfig(segSize = 32)
+    IndexBuilder.build(spark, spark.createDataset(mkRows(17L, 0, 64)), dir, cfg)
+    // parquet-backed batches, like an ingest source; created (and their
+    // schemas inferred) before any count starts
+    val batches = (0 until 3).map { k =>
+      val p = SparkTestBase.tmpDir(s"jobs-batch$k")
+      spark.createDataset(mkRows(17L, 64 + 8 * k, 72 + 8 * k))
+        .write.mode("overwrite").parquet(p)
+      spark.read.parquet(p).as[CorpusRow]
+    }
+    val appendJobs = batches.map(b => jobsDuring(StreamingIngest.append(spark, b, dir, cfg)))
+    assert(IndexBuilder.liveLexDeltaDirs(fsOf(dir), dir).size == 3)
+    // known schemas: opening an index infers no schema, so it starts no job
+    val openJobs = jobsDuring(Searcher.open(spark, dir))
+    val mergeJobs = jobsDuring(graft.merge.Merger.mergeSmall(spark, dir))
+    info(s"jobs: appends $appendJobs, open $openJobs, mergeSmall $mergeJobs")
+    assert(openJobs == 0, s"Searcher.open started $openJobs jobs")
+    // bounds from this test's counts before the lean write path (CHANGES.md):
+    // open 6 -> 0, each append 25 -> 16, mergeSmall 29 -> 12
+    appendJobs.foreach(n => assert(n <= 25 - 6, s"append started $n jobs"))
+    assert(mergeJobs <= 29 / 2, s"mergeSmall started $mergeJobs jobs")
+  }
+
+  test("schema constants == the schemas Spark infers from freshly written files") {
+    val dir = tailIndex("schemas", 19L)
+    val fs = fsOf(dir)
+    def check(): Unit = {
+      val tables = Seq(
+        IndexBuilder.segmentsDir(dir) -> IndexBuilder.SegmentsSchema,
+        IndexBuilder.docstatsDir(dir) -> IndexBuilder.DocstatsSchema,
+        IndexBuilder.lexiconDir(dir) -> IndexBuilder.LexiconSchema,
+        IndexBuilder.lexgramsDir(dir) -> IndexBuilder.LexgramsSchema) ++
+        IndexBuilder.liveLexDeltaDirs(fs, dir).map(_ -> IndexBuilder.LexiconSchema)
+      tables.foreach { case (path, schema) =>
+        val inferred = spark.read.parquet(path).schema
+        assert(inferred == schema, s"$path: inferred $inferred, constant $schema")
+      }
+    }
+    assert(IndexBuilder.liveLexDeltaDirs(fs, dir).nonEmpty)
+    check() // built + appended segments, base lexicon + deltas
+    assert(graft.merge.Merger.mergeSmall(spark, dir).nonEmpty)
+    check() // a tail-merged segment, the folded lexicon and grams
+  }
+
+  test("tail merge == cogroup merge on the same group; the tail stays colocated") {
+    import spark.implicits._
+    val tailDir = tailIndex("tailmerge", 23L)
+    val cogDir = SparkTestBase.tmpDir("cogmerge") + "/ix"
+    val fs = fsOf(tailDir)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(tailDir), fs,
+      new org.apache.hadoop.fs.Path(cogDir), false, true, spark.sparkContext.hadoopConfiguration)
+    val small = IndexBuilder.readManifests(fs, tailDir).filter(_.docCount < 32).map(_.segId)
+    assert(small == Seq(2, 3, 4))
+
+    val minted = graft.merge.Merger.mergeSmall(spark, tailDir)
+    val cog = graft.merge.Merger.mergeGroup(spark, cogDir, small)
+    assert(minted == Seq(cog))
+    def manifest(dir: String) = IndexBuilder.readManifests(fs, dir).find(_.segId == cog).get
+    val (a, b) = (manifest(tailDir), manifest(cogDir))
+    assert((a.digest, a.postingRows, a.postingBytes, a.docCount, a.rawLenSum) ==
+      (b.digest, b.postingRows, b.postingBytes, b.docCount, b.rawLenSum))
+    assert(a.docCount == 24 && a.absorbed == small)
+    def docstats(dir: String) =
+      IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema, IndexBuilder.docstatsDir(dir))
+        .filter($"segId" === cog).drop("segId").collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(docstats(tailDir) == docstats(cogDir))
+    assert(docstats(tailDir).size == 24)
+
+    val queries = TestFixtures.querySet.map(_._2) ++ Seq("*", "NOT w0004",
+      "w0000 NEAR/5 w0001", "w0000 OR w0001", "w0001 AND w0002", "\"needle alpha beta\"")
+    def sameHits(): Unit = {
+      val (ht, hc) = (Searcher.open(spark, tailDir), Searcher.open(spark, cogDir))
+      queries.foreach { q =>
+        assert(Searcher.search(spark, ht, q, 10).collect().toSeq ==
+          Searcher.search(spark, hc, q, 10).collect().toSeq, s"tail != cogroup for '$q'")
+      }
+    }
+    sameHits()
+    val dels = Seq(1L, 40L) ++ docstats(tailDir).take(5).map(_.head.asInstanceOf[Long])
+    graft.build.Deletes.add(spark, tailDir, dels)
+    graft.build.Deletes.add(spark, cogDir, dels)
+    sameHits()
+
+    // one file, one row group: the reopened tail index keeps the
+    // exchange-free path; the cogroup shape writes term-range files
+    val ht = Searcher.open(spark, tailDir)
+    assert(ht.segColocated, "a tail merge must keep the colocated layout")
+    assert(!Searcher.open(spark, cogDir).segColocated)
+    val plan = Searcher.search(spark, ht, "w0000 AND w0001", 10)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"tail-merged plan has an exchange:\n$plan")
   }
 }
