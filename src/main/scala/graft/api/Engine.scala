@@ -57,8 +57,8 @@ object Engine {
     graft.streaming.StreamingIngest.upsert(spark, docs, indexDir)
 
   /** Single-document put. Reference-faithful but HONEST about cost: one
-    * put = one full upsert (key lookup + append + delta-lexicon commit,
-    * ~6 Spark jobs). For put-heavy call sites use `putDocuments` (bulk) or
+    * put = one full upsert (key lookup + append, which writes segments but
+    * no lexicon). For put-heavy call sites use `putDocuments` (bulk) or
     * `writer(...)` (round-5): a buffering writer that coalesces single
     * puts into micro-batches. */
   def putDocument(spark: SparkSession, indexDir: String, doc: CorpusRow): IndexStats = {

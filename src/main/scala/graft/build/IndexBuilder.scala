@@ -66,10 +66,6 @@ object IndexBuilder {
   def docstatsDir(ix: String) = s"$ix/docstats"
   def lexiconDir(ix: String) = s"$ix/lexicon"
   def lexgramsDir(ix: String) = s"$ix/lexgrams"
-  /** LSM delta-lexicon dirs (round-5): each append writes one delta here
-    * instead of rewriting the vocab-sized base; folded at MERGE_SMALL /
-    * compact time (foldLexiconDeltas) */
-  def lexdeltasDir(ix: String) = s"$ix/lexdeltas"
   def manifestsDir(ix: String) = s"$ix/manifests"
   def statsPath(ix: String) = s"$ix/stats.json"
   def tocPath(ix: String) = s"$ix/toc.json"
@@ -92,7 +88,7 @@ object IndexBuilder {
   val DocstatsSchema: StructType = table("docId" -> LongType, "repo" -> StringType,
     "path" -> StringType, "commit" -> StringType, "lang" -> StringType, "sha" -> StringType,
     "rawLen" -> IntegerType, "lenByte" -> IntegerType, "segId" -> IntegerType)
-  /** lexicon/ and every lexdeltas/dN: term -> global df, cf, maxTf */
+  /** lexicon/: term -> global df, cf, maxTf */
   val LexiconSchema: StructType = table("term" -> StringType, "df" -> LongType,
     "cf" -> LongType, "maxTf" -> LongType)
   /** lexgrams/: 3-gram -> term */
@@ -548,206 +544,169 @@ object IndexBuilder {
       }
   }
 
-  /** global lexicon: term -> corpus-wide df, range-partitioned + sorted so
-    * query-term lookups prune to one file / few row groups. A 3-gram
-    * sidecar (gram -> term, gram-sorted) makes UNPREFIXED multiterm
-    * expansion (fuzzy, infix wildcards) a pruned gram lookup instead of a
-    * full lexicon pass (Searcher.scanMulti). */
+  /** Global lexicon: term -> corpus-wide df, cf and maxTf,
+    * range-partitioned + sorted so query-term lookups prune to one file /
+    * few row groups. A 3-gram sidecar (gram -> term, gram-sorted) makes
+    * UNPREFIXED multiterm expansion (fuzzy, infix wildcards) a pruned gram
+    * lookup instead of a full lexicon pass (Searcher.scanMulti).
+    *
+    * LSM shape, Whoosh-style ([W] whoosh/reading.py MultiReader sums
+    * doc_frequency over its segments' own term tables): the base lexicon
+    * records in `_covers.json` the build-layout cover ids whose stats it
+    * holds. Live segments whose covers lie outside that set are the DELTA
+    * lexicon: their own (term, df, cf, maxTf) columns are read directly
+    * (`segmentLexicon`; `blocks` is never read, column pruning), so an
+    * append writes no lexicon file at all. Readers fold base + delta
+    * segments (Searcher.open); MERGE_SMALL / compact fold them into the
+    * base (foldLexiconDeltas) BEFORE they merge, so a merged segment never
+    * mixes covered and uncovered covers.
+    *
+    * This full rebuild covers every live segment. */
   def writeLexicon(spark: SparkSession, indexDir: String): Unit = {
-    import spark.implicits._
-    // manifest-filtered segment set: superseded/orphaned dirs a crashed
-    // merge left behind must not double-count into the global df
-    val fsLex = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
-    val liveLex = readManifests(fsLex, indexDir).map(_.segId)
-    val seg = readTable(spark, SegmentsSchema, segmentsDir(indexDir))
-      .filter(col("segId").isin(liveLex: _*))
-      .filter(col("term") >= graft.search.Q.RealTermMin) // D14 pseudo rows excluded
-    val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
-    // maxTf = the term's corpus-wide max term frequency ([W] whoosh TermInfo
-    // max_weight): the driver-side query upper-bound input (Searcher.termStats)
-    //
-    // The aggregate is persisted for the duration of this function: THREE
-    // consumers (the range-partitioner's sampling pass, the base write, the
-    // gram-sidecar write) would otherwise each rerun the segments scan +
-    // groupBy — measured r6 as one extra full segments pass plus a lexicon
-    // parquet re-read per build. Vocab-sized (not corpus-sized) state, and
-    // released before return.
-    val agg = seg.groupBy($"term").agg(sum($"df").cast("long").as("df"),
-        sum($"cf").cast("long").as("cf"),
-        max($"maxTf").cast("long").as("maxTf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      agg.count() // materialize once; both writers below read the cache
-      // base lexicon and gram sidecar write to DIFFERENT dirs from the same
-      // cached aggregate — overlap them (guide §2.6)
-      concurrently("graft-lexgrams-write")(
-        agg.repartitionByRange(lexPartitions, $"term")
-          .sortWithinPartitions("term")
-          .write.mode(SaveMode.Overwrite).parquet(lexiconDir(indexDir)),
-        agg.select($"term").as[String]
-          .flatMap(t => grams3(t).iterator.map(g => (g, t)))
-          .toDF("gram", "term")
-          .repartitionByRange(lexPartitions, $"gram")
-          .sortWithinPartitions("gram", "term")
-          .write.mode(SaveMode.Overwrite).parquet(lexgramsDir(indexDir)))
-    } finally { agg.unpersist(); () }
-    // the full rebuild covers every live segment, so any pending delta
-    // lexicons are superseded — GC them (a crash before this delete leaves
-    // a double-count window only until the rebuild reruns; builds are the
-    // retryable unit)
-    fsLex.delete(new Path(lexdeltasDir(indexDir)), true)
-    ()
-  }
-
-  /** Incremental lexicon maintenance for appends — LSM shape (round-5; the
-    * round-4 version union-re-aggregated and REWROTE the whole vocab-sized
-    * base per append, the last per-batch O(index-metadata) cost): aggregate
-    * ONLY the new segments' (term, df, cf, maxTf) and commit it as a
-    * term-sorted DELTA file beside the base (`lexdeltas/d<segId>`). Read
-    * side (Searcher.open) folds base + live deltas with a tiny grouped
-    * aggregation — the pushed `term IN` probe composes across the files for
-    * free (all term-sorted parquet with sharp min/max stats). Deltas fold
-    * into the base at MERGE_SMALL / compact time (foldLexiconDeltas), the
-    * same cadence that bounds the segment tail. Work per append: one
-    * delta-sized segment scan + delta-sized writes; the base is never read
-    * or written.
-    *
-    * Grams: ALL the delta's terms' 3-grams are appended to the sidecar
-    * (an anti-join against the base to isolate new terms would read the
-    * vocab-sized term column per append, defeating the point). Duplicate
-    * (gram, term) pairs are harmless — every consumer distincts the probe —
-    * and are physically deduped at fold time. Grams are written BEFORE the
-    * delta is promoted: a crash between the two leaves orphan grams
-    * (phantom expansion candidates with df 0 — harmless), never a term the
-    * gram probe can't find (which would break the superset guarantee).
-    *
-    * Falls back to the full build when no lexicon exists yet. */
-  def updateLexicon(spark: SparkSession, indexDir: String,
-                    newSegIds: Seq[Int]): Unit = {
-    import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(lexiconDir(indexDir))) || newSegIds.isEmpty) {
-      writeLexicon(spark, indexDir)
-      return
+    // manifest-filtered segment set: superseded/orphaned dirs a crashed
+    // merge left behind must not double-count into the global df
+    val live = readManifests(fs, indexDir)
+    val segments = readTable(spark, SegmentsSchema, segmentsDir(indexDir))
+      .filter(col("segId").isin(live.map(_.segId): _*))
+    commitLexicon(spark, fs, indexDir, aggregateLexicon(lexiconRowsOf(segments)),
+      grams = None, live.flatMap(_.coverSet).toSet)
+  }
+
+  /** The lexicon rows of a segments relation, read from each segment's own
+    * term stats (D14 pseudo rows excluded; `blocks` pruned away): one row
+    * per (segment, term) — aggregate with `aggregateLexicon`, or sum on the
+    * driver for a pruned lookup. */
+  private def lexiconRowsOf(segments: DataFrame): DataFrame =
+    segments.filter(col("term") >= graft.search.Q.RealTermMin)
+      .select(col("term"), col("df").cast("long").as("df"), col("cf"),
+        col("maxTf").cast("long").as("maxTf"))
+
+  /** The delta lexicon: the lexicon rows of the given segments (the live
+    * ones the base does not cover yet), listing only their dirs */
+  private[graft] def segmentLexicon(spark: SparkSession, indexDir: String,
+                                    segIds: Seq[Int]): DataFrame =
+    if (segIds.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LexiconSchema)
+    else lexiconRowsOf(readTable(spark, SegmentsSchema, segmentsDir(indexDir), segIds))
+
+  /** term -> summed df and cf, max maxTf ([W] whoosh TermInfo max_weight:
+    * the driver-side query upper-bound input, Searcher.termStats) */
+  private[graft] def aggregateLexicon(rows: DataFrame): DataFrame =
+    rows.groupBy(col("term")).agg(sum(col("df")).cast("long").as("df"),
+      sum(col("cf")).cast("long").as("cf"),
+      max(col("maxTf")).cast("long").as("maxTf"))
+
+  private def coversPath(indexDir: String) = new Path(lexiconDir(indexDir), "_covers.json")
+
+  /** The cover ids whose stats the base lexicon holds (its `_covers.json`,
+    * written as contiguous `lo-hi` runs); None when no base exists yet. A
+    * base without the marker is not this format's and is refused. */
+  private[graft] def lexiconCovers(fs: FileSystem, indexDir: String): Option[Set[Int]] = {
+    if (!fs.exists(new Path(lexiconDir(indexDir)))) return None
+    val p = coversPath(indexDir)
+    if (!fs.exists(p)) throw new IllegalStateException(
+      s"$p: missing (a lexicon from another format?) — rebuild the index " +
+        "(IndexBuilder.build) to migrate")
+    val runs = requiredField(readText(fs, p), p.toString, "covers", "\"([0-9,-]*)\"")
+    Some(runs.split(',').iterator.filter(_.nonEmpty).flatMap { r =>
+      r.split('-') match {
+        case Array(lo, hi) => lo.toInt to hi.toInt
+        case _ => throw new IllegalStateException(s"$p: malformed cover run \"$r\"")
+      }
+    }.toSet)
+  }
+
+  /** The live segments whose stats the base lexicon does not hold: those
+    * whose covers are disjoint from `covered` (every segment when there is
+    * no base). A segment with covers on both sides would be counted half
+    * in the base and whole as a delta, so it fails, naming the segment. */
+  private[graft] def lexiconDeltaSegments(live: Seq[SegmentManifest],
+                                          covered: Set[Int]): Seq[SegmentManifest] =
+    live.filter { m =>
+      val (in, out) = m.coverSet.partition(covered)
+      if (in.nonEmpty && out.nonEmpty) throw new IllegalStateException(
+        s"segment ${m.segId} mixes covers the base lexicon holds (${in.mkString(",")}) " +
+          s"with covers it does not (${out.mkString(",")}) — rebuild the lexicon " +
+          "(IndexBuilder.writeLexicon)")
+      in.isEmpty
     }
-    val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
-    val staging = s"${stagingDir(indexDir)}/lexdelta"
-    fs.delete(new Path(staging), true)
-    // delta-sized aggregate persisted across its three consumers (range
-    // sampler, delta write, gram write) — same r6 pattern as writeLexicon;
-    // saves one pruned segments re-scan and one staging re-read per append
-    val agg = readTable(spark, SegmentsSchema, segmentsDir(indexDir), newSegIds)
-      .filter(col("term") >= graft.search.Q.RealTermMin) // D14 pseudo rows excluded
-      .groupBy($"term").agg(sum($"df").cast("long").as("df"),
-        sum($"cf").cast("long").as("cf"),
-        max($"maxTf").cast("long").as("maxTf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      agg.repartitionByRange(lexPartitions, $"term")
-        .sortWithinPartitions("term")
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-      // grams BEFORE the delta promotes (crash ordering documented above)
-      agg.select($"term").as[String]
-        .flatMap(t => grams3(t).iterator.map(g => (g, t)))
-        .toDF("gram", "term")
-        .repartitionByRange(lexPartitions, $"gram")
-        .sortWithinPartitions("gram", "term")
-        .write.mode(SaveMode.Append).parquet(lexgramsDir(indexDir))
-    } finally { agg.unpersist(); () }
-    // segIds are never reused, so the delta name is collision-free
-    promoteDir(fs, staging, s"${lexdeltasDir(indexDir)}/d${newSegIds.min}")
-  }
 
-  /** Delta-lexicon dirs not yet folded into the base: one listing, minus
-    * the names recorded consumed by the base's `_folded.json` marker (a
-    * fold crash between base promote and delta GC must not double-count —
-    * the marker rides the atomic base promote, manifest-supersession
-    * style). */
-  def liveLexDeltaDirs(fs: FileSystem, indexDir: String): Seq[String] = {
-    val root = new Path(lexdeltasDir(indexDir))
-    if (!fs.exists(root)) return Seq.empty
-    val names = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("d"))
-    if (names.isEmpty) return Seq.empty
-    val folded = readFoldedMarker(fs, indexDir)
-    names.filterNot(folded).sorted.map(n => s"${lexdeltasDir(indexDir)}/$n")
-  }
-
-  private def foldedMarkerPath(indexDir: String) =
-    new Path(lexiconDir(indexDir), "_folded.json")
-
-  private def readFoldedMarker(fs: FileSystem, indexDir: String): Set[String] = {
-    val p = foldedMarkerPath(indexDir)
-    if (!fs.exists(p)) return Set.empty
-    val in = fs.open(p)
-    val txt = scala.io.Source.fromInputStream(in).mkString
-    in.close()
-    """"([^"]+)"""".r.findAllMatchIn(txt).map(_.group(1)).toSet - "consumed"
-  }
-
-  /** Fold pending delta lexicons into the base (the LSM compaction step,
-    * wired into Merger.mergeSmall/compact): one vocab-sized union +
-    * re-aggregate + term-sorted rewrite, paid at COMPACTION cadence instead
-    * of per append. Also physically dedups the gram sidecar (appends leave
-    * duplicate (gram, term) rows). Commit protocol: the folded base is
-    * staged WITH a `_folded.json` marker naming every delta it consumed
-    * (underscore prefix — parquet readers skip it), promoted atomically,
-    * then the consumed deltas are GC'd; a crash between promote and GC
-    * leaves deltas that every reader skips via the marker and the next fold
-    * sweeps. Returns true if anything was folded. */
+  /** Fold the delta segments into the base lexicon (the LSM compaction
+    * step, run by Merger.mergeSmall/compact before they merge): base ∪ the
+    * delta segments' rows, re-aggregated, committed with the new marker.
+    * The gram sidecar becomes the distinct union of the base grams and the
+    * delta terms' 3-grams. Returns true if anything was folded. */
   def foldLexiconDeltas(spark: SparkSession, indexDir: String): Boolean = {
     import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val root = new Path(lexdeltasDir(indexDir))
-    val allNames: Seq[String] =
-      if (!fs.exists(root)) Seq.empty
-      else fs.listStatus(root).toSeq.map(_.getPath.getName).filter(_.startsWith("d"))
-    val live = liveLexDeltaDirs(fs, indexDir)
-    if (live.isEmpty) {
-      // nothing pending; sweep stale consumed leftovers from a prior crash
-      allNames.foreach(n => fs.delete(new Path(root, n), true))
-      if (allNames.nonEmpty) fs.delete(root, true)
-      return false
-    }
-    val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
-    val staging = s"${stagingDir(indexDir)}/lexfold"
-    fs.delete(new Path(staging), true)
-    // vocab-sized folded aggregate persisted across the range sampler and
-    // the write (r6; the fold runs at compaction cadence, but the base is
-    // vocab-sized, so one saved union+re-aggregate pass is real money)
-    val foldAgg = live.map(readTable(spark, LexiconSchema, _))
-      .foldLeft(readTable(spark, LexiconSchema, lexiconDir(indexDir)))(_ unionByName _)
-      .groupBy($"term").agg(sum($"df").cast("long").as("df"),
-        sum($"cf").cast("long").as("cf"),
-        max($"maxTf").cast("long").as("maxTf"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      foldAgg.repartitionByRange(lexPartitions, $"term")
-        .sortWithinPartitions("term")
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-    } finally { foldAgg.unpersist(); () }
-    // marker = EVERY delta name present (live + stale): all are covered by
-    // the folded base the moment it promotes
-    val marker = s"""{"consumed":[${allNames.sorted.map(n => s""""$n"""").mkString(",")}]}"""
-    val out = fs.create(new Path(staging, "_folded.json"), true)
-    out.write(marker.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    promoteDir(fs, staging, lexiconDir(indexDir))
-    allNames.foreach(n => fs.delete(new Path(root, n), true))
-    fs.delete(root, true)
-    // gram sidecar: physical dedup of append-time duplicates
-    val gstaging = s"${stagingDir(indexDir)}/lexgramsfold"
-    fs.delete(new Path(gstaging), true)
-    readTable(spark, LexgramsSchema, lexgramsDir(indexDir))
+    val live = readManifests(fs, indexDir)
+    // no base yet: nothing to fold into
+    val covered = lexiconCovers(fs, indexDir).getOrElse(return false)
+    val deltas = lexiconDeltaSegments(live, covered)
+    if (deltas.isEmpty) return false
+    val delta = segmentLexicon(spark, indexDir, deltas.map(_.segId))
+    val grams = readTable(spark, LexgramsSchema, lexgramsDir(indexDir))
+      .unionByName(gramRowsOf(delta.select($"term").as[String]))
       .distinct()
-      .repartitionByRange(lexPartitions, col("gram"))
-      .sortWithinPartitions("gram", "term")
-      .write.mode(SaveMode.Overwrite).parquet(gstaging)
-    promoteDir(fs, gstaging, lexgramsDir(indexDir))
+    commitLexicon(spark, fs, indexDir,
+      aggregateLexicon(readTable(spark, LexiconSchema, lexiconDir(indexDir)).unionByName(delta)),
+      Some(grams), live.flatMap(_.coverSet).toSet)
     true
+  }
+
+  /** Stage the aggregated lexicon `agg` with the marker `covers`, and the
+    * gram sidecar (`grams`, or the 3-grams of every `agg` term), then
+    * promote GRAMS FIRST and the base second. A crash between the two
+    * promotes leaves the old base, whose marker still names the delta
+    * segments, next to a sidecar that already holds their terms' grams: a
+    * superset, so the gram probe still finds every term; a rerun converges.
+    * A crash before either promote leaves only staging dirs, which the
+    * next commit clears. */
+  private def commitLexicon(spark: SparkSession, fs: FileSystem, indexDir: String,
+                            agg: DataFrame, grams: Option[DataFrame],
+                            covers: Set[Int]): Unit = {
+    import spark.implicits._
+    val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
+    val lexStaging = s"${stagingDir(indexDir)}-lexicon"
+    val gramStaging = s"${stagingDir(indexDir)}-lexgrams"
+    fs.delete(new Path(lexStaging), true)
+    fs.delete(new Path(gramStaging), true)
+    // The aggregate is persisted for the duration of the write: its
+    // consumers (the range-partitioner's sampling pass, the base write and,
+    // for a full rebuild, the gram-sidecar write) would otherwise each rerun
+    // the segments scan + groupBy. Vocab-sized state, released before return.
+    val cached = agg.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // materialize once when both writers below read the cache
+      if (grams.isEmpty) cached.count()
+      val gramRows = grams.getOrElse(gramRowsOf(cached.select($"term").as[String]))
+      // base and gram sidecar go to DIFFERENT staging dirs — overlap them
+      concurrently("graft-lexgrams-write")(
+        cached.repartitionByRange(lexPartitions, $"term")
+          .sortWithinPartitions("term")
+          .write.mode(SaveMode.Overwrite).parquet(lexStaging),
+        gramRows.repartitionByRange(lexPartitions, $"gram")
+          .sortWithinPartitions("gram", "term")
+          .write.mode(SaveMode.Overwrite).parquet(gramStaging))
+    } finally { cached.unpersist(); () }
+    // the marker rides the atomic base promote (underscore prefix: parquet
+    // readers skip it)
+    val runs = contiguousRuns(covers.toSeq)
+      .map { case (lo, hi) => s"$lo-$hi" }.mkString(",")
+    val out = fs.create(new Path(lexStaging, "_covers.json"), true)
+    out.write(s"""{"covers":"$runs"}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.close()
+    promoteDir(fs, gramStaging, lexgramsDir(indexDir))
+    promoteDir(fs, lexStaging, lexiconDir(indexDir))
+  }
+
+  /** (gram, term) sidecar rows of `terms` */
+  private def gramRowsOf(terms: Dataset[String]): DataFrame = {
+    import terms.sparkSession.implicits._
+    terms.flatMap(t => grams3(t).iterator.map(g => (g, t))).toDF("gram", "term")
   }
 
   /** distinct character 3-grams of a term (terms shorter than 3 chars have
@@ -819,10 +778,7 @@ object IndexBuilder {
   def readManifestsFast(fs: FileSystem, indexDir: String): Seq[SegmentManifest] = {
     val p = new Path(tocPath(indexDir))
     if (fs.exists(p)) {
-      val in = fs.open(p)
-      val lines = scala.io.Source.fromInputStream(in).getLines().toList
-      in.close()
-      lines match {
+      readText(fs, p).linesIterator.toList match {
         case header :: rest =>
           val tok = """"token":"([0-9a-f]+)"""".r.findFirstMatchIn(header).map(_.group(1))
           val n = """"n":(\d+)""".r.findFirstMatchIn(header).map(_.group(1).toInt)
@@ -862,13 +818,13 @@ object IndexBuilder {
     if (!fs.exists(dir)) return Seq.empty
     fs.listStatus(dir).toSeq
       .filter(s => s.getPath.getName.startsWith("seg-") && s.getPath.getName.endsWith(".json"))
-      .map { s =>
-        val in = fs.open(s.getPath)
-        val txt = scala.io.Source.fromInputStream(in).mkString
-        in.close()
-        parseManifest(txt, s.getPath.toString)
-      }
+      .map(s => parseManifest(readText(fs, s.getPath), s.getPath.toString))
       .sortBy(_.segId)
+  }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
   /** the value of a required `"key":<valueRe>` field of the flat JSON
@@ -908,9 +864,7 @@ object IndexBuilder {
 
   def readStats(fs: FileSystem, indexDir: String): IndexStats = {
     val path = statsPath(indexDir)
-    val in = fs.open(new Path(path))
-    val json = scala.io.Source.fromInputStream(in).mkString
-    in.close()
+    val json = readText(fs, new Path(path))
     def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     val analyzer = """"analyzer":"([^"]*)"""".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(graft.analysis.AnalyzerSpec.Standard.asString)
@@ -920,6 +874,20 @@ object IndexBuilder {
       .map(_.group(1).toInt).getOrElse(0)
     IndexStats(l("numDocs"), l("totalFieldLen"), l("numSegments").toInt,
       l("segSize").toInt, analyzer, fv)
+  }
+
+  /** stats.json of an index in THIS code's on-disk format, else a fail-fast
+    * "rebuild" error: the one format check shared by the reader
+    * (Searcher.open) and the writers that rewrite stats.json (append,
+    * mergeSmall, compact), so an older index is never silently relabelled
+    * as the current format. Nothing is written before the check. */
+  def readCurrentStats(fs: FileSystem, indexDir: String): IndexStats = {
+    val st = readStats(fs, indexDir)
+    require(st.formatVersion == IndexStats.CurrentFormat,
+      s"index at $indexDir has on-disk formatVersion ${st.formatVersion}, " +
+        s"this code needs ${IndexStats.CurrentFormat} — " +
+        "rebuild the index (IndexBuilder.build) to migrate")
+    st
   }
 
   /** Staging -> final dir promote. An occupied destination is replaced by a

@@ -52,8 +52,12 @@ object Merger {
     *   3. delete the old manifests, then the old segment dirs — pure GC;
     *      a crash anywhere leaves a readable, correct index. */
   def mergeGroup(spark: SparkSession, indexDir: String, group: Seq[Int],
-                 deletes: Set[Long] = Set.empty): Int =
+                 deletes: Set[Long] = Set.empty): Int = {
+    // fold first: the merged segment must not mix covers the base lexicon
+    // holds with covers it does not
+    IndexBuilder.foldLexiconDeltas(spark, indexDir)
     merge(spark, indexDir, group, deletes, tail = false)
+  }
 
   /** one merge of `group` in the COGROUP or TAIL shape; returns the fresh
     * segId */
@@ -308,6 +312,11 @@ object Merger {
     * concatenation keeps every term's global df, so the lexicon needs no
     * rebuild); purge stays with compact(applyDeletes)/optimize.
     *
+    * It first folds the delta lexicon (the segments appended since the
+    * last fold, IndexBuilder.writeLexicon) into the base: the per-append
+    * work stays delta-sized, the vocab-sized rewrite is paid at this
+    * cadence, and a merged run never mixes folded and unfolded segments.
+    *
     * Each run merges with the TAIL shape: every member is below `smallDocs`
     * and a run is flushed once it reaches `smallDocs`, so a run totals
     * under 2 x `smallDocs` docs — small enough for one task, whose one-file
@@ -320,9 +329,9 @@ object Merger {
     require(groupSize >= 2)
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val target =
-      if (smallDocs > 0) smallDocs
-      else IndexBuilder.readStats(fs, indexDir).segSize.toLong
+    val st = IndexBuilder.readCurrentStats(fs, indexDir)
+    val target = if (smallDocs > 0) smallDocs else st.segSize.toLong
+    IndexBuilder.foldLexiconDeltas(spark, indexDir)
     val ms = IndexBuilder.readManifests(fs, indexDir)
     val minted = scala.collection.mutable.ArrayBuffer.empty[Int]
     var run = List.empty[SegmentManifest]
@@ -341,15 +350,9 @@ object Merger {
       }
     }
     flush()
-    if (minted.nonEmpty) {
-      val st = IndexBuilder.readStats(fs, indexDir)
+    if (minted.nonEmpty)
       IndexBuilder.writeStats(fs, indexDir, st.copy(
         numSegments = IndexBuilder.readManifests(fs, indexDir).size))
-    }
-    // LSM lexicon fold (round-5): the same cadence that bounds the segment
-    // tail folds pending delta lexicons into the base — per-append work
-    // stays delta-sized, the vocab-sized rewrite is paid here
-    IndexBuilder.foldLexiconDeltas(spark, indexDir)
     minted.toSeq
   }
 
@@ -368,6 +371,9 @@ object Merger {
     require(groupSize >= 2)
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
+    val st = IndexBuilder.readCurrentStats(fs, indexDir)
+    // fold before merging (see mergeSmall)
+    IndexBuilder.foldLexiconDeltas(spark, indexDir)
     val delRids = if (applyDeletes) graft.build.Deletes.listRanges(fs, indexDir)
       else Set.empty[Long]
     val hadDeletes = delRids.nonEmpty
@@ -385,7 +391,7 @@ object Merger {
           val dels = if (applyDeletes)
             graft.build.Deletes.forCovers(fs, indexDir, g.flatMap(byId(_).coverSet))
           else Set.empty[Long]
-          val merged = mergeGroup(spark, indexDir, g, dels)
+          val merged = merge(spark, indexDir, g, dels, tail = false)
           if (applyDeletes) purged += merged
         }
       }
@@ -401,23 +407,19 @@ object Merger {
         .filter(m => m.coverSet.exists(r => delRids.contains(r.toLong)))
         .foreach { m =>
           val dels = graft.build.Deletes.forCovers(fs, indexDir, m.coverSet)
-          if (dels.nonEmpty) mergeGroup(spark, indexDir, Seq(m.segId), dels)
+          if (dels.nonEmpty) merge(spark, indexDir, Seq(m.segId), dels, tail = false)
         }
     }
     val manifests = IndexBuilder.readManifests(fs, indexDir)
-    val st = IndexBuilder.readStats(fs, indexDir)
     if (hadDeletes) {
       // stats refresh after physical purge (N/avgfl shrink with the purge)
       IndexBuilder.writeStats(fs, indexDir, st.copy(
         numDocs = manifests.map(_.docCount).sum,
         totalFieldLen = manifests.map(_.rawLenSum).sum,
         numSegments = manifests.size))
-      // full lexicon rebuild covers everything — writeLexicon GCs lexdeltas
+      // the purge shrank dfs: full lexicon rebuild
       IndexBuilder.writeLexicon(spark, indexDir)
       graft.build.Deletes.clear(spark, indexDir)
-    } else {
-      IndexBuilder.writeStats(fs, indexDir, st.copy(numSegments = manifests.size))
-      IndexBuilder.foldLexiconDeltas(spark, indexDir)
-    }
+    } else IndexBuilder.writeStats(fs, indexDir, st.copy(numSegments = manifests.size))
   }
 }

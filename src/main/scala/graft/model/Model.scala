@@ -78,8 +78,10 @@ object IndexStats {
     * silently returned empty `*`/NOT results and only failed later on the
     * missing lexicon maxTf column — now it fails fast with a clear error).
     * History: <=6 unstamped (v6 = persisted pseudo rows + lexicon maxTf);
-    * 7 = v6 + the optional LSM delta-lexicon dir (lexdeltas) and TOC cache
-    * — a 7-reader folds deltas when present, so 6-built data reopens after
-    * a rebuild stamps it. */
-  final val CurrentFormat = 7
+    * 7 = v6 + the optional LSM delta-lexicon dir (lexdeltas) and TOC cache;
+    * 8 = segment-backed deltas: appends write no lexicon, the base lexicon
+    * carries `_covers.json` and readers fold it with the uncovered
+    * segments' own term stats (a v7 index may hold pending lexdeltas this
+    * reader would not count, so it must be rebuilt). */
+  final val CurrentFormat = 8
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.build.IndexBuilder
-import graft.model.{CorpusRow, LexRow}
+import graft.model.CorpusRow
 
 /** Key-term extraction + more-like-this (the reference's classify surface:
   * [W] whoosh/classify.py `Expander`/`Bo1Model`, `Searcher.key_terms` /
@@ -44,12 +44,8 @@ object KeyTerms {
   /** pruned lexicon lookup: term -> (df, cf) for the given terms (terms
     * absent from the lexicon are dropped — they can't be key terms) */
   def lexStats(spark: SparkSession, handle: Searcher.IndexHandle,
-               terms: Set[String]): Map[String, (Long, Long)] = {
-    import spark.implicits._
-    if (terms.isEmpty) return Map.empty
-    handle.lexicon.filter($"term".isin(terms.toSeq: _*)).as[LexRow]
-      .collect().iterator.map(l => l.term -> ((l.df, l.cf))).toMap
-  }
+               terms: Set[String]): Map[String, (Long, Long)] =
+    Searcher.termStats(spark, handle, terms).map { case (t, s) => t -> ((s.df, s.cf)) }
 
   /** Whoosh `key_terms_from_text`: top `numTerms` Bo1-scored terms of one
     * analyzed text. Driver-side — bounded by a single document's vocabulary

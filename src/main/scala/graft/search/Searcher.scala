@@ -19,7 +19,10 @@ import graft.model.{LexRow, SegRead}
   *  1. driver: parse + analyze the query, expand multiterm nodes against
   *     their field's lexicon, resolve Otherwise nodes (`prepare`);
   *  2. per field, one pruned lexicon lookup for the <=|terms| global dfs
-  *     (term-sorted parquet -> pushed `term IN (...)` prunes row groups);
+  *     (term-sorted parquet -> pushed `term IN (...)` prunes row groups).
+  *     It reads the base lexicon plus the own term stats of segments
+  *     appended since the last fold, and sums a term's rows on the driver:
+  *     one job and no exchange either way;
   *  3. per field, one pruned scan of the segments for the query terms'
   *     posting rows (same pushdown; `content` never read — column pruning);
   *  4. the per-segment runner (`perSegment`) folds each segment's rows into
@@ -44,6 +47,14 @@ object Searcher {
     * collected to the driver), and a df memo (the index is immutable under
     * a handle).
     *
+    * Lexicon: `lexiconBase` is the base lexicon, `lexDelta` the term stats
+    * of the live segments it does not cover yet (appended since the last
+    * fold; IndexBuilder.writeLexicon). `lexiconRows` is their union, one row
+    * per (source, term) — pruned lookups sum it on the driver (termDfs,
+    * termStats); `lexicon` is the grouped one-row-per-term view, for scans
+    * (multiterm expansion, suggest, key terms, reader stats). With no
+    * deltas all three are the bare base scan.
+    *
     * SNAPSHOT SEMANTICS: a handle pins the segment files that existed at
     * open time. Merge/compaction REPLACES segment files, so queries through
     * a pre-compaction handle fail with FILE_NOT_EXIST — reopen after any
@@ -52,7 +63,7 @@ object Searcher {
     * until readers drain before GC'ing them. */
   final class IndexHandle(val indexDir: String, val stats: BM25.CorpusStats,
                           val segSize: Int,
-                          val segments: DataFrame, val lexicon: DataFrame,
+                          val segments: DataFrame, val lexiconBase: DataFrame,
                           val delRanges: Map[Int, Seq[Long]],
                           val chain: graft.analysis.Chain = graft.analysis.Chain.Standard,
                           val lexgrams: Option[DataFrame] = None,
@@ -66,23 +77,22 @@ object Searcher {
                             * term-range-partitioned merges or for
                             * multi-row-group (>~128 MB) segments; those
                             * fall back to the shuffle path. */
-                          val segColocated: Boolean = false) {
+                          val segColocated: Boolean = false,
+                          val lexDelta: Option[DataFrame] = None) {
     def hasDeletes: Boolean = delRanges.nonEmpty
+    val lexiconRows: DataFrame = lexDelta.fold(lexiconBase)(lexiconBase.unionByName(_))
+    val lexicon: DataFrame =
+      if (lexDelta.isEmpty) lexiconBase else IndexBuilder.aggregateLexicon(lexiconRows)
     private[search] val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   }
 
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val st = IndexBuilder.readStats(fs, indexDir)
-    // fail FAST on a foreign layout (round-5 advice): a pre-v7 index (no
-    // formatVersion stamp) lacks the persisted D14 pseudo rows and the
-    // lexicon maxTf column — opening it would silently return empty `*`/NOT
-    // results and only error when termStats touched the missing column
-    require(st.formatVersion == graft.model.IndexStats.CurrentFormat,
-      s"index at $indexDir has on-disk formatVersion ${st.formatVersion}, " +
-        s"this reader needs ${graft.model.IndexStats.CurrentFormat} — " +
-        "rebuild the index (IndexBuilder.build) to migrate")
+    // fail FAST on a foreign layout (round-5 advice): an older index would
+    // silently answer wrong (a v7 one can hold pending lexdeltas this reader
+    // does not count), so it asks for a rebuild
+    val st = IndexBuilder.readCurrentStats(fs, indexDir)
     // manifest-driven segment set: a crashed merge can leave superseded or
     // orphaned segment dirs behind (they are GC'd after the commit point) —
     // readers trust only segIds with a live manifest. The isin filter is a
@@ -115,37 +125,30 @@ object Searcher {
         Some(IndexBuilder.readTable(spark, IndexBuilder.LexgramsSchema,
           IndexBuilder.lexgramsDir(indexDir)))
       else None
-    // LSM lexicon (round-5): streaming appends commit term-sorted DELTA
-    // files instead of rewriting the vocab-sized base; the handle's lexicon
-    // folds base + live deltas with a grouped re-aggregation. Catalyst
-    // pushes term predicates through the Aggregate (grouping-column
-    // filters), so the pruned `term IN` probe still reaches every file's
-    // row-group stats; with no deltas (the common, post-fold state) the
-    // relation is the bare base scan — zero plan change.
-    val lexicon =
+    // LSM lexicon: the base plus the term stats of the live segments its
+    // `_covers.json` does not name (appended since the last fold), read
+    // straight from those segments (IndexBuilder.segmentLexicon)
+    val (lexiconBase, lexDelta) =
       if (liveSegs.isEmpty) {
         import spark.implicits._
-        spark.emptyDataset[graft.model.LexRow].toDF()
+        (spark.emptyDataset[LexRow].toDF(), None)
       } else {
-        def lex(dir: String) =
-          IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema, dir)
-        val base = lex(IndexBuilder.lexiconDir(indexDir))
-        val deltas = IndexBuilder.liveLexDeltaDirs(fs, indexDir)
-        if (deltas.isEmpty) base
-        else deltas.map(lex).foldLeft(base)(_ unionByName _)
-          .groupBy(col("term"))
-          .agg(sum(col("df")).cast("long").as("df"),
-            sum(col("cf")).cast("long").as("cf"),
-            max(col("maxTf")).cast("long").as("maxTf"))
+        val covered = IndexBuilder.lexiconCovers(fs, indexDir).getOrElse(
+          throw new IllegalStateException(s"index at $indexDir has segments but no lexicon"))
+        val deltas = IndexBuilder.lexiconDeltaSegments(manifests, covered).map(_.segId)
+        (IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema,
+          IndexBuilder.lexiconDir(indexDir)),
+          Option.when(deltas.nonEmpty)(IndexBuilder.segmentLexicon(spark, indexDir, deltas)))
       }
     new IndexHandle(indexDir, BM25.CorpusStats(st.numDocs, st.totalFieldLen),
       st.segSize, segments,
-      lexicon,
+      lexiconBase,
       delRanges,
       new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(st.analyzer)),
       lexgrams,
       liveSegs,
-      segmentsColocated(fs, indexDir, liveSegs))
+      segmentsColocated(fs, indexDir, liveSegs),
+      lexDelta)
   }
 
   /** Upper bound on live segments for which open() will verify the
@@ -207,9 +210,7 @@ object Searcher {
         .select($"term").as[String].collect().toSeq
 
     def gramProbe(grams: Seq[String]): Option[DataFrame] =
-      handle.lexgrams.filter(_ => grams.nonEmpty).map { lg =>
-        lg.filter($"gram".isin(grams: _*)).select($"term").distinct()
-      }
+      if (grams.isEmpty) None else gramTerms(handle, grams)
 
     mq match {
       case v: QVariations => // D16: a small enumerated set -> pushed IN
@@ -239,6 +240,17 @@ object Searcher {
     }
   }
 
+  /** The distinct candidate terms sharing one of `grams`: the gram
+    * sidecar's pruned probe, plus every term of the delta segments (the
+    * sidecar holds only base terms; the delta's term set is tail-sized, and
+    * every caller filters candidates exactly). None without a sidecar. */
+  private def gramTerms(handle: IndexHandle, grams: Seq[String]): Option[DataFrame] =
+    handle.lexgrams.map { lg =>
+      val probed = lg.filter(col("gram").isin(grams: _*)).select(col("term"))
+      handle.lexDelta.fold(probed)(d => probed.unionByName(d.select(col("term"))))
+        .distinct()
+    }
+
   /** Spelling suggestions (Whoosh `Searcher.suggest`): lexicon terms within
     * `maxDist` edits of `word`, ranked (distance asc, df desc, term asc) —
     * common corpus terms first among equally-close candidates. Reuses the
@@ -251,11 +263,8 @@ object Searcher {
     val w = word.toLowerCase(java.util.Locale.ROOT)
     val base =
       if (w.length >= 3 * maxDist + 3)
-        handle.lexgrams.map { lg =>
-          handle.lexicon.join(
-            lg.filter($"gram".isin(IndexBuilder.grams3(w).toIndexedSeq: _*))
-              .select($"term").distinct(), Seq("term"))
-        }.getOrElse(handle.lexicon)
+        gramTerms(handle, IndexBuilder.grams3(w).toIndexedSeq)
+          .map(handle.lexicon.join(_, Seq("term"))).getOrElse(handle.lexicon)
       else handle.lexicon
     base
       .filter(abs(length($"term") - lit(w.length)) <= maxDist)
@@ -304,20 +313,23 @@ object Searcher {
     rec(q0)
   }
 
+  /** The lexicon rows of `terms`, base and delta alike: one pruned
+    * `term IN` scan, ONE job and no exchange (no groupBy); callers sum a
+    * term's rows on the driver. */
+  private def lexRowsOf(spark: SparkSession, handle: IndexHandle,
+                        terms: Set[String]): Array[LexRow] = {
+    import spark.implicits._
+    handle.lexiconRows.filter($"term".isin(terms.toSeq: _*)).as[LexRow].collect()
+  }
+
   /** global df for the query's terms: one pruned lexicon scan for the
     * not-yet-cached terms (a term absent from the lexicon has df 0 and is
     * cached as such so it's never re-fetched) */
   def termDfs(spark: SparkSession, handle: IndexHandle, terms: Set[String]): Map[String, Long] = {
-    import spark.implicits._
     if (terms.isEmpty) return Map.empty
     val missing = terms.filterNot(handle.dfCache.containsKey)
     if (missing.nonEmpty) {
-      val fetched = handle.lexicon
-        .filter($"term".isin(missing.toSeq: _*))
-        .as[LexRow]
-        .collect()
-        .map(l => l.term -> l.df)
-        .toMap
+      val fetched = lexRowsOf(spark, handle, missing).groupMapReduce(_.term)(_.df)(_ + _)
       missing.foreach(t => handle.dfCache.put(t, Long.box(fetched.getOrElse(t, 0L))))
     }
     terms.iterator.map(t => t -> handle.dfCache.get(t).longValue()).toMap
@@ -334,16 +346,11 @@ object Searcher {
       if (df == 0) 0.0 else w.upperBound(w.idf(df, numDocs), maxTf.toInt)
   }
   def termStats(spark: SparkSession, handle: IndexHandle,
-                terms: Set[String]): Map[String, TermStats] = {
-    import spark.implicits._
-    if (terms.isEmpty) return Map.empty
-    handle.lexicon
-      .filter($"term".isin(terms.toSeq: _*))
-      .as[LexRow]
-      .collect()
-      .map(l => l.term -> TermStats(l.df, l.cf, l.maxTf))
-      .toMap
-  }
+                terms: Set[String]): Map[String, TermStats] =
+    if (terms.isEmpty) Map.empty
+    else lexRowsOf(spark, handle, terms).groupMapReduce(_.term)(
+      l => TermStats(l.df, l.cf, l.maxTf))((a, b) =>
+      TermStats(a.df + b.df, a.cf + b.cf, math.max(a.maxTf, b.maxTf)))
 
   /** The query core's view of an index: one IndexHandle per field plus the
     * default field, whose handle serves the all-docs list of a bare `*` and

@@ -24,18 +24,15 @@ import graft.model.{CorpusRow, IndexStats}
   * An append runs no separate counting job: the batch's row count (how
   * many segments it fills) comes from the docId stamp's offsets job, and
   * the new segments' doc metrics from the job that materializes the
-  * analyzed docs. The small segments appends leave are merged by
-  * MERGE_SMALL's single-task tail merge, which keeps them in the
-  * exchange-free query layout.
+  * analyzed docs. It writes no lexicon: the appended segments ARE the
+  * delta lexicon (readers fold the base with their own term stats,
+  * IndexBuilder.writeLexicon), so an append commits segments, manifests,
+  * stats and TOC only. The small segments appends leave are merged by
+  * MERGE_SMALL's single-task tail merge, which first folds the deltas into
+  * the base lexicon and keeps the segments in the exchange-free query
+  * layout.
   */
 object StreamingIngest {
-
-  /** instrumentation for tools.StreamBench (round-5 item: make the
-    * lexicon-update share of an append's wall measurable — the LSM delta
-    * write should be a small constant share, never vocab-growing) */
-  object IngestMetrics {
-    @volatile var lastAppendLexiconSec: Double = 0.0
-  }
 
   /** Append a static batch of new documents as fresh segments. */
   def append(spark: SparkSession, batch: Dataset[CorpusRow], indexDir: String,
@@ -49,7 +46,7 @@ object StreamingIngest {
     // the INDEX's segSize and analyzer chain, not the caller's cfg
     val statsOpt =
       if (fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(indexDir))))
-        Some(IndexBuilder.readStats(fs, indexDir))
+        Some(IndexBuilder.readCurrentStats(fs, indexDir))
       else None
     val (segIdBase, segSize, analyzer) = (existing, statsOpt) match {
       case (Seq(), None) => (0, cfg.segSize, cfg.analyzer)
@@ -82,12 +79,10 @@ object StreamingIngest {
       numSegments = manifests.size,
       segSize = segSize,
       analyzer = analyzer.asString)
-    // incremental: only the appended segments are scanned; the result is a
-    // DELTA lexicon file (round-5 LSM — the base is neither read nor
-    // rewritten; folds happen at MERGE_SMALL/compact cadence)
-    val t0 = System.nanoTime()
-    IndexBuilder.updateLexicon(spark, indexDir, newSegs)
-    IngestMetrics.lastAppendLexiconSec = (System.nanoTime() - t0) / 1e9
+    // the new segments are the delta lexicon; only an index created empty
+    // (Engine.createIndex) gets its first base lexicon here
+    if (!fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.lexiconDir(indexDir))))
+      IndexBuilder.writeLexicon(spark, indexDir)
     IndexBuilder.writeStats(fs, indexDir, stats)
     IndexBuilder.writeToc(fs, indexDir)
     stats
@@ -112,6 +107,9 @@ object StreamingIngest {
     // unfiltered key lookup would return their docIds too
     val fsUp = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
+    // refuse a foreign format before the tombstones are written
+    if (fsUp.exists(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(indexDir))))
+      IndexBuilder.readCurrentStats(fsUp, indexDir)
     val liveSegs = IndexBuilder.readManifests(fsUp, indexDir).map(_.segId)
     // a created-but-empty index has no docstats yet: nothing to replace
     val existing =

@@ -35,7 +35,7 @@ object Plans {
     val handle = Searcher.open(spark, ix)
 
     println("==== lexicon df lookup plan (expect PushedFilters: In(term, ...)) ====")
-    handle.lexicon.filter(org.apache.spark.sql.functions.col("term")
+    handle.lexiconRows.filter(org.apache.spark.sql.functions.col("term")
       .isin("w0001", "w0042")).explain("formatted")
 
     println("==== segment scan for query terms (expect pushed In + pruned ReadSchema) ====")

@@ -64,11 +64,9 @@ object StreamBench {
 
     val t0 = System.nanoTime()
     var maxSegs = 0
-    var lexiconSec = 0.0 // summed lexicon-update share of append wall (r5)
     batchPaths.zipWithIndex.foreach { case (p, b) =>
       graft.streaming.StreamingIngest.append(spark,
         CorpusSource.read(spark, "parquet", p), ixDir, cfg)
-      lexiconSec += graft.streaming.StreamingIngest.IngestMetrics.lastAppendLexiconSec
       if (mergeEvery > 0 && b > 0 && b % mergeEvery == 0) {
         graft.merge.Merger.mergeSmall(spark, ixDir)
         ()
@@ -96,7 +94,6 @@ object StreamBench {
         s""""cpus":$cpus,"total_docs":$n,"batches":$numBatches,""" +
         s""""merge_every":$mergeEvery,"docs_per_sec":${f"${n / ingestSec}%.1f"},""" +
         s""""final_segments":$finalSegs,"max_segments":$maxSegs,""" +
-        s""""append_lexicon_sec":${f"$lexiconSec%.3f"},""" +
         s""""query_after_ms":${f"${qSec * 1000}%.1f"}}""")
     spark.stop()
   }

@@ -9,7 +9,7 @@ import graft.build.IndexBuilder.IndexConfig
 import graft.corpus.SynthCorpus
 import graft.model.CorpusRow
 import graft.ref.RefModel
-import graft.search.Searcher
+import graft.search.{QFuzzy, QPrefix, QWildcard, Searcher}
 import graft.streaming.StreamingIngest
 
 /** Structured-Streaming micro-batch ingestion (SURVEY.md §2.9): appended
@@ -43,6 +43,35 @@ class StreamingIngestSpec extends AnyFunSuite {
   private def fsOf(dir: String) = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
+  /** segIds of the delta lexicon: live segments the base does not cover */
+  private def deltaSegs(dir: String): Seq[Int] = {
+    val fs = fsOf(dir)
+    IndexBuilder.lexiconDeltaSegments(IndexBuilder.readManifests(fs, dir),
+      IndexBuilder.lexiconCovers(fs, dir).getOrElse(Set.empty)).map(_.segId)
+  }
+
+  private def lexSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Long)] = {
+    import spark.implicits._
+    df.select(col("term"), col("df").cast("long"), col("cf").cast("long"),
+      col("maxTf").cast("long")).as[(String, Long, Long, Long)].collect().toSet
+  }
+
+  private def gramRows(dir: String): Seq[(String, String)] = {
+    import spark.implicits._
+    spark.read.parquet(IndexBuilder.lexgramsDir(dir)).as[(String, String)].collect().toSeq
+  }
+
+  /** every file under `dir` with its length and modification time */
+  private def snapshot(dir: String): Set[(String, Long, Long)] = {
+    val it = fsOf(dir).listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    val out = Set.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    out.result()
+  }
+
   /** Spark jobs started while `body` runs, on its thread or on threads it
     * starts. Jobs are tagged through a local property (inherited by child
     * threads); a tagged sentinel job then marks the end of the run on the
@@ -72,7 +101,7 @@ class StreamingIngestSpec extends AnyFunSuite {
   }
 
   /** an index with two full segments (segSize 32) and three small appended
-    * ones (8 docs each, segIds 2-4, each with a delta lexicon) */
+    * ones (8 docs each, segIds 2-4: the delta lexicon) */
   private def tailIndex(name: String, seed: Long): String = {
     import spark.implicits._
     val dir = SparkTestBase.tmpDir(name)
@@ -220,45 +249,153 @@ class StreamingIngestSpec extends AnyFunSuite {
     val segSize = 16
     IndexBuilder.build(spark, spark.createDataset(mkRows(7L, 0, 40)), dir,
       IndexConfig(segSize = segSize))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    def baseFiles(): Set[(String, Long, Long)] =
-      fs.listStatus(new org.apache.hadoop.fs.Path(IndexBuilder.lexiconDir(dir)))
-        .map(s => (s.getPath.getName, s.getModificationTime, s.getLen)).toSet
-    val before = baseFiles()
+    def lexFiles(): Set[(String, Long, Long)] =
+      snapshot(IndexBuilder.lexiconDir(dir)) ++ snapshot(IndexBuilder.lexgramsDir(dir))
+    val before = lexFiles()
+    val builtGrams = gramRows(dir).toSet
 
-    // two successive appends: each must commit a DELTA, not rewrite the base
+    // two successive appends (2 segments, then 1): they write nothing under
+    // lexicon/ or lexgrams/; their segments are the delta lexicon
     StreamingIngest.append(spark, spark.createDataset(mkRows(7L, 40, 60)), dir,
       IndexConfig(segSize = segSize))
+    assert(deltaSegs(dir).size == 2)
     StreamingIngest.append(spark, spark.createDataset(mkRows(7L, 60, 70)), dir,
       IndexConfig(segSize = segSize))
-    assert(baseFiles() == before,
-      "append read-modify-wrote the vocab-sized base lexicon (round-5 LSM regression)")
-    assert(IndexBuilder.liveLexDeltaDirs(fs, dir).size == 2)
+    assert(lexFiles() == before,
+      "append rewrote the vocab-sized base lexicon or its gram sidecar")
+    assert(deltaSegs(dir).size == 3)
 
-    // the handle's folded view (base + deltas) == a full segment-scan rebuild
-    def lexSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Long)] =
-      df.select(col("term"), col("df").cast("long"), col("cf").cast("long"),
-        col("maxTf").cast("long")).as[(String, Long, Long, Long)].collect().toSet
-    val viaDeltas = lexSet(Searcher.open(spark, dir).lexicon)
-    val gramsWithDeltas = spark.read.parquet(IndexBuilder.lexgramsDir(dir))
-      .as[(String, String)].collect().toSet
+    // the handle's folded view (base + delta segments) == a full rebuild
+    val h = Searcher.open(spark, dir)
+    val viaDeltas = lexSet(h.lexicon)
+    val appendedTerms = IndexBuilder.segmentLexicon(spark, dir, deltaSegs(dir))
+      .select($"term").as[String].collect().toSet
+    assert(appendedTerms.nonEmpty)
+    val dfsBefore = Searcher.termDfs(spark, h, appendedTerms)
 
-    // physical fold (the MERGE_SMALL-cadence step): deltas disappear, base
-    // alone now equals the folded view; gram sidecar deduped, same set
+    // physical fold (the MERGE_SMALL-cadence step): no delta segment is
+    // left, the base alone equals the folded view; the gram sidecar is the
+    // deduped union of the built grams and the delta terms' grams
     assert(IndexBuilder.foldLexiconDeltas(spark, dir))
-    assert(IndexBuilder.liveLexDeltaDirs(fs, dir).isEmpty)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.lexdeltasDir(dir))))
+    assert(deltaSegs(dir).isEmpty)
+    assert(!IndexBuilder.foldLexiconDeltas(spark, dir), "a second fold found deltas")
     assert(lexSet(spark.read.parquet(IndexBuilder.lexiconDir(dir))) == viaDeltas)
-    val gramsFolded = spark.read.parquet(IndexBuilder.lexgramsDir(dir))
-      .as[(String, String)].collect()
-    assert(gramsFolded.toSet == gramsWithDeltas)
+    assert(Searcher.termDfs(spark, Searcher.open(spark, dir), appendedTerms) == dfsBefore)
+    val gramsFolded = gramRows(dir)
     assert(gramsFolded.length == gramsFolded.toSet.size, "fold left duplicate gram rows")
+    assert(builtGrams.subsetOf(gramsFolded.toSet))
 
     IndexBuilder.writeLexicon(spark, dir) // full rebuild over all segments
     assert(lexSet(spark.read.parquet(IndexBuilder.lexiconDir(dir))) == viaDeltas)
-    assert(spark.read.parquet(IndexBuilder.lexgramsDir(dir))
-      .as[(String, String)].collect().toSet == gramsWithDeltas)
+    assert(gramRows(dir).toSet == gramsFolded.toSet)
+    assert(deltaSegs(dir).isEmpty)
+  }
+
+  test("crash between the gram promote and the base promote: reopen sees the pre-fold view") {
+    import spark.implicits._
+    val dir = tailIndex("lexcrash", 29L)
+    val fs = fsOf(dir)
+    val lexDir = new org.apache.hadoop.fs.Path(IndexBuilder.lexiconDir(dir))
+    val saved = new org.apache.hadoop.fs.Path(SparkTestBase.tmpDir("lexcrash-base"), "lexicon")
+    org.apache.hadoop.fs.FileUtil.copy(fs, lexDir, fs, saved, false, true,
+      spark.sparkContext.hadoopConfiguration)
+    val terms = spark.read.parquet(IndexBuilder.segmentsDir(dir)).select($"term")
+      .filter($"term" >= graft.search.Q.RealTermMin).distinct().as[String].collect().toSet
+    val multis = Seq(QPrefix("w00"), QWildcard("*000*"), QFuzzy("needla", 1),
+      QFuzzy("w0001", 1))
+    def view(): (Map[String, Long], Seq[Seq[String]]) = {
+      val h = Searcher.open(spark, dir)
+      (Searcher.termDfs(spark, h, terms), multis.map(Searcher.scanMulti(spark, h, _)))
+    }
+    val pre = view()
+    assert(deltaSegs(dir) == Seq(2, 3, 4))
+    assert(IndexBuilder.foldLexiconDeltas(spark, dir))
+    val folded = (lexSet(spark.read.parquet(lexDir.toString)), gramRows(dir).toSet)
+    assert(view() == pre)
+
+    // the state a crash after the gram promote and before the base promote
+    // leaves: the new gram sidecar next to the old base and its marker
+    fs.delete(lexDir, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs, saved, fs, lexDir, false, true,
+      spark.sparkContext.hadoopConfiguration)
+    assert(deltaSegs(dir) == Seq(2, 3, 4))
+    assert(view() == pre, "reopen after a crashed fold differs from the pre-fold view")
+
+    // a rerun converges to the same base and grams
+    assert(IndexBuilder.foldLexiconDeltas(spark, dir))
+    assert((lexSet(spark.read.parquet(lexDir.toString)), gramRows(dir).toSet) == folded)
+    assert(gramRows(dir).size == folded._2.size, "rerun left duplicate gram rows")
+    assert(deltaSegs(dir).isEmpty)
+    assert(view() == pre)
+  }
+
+  test("tail-only terms expand before the fold, after it and after a full rebuild") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("tailterms")
+    val cfg = IndexConfig(segSize = 32)
+    IndexBuilder.build(spark, spark.createDataset(mkRows(31L, 0, 64)), dir, cfg)
+    val extra = mkRows(31L, 64, 72).zipWithIndex.map { case (r, i) =>
+      if (i < 3) r.copy(content = r.content + " zebraquuxly") else r
+    }
+    StreamingIngest.append(spark, spark.createDataset(extra), dir, cfg)
+    StreamingIngest.append(spark, spark.createDataset(mkRows(31L, 72, 80)), dir, cfg)
+    assert(deltaSegs(dir) == Seq(2, 3))
+    val multis = Seq(QPrefix("zebraq"), QWildcard("*braquux*"),
+      QFuzzy("zebraquxly", 1), QFuzzy("zebraquuxli", 2))
+    val queries = Seq("zebraq*", "*braquux*", "zebraquxly~1", "zebraquuxli~2", "zebraquuxly")
+    def view(): (Seq[Seq[String]], Seq[(String, Int, Long)], Seq[Seq[Searcher.SearchHit]],
+                 Map[String, Searcher.TermStats]) = {
+      val h = Searcher.open(spark, dir)
+      (multis.map(Searcher.scanMulti(spark, h, _)),
+        Searcher.suggest(spark, h, "zebraquuxli", 3, 2),
+        queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq),
+        Searcher.termStats(spark, h, Set("zebraquuxly", "w0000")))
+    }
+    val beforeFold = view()
+    beforeFold._1.foreach(t => assert(t.contains("zebraquuxly"), s"not expanded: $beforeFold"))
+    assert(beforeFold._2.headOption.contains(("zebraquuxly", 1, 3L)))
+    beforeFold._3.foreach(hits => assert(hits.size == 3))
+    assert(beforeFold._4("zebraquuxly").df == 3)
+    graft.merge.Merger.mergeSmall(spark, dir)
+    assert(deltaSegs(dir).isEmpty)
+    assert(view() == beforeFold)
+    IndexBuilder.writeLexicon(spark, dir)
+    assert(view() == beforeFold)
+  }
+
+  test("a manifest mixing covered and uncovered covers fails open, naming the segment") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("mixedcov")
+    IndexBuilder.build(spark, spark.createDataset(mkRows(37L, 0, 40)), dir,
+      IndexConfig(segSize = 16))
+    val fs = fsOf(dir)
+    val m2 = IndexBuilder.readManifests(fs, dir).find(_.segId == 2).get
+    IndexBuilder.writeManifest(fs, dir, m2.copy(segId = 7, covers = Seq(2, 9),
+      absorbed = Seq(2)))
+    val e = intercept[IllegalStateException](Searcher.open(spark, dir))
+    assert(e.getMessage.contains("segment 7"), e.getMessage)
+  }
+
+  test("writers refuse an index in another on-disk format and write nothing") {
+    import spark.implicits._
+    val dir = tailIndex("oldformat", 41L)
+    val fs = fsOf(dir)
+    val st = IndexBuilder.readStats(fs, dir)
+    IndexBuilder.writeStats(fs, dir, st.copy(formatVersion = 7))
+    val before = snapshot(dir)
+    def refused(what: String)(body: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("formatVersion 7") && e.getMessage.contains("rebuild"),
+        s"$what: ${e.getMessage}")
+    }
+    refused("open")(Searcher.open(spark, dir))
+    refused("append")(StreamingIngest.append(spark,
+      spark.createDataset(mkRows(41L, 100, 108)), dir, IndexConfig(segSize = 32)))
+    refused("upsert")(StreamingIngest.upsert(spark,
+      spark.createDataset(mkRows(41L, 0, 2)), dir, IndexConfig(segSize = 32)))
+    refused("mergeSmall")(graft.merge.Merger.mergeSmall(spark, dir))
+    refused("compact")(graft.merge.Merger.compact(spark, dir))
+    assert(snapshot(dir) == before, "a refused writer changed the index")
   }
 
   test("TOC cache: fresh == per-file manifests; corrupt/missing falls back + rewrites") {
@@ -312,35 +449,47 @@ class StreamingIngestSpec extends AnyFunSuite {
       spark.read.parquet(p).as[CorpusRow]
     }
     val appendJobs = batches.map(b => jobsDuring(StreamingIngest.append(spark, b, dir, cfg)))
-    assert(IndexBuilder.liveLexDeltaDirs(fsOf(dir), dir).size == 3)
+    assert(deltaSegs(dir) == Seq(2, 3, 4))
     // known schemas: opening an index infers no schema, so it starts no job
-    val openJobs = jobsDuring(Searcher.open(spark, dir))
+    var h: Searcher.IndexHandle = null
+    val openJobs = jobsDuring { h = Searcher.open(spark, dir) }
+    // the post-append df lookup sums base + delta rows on the driver: one
+    // job, no exchange
+    val dfJobs = jobsDuring(Searcher.termDfs(spark, h, Set("w0000", "w0001", "needle")))
+    val dfPlan = h.lexiconRows.filter(col("term").isin("w0000", "w0001"))
+      .queryExecution.executedPlan.toString
     val mergeJobs = jobsDuring(graft.merge.Merger.mergeSmall(spark, dir))
-    info(s"jobs: appends $appendJobs, open $openJobs, mergeSmall $mergeJobs")
+    info(s"jobs: appends $appendJobs, open $openJobs, termDfs $dfJobs, mergeSmall $mergeJobs")
     assert(openJobs == 0, s"Searcher.open started $openJobs jobs")
+    assert(dfJobs == 1, s"termDfs started $dfJobs jobs")
+    assert(!dfPlan.contains("Exchange"), s"df lookup plan has an exchange:\n$dfPlan")
     // bounds from this test's counts before the lean write path (CHANGES.md):
-    // open 6 -> 0, each append 25 -> 16, mergeSmall 29 -> 12
+    // open 6 -> 0, each append 25 -> 16, mergeSmall 29 -> 12; an append that
+    // writes no lexicon: 16 -> 8
     appendJobs.foreach(n => assert(n <= 25 - 6, s"append started $n jobs"))
+    appendJobs.foreach(n => assert(n <= 10, s"append started $n jobs"))
     assert(mergeJobs <= 29 / 2, s"mergeSmall started $mergeJobs jobs")
   }
 
   test("schema constants == the schemas Spark infers from freshly written files") {
     val dir = tailIndex("schemas", 19L)
-    val fs = fsOf(dir)
     def check(): Unit = {
       val tables = Seq(
         IndexBuilder.segmentsDir(dir) -> IndexBuilder.SegmentsSchema,
         IndexBuilder.docstatsDir(dir) -> IndexBuilder.DocstatsSchema,
         IndexBuilder.lexiconDir(dir) -> IndexBuilder.LexiconSchema,
-        IndexBuilder.lexgramsDir(dir) -> IndexBuilder.LexgramsSchema) ++
-        IndexBuilder.liveLexDeltaDirs(fs, dir).map(_ -> IndexBuilder.LexiconSchema)
+        IndexBuilder.lexgramsDir(dir) -> IndexBuilder.LexgramsSchema)
       tables.foreach { case (path, schema) =>
         val inferred = spark.read.parquet(path).schema
         assert(inferred == schema, s"$path: inferred $inferred, constant $schema")
       }
+      // the delta lexicon's rows have the lexicon's schema
+      val delta = IndexBuilder.segmentLexicon(spark, dir, deltaSegs(dir)).schema
+      assert(delta.map(f => (f.name, f.dataType)) ==
+        IndexBuilder.LexiconSchema.map(f => (f.name, f.dataType)))
     }
-    assert(IndexBuilder.liveLexDeltaDirs(fs, dir).nonEmpty)
-    check() // built + appended segments, base lexicon + deltas
+    assert(deltaSegs(dir).nonEmpty)
+    check() // built + appended segments, base lexicon + delta segments
     assert(graft.merge.Merger.mergeSmall(spark, dir).nonEmpty)
     check() // a tail-merged segment, the folded lexicon and grams
   }
