@@ -16,7 +16,8 @@ import graft.search.Searcher.SearchHit
   * call sites translate verb-for-verb. Single-field (content) flavor;
   * multi-field schemas go through SchemaConfig/MultiFieldIndex +
   * MultiFieldSearcher, and the Raft/replication verbs have no analog
-  * (durability here is the manifest commit protocol + the storage layer).
+  * (durability here is the index's one commit record, stats.json, plus
+  * the storage layer).
   *
   * Serving note: `searchDocuments(indexDir, ...)` opens a handle per call
   * for API fidelity; a real serving loop should `Searcher.open` once and
@@ -32,10 +33,8 @@ object Engine {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(indexDir))
-    val st = IndexStats(numDocs = 0, totalFieldLen = 0, numSegments = 0,
-      segSize = cfg.segSize, analyzer = cfg.analyzer.asString)
-    IndexBuilder.writeStats(fs, indexDir, st)
-    st
+    IndexBuilder.commitRecord(fs, indexDir, IndexStats(numDocs = 0, totalFieldLen = 0,
+      numSegments = 0, segSize = cfg.segSize, analyzer = cfg.analyzer.asString), Seq.empty)
   }
 
   /** get_index: stats, or None when absent */

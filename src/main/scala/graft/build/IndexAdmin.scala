@@ -14,8 +14,11 @@ object IndexAdmin {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** an index exists where a committed stats.json does (the build's final
-    * write — partial builds without it are resumable but not yet an index) */
+  /** an index exists where its commit record (stats.json) does. A
+    * single-shot build commits once, at its end; a multi-batch build
+    * commits after every batch, so an unfinished one exists too, and
+    * Searcher.open refuses it until IndexBuilder.build is rerun to finish
+    * it. */
   def exists(spark: SparkSession, indexDir: String): Boolean =
     fsOf(spark, indexDir).exists(new Path(IndexBuilder.statsPath(indexDir)))
 

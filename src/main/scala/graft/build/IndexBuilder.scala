@@ -16,7 +16,7 @@ import graft.model._
   *   corpus -> deterministic docId stamp (D1) -> analyze once per doc ->
   *   explode to postings -> SALTED two-phase groupBy-(segment,term)
   *   aggregation (G1/G2) -> block-encoded posting lists (C1-C3) ->
-  *   term-sorted parquet segments + per-segment manifests (S3/S5).
+  *   term-sorted parquet segments + one commit record (S3/S5).
   *
   * Scale design (10^12 files, BASELINE.json:14):
   *  - segments are docId ranges (doc-partitioned index): every segment is a
@@ -28,9 +28,13 @@ import graft.model._
   *    raw postings anywhere: each phase-1 group is bounded by the split
   *    size, and phase 2 k-way-merges the <=splits-per-segment runs
   *    streamingly; run-boundary invariance is property-tested;
-  *  - resume: a segment with a committed manifest is never rebuilt; batches
-  *    promote staging -> final atomically (rename) before the manifest is
-  *    written, so a crash leaves either nothing or a committed segment;
+  *  - commit: `stats.json` is the index's one commit record ([W]
+  *    whoosh/index.py TOC): the stats header, then one manifest line per
+  *    live segment. Writers promote staging -> final (rename), then commit
+  *    the whole record with one overwriting rename, so a reader sees the old
+  *    record or the new one; dirs no record lists are garbage;
+  *  - resume: a segment the record lists is never rebuilt; a multi-batch
+  *    build commits after every batch (its checkpoint);
   *  - shuffles: ONE wide exchange per batch (compressed runs -> segments),
   *    plus the one-off docId-stamp range sort. Raw postings never shuffle:
   *    the exchange moves ~compressed-index bytes only.
@@ -66,9 +70,7 @@ object IndexBuilder {
   def docstatsDir(ix: String) = s"$ix/docstats"
   def lexiconDir(ix: String) = s"$ix/lexicon"
   def lexgramsDir(ix: String) = s"$ix/lexgrams"
-  def manifestsDir(ix: String) = s"$ix/manifests"
   def statsPath(ix: String) = s"$ix/stats.json"
-  def tocPath(ix: String) = s"$ix/toc.json"
   def stagingDir(ix: String) = s"$ix/staging"
 
   // ---- table schemas ----
@@ -212,64 +214,72 @@ object IndexBuilder {
     }
   }
 
-  /** Full build with resume: segments whose manifest exists are skipped.
+  /** Full build with resume: segments the commit record lists are skipped.
     *
     * The content-bearing corpus is NEVER rewritten (at 10^12-file scale the
     * input table IS the doc store): stamping happens in-flight, persisted
     * for the duration of the run, and only a content-free doc-key map
     * (docId, repo, path, commit, lang, sha) is materialized for lookups.
     * docIds are a pure function of the corpus (D1), so a resumed run
-    * re-derives identical ids. */
+    * re-derives identical ids.
+    *
+    * A single-shot build commits once, after its lexicon, so a record means
+    * a finished index. A multi-batch build commits after every batch (its
+    * checkpoint) and writes the lexicon last: until then Searcher.open
+    * refuses the index and asks for this build to be rerun. A directory
+    * holding another on-disk format is refused, naming it for deletion. */
   def build(spark: SparkSession, corpus: Dataset[CorpusRow], indexDir: String,
             cfg: IndexConfig = IndexConfig()): BuildReport = {
-    import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(statsPath(indexDir)))) {
+      val fv = readStats(fs, indexDir).formatVersion
+      require(fv == IndexStats.CurrentFormat,
+        s"$indexDir holds an index in on-disk format $fv, this code builds format " +
+          s"${IndexStats.CurrentFormat} and cannot resume it — delete $indexDir and " +
+          "rerun IndexBuilder.build")
+    }
 
     // NOT cached: at scale the stamped corpus is too large to pin, and the
     // stamp is a cheap deterministic recompute (gen/scan + range sort);
     // each batch re-derives it. The docstats sidecar doubles as the doc-key
     // map (docId, repo, path, commit, lang, sha) — no separate write.
     def stampedDocs: Dataset[Doc] = stampDocIds(corpus, cfg.sortPartitions)
+    def commit(live: Seq[SegmentManifest]): IndexStats = commitRecord(fs, indexDir,
+      IndexStats(numDocs = live.map(_.docCount).sum,
+        totalFieldLen = live.map(_.rawLenSum).sum, numSegments = live.size,
+        segSize = cfg.segSize, analyzer = cfg.analyzer.asString), live)
 
-    {
-      // resume skips every BUILD-LAYOUT segId already covered by a live
-      // manifest — after compaction the merged manifest's `covers` keeps the
-      // absorbed ranges from being re-ingested (docIds are a pure function
-      // of the corpus, so coverage by range == coverage by layout segId)
-      val done = readManifests(fs, indexDir).flatMap(_.coverSet).toSet
-      val segSize = cfg.segSize
-      val todo: Seq[Int] =
-        if (done.isEmpty && cfg.segmentsPerBatch == Int.MaxValue) {
-          // fresh single-shot build: NO corpus count, no docId predicate —
-          // one pass builds every segment, segIds discovered from the output
-          // (a count of a generated/typed-mapped source costs a full scan)
-          buildBatch(spark, fs, stampedDocs, indexDir, None, cfg)
-          readManifests(fs, indexDir).map(_.segId)
-        } else {
-          // resume / explicit checkpoint batching: layout from the row count
-          val numDocs = corpus.count()
-          val numSegments = math.max(1, ((numDocs + segSize - 1) / segSize).toInt)
-          val remaining = (0 until numSegments).filterNot(done)
-          remaining.grouped(cfg.segmentsPerBatch).foreach { batch =>
-            buildBatch(spark, fs, stampedDocs, indexDir, Some(batch), cfg)
-          }
-          remaining
+    // resume skips every BUILD-LAYOUT segId already covered by a live
+    // segment — after compaction the merged segment's `covers` keeps the
+    // merged ranges from being re-ingested (docIds are a pure function
+    // of the corpus, so coverage by range == coverage by layout segId)
+    val committed = readManifests(fs, indexDir)
+    val done = committed.flatMap(_.coverSet).toSet
+    val (live, todo) =
+      if (done.isEmpty && cfg.segmentsPerBatch == Int.MaxValue) {
+        // fresh single-shot build: NO corpus count, no docId predicate —
+        // one pass builds every segment, segIds discovered from the output
+        // (a count of a generated/typed-mapped source costs a full scan)
+        val built = buildBatch(spark, fs, stampedDocs, indexDir, None, cfg)
+        (built, built.map(_.segId))
+      } else {
+        // resume / explicit checkpoint batching: layout from the row count
+        val numDocs = corpus.count()
+        val numSegments = math.max(1, ((numDocs + cfg.segSize - 1) / cfg.segSize).toInt)
+        val remaining = (0 until numSegments).filterNot(done)
+        val all = remaining.grouped(cfg.segmentsPerBatch).foldLeft(committed) { (live, batch) =>
+          val next = (live ++ buildBatch(spark, fs, stampedDocs, indexDir, Some(batch), cfg))
+            .sortBy(_.segId)
+          commit(next)
+          next
         }
+        (all, remaining)
+      }
 
-      // index-level stats + lexicon (cheap relative to the build; redone
-      // at the end of every (re)run so a resumed build finishes identically)
-      val manifests = readManifests(fs, indexDir)
-      val stats = IndexStats(
-        numDocs = manifests.map(_.docCount).sum,
-        totalFieldLen = manifests.map(_.rawLenSum).sum,
-        numSegments = manifests.size,
-        segSize = segSize,
-        analyzer = cfg.analyzer.asString)
-      writeLexicon(spark, indexDir)
-      writeStats(fs, indexDir, stats)
-      writeToc(fs, indexDir)
-      BuildReport(stats, todo, done.toSeq.sorted)
-    }
+    // the lexicon (cheap relative to the build) is redone at the end of
+    // every (re)run so a resumed build finishes identically
+    writeLexiconOf(spark, fs, indexDir, live)
+    BuildReport(commit(live), todo, done.toSeq.sorted)
   }
 
   /** one pseudo posting: tf 1, position 0, the doc's real lenByte (Every
@@ -286,13 +296,15 @@ object IndexBuilder {
     * stamped (docId-shifted) batch — see graft.streaming.StreamingIngest */
   private[graft] def buildBatchForAppend(spark: SparkSession, fs: FileSystem,
                                          docs: Dataset[Doc], indexDir: String,
-                                         batch: Seq[Int], cfg: IndexConfig): Unit =
+                                         batch: Seq[Int], cfg: IndexConfig): Seq[SegmentManifest] =
     buildBatch(spark, fs, docs, indexDir, Some(batch), cfg)
 
-  /** batch = None builds ALL segments found in `docs` in one pass. */
+  /** Builds and promotes the segments of `batch` (None: ALL segments found
+    * in `docs`, in one pass) and returns their manifests, sorted by segId.
+    * Nothing is committed: the caller puts them in the record. */
   private def buildBatch(spark: SparkSession, fs: FileSystem, docs: Dataset[Doc],
                          indexDir: String, batch: Option[Seq[Int]],
-                         cfg: IndexConfig): Unit = {
+                         cfg: IndexConfig): Seq[SegmentManifest] = {
     import spark.implicits._
     val segSize = cfg.segSize
     val staging = stagingDir(indexDir)
@@ -467,19 +479,17 @@ object IndexBuilder {
       // per-segment posting metrics for the manifest, from the written files
       val segAgg = postingMetrics(spark, s"$staging/segments")
 
-      // promote staging -> final, then commit the manifest (the commit point)
-      val toCommit = batch.getOrElse((segAgg.keySet ++ docAgg.keySet).toSeq.sorted)
-      toCommit.foreach { segId =>
+      // promote staging -> final; the caller's record commit makes them live
+      val built = batch.getOrElse((segAgg.keySet ++ docAgg.keySet).toSeq).sorted.map { segId =>
         val (rowsN, bytesN, digest) = segAgg.getOrElse(segId, (0L, 0L, "0" * 32))
         val (docCount, lo, hi, rawLenSum) = docAgg.getOrElse(segId,
           (0L, segId.toLong * segSize, segId.toLong * segSize, 0L))
         promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
         promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
-        val m = SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN,
-          bytesN, digest, cfg.source)
-        writeManifest(fs, indexDir, m)
+        SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source)
       }
       fs.delete(new Path(staging), true)
+      built
     } finally analyzed.unpersist()
   }
 
@@ -565,9 +575,15 @@ object IndexBuilder {
   def writeLexicon(spark: SparkSession, indexDir: String): Unit = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    // manifest-filtered segment set: superseded/orphaned dirs a crashed
-    // merge left behind must not double-count into the global df
-    val live = readManifests(fs, indexDir)
+    writeLexiconOf(spark, fs, indexDir, readManifests(fs, indexDir))
+  }
+
+  /** writeLexicon over the segments `live` (the record's, or the ones a
+    * caller is about to commit) */
+  private[graft] def writeLexiconOf(spark: SparkSession, fs: FileSystem, indexDir: String,
+                                    live: Seq[SegmentManifest]): Unit = {
+    // segId-filtered: orphaned dirs a crashed merge left behind must not
+    // double-count into the global df
     val segments = readTable(spark, SegmentsSchema, segmentsDir(indexDir))
       .filter(col("segId").isin(live.map(_.segId): _*))
     commitLexicon(spark, fs, indexDir, aggregateLexicon(lexiconRowsOf(segments)),
@@ -715,112 +731,55 @@ object IndexBuilder {
     if (t.length < 3) Array.empty
     else Array.tabulate(t.length - 2)(i => t.substring(i, i + 3)).distinct
 
-  // ---- manifests / stats ----
+  // ---- the commit record (stats.json) ----
+  //
+  // Line 1 is the flat stats header; one manifest line per live segment
+  // follows, sorted by segId, and the header's numSegments is their count.
+  // Every commit point (build batch, append, merge, compact,
+  // Engine.createIndex) rewrites the whole record through commitRecord, so
+  // the segment set and the counts readers score with change together.
 
   private def manifestJson(m: SegmentManifest): String =
     s"""{"segId":${m.segId},"docLo":${m.docLo},"docHi":${m.docHi},"docCount":${m.docCount},
        |"rawLenSum":${m.rawLenSum},"postingRows":${m.postingRows},"postingBytes":${m.postingBytes},
        |"digest":"${m.digest}","source":"${m.source}",
-       |"covers":[${m.coverSet.mkString(",")}],"absorbed":[${m.absorbed.mkString(",")}]}"""
-      .stripMargin.replace("\n", "")
+       |"covers":[${m.coverSet.mkString(",")}]}""".stripMargin.replace("\n", "")
 
-  def writeManifest(fs: FileSystem, indexDir: String, m: SegmentManifest): Unit = {
-    val dir = new Path(manifestsDir(indexDir))
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    val tmp = new Path(dir, s".seg-${m.segId}.json.tmp")
-    val dst = new Path(dir, s"seg-${m.segId}.json")
+  /** Commit `segments` (every live segment, promoted already) with the
+    * counts of `st` as the index's record: written to a tmp file, then
+    * renamed over stats.json — THE commit point, so a crash leaves the old
+    * record or the new one. The header's numSegments is `segments.size`.
+    * Returns the committed stats. */
+  def commitRecord(fs: FileSystem, indexDir: String, st: IndexStats,
+                   segments: Seq[SegmentManifest]): IndexStats = {
+    val committed = st.copy(numSegments = segments.size)
+    val header = s"""{"formatVersion":${st.formatVersion},""" +
+      s""""numDocs":${st.numDocs},"totalFieldLen":${st.totalFieldLen},""" +
+      s""""numSegments":${committed.numSegments},"segSize":${st.segSize},""" +
+      s""""analyzer":"${st.analyzer}"}"""
+    val record = (header +: segments.sortBy(_.segId).map(manifestJson)).mkString("", "\n", "\n")
+    val tmp = new Path(indexDir, ".stats.json.tmp")
     val out = fs.create(tmp, true)
-    out.write(manifestJson(m).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    out.write(record.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
-    overwriteRename(fs, tmp, dst)
-  }
-
-  // ---- rolled-up table of contents (round-5) ----
-  //
-  // Per-segment manifests stay THE commit protocol (crash-safe supersession
-  // via `absorbed`), but opening an index by reading one small JSON per
-  // segment costs O(segments) round trips — a long-running MERGE_SMALL
-  // ingest accumulates exactly that. The TOC is a pure CACHE of the live
-  // manifest set, validated by a token over the manifest-directory NAME
-  // listing (one listing call, no per-file reads): manifest content is a
-  // deterministic function of its name (segIds are never reused; rebuilds
-  // reproduce identical manifests), so same name set == same live set.
-  // Stale or missing TOC -> fall back to reading the manifests and rewrite.
-
-  private def manifestNamesToken(fs: FileSystem, indexDir: String): String = {
-    val dir = new Path(manifestsDir(indexDir))
-    val names =
-      if (!fs.exists(dir)) Seq.empty[String]
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("seg-") && n.endsWith(".json")).sorted
-    sha256Hex(names.mkString("\n"))
-  }
-
-  /** rewrite the TOC from the current manifests — called at every commit
-    * point (end of build batch loop, merge commit, append) */
-  def writeToc(fs: FileSystem, indexDir: String): Unit = {
-    val token = manifestNamesToken(fs, indexDir)
-    val live = readManifests(fs, indexDir)
-    val sb = new StringBuilder
-    sb.append(s"""{"token":"$token","n":${live.size}}""").append('\n')
-    live.foreach(m => sb.append(manifestJson(m)).append('\n'))
-    val tmp = new Path(indexDir, ".toc.json.tmp")
-    val out = fs.create(tmp, true)
-    out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    overwriteRename(fs, tmp, new Path(tocPath(indexDir)))
-  }
-
-  /** Live manifests via the TOC when fresh: O(1) reads (one dir listing for
-    * the token + one TOC file) instead of one read per segment. Falls back
-    * to the authoritative per-file read on any mismatch and refreshes the
-    * cache. Readers only (writers about to change the set read raw). */
-  def readManifestsFast(fs: FileSystem, indexDir: String): Seq[SegmentManifest] = {
-    val p = new Path(tocPath(indexDir))
-    if (fs.exists(p)) {
-      readText(fs, p).linesIterator.toList match {
-        case header :: rest =>
-          val tok = """"token":"([0-9a-f]+)"""".r.findFirstMatchIn(header).map(_.group(1))
-          val n = """"n":(\d+)""".r.findFirstMatchIn(header).map(_.group(1).toInt)
-          if (tok.contains(manifestNamesToken(fs, indexDir)) && n.contains(rest.size))
-            return rest.map(parseManifest(_, p.toString)).sortBy(_.segId)
-        case _ => ()
-      }
-    }
-    val live = readManifests(fs, indexDir)
-    writeToc(fs, indexDir)
-    live
+    overwriteRename(fs, tmp, new Path(statsPath(indexDir)))
+    committed
   }
 
   /** OVERWRITING rename (same pattern as Deletes.writeRange): a
     * delete-then-rename pair leaves a crash window with NO file at the
-    * destination — for a manifest that window silently un-commits the
-    * segment; for stats.json it bricks Searcher.open until a rebuild. */
+    * destination — for the record that window un-commits the whole index
+    * until a rebuild. */
   private def overwriteRename(fs: FileSystem, tmp: Path, dst: Path): Unit = {
     org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
       .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Live manifests: all on-disk manifests minus superseded ones. A merge
-    * commits by WRITING the merged manifest (whose `absorbed` lists the
-    * replaced segIds) before deleting the old ones — so after any crash the
-    * union of absorbed sets identifies stale manifests deterministically
-    * (segIds are never reused; an absorbed manifest's own absorptions
-    * remain valid transitively). */
-  def readManifests(fs: FileSystem, indexDir: String): Seq[SegmentManifest] = {
-    val all = readManifestsRaw(fs, indexDir)
-    val absorbed = all.iterator.flatMap(_.absorbed).toSet
-    all.filterNot(m => absorbed.contains(m.segId))
-  }
-
-  def readManifestsRaw(fs: FileSystem, indexDir: String): Seq[SegmentManifest] = {
-    val dir = new Path(manifestsDir(indexDir))
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(s => s.getPath.getName.startsWith("seg-") && s.getPath.getName.endsWith(".json"))
-      .map(s => parseManifest(readText(fs, s.getPath), s.getPath.toString))
-      .sortBy(_.segId)
-  }
+  /** The record's live segments; none when no record exists yet. Refuses
+    * an index in another on-disk format, like readCurrentRecord. */
+  def readManifests(fs: FileSystem, indexDir: String): Seq[SegmentManifest] =
+    if (!fs.exists(new Path(statsPath(indexDir)))) Seq.empty
+    else readCurrentRecord(fs, indexDir)._2
 
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -839,61 +798,62 @@ object IndexBuilder {
   private def parseManifest(json: String, path: String): SegmentManifest = {
     def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     def s(k: String): String = requiredField(json, path, k, "\"([^\"]*)\"")
-    def ints(k: String): Seq[Int] = (s""""$k":\\[([0-9,]*)\\]""").r.findFirstMatchIn(json)
-      .map(_.group(1)).filter(_.nonEmpty)
-      .map(_.split(',').toSeq.map(_.toInt)).getOrElse(Seq.empty)
     val segId = l("segId").toInt
-    SegmentManifest(segId, l("docLo"), l("docHi"), l("docCount"),
-      l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"),
-      covers = ints("covers") match { case Seq() => Seq(segId); case c => c },
-      absorbed = ints("absorbed"))
+    // fields parse in record order, so a truncated line names its first
+    // missing key
+    val m = SegmentManifest(segId, l("docLo"), l("docHi"), l("docCount"),
+      l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"))
+    val covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
+      .split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
+    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers)
   }
 
-  def writeStats(fs: FileSystem, indexDir: String, st: IndexStats): Unit = {
-    val json = s"""{"formatVersion":${st.formatVersion},""" +
-      s""""numDocs":${st.numDocs},"totalFieldLen":${st.totalFieldLen},""" +
-      s""""numSegments":${st.numSegments},"segSize":${st.segSize},""" +
-      s""""analyzer":"${st.analyzer}"}"""
-    val tmp = new Path(indexDir, ".stats.json.tmp")
-    val dst = new Path(statsPath(indexDir))
-    val out = fs.create(tmp, true)
-    out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    overwriteRename(fs, tmp, dst)
-  }
-
-  def readStats(fs: FileSystem, indexDir: String): IndexStats = {
-    val path = statsPath(indexDir)
-    val json = readText(fs, new Path(path))
+  private def parseStats(json: String, path: String): IndexStats = {
     def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     val analyzer = """"analyzer":"([^"]*)"""".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(graft.analysis.AnalyzerSpec.Standard.asString)
     // unstamped stats.json = a pre-round-5 (<=v6) layout; callers that care
-    // (Searcher.open) reject, metadata-only readers still get the numbers
+    // (readCurrentRecord) reject, metadata-only readers still get the numbers
     val fv = """"formatVersion":(-?\d+)""".r.findFirstMatchIn(json)
       .map(_.group(1).toInt).getOrElse(0)
     IndexStats(l("numDocs"), l("totalFieldLen"), l("numSegments").toInt,
       l("segSize").toInt, analyzer, fv)
   }
 
-  /** stats.json of an index in THIS code's on-disk format, else a fail-fast
-    * "rebuild" error: the one format check shared by the reader
-    * (Searcher.open) and the writers that rewrite stats.json (append,
-    * mergeSmall, compact), so an older index is never silently relabelled
-    * as the current format. Nothing is written before the check. */
-  def readCurrentStats(fs: FileSystem, indexDir: String): IndexStats = {
-    val st = readStats(fs, indexDir)
+  /** The record's header: the index's stats. Only line 1 is parsed, so the
+    * one-line stats.json of older formats reads too (its formatVersion
+    * tells them apart). */
+  def readStats(fs: FileSystem, indexDir: String): IndexStats = {
+    val path = statsPath(indexDir)
+    parseStats(readText(fs, new Path(path)).linesIterator.nextOption().getOrElse(""), path)
+  }
+
+  /** The record of an index in THIS code's on-disk format — its stats and
+    * live segments from one read — else a fail-fast "rebuild" error: the
+    * one format check shared by the reader (Searcher.open) and the writers
+    * (append, upsert, merges, compact), so an older index is never
+    * silently relabelled as the current format. Nothing is written before
+    * the check. */
+  def readCurrentRecord(fs: FileSystem, indexDir: String): (IndexStats, Seq[SegmentManifest]) = {
+    val path = statsPath(indexDir)
+    val lines = readText(fs, new Path(path)).linesIterator.toVector
+    val st = parseStats(lines.headOption.getOrElse(""), path)
     require(st.formatVersion == IndexStats.CurrentFormat,
       s"index at $indexDir has on-disk formatVersion ${st.formatVersion}, " +
         s"this code needs ${IndexStats.CurrentFormat} — " +
         "rebuild the index (IndexBuilder.build) to migrate")
-    st
+    val segments = lines.iterator.zipWithIndex.drop(1)
+      .map { case (line, i) => parseManifest(line, s"$path line ${i + 1}") }.toVector
+    if (segments.size != st.numSegments) throw new IllegalStateException(
+      s"$path: \"numSegments\" is ${st.numSegments} but ${segments.size} segment lines " +
+        "follow (truncated or foreign file?)")
+    (st, segments)
   }
 
   /** Staging -> final dir promote. An occupied destination is replaced by a
     * RENAME SWAP (dst -> dot-prefixed trash, src -> dst, delete trash)
     * rather than delete-then-rename (round-5 hygiene, matching the
-    * FileContext OVERWRITE used for stats/manifests): the no-file-at-dst
+    * FileContext OVERWRITE used for the record): the no-file-at-dst
     * crash window shrinks from a full recursive delete to the instant
     * between two renames, and a crash leaves the old data recoverable in
     * the trash dir (swept on the next promote of the same destination). */

@@ -11,8 +11,8 @@ import graft.model.CorpusRow
   * Spark-native representation: ONE INDEX DIRECTORY PER FIELD under
   * `root/fields/<name>` — the columnar analog of a per-field terms
   * dictionary. Each field index is a complete, independently usable
-  * instance of the single-field pipeline (segments, manifests, lexicon,
-  * stats, deletes), so merge/compaction/resume/streaming all apply per
+  * instance of the single-field pipeline (segments, lexicon, deletes and
+  * the stats.json commit record), so merge/compaction/resume/streaming all apply per
   * field unchanged. docIds align across fields automatically: the D1 stamp
   * is a pure function of the corpus keys (repo, path, commit), which are
   * identical for every field of the same corpus.

@@ -41,16 +41,17 @@ object Merger {
     * term-sorted files inside the one segment dir (parquet min/max stats on
     * `term` stay sharp per file).
     *
-    * Crash-safe commit protocol (mirrors the build's promote-then-manifest,
+    * Crash-safe commit protocol (mirrors the build's promote-then-commit,
     * shared with the TAIL shape):
     *   1. write merged postings + docstats to staging, promote both into
     *      place under the FRESH segId (no collision with live dirs);
-    *   2. write the merged manifest — THE commit point: its `absorbed` list
-    *      supersedes the old manifests the moment it lands (readManifests
-    *      resolves supersession), and `covers` carries the transitive
-    *      build-layout lineage for resume;
-    *   3. delete the old manifests, then the old segment dirs — pure GC;
-    *      a crash anywhere leaves a readable, correct index. */
+    *   2. commit the record with `live - group + merged` and the header
+    *      counts carried over — THE commit point; the merged segment's
+    *      `covers` carries the transitive build-layout lineage for resume;
+    *   3. delete the group's segment dirs — pure GC. A crash before step 2
+    *      leaves promoted dirs no record lists, which the next merge's
+    *      gcOrphanDirs sweeps; a crash anywhere leaves a readable, correct
+    *      index. */
   def mergeGroup(spark: SparkSession, indexDir: String, group: Seq[Int],
                  deletes: Set[Long] = Set.empty): Int = {
     // fold first: the merged segment must not mix covers the base lexicon
@@ -68,18 +69,18 @@ object Merger {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     val sorted = group.sorted
-    val live = IndexBuilder.readManifests(fs, indexDir)
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
     // GC crash leftovers BEFORE picking the target id: a crash between
-    // promote and manifest write leaves segId dirs with no live manifest —
-    // a rerun recomputes the same target (max live segId + 1) and the
-    // promote rename would collide. Readers trust manifests only, so any
-    // segments/docstats dir without one is garbage (this also sweeps
-    // superseded dirs left by a crash after the manifest commit, which
-    // would otherwise double-count into the next lexicon rebuild).
+    // promote and record commit leaves segId dirs no record lists — a
+    // rerun recomputes the same target (max live segId + 1). Readers trust
+    // the record only, so any segments/docstats dir it does not list is
+    // garbage (this also sweeps the group dirs a crash after the commit
+    // left, which would otherwise double-count into the next lexicon
+    // rebuild).
     gcOrphanDirs(fs, indexDir, live.map(_.segId).toSet)
     val target = live.map(_.segId).max + 1
     val manifests = live.filter(m => sorted.contains(m.segId))
-    require(manifests.size == sorted.size, s"missing manifests for $sorted")
+    require(manifests.size == sorted.size, s"missing segments for $sorted")
 
     // tombstones ride as a broadcast SORTED ARRAY probed by binary search
     // (exactly like the query kernel) — never as Catalyst literals: a full
@@ -142,21 +143,14 @@ object Merger {
 
     // 1. promote into place under the fresh segId (a group whose docs were
     // ALL tombstoned writes no partition dir — commit an empty segment)
-    def promote(from: String, to: String): Unit = {
-      val src = new Path(from)
-      val dst = new Path(to)
-      if (!fs.exists(src)) { fs.mkdirs(dst); return }
-      if (!fs.exists(dst.getParent)) fs.mkdirs(dst.getParent)
-      require(fs.rename(src, dst), s"promote failed: $from -> $to")
-    }
-    promote(s"$staging/segId=$targetId",
+    IndexBuilder.promoteDir(fs, s"$staging/segId=$targetId",
       s"${IndexBuilder.segmentsDir(indexDir)}/segId=$targetId")
-    promote(s"$dsStaging/segId=$targetId",
+    IndexBuilder.promoteDir(fs, s"$dsStaging/segId=$targetId",
       s"${IndexBuilder.docstatsDir(indexDir)}/segId=$targetId")
     fs.delete(new Path(staging), true)
     fs.delete(new Path(dsStaging), true)
 
-    // 2. the commit point: merged manifest supersedes the group
+    // 2. the commit point: the merged segment replaces the group
     val m = SegmentManifest(
       segId = targetId,
       docLo = manifests.map(_.docLo).min,
@@ -166,21 +160,15 @@ object Merger {
       postingRows = postRows, postingBytes = postBytes,
       digest = digest,
       source = s"merge(${sorted.mkString(",")})",
-      covers = manifests.flatMap(_.coverSet).distinct.sorted,
-      absorbed = sorted)
-    IndexBuilder.writeManifest(fs, indexDir, m)
+      covers = manifests.flatMap(_.coverSet).distinct.sorted)
+    IndexBuilder.commitRecord(fs, indexDir, st,
+      live.filterNot(l => sorted.contains(l.segId)) :+ m)
 
-    // 3. GC the superseded manifests, then their dirs
-    sorted.foreach { id =>
-      fs.delete(new Path(s"${IndexBuilder.manifestsDir(indexDir)}/seg-$id.json"), false)
-    }
+    // 3. GC the group's dirs
     sorted.foreach { id =>
       fs.delete(new Path(s"${IndexBuilder.segmentsDir(indexDir)}/segId=$id"), true)
       fs.delete(new Path(s"${IndexBuilder.docstatsDir(indexDir)}/segId=$id"), true)
     }
-    // refresh the TOC cache at the commit point (cheap: one listing + one
-    // small write; stale-TOC readers fall back to per-file reads anyway)
-    IndexBuilder.writeToc(fs, indexDir)
     targetId
   }
 
@@ -280,8 +268,8 @@ object Merger {
     ()
   }
 
-  /** delete segments/docstats `segId=N` dirs whose N has no live manifest
-    * (single-writer assumption: no build or merge runs concurrently) */
+  /** delete segments/docstats `segId=N` dirs whose N the record does not
+    * list (single-writer assumption: no build or merge runs concurrently) */
   private[graft] def gcOrphanDirs(fs: FileSystem, indexDir: String,
                                   live: Set[Int]): Unit = {
     Seq(IndexBuilder.segmentsDir(indexDir), IndexBuilder.docstatsDir(indexDir))
@@ -321,7 +309,7 @@ object Merger {
     * and a run is flushed once it reaches `smallDocs`, so a run totals
     * under 2 x `smallDocs` docs — small enough for one task, whose one-file
     * output keeps the colocated query layout. The commit protocol is
-    * mergeGroup's.
+    * mergeGroup's: each run's merge commits the record.
     *
     * Returns the freshly minted segIds. */
   def mergeSmall(spark: SparkSession, indexDir: String, smallDocs: Long = 0,
@@ -329,10 +317,10 @@ object Merger {
     require(groupSize >= 2)
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val st = IndexBuilder.readCurrentStats(fs, indexDir)
+    val (st, ms) = IndexBuilder.readCurrentRecord(fs, indexDir)
     val target = if (smallDocs > 0) smallDocs else st.segSize.toLong
+    // the fold writes no record, so `ms` stays the live set
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
-    val ms = IndexBuilder.readManifests(fs, indexDir)
     val minted = scala.collection.mutable.ArrayBuffer.empty[Int]
     var run = List.empty[SegmentManifest]
     def flush(): Unit = {
@@ -350,9 +338,6 @@ object Merger {
       }
     }
     flush()
-    if (minted.nonEmpty)
-      IndexBuilder.writeStats(fs, indexDir, st.copy(
-        numSegments = IndexBuilder.readManifests(fs, indexDir).size))
     minted.toSeq
   }
 
@@ -371,14 +356,13 @@ object Merger {
     require(groupSize >= 2)
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val st = IndexBuilder.readCurrentStats(fs, indexDir)
+    var ms = IndexBuilder.readCurrentRecord(fs, indexDir)._2
     // fold before merging (see mergeSmall)
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
     val delRids = if (applyDeletes) graft.build.Deletes.listRanges(fs, indexDir)
       else Set.empty[Long]
     val hadDeletes = delRids.nonEmpty
     val purged = scala.collection.mutable.Set.empty[Int]
-    var ms = IndexBuilder.readManifests(fs, indexDir)
     while (ms.size > 1) {
       // group segments ADJACENT IN docId ORDER (docLo), the LSM invariant:
       // merged ranges stay concatenable at every level regardless of the
@@ -410,16 +394,15 @@ object Merger {
           if (dels.nonEmpty) merge(spark, indexDir, Seq(m.segId), dels, tail = false)
         }
     }
-    val manifests = IndexBuilder.readManifests(fs, indexDir)
     if (hadDeletes) {
       // stats refresh after physical purge (N/avgfl shrink with the purge)
-      IndexBuilder.writeStats(fs, indexDir, st.copy(
-        numDocs = manifests.map(_.docCount).sum,
-        totalFieldLen = manifests.map(_.rawLenSum).sum,
-        numSegments = manifests.size))
+      val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
+      IndexBuilder.commitRecord(fs, indexDir, st.copy(
+        numDocs = live.map(_.docCount).sum,
+        totalFieldLen = live.map(_.rawLenSum).sum), live)
       // the purge shrank dfs: full lexicon rebuild
-      IndexBuilder.writeLexicon(spark, indexDir)
+      IndexBuilder.writeLexiconOf(spark, fs, indexDir, live)
       graft.build.Deletes.clear(spark, indexDir)
-    } else IndexBuilder.writeStats(fs, indexDir, st.copy(numSegments = manifests.size))
+    }
   }
 }

@@ -48,22 +48,19 @@ final case class SegRead(term: String, df: Int, maxTf: Int,
 final case class LexRow(term: String, df: Long, cf: Long, maxTf: Long)
 
 /** per-segment manifest (SURVEY.md S5): lineage + row-count/digest metrics,
+  * one line of the index's commit record (stats.json) per live segment —
   * the checkpoint unit for resumable builds.
   *
   * `covers` = the ORIGINAL build-layout segIds whose docId ranges this
   * segment contains (transitive through merges) — resume treats every
-  * covered segId as built, so a compacted index never re-ingests absorbed
-  * ranges. `absorbed` = the immediate merge group this segment replaced
-  * (empty for fresh builds) — readers drop any manifest whose segId appears
-  * in another manifest's absorbed set, which makes the merge commit
-  * crash-safe: the new manifest supersedes the old ones the moment it is
-  * written, and deleting them afterwards is mere GC. */
+  * covered segId as built, so a compacted index never re-ingests merged
+  * ranges. `source` names the writer: the build's IndexConfig.source, or
+  * `merge(a,b,...)` with the group a merge replaced. */
 final case class SegmentManifest(segId: Int, docLo: Long, docHi: Long,
                                  docCount: Long, rawLenSum: Long,
                                  postingRows: Long, postingBytes: Long,
                                  digest: String, source: String,
-                                 covers: Seq[Int] = Seq.empty,
-                                 absorbed: Seq[Int] = Seq.empty) {
+                                 covers: Seq[Int] = Seq.empty) {
   def coverSet: Seq[Int] = if (covers.isEmpty) Seq(segId) else covers
 }
 
@@ -82,6 +79,9 @@ object IndexStats {
     * 8 = segment-backed deltas: appends write no lexicon, the base lexicon
     * carries `_covers.json` and readers fold it with the uncovered
     * segments' own term stats (a v7 index may hold pending lexdeltas this
-    * reader would not count, so it must be rebuilt). */
-  final val CurrentFormat = 8
+    * reader would not count, so it must be rebuilt);
+    * 9 = one commit record: stats.json lists the live segments after its
+    * header, and the per-segment manifests/ dir and the toc.json cache are
+    * gone (a v8 index keeps its segment set in files this reader ignores). */
+  final val CurrentFormat = 9
 }

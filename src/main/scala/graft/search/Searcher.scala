@@ -89,18 +89,15 @@ object Searcher {
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    // fail FAST on a foreign layout (round-5 advice): an older index would
-    // silently answer wrong (a v7 one can hold pending lexdeltas this reader
-    // does not count), so it asks for a rebuild
-    val st = IndexBuilder.readCurrentStats(fs, indexDir)
-    // manifest-driven segment set: a crashed merge can leave superseded or
-    // orphaned segment dirs behind (they are GC'd after the commit point) —
-    // readers trust only segIds with a live manifest. The isin filter is a
-    // partition-pruning predicate on the segId directory column. Read via
-    // the rolled-up TOC (round-5): O(1) metadata reads when fresh instead
-    // of one JSON per segment, falling back to the per-file protocol read
-    // on any staleness.
-    val manifests = IndexBuilder.readManifestsFast(fs, indexDir)
+    // stats and segment set from ONE read of the commit record; open
+    // writes nothing. Fail FAST on a foreign layout (round-5 advice): an
+    // older index would silently answer wrong (a v8 one keeps its segment
+    // set in files this reader ignores), so it asks for a rebuild. A
+    // crashed merge or append can leave segment dirs no record lists
+    // (GC'd by the next merge) — readers trust only the record's segIds.
+    // The isin filter is a partition-pruning predicate on the segId
+    // directory column.
+    val (st, manifests) = IndexBuilder.readCurrentRecord(fs, indexDir)
     val liveSegs = manifests.map(_.segId)
     // a freshly created index (Engine.createIndex) has stats but no
     // segments yet — empty relations keep every search path total
@@ -133,8 +130,11 @@ object Searcher {
         import spark.implicits._
         (spark.emptyDataset[LexRow].toDF(), None)
       } else {
+        // a multi-batch build commits after every batch and writes the
+        // lexicon last: segments without a lexicon are an unfinished build
         val covered = IndexBuilder.lexiconCovers(fs, indexDir).getOrElse(
-          throw new IllegalStateException(s"index at $indexDir has segments but no lexicon"))
+          throw new IllegalStateException(s"index at $indexDir has segments but no " +
+            "lexicon: an unfinished build — rerun IndexBuilder.build to finish it"))
         val deltas = IndexBuilder.lexiconDeltaSegments(manifests, covered).map(_.segId)
         (IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema,
           IndexBuilder.lexiconDir(indexDir)),
@@ -850,8 +850,8 @@ object Searcher {
       .limit(k)
   }
 
-  /** the docstats sidecar restricted to LIVE-manifest segments: a crashed
-    * merge can leave superseded segId dirs behind until the next GC, and an
+  /** the docstats sidecar restricted to the record's live segments: a
+    * crashed merge can leave segId dirs behind until the next GC, and an
     * unfiltered read would double-count their docs (same defense as the
     * segments read in open() and everyRows) */
   private[search] def liveDocstats(spark: SparkSession,

@@ -19,73 +19,67 @@ import graft.model.{CorpusRow, IndexStats}
   *
   * docId layout: every append starts at the next segment boundary
   * (docIdBase = (maxSegId+1) * segSize). Gaps in docId space are harmless —
-  * N and avgfl come from manifest doc counts, never from max docId.
+  * N and avgfl come from the segments' doc counts, never from max docId.
   *
   * An append runs no separate counting job: the batch's row count (how
   * many segments it fills) comes from the docId stamp's offsets job, and
   * the new segments' doc metrics from the job that materializes the
   * analyzed docs. It writes no lexicon: the appended segments ARE the
   * delta lexicon (readers fold the base with their own term stats,
-  * IndexBuilder.writeLexicon), so an append commits segments, manifests,
-  * stats and TOC only. The small segments appends leave are merged by
-  * MERGE_SMALL's single-task tail merge, which first folds the deltas into
-  * the base lexicon and keeps the segments in the exchange-free query
-  * layout.
+  * IndexBuilder.writeLexicon), so an append promotes its segment dirs and
+  * commits them with the new counts in one rename of the index's record
+  * (stats.json): the whole batch becomes visible at once, or none of it.
+  * The small segments appends leave are merged by MERGE_SMALL's
+  * single-task tail merge, which first folds the deltas into the base
+  * lexicon and keeps the segments in the exchange-free query layout.
   */
 object StreamingIngest {
 
-  /** Append a static batch of new documents as fresh segments. */
+  /** Append a static batch of new documents as fresh segments: every new
+    * segment dir is promoted first, then ONE record commit makes the whole
+    * batch and the new counts visible together. A crash before it leaves
+    * promoted dirs no record lists (the next merge GCs them); a rerun
+    * rebuilds the same segIds. */
   def append(spark: SparkSession, batch: Dataset[CorpusRow], indexDir: String,
              cfg: IndexConfig = IndexConfig()): IndexStats = {
     import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val existing = IndexBuilder.readManifests(fs, indexDir)
     // an index created empty (Engine.createIndex) carries authoritative
     // stats before its first segment exists — appended segments MUST use
     // the INDEX's segSize and analyzer chain, not the caller's cfg
-    val statsOpt =
-      if (fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(indexDir))))
-        Some(IndexBuilder.readCurrentStats(fs, indexDir))
-      else None
-    val (segIdBase, segSize, analyzer) = (existing, statsOpt) match {
-      case (Seq(), None) => (0, cfg.segSize, cfg.analyzer)
-      case (Seq(), Some(st)) =>
-        (0, st.segSize, graft.analysis.AnalyzerSpec.fromString(st.analyzer))
-      case (ms, Some(st)) =>
-        (ms.map(_.segId).max + 1, st.segSize,
-          graft.analysis.AnalyzerSpec.fromString(st.analyzer))
-      case (ms, None) => (ms.map(_.segId).max + 1, cfg.segSize, cfg.analyzer)
-    }
+    val (statsOpt, existing) =
+      if (fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(indexDir)))) {
+        val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
+        (Some(st), live)
+      } else (None, Seq.empty)
+    val segIdBase = if (existing.isEmpty) 0 else existing.map(_.segId).max + 1
+    val (segSize, analyzer) = statsOpt.fold((cfg.segSize, cfg.analyzer))(st =>
+      (st.segSize, graft.analysis.AnalyzerSpec.fromString(st.analyzer)))
     val docIdBase = segIdBase.toLong * segSize
 
     // stamp within the batch (D1 rank), then shift into the fresh range;
     // the stamp's offsets job also yields the batch's row count
     val (batchDocs, n) = IndexBuilder.stampDocIdsCounted(batch, cfg.sortPartitions)
-    if (n == 0) return IndexBuilder.readStats(fs, indexDir)
+    if (n == 0) return statsOpt.getOrElse(IndexBuilder.readStats(fs, indexDir))
     val numNewSegs = ((n + segSize - 1) / segSize).toInt
     val newSegs = segIdBase until (segIdBase + numNewSegs)
     val stamped = batchDocs.map(d => d.copy(docId = d.docId + docIdBase))
 
-    newSegs.grouped(cfg.segmentsPerBatch).foreach { group =>
+    val added = newSegs.grouped(cfg.segmentsPerBatch).flatMap { group =>
       IndexBuilder.buildBatchForAppend(spark, fs, stamped, indexDir, group,
         cfg.copy(segSize = segSize, analyzer = analyzer))
-    }
-
-    val manifests = IndexBuilder.readManifests(fs, indexDir)
-    val stats = IndexStats(
-      numDocs = manifests.map(_.docCount).sum,
-      totalFieldLen = manifests.map(_.rawLenSum).sum,
-      numSegments = manifests.size,
-      segSize = segSize,
-      analyzer = analyzer.asString)
-    // the new segments are the delta lexicon; only an index created empty
-    // (Engine.createIndex) gets its first base lexicon here
-    if (!fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.lexiconDir(indexDir))))
-      IndexBuilder.writeLexicon(spark, indexDir)
-    IndexBuilder.writeStats(fs, indexDir, stats)
-    IndexBuilder.writeToc(fs, indexDir)
-    stats
+    }.toSeq
+    val live = existing ++ added
+    // the new segments are the delta lexicon; only an index with no
+    // segments yet (Engine.createIndex) gets its base lexicon, written
+    // before the commit: a crash between leaves a lexicon for segments no
+    // record lists, which no reader consults and the rerun rewrites
+    if (existing.isEmpty) IndexBuilder.writeLexiconOf(spark, fs, indexDir, added)
+    IndexBuilder.commitRecord(fs, indexDir,
+      IndexStats(numDocs = live.map(_.docCount).sum,
+        totalFieldLen = live.map(_.rawLenSum).sum, numSegments = live.size,
+        segSize = segSize, analyzer = analyzer.asString), live)
   }
 
   /** Upsert by unique key (the reference's `put_document` semantics:
@@ -102,14 +96,13 @@ object StreamingIngest {
              cfg: IndexConfig = IndexConfig()): IndexStats = {
     import spark.implicits._
     val keys = batch.select($"repo", $"path", $"commit").distinct()
-    // live-manifest filter (same defense as every docstats consumer): a
-    // crashed merge can leave superseded segId dirs behind until GC, and an
-    // unfiltered key lookup would return their docIds too
+    // live-segment filter (same defense as every docstats consumer): a
+    // crashed merge or append can leave segId dirs no record lists until
+    // GC, and an unfiltered key lookup would return their docIds too.
+    // readManifests refuses a foreign format before the tombstones are
+    // written.
     val fsUp = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    // refuse a foreign format before the tombstones are written
-    if (fsUp.exists(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(indexDir))))
-      IndexBuilder.readCurrentStats(fsUp, indexDir)
     val liveSegs = IndexBuilder.readManifests(fsUp, indexDir).map(_.segId)
     // a created-but-empty index has no docstats yet: nothing to replace
     val existing =

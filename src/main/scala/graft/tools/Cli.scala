@@ -29,8 +29,8 @@ object Cli {
 /** Build (or resume) an index over a parquet/iceberg-shaped corpus table:
   * `BuildIndex <corpusPath> <indexDir> [segSize] [format]`. The corpus must
   * have the authoritative (repo, path, commit, lang, content) columns
-  * (BASELINE.json input_hint); resume is automatic — segments with a live
-  * manifest are never rebuilt. */
+  * (BASELINE.json input_hint); resume is automatic — segments the commit
+  * record lists are never rebuilt. */
 object BuildIndex {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,

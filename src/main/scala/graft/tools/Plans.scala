@@ -25,10 +25,11 @@ object Plans {
       new java.net.URI(ix), spark.sparkContext.hadoopConfiguration)
     // rebuild when absent OR a stale on-disk format (Searcher.open fails
     // fast on foreign layouts, so the cache must migrate here)
-    val stale = fs.exists(new org.apache.hadoop.fs.Path(ix, "stats.json")) &&
+    val record = new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(ix))
+    val stale = fs.exists(record) &&
       IndexBuilder.readStats(fs, ix).formatVersion != graft.model.IndexStats.CurrentFormat
     if (stale) fs.delete(new org.apache.hadoop.fs.Path(ix), true)
-    if (stale || !fs.exists(new org.apache.hadoop.fs.Path(ix, "stats.json"))) {
+    if (stale || !fs.exists(record)) {
       IndexBuilder.build(spark, CorpusSource.synth(spark, 20000, 42L, 8), ix,
         IndexConfig(segSize = 2048))
     }

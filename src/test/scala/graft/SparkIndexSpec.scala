@@ -89,9 +89,11 @@ class SparkIndexSpec extends AnyFunSuite {
     IndexBuilder.build(spark, corpus, dirA, cfg)
     val fullManifests = IndexBuilder.readManifests(fsOf(dirA), dirA)
 
-    // simulate a crash that lost segment 1 after commit of 0 and 2
+    // simulate a crash that lost segment 1 after commit of 0 and 2: the
+    // record lists only 0 and 2
     val fs = fsOf(dirA)
-    fs.delete(new Path(s"${IndexBuilder.manifestsDir(dirA)}/seg-1.json"), false)
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dirA)
+    IndexBuilder.commitRecord(fs, dirA, st, live.filterNot(_.segId == 1))
     fs.delete(new Path(s"${IndexBuilder.segmentsDir(dirA)}/segId=1"), true)
     fs.delete(new Path(s"${IndexBuilder.docstatsDir(dirA)}/segId=1"), true)
 
@@ -217,18 +219,63 @@ class SparkIndexSpec extends AnyFunSuite {
     val dir = SparkTestBase.tmpDir("crash")
     IndexBuilder.build(spark, spark.createDataset(rows), dir, IndexConfig(segSize = 30))
     val fs = fsOf(dir)
-    val before = IndexBuilder.readManifestsRaw(fs, dir)
+    val before = IndexBuilder.readManifests(fs, dir)
     assert(before.map(_.segId) == Seq(0, 1, 2))
+    val saved = SparkTestBase.tmpDir("crash-seg0")
+    val seg0 = Seq(IndexBuilder.segmentsDir(dir), IndexBuilder.docstatsDir(dir))
+      .map(d => new Path(s"$d/segId=0"))
+    seg0.zipWithIndex.foreach { case (p, i) =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, new Path(s"$saved/$i"), false,
+        spark.sparkContext.hadoopConfiguration)
+    }
 
     Merger.mergeGroup(spark, dir, Seq(0, 1))
-    // simulate a crash between the merge commit point (new manifest) and
-    // the GC of a superseded manifest: resurrect seg-0's manifest
-    IndexBuilder.writeManifest(fs, dir, before.head)
+    // simulate a crash between the merge commit point (the record) and the
+    // GC of the group's dirs: segment 0's dirs are back on disk
+    seg0.zipWithIndex.foreach { case (p, i) =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(s"$saved/$i"), fs, p, false,
+        spark.sparkContext.hadoopConfiguration)
+    }
     val live = IndexBuilder.readManifests(fs, dir)
-    assert(live.map(_.segId) == Seq(2, 3), s"supersession failed: ${live.map(_.segId)}")
+    assert(live.map(_.segId) == Seq(2, 3), s"record: ${live.map(_.segId)}")
     assert(live.map(_.docCount).sum == 90)
-    // search is unaffected (its segment 0 dir is gone; manifest was stale)
-    assertSearchesMatchOracle(dir, refDocs(rows), Seq("c1" -> "w0000", "c2" -> "w0001 OR w0002"))
+    // readers ignore the orphan dirs: segment 0's docs would count twice
+    val queries = Seq("c1" -> "w0000", "c2" -> "w0001 OR w0002")
+    assertSearchesMatchOracle(dir, refDocs(rows), queries)
+    // the next merge GCs them
+    Merger.mergeGroup(spark, dir, Seq(2, 3))
+    seg0.foreach(p => assert(!fs.exists(p), s"orphan $p survived the next merge"))
+    assert(IndexBuilder.readManifests(fs, dir).map(_.segId) == Seq(4))
+    assertSearchesMatchOracle(dir, refDocs(rows), queries)
+  }
+
+  test("an unfinished multi-batch build: open asks for the rerun, which finishes it") {
+    import spark.implicits._
+    val corpus = spark.createDataset(fixtureRows)
+    val cfg = IndexConfig(segSize = 2, segmentsPerBatch = 1)
+    val dirA = SparkTestBase.tmpDir("unfinA")
+    val dirB = SparkTestBase.tmpDir("unfinB")
+    IndexBuilder.build(spark, corpus, dirA, cfg)
+    IndexBuilder.build(spark, corpus, dirB, cfg)
+    // the state after batch 1 of 3 and a crash in batch 2 after its
+    // promote: the record lists segment 0, no lexicon exists yet
+    val fs = fsOf(dirB)
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dirB)
+    IndexBuilder.commitRecord(fs, dirB, st, live.take(1))
+    Seq(IndexBuilder.lexiconDir(dirB), IndexBuilder.lexgramsDir(dirB),
+      s"${IndexBuilder.segmentsDir(dirB)}/segId=2", s"${IndexBuilder.docstatsDir(dirB)}/segId=2")
+      .foreach(d => fs.delete(new Path(d), true))
+    assert(graft.build.IndexAdmin.exists(spark, dirB))
+    val e = intercept[IllegalStateException](Searcher.open(spark, dirB))
+    assert(e.getMessage.contains("rerun IndexBuilder.build"), e.getMessage)
+
+    val report = IndexBuilder.build(spark, corpus, dirB, cfg)
+    assert(report.builtSegments == Seq(1, 2))
+    def key(d: String) = IndexBuilder.readManifests(fsOf(d), d)
+      .map(m => (m.segId, m.digest, m.postingRows, m.docCount))
+    assert(key(dirB) == key(dirA))
+    assert(IndexBuilder.readStats(fs, dirB) == IndexBuilder.readStats(fsOf(dirA), dirA))
+    assertSearchesMatchOracle(dirB, refDocs(fixtureRows), TestFixtures.querySet.take(5))
   }
 
   test("deletion lifecycle: query-time tombstones, purge at compact, stats refresh") {
@@ -767,20 +814,27 @@ class SparkIndexSpec extends AnyFunSuite {
     val dir = SparkTestBase.tmpDir("trunc")
     IndexBuilder.build(spark, spark.createDataset(fixtureRows), dir, IndexConfig(segSize = 2))
     val fs = fsOf(dir)
-    def truncate(p: Path, before: String): Unit = {
-      val in = fs.open(p)
-      val txt = scala.io.Source.fromInputStream(in).mkString
-      in.close()
-      val out = fs.create(p, true)
-      out.write(txt.take(txt.indexOf(before)).getBytes("UTF-8"))
+    val record = new Path(IndexBuilder.statsPath(dir))
+    val txt = {
+      val in = fs.open(record)
+      try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    }
+    def write(s: String): Unit = {
+      val out = fs.create(record, true)
+      out.write(s.getBytes("UTF-8"))
       out.close()
     }
-    val mf = new Path(IndexBuilder.manifestsDir(dir), "seg-1.json")
-    truncate(mf, "\"digest\"")
+    // segment 1's line (line 3, after the header and segment 0) cut short
+    write(txt.take(txt.indexOf("\"digest\"", txt.indexOf("{\"segId\":1,"))))
     val em = intercept[IllegalStateException](IndexBuilder.readManifests(fs, dir))
-    assert(em.getMessage.contains("seg-1.json") && em.getMessage.contains("\"digest\""),
+    assert(em.getMessage.contains("stats.json line 3") && em.getMessage.contains("\"digest\""),
       em.getMessage)
-    truncate(new Path(IndexBuilder.statsPath(dir)), "\"numSegments\"")
+    // the last segment line lost: the header's count names the gap
+    write(txt.linesIterator.toSeq.dropRight(1).mkString("\n"))
+    val ec = intercept[IllegalStateException](IndexBuilder.readManifests(fs, dir))
+    assert(ec.getMessage.contains("stats.json") && ec.getMessage.contains("\"numSegments\""),
+      ec.getMessage)
+    write(txt.take(txt.indexOf("\"numSegments\"")))
     val es = intercept[IllegalStateException](IndexBuilder.readStats(fs, dir))
     assert(es.getMessage.contains("stats.json") && es.getMessage.contains("\"numSegments\""),
       es.getMessage)

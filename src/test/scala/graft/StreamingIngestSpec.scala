@@ -369,9 +369,10 @@ class StreamingIngestSpec extends AnyFunSuite {
     IndexBuilder.build(spark, spark.createDataset(mkRows(37L, 0, 40)), dir,
       IndexConfig(segSize = 16))
     val fs = fsOf(dir)
-    val m2 = IndexBuilder.readManifests(fs, dir).find(_.segId == 2).get
-    IndexBuilder.writeManifest(fs, dir, m2.copy(segId = 7, covers = Seq(2, 9),
-      absorbed = Seq(2)))
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
+    val m2 = live.find(_.segId == 2).get
+    IndexBuilder.commitRecord(fs, dir, st,
+      live.filterNot(_.segId == 2) :+ m2.copy(segId = 7, covers = Seq(2, 9)))
     val e = intercept[IllegalStateException](Searcher.open(spark, dir))
     assert(e.getMessage.contains("segment 7"), e.getMessage)
   }
@@ -380,12 +381,12 @@ class StreamingIngestSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = tailIndex("oldformat", 41L)
     val fs = fsOf(dir)
-    val st = IndexBuilder.readStats(fs, dir)
-    IndexBuilder.writeStats(fs, dir, st.copy(formatVersion = 7))
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
+    IndexBuilder.commitRecord(fs, dir, st.copy(formatVersion = 8), live)
     val before = snapshot(dir)
     def refused(what: String)(body: => Any): Unit = {
       val e = intercept[IllegalArgumentException](body)
-      assert(e.getMessage.contains("formatVersion 7") && e.getMessage.contains("rebuild"),
+      assert(e.getMessage.contains("formatVersion 8") && e.getMessage.contains("rebuild"),
         s"$what: ${e.getMessage}")
     }
     refused("open")(Searcher.open(spark, dir))
@@ -395,44 +396,85 @@ class StreamingIngestSpec extends AnyFunSuite {
       spark.createDataset(mkRows(41L, 0, 2)), dir, IndexConfig(segSize = 32)))
     refused("mergeSmall")(graft.merge.Merger.mergeSmall(spark, dir))
     refused("compact")(graft.merge.Merger.compact(spark, dir))
+    // build cannot resume another format: it names the directory to delete
+    val eb = intercept[IllegalArgumentException](IndexBuilder.build(spark,
+      spark.createDataset(mkRows(41L, 0, 64)), dir, IndexConfig(segSize = 32)))
+    assert(eb.getMessage.contains("format 8") && eb.getMessage.contains(s"delete $dir"),
+      eb.getMessage)
     assert(snapshot(dir) == before, "a refused writer changed the index")
   }
 
-  test("TOC cache: fresh == per-file manifests; corrupt/missing falls back + rewrites") {
-    import spark.implicits._
-    val dir = SparkTestBase.tmpDir("toc")
-    IndexBuilder.build(spark, spark.createDataset(mkRows(13L, 0, 40)), dir,
-      IndexConfig(segSize = 16))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val tocP = new org.apache.hadoop.fs.Path(IndexBuilder.tocPath(dir))
-    assert(fs.exists(tocP), "build did not write the TOC")
-    def key(ms: Seq[graft.model.SegmentManifest]) =
-      ms.map(m => (m.segId, m.digest, m.docCount, m.covers, m.absorbed))
-    assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
-      key(IndexBuilder.readManifests(fs, dir)))
-
-    // corrupt token -> authoritative fallback, cache refreshed
-    val out = fs.create(tocP, true)
-    out.write("{\"token\":\"deadbeef\",\"n\":0}\n".getBytes("UTF-8"))
+  test("readStats reads a one-line v8 stats.json; readers refuse it") {
+    val dir = SparkTestBase.tmpDir("v8stats")
+    val fs = fsOf(dir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(dir)), true)
+    out.write(("""{"formatVersion":8,"numDocs":5,"totalFieldLen":40,"numSegments":3,""" +
+      """"segSize":2,"analyzer":"standard|lower|stop(2)"}""").getBytes("UTF-8"))
     out.close()
-    assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
-      key(IndexBuilder.readManifests(fs, dir)))
-    // missing TOC -> fallback recreates it
-    fs.delete(tocP, false)
-    assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
-      key(IndexBuilder.readManifests(fs, dir)))
-    assert(fs.exists(tocP), "fallback did not refresh the TOC")
+    val st = IndexBuilder.readStats(fs, dir)
+    assert((st.formatVersion, st.numDocs, st.totalFieldLen, st.numSegments, st.segSize) ==
+      ((8, 5L, 40L, 3, 2)))
+    val e = intercept[IllegalArgumentException](Searcher.open(spark, dir))
+    assert(e.getMessage.contains("formatVersion 8"), e.getMessage)
+  }
 
-    // an append + a merge each move the commit point; the cache must track
-    StreamingIngest.append(spark, spark.createDataset(mkRows(13L, 40, 50)), dir,
-      IndexConfig(segSize = 16))
-    assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
-      key(IndexBuilder.readManifests(fs, dir)))
-    graft.merge.Merger.compact(spark, dir)
-    assert(key(IndexBuilder.readManifestsFast(fs, dir)) ==
-      key(IndexBuilder.readManifests(fs, dir)))
-    assert(IndexBuilder.readManifestsFast(fs, dir).size == 1)
+  test("an append commits its segments and counts in one rename") {
+    import spark.implicits._
+    val cfg = IndexConfig(segSize = 16)
+    val dir = SparkTestBase.tmpDir("atomic") + "/ix"
+    val refDir = SparkTestBase.tmpDir("atomic-ref") + "/ix"
+    IndexBuilder.build(spark, spark.createDataset(mkRows(43L, 0, 32)), dir, cfg)
+    val fs = fsOf(dir)
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(dir), fs,
+      new org.apache.hadoop.fs.Path(refDir), false, spark.sparkContext.hadoopConfiguration)
+    val batch = mkRows(43L, 32, 60) // 28 docs: two new segments
+    val queries = Seq("w0000", "w0001 OR w0003", "\"needle alpha beta\"", "*")
+    def view(d: String) = {
+      val h = Searcher.open(spark, d)
+      (IndexBuilder.readManifests(fsOf(d), d).map(m => (m.segId, m.digest, m.docCount)),
+        (h.stats.numDocs, h.stats.totalFieldLen),
+        queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq))
+    }
+    val before = view(dir)
+    val record = new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(dir))
+    val saved = new org.apache.hadoop.fs.Path(SparkTestBase.tmpDir("atomic-rec"), "stats.json")
+    org.apache.hadoop.fs.FileUtil.copy(fs, record, fs, saved, false,
+      spark.sparkContext.hadoopConfiguration)
+    StreamingIngest.append(spark, spark.createDataset(batch), dir, cfg)
+    assert(IndexBuilder.readManifests(fs, dir).map(_.segId) == Seq(0, 1, 2, 3))
+    // a crash after the promotes and before the record rename: the new
+    // segment dirs are on disk, the old record is in place
+    org.apache.hadoop.fs.FileUtil.copy(fs, saved, fs, record, false,
+      spark.sparkContext.hadoopConfiguration)
+    assert(view(dir) == before)
+    // the rerun converges to an uninterrupted append
+    StreamingIngest.append(spark, spark.createDataset(batch), dir, cfg)
+    StreamingIngest.append(spark, spark.createDataset(batch), refDir, cfg)
+    val after = view(dir)
+    assert(after == view(refDir))
+    assert(after._2._1 == 60)
+  }
+
+  test("Searcher.open writes nothing") {
+    import spark.implicits._
+    val cfg = IndexConfig(segSize = 32)
+    val dir = SparkTestBase.tmpDir("openro")
+    IndexBuilder.build(spark, spark.createDataset(mkRows(47L, 0, 64)), dir, cfg)
+    def opened(what: String): Unit = {
+      val before = snapshot(dir)
+      Searcher.open(spark, dir)
+      assert(snapshot(dir) == before, s"open changed the index ($what)")
+      assert(!before.exists { case (p, _, _) => p.contains("/manifests/") || p.endsWith("toc.json") },
+        s"a writer left a manifests/ dir or toc.json ($what)")
+    }
+    opened("built")
+    (0 until 2).foreach { k =>
+      StreamingIngest.append(spark, spark.createDataset(mkRows(47L, 64 + 8 * k, 72 + 8 * k)),
+        dir, cfg)
+    }
+    opened("appended")
+    assert(graft.merge.Merger.mergeSmall(spark, dir).nonEmpty)
+    opened("merged")
   }
 
   test("job counts: open starts none, a small append and MERGE_SMALL stay lean") {
@@ -511,7 +553,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     val (a, b) = (manifest(tailDir), manifest(cogDir))
     assert((a.digest, a.postingRows, a.postingBytes, a.docCount, a.rawLenSum) ==
       (b.digest, b.postingRows, b.postingBytes, b.docCount, b.rawLenSum))
-    assert(a.docCount == 24 && a.absorbed == small)
+    assert(a.docCount == 24 && a.source == s"merge(${small.mkString(",")})")
     def docstats(dir: String) =
       IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema, IndexBuilder.docstatsDir(dir))
         .filter($"segId" === cog).drop("segId").collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
