@@ -150,12 +150,8 @@ object Engine {
   /** serving-path overload over a long-lived handle */
   def searchDocuments(spark: SparkSession, handle: Searcher.IndexHandle,
                       query: String, pageNum: Int, pageLen: Int,
-                      weighting: Weighting): Seq[SearchHit] = {
-    require(pageNum >= 1 && pageLen >= 1)
-    Searcher.search(spark, handle, query, pageNum * pageLen, weighting = weighting)
-      .collect().toSeq
-      .slice((pageNum - 1) * pageLen, pageNum * pageLen)
-  }
+                      weighting: Weighting): Seq[SearchHit] =
+    Searcher.searchPage(spark, handle, query, pageNum, pageLen, weighting)
 
   /** hits joined with stored fields (the reference returns documents) */
   def searchWithFields(spark: SparkSession, indexDir: String, query: String,

@@ -292,19 +292,13 @@ object IndexBuilder {
     enc.add(docId, 1, lenByte, PseudoPos)
   }
 
-  /** streaming-append entry: build the given fresh segIds from an already
-    * stamped (docId-shifted) batch — see graft.streaming.StreamingIngest */
-  private[graft] def buildBatchForAppend(spark: SparkSession, fs: FileSystem,
-                                         docs: Dataset[Doc], indexDir: String,
-                                         batch: Seq[Int], cfg: IndexConfig): Seq[SegmentManifest] =
-    buildBatch(spark, fs, docs, indexDir, Some(batch), cfg)
-
   /** Builds and promotes the segments of `batch` (None: ALL segments found
     * in `docs`, in one pass) and returns their manifests, sorted by segId.
-    * Nothing is committed: the caller puts them in the record. */
-  private def buildBatch(spark: SparkSession, fs: FileSystem, docs: Dataset[Doc],
-                         indexDir: String, batch: Option[Seq[Int]],
-                         cfg: IndexConfig): Seq[SegmentManifest] = {
+    * Nothing is committed: the caller (build, or a streaming append with
+    * an already stamped, docId-shifted batch) puts them in the record. */
+  private[graft] def buildBatch(spark: SparkSession, fs: FileSystem, docs: Dataset[Doc],
+                                indexDir: String, batch: Option[Seq[Int]],
+                                cfg: IndexConfig): Seq[SegmentManifest] = {
     import spark.implicits._
     val segSize = cfg.segSize
     val staging = stagingDir(indexDir)
@@ -484,13 +478,34 @@ object IndexBuilder {
         val (rowsN, bytesN, digest) = segAgg.getOrElse(segId, (0L, 0L, "0" * 32))
         val (docCount, lo, hi, rawLenSum) = docAgg.getOrElse(segId,
           (0L, segId.toLong * segSize, segId.toLong * segSize, 0L))
+        val layout = stagedLayout(fs, s"$staging/segments/segId=$segId")
         promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
         promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
-        SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source)
+        SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source,
+          layout = Some(layout))
       }
       fs.delete(new Path(staging), true)
       built
     } finally analyzed.unpersist()
+  }
+
+  /** The layout a writer records for a segment it has just staged in
+    * `dir`: its parquet files and their row groups, read from the footers on
+    * the driver (one listing, one footer per file; no Spark job). Paid once
+    * per write, so that Searcher.open reads no segment file. A segment
+    * with no rows has no dir: (0, 0). */
+  private[graft] def stagedLayout(fs: FileSystem, dir: String): SegmentLayout = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) return SegmentLayout(0, 0)
+    val files = fs.listStatus(p).filter { f =>
+      val n = f.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }
+    SegmentLayout(files.length, files.iterator.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf))
+      try r.getRowGroups.size() finally r.close()
+    }.sum)
   }
 
   /** Per-segment posting metrics from written segment files:
@@ -735,6 +750,8 @@ object IndexBuilder {
   //
   // Line 1 is the flat stats header; one manifest line per live segment
   // follows, sorted by segId, and the header's numSegments is their count.
+  // A manifest line ends with the segment's layout as its writer measured
+  // it ("files", "rowGroups"), the one fact open() needs about the files.
   // Every commit point (build batch, append, merge, compact,
   // Engine.createIndex) rewrites the whole record through commitRecord, so
   // the segment set and the counts readers score with change together.
@@ -743,7 +760,8 @@ object IndexBuilder {
     s"""{"segId":${m.segId},"docLo":${m.docLo},"docHi":${m.docHi},"docCount":${m.docCount},
        |"rawLenSum":${m.rawLenSum},"postingRows":${m.postingRows},"postingBytes":${m.postingBytes},
        |"digest":"${m.digest}","source":"${m.source}",
-       |"covers":[${m.coverSet.mkString(",")}]}""".stripMargin.replace("\n", "")
+       |"covers":[${m.coverSet.mkString(",")}]""".stripMargin.replace("\n", "") +
+      m.layout.fold("")(l => s""","files":${l.files},"rowGroups":${l.rowGroups}""") + "}"
 
   /** Commit `segments` (every live segment, promoted already) with the
     * counts of `st` as the index's record: written to a tmp file, then
@@ -805,7 +823,11 @@ object IndexBuilder {
       l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"))
     val covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
       .split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
-    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers)
+    // the layout is optional: a line without it reads as not colocated
+    def opt(k: String): Option[Int] =
+      s""""$k":(\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
+    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers,
+      layout = for (f <- opt("files"); r <- opt("rowGroups")) yield SegmentLayout(f, r))
   }
 
   private def parseStats(json: String, path: String): IndexStats = {

@@ -29,8 +29,8 @@ import graft.model._
   *    worth of docs, so ONE task merges it: the members' rows are coalesced
   *    into one partition and sorted by term (a spillable local sort, no
   *    exchange), same-term runs fold with `mergeRuns`, and one file with
-  *    one row group is written. The merged segment keeps the colocated
-  *    layout, so queries on it stay exchange-free.
+  *    one row group is written. The merged segment's record line carries
+  *    that colocated layout, so queries on it stay exchange-free.
   */
 object Merger {
 
@@ -124,20 +124,25 @@ object Merger {
     val dsStaging = s"$staging-docstats"
     fs.delete(new Path(staging), true)
     fs.delete(new Path(dsStaging), true)
-    val (mergedDocCount, mergedRawLen) =
+    val purgedCounts =
       if (tail) {
         writeTail(spark, fs, indexDir, sorted, targetId, mergeRuns, staging, dsStaging)
-        // nothing purged: the members' manifest sums
-        (manifests.map(_.docCount).sum, manifests.map(_.rawLenSum).sum)
+        None
       } else writeCogroup(spark, indexDir, sorted, targetId, mergeRuns, staging, dsStaging,
         deletes, delB)
+    // one count rule for both shapes: a merge that purges nothing keeps
+    // every member doc, so the members' line sums are the merged counts
+    val (mergedDocCount, mergedRawLen) = purgedCounts.getOrElse(
+      (manifests.map(_.docCount).sum, manifests.map(_.rawLenSum).sum))
 
     // real metrics for the merged manifest — same digest/row/byte contract
     // as a fresh build (BASELINE.json "per-partition lineage and
-    // row-count/sha256 metrics" must survive compaction). A fully-
-    // tombstoned group writes no files at all — empty metrics.
+    // row-count/sha256 metrics" must survive compaction) — and the layout
+    // the merge wrote. A fully-tombstoned group writes no files at all —
+    // empty metrics.
+    val layout = IndexBuilder.stagedLayout(fs, s"$staging/segId=$targetId")
     val (postRows, postBytes, digest) =
-      if (!fs.exists(new Path(s"$staging/segId=$targetId"))) (0L, 0L, "0" * 32)
+      if (layout.files == 0) (0L, 0L, "0" * 32)
       else IndexBuilder.postingMetrics(spark, staging)
         .getOrElse(targetId, (0L, 0L, "0" * 32))
 
@@ -160,7 +165,8 @@ object Merger {
       postingRows = postRows, postingBytes = postBytes,
       digest = digest,
       source = s"merge(${sorted.mkString(",")})",
-      covers = manifests.flatMap(_.coverSet).distinct.sorted)
+      covers = manifests.flatMap(_.coverSet).distinct.sorted,
+      layout = Some(layout))
     IndexBuilder.commitRecord(fs, indexDir, st,
       live.filterNot(l => sorted.contains(l.segId)) :+ m)
 
@@ -176,11 +182,12 @@ object Merger {
     * write `max(2, group.size)` term-range files under `staging/segId=N`;
     * the docstats sidecars are re-keyed under the fresh segId (the sidecar
     * is keyed by docId; segId is only physical placement) minus the purged
-    * docs. Returns the merged (docCount, rawLenSum). */
+    * docs. Returns the merged (docCount, rawLenSum) when it purged deletes
+    * (one count job over the kept docstats), else None. */
   private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[Int],
                            targetId: Int, mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
                            staging: String, dsStaging: String, deletes: Set[Long],
-                           delB: org.apache.spark.broadcast.Broadcast[Array[Long]]): (Long, Long) = {
+                           delB: org.apache.spark.broadcast.Broadcast[Array[Long]]): Option[(Long, Long)] = {
     import spark.implicits._
     val segs = group.map { id =>
       IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
@@ -213,13 +220,12 @@ object Merger {
         docstats.filter((r: org.apache.spark.sql.Row) =>
           java.util.Arrays.binarySearch(delB.value, r.getLong(docIdIdx)) < 0)
       }
-    val (docCount, rawLen) = {
+    filtered.withColumn("segId", lit(targetId))
+      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
+    Option.when(deletes.nonEmpty) {
       val r = filtered.agg(count(lit(1)), sum($"rawLen")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    filtered.withColumn("segId", lit(targetId))
-      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
-    (docCount, rawLen)
   }
 
   /** TAIL shape: ONE task merges the whole group — the members' rows are

@@ -41,11 +41,11 @@ object Kernel {
   final case class Hit(docId: Long, score: Double)
 
   /** Fold one posting row into a kernel list map, k-way-merging duplicate
-    * rows of the same key. Since D14 the match-all pseudo lists are
-    * persisted per segment like real terms, so duplicates only arise from
-    * merge-time run splits (a merged segment's term-range files can carry
-    * the same term across file boundaries only transiently mid-merge);
-    * normal segments have exactly one row per key. */
+    * rows of the same key. Every writer (build, append, both merge shapes)
+    * emits exactly one row per (segment, term), the D14 match-all pseudo
+    * lists included, and keys carry the field, so a committed segment
+    * yields one row per key; the merge keeps the fold total for rows a
+    * caller assembles itself. */
   def mergeList(m: scala.collection.mutable.HashMap[String, TermList],
                 key: String, tl: TermList): Unit =
     m.get(key) match {

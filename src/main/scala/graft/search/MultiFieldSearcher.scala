@@ -59,18 +59,7 @@ object MultiFieldSearcher {
       case m: QFuzzy      => m.copy(boost = m.boost * bf(m.field))
       case m: QRange      => m.copy(boost = m.boost * bf(m.field))
       case m: QVariations => m.copy(boost = m.boost * bf(m.field))
-      case QSpanNear(cs, s, o) => QSpanNear(cs.map(applyFieldBoosts(_, boostOf)), s, o)
-      case QSpanOr(cs)     => QSpanOr(cs.map(applyFieldBoosts(_, boostOf)))
-      case QSpanNot(i, e)  => QSpanNot(applyFieldBoosts(i, boostOf), applyFieldBoosts(e, boostOf))
-      case QSpanBi(a, b, m) => QSpanBi(applyFieldBoosts(a, boostOf), applyFieldBoosts(b, boostOf), m)
-      case QAnd(cs)        => QAnd(cs.map(applyFieldBoosts(_, boostOf)))
-      case QOr(cs)         => QOr(cs.map(applyFieldBoosts(_, boostOf)))
-      case QDisMax(cs, tb) => QDisMax(cs.map(applyFieldBoosts(_, boostOf)), tb)
-      case QNot(p, n)      => QNot(applyFieldBoosts(p, boostOf), applyFieldBoosts(n, boostOf))
-      case QAndMaybe(p, m) => QAndMaybe(applyFieldBoosts(p, boostOf), applyFieldBoosts(m, boostOf))
-      case QRequire(p, f)  => QRequire(applyFieldBoosts(p, boostOf), applyFieldBoosts(f, boostOf))
-      case QOtherwise(a, b) => QOtherwise(applyFieldBoosts(a, boostOf), applyFieldBoosts(b, boostOf))
-      case other           => other
+      case other          => other.mapChildren(applyFieldBoosts(_, boostOf))
     }
   }
 
@@ -95,18 +84,7 @@ object MultiFieldSearcher {
           case (Some(lo), Some(hi)) => r.copy(lo = lo, hi = hi)
           case _                    => QEmpty
         }
-      case QAnd(cs)        => QAnd(cs.map(rec))
-      case QOr(cs)         => QOr(cs.map(rec))
-      case QDisMax(cs, tb) => QDisMax(cs.map(rec), tb)
-      case QNot(p, n)      => QNot(rec(p), rec(n))
-      case QAndMaybe(p, m) => QAndMaybe(rec(p), rec(m))
-      case QRequire(p, f)  => QRequire(rec(p), rec(f))
-      case QSpanNear(cs, s, o) => QSpanNear(cs.map(rec), s, o)
-      case QSpanOr(cs)     => QSpanOr(cs.map(rec))
-      case QSpanNot(i, e)  => QSpanNot(rec(i), rec(e))
-      case QSpanBi(a, b, m) => QSpanBi(rec(a), rec(b), m)
-      case QOtherwise(a, b) => QOtherwise(rec(a), rec(b))
-      case other           => other
+      case other => other.mapChildren(rec)
     }
     rec(q)
   }

@@ -88,6 +88,26 @@ sealed trait Q extends Serializable {
   }
   /** does the tree contain a match-all node (needs the segment doc list) */
   def hasEvery: Boolean = everyFields.nonEmpty
+  /** this node with `f` applied to each direct child — the one structural
+    * recursion of the rewrites that must reach every node (field boosts,
+    * typed encoding, query correction, Otherwise resolution) */
+  def mapChildren(f: Q => Q): Q = this match {
+    case QAnd(cs)            => QAnd(cs.map(f))
+    case QOr(cs)             => QOr(cs.map(f))
+    case QDisMax(cs, tb)     => QDisMax(cs.map(f), tb)
+    case QNot(p, n)          => QNot(f(p), f(n))
+    case QAndMaybe(p, m)     => QAndMaybe(f(p), f(m))
+    case QRequire(p, r)      => QRequire(f(p), f(r))
+    case QSpanNear(cs, s, o) => QSpanNear(cs.map(f), s, o)
+    case QSpanOr(cs)         => QSpanOr(cs.map(f))
+    case QSpanNot(i, e)      => QSpanNot(f(i), f(e))
+    case QSpanBi(a, b, m)    => QSpanBi(f(a), f(b), m)
+    case QSpanFirst(c, l)    => QSpanFirst(f(c), l)
+    case QConstantScore(c, sc) => QConstantScore(f(c), sc)
+    case QOtherwise(a, b)    => QOtherwise(f(a), f(b))
+    case QPureNot(n)         => QPureNot(f(n))
+    case _: QTerm | _: QPhrase | _: QMulti | _: QEvery | QEmpty => this
+  }
 }
 object Q {
   /** the schema's default field — what unqualified query terms hit */

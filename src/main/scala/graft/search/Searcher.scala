@@ -26,12 +26,13 @@ import graft.model.{LexRow, SegRead}
   *  3. per field, one pruned scan of the segments for the query terms'
   *     posting rows (same pushdown; `content` never read — column pruning);
   *  4. the per-segment runner (`perSegment`) folds each segment's rows into
-  *     field-keyed lists and runs the kernel (block-max WAND) -> k rows per
-  *     segment;
+  *     field-keyed lists, one segment at a time, and runs the kernel
+  *     (block-max WAND) -> k rows per segment;
   *  5. driver/TakeOrdered merge of numSegments x k tiny rows, tie rule D4.
   *
-  * Two physical shapes, chosen from the layout, never by an option: one
-  * field read from a colocated layout runs the kernel inside the scan's
+  * Two physical shapes, chosen from the layout the writers recorded in the
+  * commit record (never by an option, never by probing files): one field
+  * whose live segments are all colocated runs the kernel inside the scan's
   * tasks with no exchange; otherwise one small exchange moves <=
   * numSegments * |terms| compressed posting rows. No corpus-wide shuffle
   * ever happens at query time.
@@ -40,12 +41,12 @@ object Searcher {
 
   final case class SearchHit(docId: Long, score: Double)
 
-  /** Opened once per index: corpus stats, the segment/lexicon relations
-    * (file listing + partition discovery happen here, NOT per query), the
-    * deletion-sidecar map (S6 — segId -> tombstone range files; the
-    * tombstones themselves are loaded per segment INSIDE the kernel, never
-    * collected to the driver), and a df memo (the index is immutable under
-    * a handle).
+  /** Opened once per index: corpus stats and the query path from the
+    * commit record, the segment/lexicon relations (Spark's file listing
+    * happens here, NOT per query), the deletion-sidecar map (S6 — segId ->
+    * tombstone range files; the tombstones themselves are loaded per
+    * segment INSIDE the kernel, never collected to the driver), and a df
+    * memo (the index is immutable under a handle).
     *
     * Lexicon: `lexiconBase` is the base lexicon, `lexDelta` the term stats
     * of the live segments it does not cover yet (appended since the last
@@ -68,15 +69,17 @@ object Searcher {
                           val chain: graft.analysis.Chain = graft.analysis.Chain.Standard,
                           val lexgrams: Option[DataFrame] = None,
                           val liveSegIds: Seq[Int] = Seq.empty,
-                          /** r6: every live segment is ONE parquet file with
-                            * ONE row group (verified from the footers at open
-                            * time) — the physical invariant that lets the
-                            * kernel run scan-side with no exchange, because a
-                            * whole row group is always consumed by exactly
-                            * one scan task. False after compaction's
-                            * term-range-partitioned merges or for
-                            * multi-row-group (>~128 MB) segments; those
-                            * fall back to the shuffle path. */
+                          /** every live segment is ONE parquet file with ONE
+                            * row group, as its writer recorded it in the
+                            * segment's record line (SegmentManifest.layout)
+                            * — the physical invariant that lets the kernel
+                            * run scan-side with no exchange, because a whole
+                            * row group is always consumed by exactly one
+                            * scan task. False after compaction's
+                            * term-range-partitioned merges, for
+                            * multi-row-group (>~128 MB) segments and for
+                            * lines without a layout; those take the
+                            * exchange path. */
                           val segColocated: Boolean = false,
                           val lexDelta: Option[DataFrame] = None) {
     def hasDeletes: Boolean = delRanges.nonEmpty
@@ -86,17 +89,19 @@ object Searcher {
     private[search] val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   }
 
+  /** Open an index from its commit record: stats, live segments and the
+    * query path come from ONE read of stats.json; open writes nothing and
+    * reads no segment file (a corrupt one fails only the queries that read
+    * it), and it starts no Spark job. */
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    // stats and segment set from ONE read of the commit record; open
-    // writes nothing. Fail FAST on a foreign layout (round-5 advice): an
-    // older index would silently answer wrong (a v8 one keeps its segment
-    // set in files this reader ignores), so it asks for a rebuild. A
-    // crashed merge or append can leave segment dirs no record lists
-    // (GC'd by the next merge) — readers trust only the record's segIds.
-    // The isin filter is a partition-pruning predicate on the segId
-    // directory column.
+    // Fail FAST on a foreign layout (round-5 advice): an older index would
+    // silently answer wrong (a v8 one keeps its segment set in files this
+    // reader ignores), so it asks for a rebuild. A crashed merge or append
+    // can leave segment dirs no record lists (GC'd by the next merge) —
+    // readers trust only the record's segIds. The isin filter is a
+    // partition-pruning predicate on the segId directory column.
     val (st, manifests) = IndexBuilder.readCurrentRecord(fs, indexDir)
     val liveSegs = manifests.map(_.segId)
     // a freshly created index (Engine.createIndex) has stats but no
@@ -147,48 +152,8 @@ object Searcher {
       new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(st.analyzer)),
       lexgrams,
       liveSegs,
-      segmentsColocated(fs, indexDir, liveSegs),
+      liveSegs.nonEmpty && manifests.forall(_.colocated),
       lexDelta)
-  }
-
-  /** Upper bound on live segments for which open() will verify the
-    * colocated layout: the check costs one listing + one footer read per
-    * segment, and an index past this size is throughput-shaped — its
-    * queries fan out over thousands of tasks where the exchange path's one
-    * small shuffle is the right plan anyway, so paying O(segments) open-time
-    * I/O to maybe skip it is a bad trade. The latency-sensitive serving
-    * shape (tens to hundreds of segments) stays under the cap. */
-  private val ColocCheckMaxSegments = 1024
-
-  /** r6: verify the one-file / one-row-group-per-live-segment layout that
-    * the exchange-free kernel path requires (a parquet row group is consumed
-    * by exactly one scan task, so single-row-group segments can never split
-    * across tasks). One listing + one footer read per segment, paid once at
-    * open and capped by ColocCheckMaxSegments. Fresh builds, streaming
-    * appends and MERGE_SMALL's tail merges write exactly this layout;
-    * compaction's term-range-partitioned output (several files per segId)
-    * and multi-row-group segments return false -> shuffle fallback. */
-  private def segmentsColocated(fs: FileSystem, indexDir: String,
-                                liveSegs: Seq[Int]): Boolean = {
-    if (liveSegs.isEmpty || liveSegs.size > ColocCheckMaxSegments) return false
-    val conf = fs.getConf
-    liveSegs.forall { segId =>
-      val dir = new org.apache.hadoop.fs.Path(
-        s"${IndexBuilder.segmentsDir(indexDir)}/segId=$segId")
-      if (!fs.exists(dir)) true // committed-empty segment: no rows anywhere
-      else {
-        val files = fs.listStatus(dir).filter { s =>
-          val n = s.getPath.getName
-          n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-        }
-        files.length <= 1 && files.forall { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRowGroups.size() <= 1 finally r.close()
-        }
-      }
-    }
   }
 
   /** Multiterm expansion against the global lexicon: matching terms in
@@ -297,18 +262,7 @@ object Searcher {
       case t: QTerm if repl.contains(t.term) => t.copy(term = repl(t.term))
       case p: QPhrase =>
         p.copy(ts = p.ts.map { case (t, o) => (repl.getOrElse(t, t), o) })
-      case QAnd(cs)        => QAnd(cs.map(rec))
-      case QOr(cs)         => QOr(cs.map(rec))
-      case QDisMax(cs, tb) => QDisMax(cs.map(rec), tb)
-      case QNot(p, n)      => QNot(rec(p), rec(n))
-      case QAndMaybe(p, m) => QAndMaybe(rec(p), rec(m))
-      case QRequire(p, f)  => QRequire(rec(p), rec(f))
-      case QPureNot(n)     => QPureNot(rec(n))
-      case QSpanNear(cs, slop, ord) => QSpanNear(cs.map(rec), slop, ord)
-      case QSpanOr(cs)     => QSpanOr(cs.map(rec))
-      case QSpanNot(i, e)  => QSpanNot(rec(i), rec(e))
-      case QSpanBi(a, b, m) => QSpanBi(rec(a), rec(b), m)
-      case other           => other
+      case other => other.mapChildren(rec)
     }
     rec(q0)
   }
@@ -393,21 +347,13 @@ object Searcher {
     * GLOBAL semantics): use `a` iff it matches anywhere in the INDEX, else
     * `b`. Resolved driver-side with one bounded existence probe per node —
     * per-segment resolution would answer from different branches in
-    * different segments. Span subtrees cannot contain Otherwise (spanify
-    * rejects it), so recursion stops at span/leaf nodes. */
+    * different segments. */
   private def resolveOtherwise(spark: SparkSession, fs: Fields, q: Q): Q = {
     def rec(q: Q): Q = q match {
       case QOtherwise(a, b) =>
         val ar = rec(a)
         if (hasAnyMatch(spark, fs, ar)) ar else rec(b)
-      case QAnd(cs)        => QAnd(cs.map(rec))
-      case QOr(cs)         => QOr(cs.map(rec))
-      case QDisMax(cs, tb) => QDisMax(cs.map(rec), tb)
-      case QNot(p, n)      => QNot(rec(p), rec(n))
-      case QAndMaybe(p, m) => QAndMaybe(rec(p), rec(m))
-      case QRequire(p, f)  => QRequire(rec(p), rec(f))
-      case QConstantScore(c, sc) => QConstantScore(rec(c), sc)
-      case other           => other
+      case other => other.mapChildren(rec)
     }
     rec(q)
   }
@@ -468,20 +414,22 @@ object Searcher {
     * with the executor-side tombstone probe. The closure captures only
     * plain locals (never a handle), so it stays serialization-clean.
     *
-    * Two physical shapes, chosen from the layout:
-    *  - COLOCATED: exactly one field is read and open() verified its
-    *    handle's layout (one file + one row group per live segment). The
-    *    kernel runs scan-side in the scan's mapPartitions, grouping the
-    *    task's rows by segId in a hash map. No exchange, no sort, no AQE
-    *    stage barrier — a warm top-k query is ONE single-stage job. Safe
-    *    because a parquet row group is consumed by exactly one scan task,
-    *    so a task always holds whole segments.
+    * Both physical shapes hand each task every segment it holds as ONE
+    * contiguous run of rows, so the runner folds one segment at a time and
+    * emits its output before it reads the next: a task's memory is bounded
+    * by its largest segment, however many segments it holds. The shape is
+    * chosen from the layout the writers recorded:
+    *  - COLOCATED: exactly one field is read and every live segment of its
+    *    handle is one file with one row group. The kernel runs scan-side in
+    *    the scan's mapPartitions. No exchange, no sort, no AQE stage
+    *    barrier — a warm top-k query is ONE single-stage job. A parquet row
+    *    group is consumed by exactly one scan task, which reads its files
+    *    one after another, so a segment's rows arrive as one run.
     *  - EXCHANGE: several fields (a segment's rows come from several field
     *    indexes' files), or split segments (term-range-partitioned merge
-    *    output, >1 row group). A plain `repartition(segId)` co-locates each
+    *    output, >1 row group). `repartition(segId)` co-locates each
     *    segment's rows at the cost of one small exchange of pruned posting
-    *    rows; the task-local grouping needs co-located rows, not sorted
-    *    ones, so there is no groupByKey sort. */
+    *    rows, and a local `sortWithinPartitions(segId)` makes them one run. */
   private def perSegment[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, fs: Fields, fieldTerms: Set[(String, String)],
       everyFields: Set[String], dfs: Map[String, Long])(
@@ -498,26 +446,22 @@ object Searcher {
     if (scans.isEmpty) return spark.emptyDataset[T]
     val rows = scans.map(_._2).reduce(_ unionByName _)
     val src = if (scans.size == 1 && scans.head._1.segColocated) rows
-      else rows.repartition(col("segId"))
+      else rows.repartition(col("segId")).sortWithinPartitions("segId")
     val delRanges = fs.defaultHandle.delRanges
     val dirLocal = fs.defaultHandle.indexDir
     val fLocal = f
     src.as[(String, String, Int, Int, Array[Byte], Int)].mapPartitions { it =>
-      val bySeg = new java.util.LinkedHashMap[Int,
-        scala.collection.mutable.HashMap[String, Kernel.TermList]]()
-      it.foreach { case (field, term, df, maxTf, blocks, segId) =>
-        var lists = bySeg.get(segId)
-        if (lists == null) {
-          lists = scala.collection.mutable.HashMap.empty[String, Kernel.TermList]
-          bySeg.put(segId, lists)
+      val rows = it.buffered
+      Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
+        val segId = r.head._6
+        val lists = scala.collection.mutable.HashMap.empty[String, Kernel.TermList]
+        while (r.hasNext && r.head._6 == segId) {
+          val (field, term, df, maxTf, blocks, _) = r.next()
+          val key = Kernel.rowKey(field, term)
+          Kernel.mergeList(lists, key,
+            Kernel.TermList(blocks, maxTf, dfs.getOrElse(key, df.toLong)))
         }
-        val key = Kernel.rowKey(field, term)
-        Kernel.mergeList(lists, key,
-          Kernel.TermList(blocks, maxTf, dfs.getOrElse(key, df.toLong)))
-      }
-      import scala.jdk.CollectionConverters._
-      bySeg.entrySet().iterator().asScala.flatMap { e =>
-        fLocal(e.getValue.toMap, tombstoneProbe(delRanges, dirLocal, e.getKey))
+        fLocal(lists.toMap, tombstoneProbe(delRanges, dirLocal, segId))
       }
     }
   }
@@ -715,9 +659,10 @@ object Searcher {
     * default page_len 10): collect the first pageNum*pageLen hits, return
     * the requested page. */
   def searchPage(spark: SparkSession, handle: IndexHandle, query: String,
-                 pageNum: Int = 1, pageLen: Int = 10): Seq[SearchHit] = {
+                 pageNum: Int = 1, pageLen: Int = 10,
+                 weighting: Weighting = BM25Weighting): Seq[SearchHit] = {
     require(pageNum >= 1 && pageLen >= 1)
-    search(spark, handle, query, pageNum * pageLen)
+    search(spark, handle, query, pageNum * pageLen, weighting = weighting)
       .collect().toSeq
       .slice((pageNum - 1) * pageLen, pageNum * pageLen)
   }
@@ -730,13 +675,8 @@ object Searcher {
     * docstats sidecar, one aggregation on the facet key — the content
     * corpus is never touched. */
   def facetCounts(spark: SparkSession, handle: IndexHandle, query: String,
-                  field: String): DataFrame = {
-    val ids = matchingIds(spark, handle, query).toDF("docId")
-    liveDocstats(spark, handle)
-      .join(ids, Seq("docId"))
-      .groupBy(col(field))
-      .agg(count(lit(1)).as("count"))
-  }
+                  field: String): DataFrame =
+    facetCountsExpr(spark, handle, query, col(field), field)
 
   /** FunctionFacet ([W] whoosh/sorting.py FunctionFacet): every match
     * counted per value of an arbitrary Column expression over the stored

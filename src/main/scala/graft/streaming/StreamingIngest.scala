@@ -67,7 +67,7 @@ object StreamingIngest {
     val stamped = batchDocs.map(d => d.copy(docId = d.docId + docIdBase))
 
     val added = newSegs.grouped(cfg.segmentsPerBatch).flatMap { group =>
-      IndexBuilder.buildBatchForAppend(spark, fs, stamped, indexDir, group,
+      IndexBuilder.buildBatch(spark, fs, stamped, indexDir, Some(group),
         cfg.copy(segSize = segSize, analyzer = analyzer))
     }.toSeq
     val live = existing ++ added

@@ -35,6 +35,15 @@ object Plans {
     }
     val handle = Searcher.open(spark, ix)
 
+    // the query path comes from the layout each writer recorded in the
+    // segment's line of the commit record
+    println(s"==== query path: ${if (handle.segColocated) "colocated (no exchange)"
+      else "exchange"} ====")
+    IndexBuilder.readManifests(fs, ix).foreach { m =>
+      println(s"segment ${m.segId}: " + m.layout.fold("no recorded layout")(l =>
+        s"${l.files} file(s), ${l.rowGroups} row group(s)"))
+    }
+
     println("==== lexicon df lookup plan (expect PushedFilters: In(term, ...)) ====")
     handle.lexiconRows.filter(org.apache.spark.sql.functions.col("term")
       .isin("w0001", "w0042")).explain("formatted")
@@ -44,7 +53,8 @@ object Plans {
       .isin("w0001", "w0042"))
       .select("term", "df", "maxTf", "blocks", "segId").explain("formatted")
 
-    println("==== full search plan (kernel + TakeOrderedAndProject) ====")
+    println("==== full search plan (kernel + TakeOrderedAndProject; no Exchange " +
+      "below it on the colocated path) ====")
     Searcher.search(spark, handle, "w0001 OR w0042", 10).explain("formatted")
 
     println("==== match-all plan (D14: PERSISTED Every pseudo rows ride the " +
@@ -72,7 +82,8 @@ object Plans {
     graft.ops.Similarity.srpTopKIndexed(spark, annDir, qv, 10, radius = 2)
       .explain("formatted")
 
-    println("==== batch search plan (ONE segment exchange for many queries, " +
+    println("==== batch search plan (ONE segment scan for many queries, the " +
+      "kernel inside it on the colocated path; the only exchange feeds the " +
       "per-query window over the tiny candidate set) ====")
     Searcher.searchMany(spark, handle,
       Seq("a" -> "w0001", "b" -> "w0042 AND w0007", "c" -> "w0003 OR w0009"), 10)

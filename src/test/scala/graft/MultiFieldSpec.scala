@@ -175,6 +175,13 @@ class MultiFieldSpec extends AnyFunSuite {
       val hits = MultiFieldSearcher.search(spark, mh, qs, 10).collect().toSeq
       assertMatches(hits, oracle.search(qs, 10), qs)
     }
+    // a SpanFirst child keeps its field's boost: an unbounded limit equals
+    // the bare term, hits and scores
+    val bare = MultiFieldSearcher.searchQ(spark, mh, QTerm("dir3", "path"), 10)
+      .collect().toSeq
+    assert(bare.nonEmpty)
+    assert(MultiFieldSearcher.searchQ(spark, mh,
+      QSpanFirst(QTerm("dir3", "path"), Int.MaxValue), 10).collect().toSeq == bare)
   }
 
   test("single-field boosts: engine == RefModel (parser ^, phrase boost)") {
@@ -320,6 +327,17 @@ class MultiFieldSpec extends AnyFunSuite {
       expect(st.collect { case (d, r)
         if idOf(r) % 3 == 0 && r.content.length >= 140 && r.content.length <= 200 =>
           (d, idf(trueCnt) + idf(sizeCnt(r.content.length))) }), "bool+numrange")
+
+    // a typed term wrapped in ConstantScore is encoded like the bare term
+    // and matches the same docs
+    def ids(q: Q): Set[Long] =
+      MultiFieldSearcher.searchQ(spark, mh, q, n).collect().map(_.docId).toSet
+    val commonSize = sizeCnt.maxBy { case (l, c) => (c, -l) }._1.toString
+    Seq(QTerm("true", "flag"), QTerm(commonSize, "size")).foreach { t =>
+      val bare = ids(t)
+      assert(bare.nonEmpty, s"$t matched nothing - weak test")
+      assert(ids(QConstantScore(t)) == bare, s"ConstantScore($t)")
+    }
 
     // unencodable values match nothing (and kill an AND)
     assert(MultiFieldSearcher.search(spark, mh, "size:notanumber", 10)

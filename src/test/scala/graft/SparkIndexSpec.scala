@@ -736,11 +736,20 @@ class SparkIndexSpec extends AnyFunSuite {
       segColocated = false)
     val queries = TestFixtures.querySet.map(_._2) ++
       Seq("w0000 OR w0001", "NOT w0004", "*", "w0000 NEAR/5 w0001")
-    queries.foreach { q =>
+    val colocated = queries.map { q =>
       val a = Searcher.search(spark, h, q, 10).collect().toSeq
       val b = Searcher.search(spark, hShuffle, q, 10).collect().toSeq
       assert(a == b, s"colocated != shuffle for '$q'")
+      a
     }
+    // one shuffle partition: one exchange-path task holds all six
+    // segments and folds them one at a time
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try queries.zip(colocated).foreach { case (q, a) =>
+      assert(Searcher.search(spark, hShuffle, q, 10).collect().toSeq == a,
+        s"one-task shuffle path != colocated for '$q'")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
     // the colocated plan has no exchange; the fallback plan has one
     val pa = Searcher.search(spark, h, "w0000 AND w0001", 10)
       .queryExecution.executedPlan.toString
@@ -756,6 +765,22 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(!h2.segColocated,
       "term-range-partitioned merge output must flip to the shuffle path")
     assert(Searcher.search(spark, h2, "w0001", 10).collect().toSeq == before)
+  }
+
+  test("open reads no segment file: garbage segment files still open colocated") {
+    import scala.jdk.CollectionConverters._
+    val dir = SparkTestBase.tmpDir("garbage")
+    IndexBuilder.build(spark, CorpusSource.synth(spark, 200, 42L, 4), dir,
+      IndexConfig(segSize = 50))
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(IndexBuilder.segmentsDir(dir)))
+      .iterator().asScala.toSeq
+      .filter { p => val n = p.getFileName.toString; n.endsWith(".parquet") && !n.startsWith(".") }
+    assert(files.size == 4)
+    files.foreach(p => java.nio.file.Files.write(p, "not parquet".getBytes("UTF-8")))
+    val h = Searcher.open(spark, dir)
+    assert(h.segColocated && h.liveSegIds == Seq(0, 1, 2, 3))
+    // the corrupt files fail the query that reads them
+    intercept[Exception](Searcher.search(spark, h, "w0001", 10).collect())
   }
 
   test("postingMetrics r6: shuffle-free partial fold == per-segment reference fold") {

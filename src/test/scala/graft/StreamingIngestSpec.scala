@@ -584,4 +584,36 @@ class StreamingIngestSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"tail-merged plan has an exchange:\n$plan")
   }
+
+  test("every writer records its segments' layout; lines without it open on the exchange path") {
+    val dir = tailIndex("layout", 29L)
+    val fs = fsOf(dir)
+    def layouts() = IndexBuilder.readManifests(fs, dir).map(m => m.segId -> m.layout)
+    val one = Some(graft.model.SegmentLayout(1, 1))
+    // build (segments 0, 1) and three appends (2-4)
+    assert(layouts() == (0 to 4).map(_ -> one))
+    assert(graft.merge.Merger.mergeSmall(spark, dir) == Seq(5))
+    assert(layouts() == Seq(0 -> one, 1 -> one, 5 -> one))
+    val h = Searcher.open(spark, dir)
+    assert(h.segColocated)
+    val queries = TestFixtures.querySet.map(_._2) ++
+      Seq("*", "NOT w0004", "w0000 AND w0001", "w0000 OR w0001")
+    def hits(h: Searcher.IndexHandle) =
+      queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq)
+    val expected = hits(h)
+    // a record whose lines carry no layout opens on the exchange path
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
+    IndexBuilder.commitRecord(fs, dir, st, live.map(_.copy(layout = None)))
+    assert(layouts().forall(_._2.isEmpty))
+    val hBare = Searcher.open(spark, dir)
+    assert(!hBare.segColocated)
+    assert(hits(hBare) == expected)
+    // compaction writes term-range files: at least two for the merged segment
+    graft.merge.Merger.compact(spark, dir)
+    val compacted = IndexBuilder.readManifests(fs, dir)
+    assert(compacted.size == 1 && compacted.head.layout.exists(_.files >= 2), compacted)
+    val hCompacted = Searcher.open(spark, dir)
+    assert(!hCompacted.segColocated)
+    assert(hits(hCompacted) == expected)
+  }
 }
