@@ -478,34 +478,26 @@ object IndexBuilder {
         val (rowsN, bytesN, digest) = segAgg.getOrElse(segId, (0L, 0L, "0" * 32))
         val (docCount, lo, hi, rawLenSum) = docAgg.getOrElse(segId,
           (0L, segId.toLong * segSize, segId.toLong * segSize, 0L))
-        val layout = stagedLayout(fs, s"$staging/segments/segId=$segId")
+        val files = listFiles(fs, s"$staging/segments/segId=$segId")
         promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
         promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
         SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source,
-          layout = Some(layout))
+          files = Some(files))
       }
       fs.delete(new Path(staging), true)
       built
     } finally analyzed.unpersist()
   }
 
-  /** The layout a writer records for a segment it has just staged in
-    * `dir`: its parquet files and their row groups, read from the footers on
-    * the driver (one listing, one footer per file; no Spark job). Paid once
-    * per write, so that Searcher.open reads no segment file. A segment
-    * with no rows has no dir: (0, 0). */
-  private[graft] def stagedLayout(fs: FileSystem, dir: String): SegmentLayout = {
+  /** The parquet files of a segment dir as (name, bytes), sorted: one
+    * listing, which writers pay for the dir they staged so that readers
+    * never list. A segment with no rows has no dir and no files. */
+  private[graft] def listFiles(fs: FileSystem, dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
-    if (!fs.exists(p)) return SegmentLayout(0, 0)
-    val files = fs.listStatus(p).filter { f =>
-      val n = f.getPath.getName
+    if (!fs.exists(p)) return Seq.empty
+    fs.listStatus(p).toSeq.map(f => f.getPath.getName -> f.getLen).filter { case (n, _) =>
       n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-    }
-    SegmentLayout(files.length, files.iterator.map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf))
-      try r.getRowGroups.size() finally r.close()
-    }.sum)
+    }.sortBy(_._1)
   }
 
   /** Per-segment posting metrics from written segment files:
@@ -750,8 +742,8 @@ object IndexBuilder {
   //
   // Line 1 is the flat stats header; one manifest line per live segment
   // follows, sorted by segId, and the header's numSegments is their count.
-  // A manifest line ends with the segment's layout as its writer measured
-  // it ("files", "rowGroups"), the one fact open() needs about the files.
+  // A manifest line ends with the segment's parquet files, name and bytes,
+  // as its writer listed them ("files"): all readers need to find its rows.
   // Every commit point (build batch, append, merge, compact,
   // Engine.createIndex) rewrites the whole record through commitRecord, so
   // the segment set and the counts readers score with change together.
@@ -761,7 +753,8 @@ object IndexBuilder {
        |"rawLenSum":${m.rawLenSum},"postingRows":${m.postingRows},"postingBytes":${m.postingBytes},
        |"digest":"${m.digest}","source":"${m.source}",
        |"covers":[${m.coverSet.mkString(",")}]""".stripMargin.replace("\n", "") +
-      m.layout.fold("")(l => s""","files":${l.files},"rowGroups":${l.rowGroups}""") + "}"
+      m.files.fold("")(_.map { case (n, b) => s"""{"name":"$n","bytes":$b}""" }
+        .mkString(""","files":[""", ",", "]")) + "}"
 
   /** Commit `segments` (every live segment, promoted already) with the
     * counts of `st` as the index's record: written to a tmp file, then
@@ -823,11 +816,12 @@ object IndexBuilder {
       l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"))
     val covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
       .split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
-    // the layout is optional: a line without it reads as not colocated
-    def opt(k: String): Option[Int] =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers,
-      layout = for (f <- opt("files"); r <- opt("rowGroups")) yield SegmentLayout(f, r))
+    // the file list is optional: a line without it (or with the older
+    // "files" count) is read by listing its segment's dir
+    val files = """"files":\[([^\]]*)\]""".r.findFirstMatchIn(json).map(l =>
+      """\{"name":"([^"]*)","bytes":(\d+)\}""".r.findAllMatchIn(l.group(1))
+        .map(f => f.group(1) -> f.group(2).toLong).toSeq)
+    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers, files = files)
   }
 
   private def parseStats(json: String, path: String): IndexStats = {

@@ -22,15 +22,17 @@ import graft.model._
   *    (BASELINE.json:6), wider groups one union + groupByKey pass (an n-ary
   *    cogroup in a single shuffle). Output is `max(2, group.size)`
   *    term-range-partitioned files, so a full compaction never funnels the
-  *    index through one task; its readers take the exchange query path.
+  *    index through one task.
   *    Hierarchy: `compact(groupSize)` repeatedly merges adjacent groups —
   *    log_groupSize(n) levels to a single segment.
   *  - TAIL (`mergeSmall`): a MERGE_SMALL group totals under two segments'
   *    worth of docs, so ONE task merges it: the members' rows are coalesced
   *    into one partition and sorted by term (a spillable local sort, no
-  *    exchange), same-term runs fold with `mergeRuns`, and one file with
-  *    one row group is written. The merged segment's record line carries
-  *    that colocated layout, so queries on it stay exchange-free.
+  *    exchange), same-term runs fold with `mergeRuns`, and one file is
+  *    written.
+  *
+  * Queries read a segment's recorded files whole in one task either way,
+  * so the shape is chosen for the merge's cost, not for the query layout.
   */
 object Merger {
 
@@ -137,12 +139,12 @@ object Merger {
 
     // real metrics for the merged manifest — same digest/row/byte contract
     // as a fresh build (BASELINE.json "per-partition lineage and
-    // row-count/sha256 metrics" must survive compaction) — and the layout
+    // row-count/sha256 metrics" must survive compaction) — and the files
     // the merge wrote. A fully-tombstoned group writes no files at all —
     // empty metrics.
-    val layout = IndexBuilder.stagedLayout(fs, s"$staging/segId=$targetId")
+    val files = IndexBuilder.listFiles(fs, s"$staging/segId=$targetId")
     val (postRows, postBytes, digest) =
-      if (layout.files == 0) (0L, 0L, "0" * 32)
+      if (files.isEmpty) (0L, 0L, "0" * 32)
       else IndexBuilder.postingMetrics(spark, staging)
         .getOrElse(targetId, (0L, 0L, "0" * 32))
 
@@ -166,7 +168,7 @@ object Merger {
       digest = digest,
       source = s"merge(${sorted.mkString(",")})",
       covers = manifests.flatMap(_.coverSet).distinct.sorted,
-      layout = Some(layout))
+      files = Some(files))
     IndexBuilder.commitRecord(fs, indexDir, st,
       live.filterNot(l => sorted.contains(l.segId)) :+ m)
 
@@ -313,9 +315,8 @@ object Merger {
     *
     * Each run merges with the TAIL shape: every member is below `smallDocs`
     * and a run is flushed once it reaches `smallDocs`, so a run totals
-    * under 2 x `smallDocs` docs — small enough for one task, whose one-file
-    * output keeps the colocated query layout. The commit protocol is
-    * mergeGroup's: each run's merge commits the record.
+    * under 2 x `smallDocs` docs — small enough for one task. The commit
+    * protocol is mergeGroup's: each run's merge commits the record.
     *
     * Returns the freshly minted segIds. */
   def mergeSmall(spark: SparkSession, indexDir: String, smallDocs: Long = 0,

@@ -57,26 +57,18 @@ final case class LexRow(term: String, df: Long, cf: Long, maxTf: Long)
   * ranges. `source` names the writer: the build's IndexConfig.source, or
   * `merge(a,b,...)` with the group a merge replaced.
   *
-  * `layout` = the parquet files and row groups the writer wrote for the
-  * segment, counted from the files it staged. Readers take the query path
-  * from it (Searcher.open) and never probe the files; a line without it
-  * (written before writers recorded it) reads as not colocated. */
+  * `files` = the segment's parquet files (name in the segment dir, bytes)
+  * as its writer listed them. Readers read exactly these (Searcher) and
+  * never list the dir; a line without them (written before writers
+  * recorded them) is read by listing that one segment's dir. */
 final case class SegmentManifest(segId: Int, docLo: Long, docHi: Long,
                                  docCount: Long, rawLenSum: Long,
                                  postingRows: Long, postingBytes: Long,
                                  digest: String, source: String,
                                  covers: Seq[Int] = Seq.empty,
-                                 layout: Option[SegmentLayout] = None) {
+                                 files: Option[Seq[(String, Long)]] = None) {
   def coverSet: Seq[Int] = if (covers.isEmpty) Seq(segId) else covers
-  /** at most one file with at most one row group: a parquet row group is
-    * read by exactly one scan task, so the segment never splits across
-    * tasks and the kernel can run inside the scan (no exchange) */
-  def colocated: Boolean = layout.exists(l => l.files <= 1 && l.rowGroups <= 1)
 }
-
-/** a segment's physical layout as its writer recorded it (a segment with
-  * no rows: no files) */
-final case class SegmentLayout(files: Int, rowGroups: Int)
 
 final case class IndexStats(numDocs: Long, totalFieldLen: Long,
                             numSegments: Int, segSize: Int,

@@ -170,17 +170,21 @@ object Selection {
       }.toMap
     }
     val nB = nBuckets
-    // offsets ride a broadcast, not the task closure (partitions x languages
-    // entries — broadcast keeps re-serialization off every task launch)
-    val offB = spark.sparkContext.broadcast((startOffset, langTotal))
-    val banded = sortedRdd.mapPartitionsWithIndex { (pid, it) =>
-      val (offs, totals) = offB.value
+    // each partition's offsets ride that partition of a one-row-per-slice
+    // RDD (the zipWithIndex shape): a task ships only its own partition's
+    // map, and no broadcast outlives the call
+    val parts = sortedRdd.getNumPartitions
+    val offsets = spark.sparkContext.parallelize((0 until parts).map { pid =>
+      startOffset.collect { case ((`pid`, l), off) => l -> off }
+    }, parts)
+    val banded = sortedRdd.zipPartitions(offsets) { (it, offIt) =>
+      val offs = offIt.next()
       var curLang: String = null
       var rank = 0L
       it.map { case (id, lang, logprob) =>
-        if (lang != curLang) { curLang = lang; rank = offs((pid, lang)) }
+        if (lang != curLang) { curLang = lang; rank = offs(lang) }
         rank += 1L
-        val bucket = ntileBucket(rank, totals(lang), nB)
+        val bucket = ntileBucket(rank, langTotal(lang), nB)
         val band =
           if (bucket == 1) "head" else if (bucket == nB) "tail" else "middle"
         (id, lang, logprob, bucket, band)

@@ -1,11 +1,16 @@
 package graft.search
 
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, sources}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.build.IndexBuilder
-import graft.model.{LexRow, SegRead}
+import graft.model.LexRow
 
 /** Distributed BM25 top-k search over the segmented index (SURVEY.md §3.2).
   *
@@ -23,30 +28,27 @@ import graft.model.{LexRow, SegRead}
   *     It reads the base lexicon plus the own term stats of segments
   *     appended since the last fold, and sums a term's rows on the driver:
   *     one job and no exchange either way;
-  *  3. per field, one pruned scan of the segments for the query terms'
-  *     posting rows (same pushdown; `content` never read — column pruning);
-  *  4. the per-segment runner (`perSegment`) folds each segment's rows into
-  *     field-keyed lists, one segment at a time, and runs the kernel
-  *     (block-max WAND) -> k rows per segment;
-  *  5. driver/TakeOrdered merge of numSegments x k tiny rows, tie rule D4.
+  *  3. the per-segment runner (`perSegment`): one task per group of whole
+  *     segments reads each segment's recorded files for the query terms'
+  *     posting rows (pushed `term IN` prunes row groups and pages; `content`
+  *     never read), folds them into field-keyed lists one segment at a
+  *     time, and runs the kernel (block-max WAND) -> k rows per segment;
+  *  4. driver/TakeOrdered merge of numSegments x k tiny rows, tie rule D4.
   *
-  * Two physical shapes, chosen from the layout the writers recorded in the
-  * commit record (never by an option, never by probing files): one field
-  * whose live segments are all colocated runs the kernel inside the scan's
-  * tasks with no exchange; otherwise one small exchange moves <=
-  * numSegments * |terms| compressed posting rows. No corpus-wide shuffle
-  * ever happens at query time.
+  * One physical shape for every layout and every field count, like Whoosh's
+  * one reader per segment combined above it ([W] whoosh/reading.py
+  * SegmentReader/MultiReader): a segment is whole in one task by
+  * construction, so no query ever exchanges posting rows.
   */
 object Searcher {
 
   final case class SearchHit(docId: Long, score: Double)
 
-  /** Opened once per index: corpus stats and the query path from the
-    * commit record, the segment/lexicon relations (Spark's file listing
-    * happens here, NOT per query), the deletion-sidecar map (S6 — segId ->
-    * tombstone range files; the tombstones themselves are loaded per
-    * segment INSIDE the kernel, never collected to the driver), and a df
-    * memo (the index is immutable under a handle).
+  /** Opened once per index: corpus stats and each live segment's files
+    * from the commit record, the lexicon relations, the deletion-sidecar
+    * map (S6 — segId -> tombstone range files; the tombstones themselves
+    * are loaded per segment INSIDE the kernel, never collected to the
+    * driver), and a df memo (the index is immutable under a handle).
     *
     * Lexicon: `lexiconBase` is the base lexicon, `lexDelta` the term stats
     * of the live segments it does not cover yet (appended since the last
@@ -57,42 +59,43 @@ object Searcher {
     * deltas all three are the bare base scan.
     *
     * SNAPSHOT SEMANTICS: a handle pins the segment files that existed at
-    * open time. Merge/compaction REPLACES segment files, so queries through
-    * a pre-compaction handle fail with FILE_NOT_EXIST — reopen after any
-    * merge (the reference behaves the same: searchers are reopened after
-    * optimize). At cluster scale, leave superseded segment files in place
-    * until readers drain before GC'ing them. */
+    * open time. Merge/compaction REPLACES segment files, so a query through
+    * a pre-compaction handle fails with an error that names the missing
+    * file and asks for a reopen (the reference behaves the same: searchers
+    * are reopened after optimize). At cluster scale, leave superseded
+    * segment files in place until readers drain before GC'ing them. */
   final class IndexHandle(val indexDir: String, val stats: BM25.CorpusStats,
                           val segSize: Int,
-                          val segments: DataFrame, val lexiconBase: DataFrame,
+                          /** live segId -> its files (absolute path, bytes) */
+                          val segmentFiles: Seq[(Int, Seq[(String, Long)])],
+                          val lexiconBase: DataFrame,
                           val delRanges: Map[Int, Seq[Long]],
                           val chain: graft.analysis.Chain = graft.analysis.Chain.Standard,
                           val lexgrams: Option[DataFrame] = None,
-                          val liveSegIds: Seq[Int] = Seq.empty,
-                          /** every live segment is ONE parquet file with ONE
-                            * row group, as its writer recorded it in the
-                            * segment's record line (SegmentManifest.layout)
-                            * — the physical invariant that lets the kernel
-                            * run scan-side with no exchange, because a whole
-                            * row group is always consumed by exactly one
-                            * scan task. False after compaction's
-                            * term-range-partitioned merges, for
-                            * multi-row-group (>~128 MB) segments and for
-                            * lines without a layout; those take the
-                            * exchange path. */
-                          val segColocated: Boolean = false,
                           val lexDelta: Option[DataFrame] = None) {
     def hasDeletes: Boolean = delRanges.nonEmpty
+    val liveSegIds: Seq[Int] = segmentFiles.map(_._1)
+    /** every query runs with no exchange below the kernel (one path) */
+    val segColocated: Boolean = true
+    /** the live segments' posting rows as a relation over the recorded
+      * files (tools and measurement; queries read through perSegment) */
+    lazy val segments: DataFrame = {
+      val (spark, paths) = (lexiconBase.sparkSession, segmentFiles.flatMap(_._2.map(_._1)))
+      if (paths.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexBuilder.SegmentsSchema)
+      else spark.read.schema(IndexBuilder.SegmentsSchema)
+        .option("basePath", IndexBuilder.segmentsDir(indexDir)).parquet(paths: _*)
+    }
     val lexiconRows: DataFrame = lexDelta.fold(lexiconBase)(lexiconBase.unionByName(_))
     val lexicon: DataFrame =
       if (lexDelta.isEmpty) lexiconBase else IndexBuilder.aggregateLexicon(lexiconRows)
     private[search] val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   }
 
-  /** Open an index from its commit record: stats, live segments and the
-    * query path come from ONE read of stats.json; open writes nothing and
-    * reads no segment file (a corrupt one fails only the queries that read
-    * it), and it starts no Spark job. */
+  /** Open an index from its commit record: stats, live segments and their
+    * files come from ONE read of stats.json; open writes nothing, lists no
+    * segment dir and reads no segment file (a corrupt one fails only the
+    * queries that read it), and it starts no Spark job. */
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
@@ -100,19 +103,8 @@ object Searcher {
     // silently answer wrong (a v8 one keeps its segment set in files this
     // reader ignores), so it asks for a rebuild. A crashed merge or append
     // can leave segment dirs no record lists (GC'd by the next merge) —
-    // readers trust only the record's segIds. The isin filter is a
-    // partition-pruning predicate on the segId directory column.
+    // readers trust only the record's segments and files.
     val (st, manifests) = IndexBuilder.readCurrentRecord(fs, indexDir)
-    val liveSegs = manifests.map(_.segId)
-    // a freshly created index (Engine.createIndex) has stats but no
-    // segments yet — empty relations keep every search path total
-    val segments =
-      if (liveSegs.isEmpty) {
-        import spark.implicits._
-        spark.emptyDataset[SegRead].toDF()
-      } else IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
-          IndexBuilder.segmentsDir(indexDir))
-        .filter(col("segId").isin(liveSegs: _*))
     // deletes: one listing; per-segment sidecars resolve through the
     // manifest's build-layout `covers` so tombstones stay addressable after
     // compactions that mint fresh segIds
@@ -129,9 +121,10 @@ object Searcher {
       else None
     // LSM lexicon: the base plus the term stats of the live segments its
     // `_covers.json` does not name (appended since the last fold), read
-    // straight from those segments (IndexBuilder.segmentLexicon)
+    // straight from those segments (IndexBuilder.segmentLexicon); an index
+    // with no segments yet (Engine.createIndex) gets an empty relation
     val (lexiconBase, lexDelta) =
-      if (liveSegs.isEmpty) {
+      if (manifests.isEmpty) {
         import spark.implicits._
         (spark.emptyDataset[LexRow].toDF(), None)
       } else {
@@ -146,13 +139,16 @@ object Searcher {
           Option.when(deltas.nonEmpty)(IndexBuilder.segmentLexicon(spark, indexDir, deltas)))
       }
     new IndexHandle(indexDir, BM25.CorpusStats(st.numDocs, st.totalFieldLen),
-      st.segSize, segments,
+      st.segSize, manifests.map { m =>
+        // a line written before writers recorded the files: list its dir
+        val dir = s"${IndexBuilder.segmentsDir(indexDir)}/segId=${m.segId}"
+        m.segId -> m.files.getOrElse(IndexBuilder.listFiles(fs, dir))
+          .map { case (n, b) => s"$dir/$n" -> b }
+      },
       lexiconBase,
       delRanges,
       new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(st.analyzer)),
       lexgrams,
-      liveSegs,
-      liveSegs.nonEmpty && manifests.forall(_.colocated),
       lexDelta)
   }
 
@@ -400,13 +396,12 @@ object Searcher {
 
   /** The per-segment runner, the one place a query meets the segments.
     *
-    * Each field with something to read gets ONE pushed `term IN` scan of
-    * its segments: the field's query terms plus the match-all pseudo rows
-    * the query needs. The pseudo lists are PERSISTED per segment at build
-    * time (decision D14) as two reserved-term rows, so `*` / `NOT x` /
-    * `field:*` read a handful of pruned posting rows, never docstats.
-    * Rows fold into the segment's kernel list map under
-    * `Kernel.rowKey(field, term)`: a real term as (field, term), the
+    * Each field with something to read contributes its query terms plus
+    * the match-all pseudo rows the query needs. The pseudo lists are
+    * PERSISTED per segment at build time (decision D14) as two reserved-term
+    * rows, so `*` / `NOT x` / `field:*` read a handful of pruned posting
+    * rows, never docstats. Rows fold into the segment's kernel list map
+    * under `Kernel.rowKey(field, term)`: a real term as (field, term), the
     * all-docs row as ("", EveryTerm) for a bare `*` (read from the default
     * field only), a field's non-empty row as (field, EveryTerm) for
     * `field:*`. Duplicate rows of a key k-way-merge (mergeList); df is the
@@ -414,56 +409,80 @@ object Searcher {
     * with the executor-side tombstone probe. The closure captures only
     * plain locals (never a handle), so it stays serialization-clean.
     *
-    * Both physical shapes hand each task every segment it holds as ONE
-    * contiguous run of rows, so the runner folds one segment at a time and
-    * emits its output before it reads the next: a task's memory is bounded
-    * by its largest segment, however many segments it holds. The shape is
-    * chosen from the layout the writers recorded:
-    *  - COLOCATED: exactly one field is read and every live segment of its
-    *    handle is one file with one row group. The kernel runs scan-side in
-    *    the scan's mapPartitions. No exchange, no sort, no AQE stage
-    *    barrier — a warm top-k query is ONE single-stage job. A parquet row
-    *    group is consumed by exactly one scan task, which reads its files
-    *    one after another, so a segment's rows arrive as one run.
-    *  - EXCHANGE: several fields (a segment's rows come from several field
-    *    indexes' files), or split segments (term-range-partitioned merge
-    *    output, >1 row group). `repartition(segId)` co-locates each
-    *    segment's rows at the cost of one small exchange of pruned posting
-    *    rows, and a local `sortWithinPartitions(segId)` makes them one run. */
+    * One physical shape: an RDD with one partition per group of WHOLE
+    * segments (`segmentGroups`). A task reads every recorded file of a
+    * segment, for every field read, with Spark's own parquet reader
+    * (vectorized decode; the pushed `term IN` prunes row groups and pages),
+    * folds that segment's rows, emits its output, then reads the next: task
+    * memory is bounded by its largest segment, and no layout, file or field
+    * count needs an exchange. Output reaches Catalyst via `createDataset`. */
   private def perSegment[T: org.apache.spark.sql.Encoder](
       spark: SparkSession, fs: Fields, fieldTerms: Set[(String, String)],
       everyFields: Set[String], dfs: Map[String, Long])(
       f: (Map[String, Kernel.TermList], Long => Boolean) => Iterator[T]): Dataset[T] = {
-    import spark.implicits._
-    val scans = fs.handles.toSeq.sortBy(_._1).flatMap { case (field, h) =>
-      val stored = fieldTerms.collect { case (`field`, t) => t } ++
+    val reads: Map[String, Set[String]] = fs.handles.keys.iterator.map { field =>
+      field -> (fieldTerms.collect { case (`field`, t) => t } ++
         Option.when(field == fs.default && everyFields(""))(Q.EveryTerm) ++
-        Option.when(everyFields(field))(Q.EveryNonEmptyTerm)
-      Option.when(stored.nonEmpty)(h -> h.segments
-        .filter($"term".isin(stored.toSeq: _*))
-        .select(lit(field).as("field"), $"term", $"df", $"maxTf", $"blocks", $"segId"))
-    }
-    if (scans.isEmpty) return spark.emptyDataset[T]
-    val rows = scans.map(_._2).reduce(_ unionByName _)
-    val src = if (scans.size == 1 && scans.head._1.segColocated) rows
-      else rows.repartition(col("segId")).sortWithinPartitions("segId")
+        Option.when(everyFields(field))(Q.EveryNonEmptyTerm))
+    }.filter(_._2.nonEmpty).toMap
+    val groups = segmentGroups(spark, reads.keys.toSeq.sorted.map(f => f -> fs.handles(f)))
+    if (groups.isEmpty) return spark.emptyDataset[T]
+    val fileSchema = StructType(IndexBuilder.SegmentsSchema.dropRight(1)) // segId: the dir
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, fileSchema, StructType(Nil),
+        StructType(fileSchema.filter(_.name != "cf")),
+        Seq(sources.In("term", reads.values.flatten.toSet.toArray[Any])),
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
     val delRanges = fs.defaultHandle.delRanges
     val dirLocal = fs.defaultHandle.indexDir
-    val fLocal = f
-    src.as[(String, String, Int, Int, Array[Byte], Int)].mapPartitions { it =>
-      val rows = it.buffered
-      Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
-        val segId = r.head._6
+    implicit val tag: scala.reflect.ClassTag[T] = implicitly[org.apache.spark.sql.Encoder[T]].clsTag
+    spark.createDataset(spark.sparkContext.parallelize(groups, groups.size)
+      .flatMap(_.iterator.flatMap { case (segId, files) =>
         val lists = scala.collection.mutable.HashMap.empty[String, Kernel.TermList]
-        while (r.hasNext && r.head._6 == segId) {
-          val (field, term, df, maxTf, blocks, _) = r.next()
-          val key = Kernel.rowKey(field, term)
-          Kernel.mergeList(lists, key,
-            Kernel.TermList(blocks, maxTf, dfs.getOrElse(key, df.toLong)))
+        files.foreach { case (field, path, bytes) =>
+          // the pushed IN prunes row groups and pages, not rows: match each
+          // row's term bytes, and decode only the rows the query reads
+          val terms = reads(field).map(UTF8String.fromString)
+          try read(PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L,
+              bytes, Array.empty, 0L, bytes)).foreach { r =>
+            val term = r.getUTF8String(0)
+            if (terms(term)) {
+              val key = Kernel.rowKey(field, term.toString)
+              Kernel.mergeList(lists, key, Kernel.TermList(r.getBinary(3), r.getInt(2),
+                dfs.getOrElse(key, r.getInt(1).toLong)))
+            }
+          } catch {
+            case e: java.io.FileNotFoundException => throw new IllegalStateException(
+              s"segment $segId: $path is gone — the index changed since this handle was " +
+                "opened (a merge or compaction replaced the segment); reopen it with " +
+                "Searcher.open", e)
+          }
         }
-        fLocal(lists.toMap, tombstoneProbe(delRanges, dirLocal, segId))
+        if (lists.isEmpty) Iterator.empty
+        else f(lists.toMap, tombstoneProbe(delRanges, dirLocal, segId))
+      }))
+  }
+
+  /** The tasks of a query that reads the given (field, handle)s: whole
+    * segments, each with its (field, file, bytes) over the fields, packed
+    * largest-first by bytes into at most `defaultParallelism` groups (each
+    * into the one with the fewest bytes so far), segId order within one. */
+  private[graft] def segmentGroups(spark: SparkSession, handles: Seq[(String, IndexHandle)])
+      : Seq[Seq[(Int, Seq[(String, String, Long)])]] = {
+    val segs = handles.flatMap { case (field, h) =>
+      h.segmentFiles.flatMap { case (segId, files) =>
+        files.map { case (path, bytes) => segId -> ((field, path, bytes)) }
       }
+    }.groupMap(_._1)(_._2).toSeq
+    val slots = math.min(segs.size, spark.sparkContext.defaultParallelism)
+    val groups = Array.fill(slots)(Vector.empty[(Int, Seq[(String, String, Long)])])
+    val load = new Array[Long](slots)
+    segs.sortBy { case (id, files) => (-files.map(_._3).sum, id) }.foreach { seg =>
+      val i = load.indices.minBy(load(_))
+      groups(i) :+= seg
+      load(i) += seg._2.map(_._3).sum
     }
+    groups.toSeq.map(_.sortBy(_._1))
   }
 
   /** ALL docIds matching a query — the delete-by-query feed: same pruned
@@ -792,8 +811,8 @@ object Searcher {
 
   /** the docstats sidecar restricted to the record's live segments: a
     * crashed merge can leave segId dirs behind until the next GC, and an
-    * unfiltered read would double-count their docs (same defense as the
-    * segments read in open() and everyRows) */
+    * unfiltered read would double-count their docs (the segments are read
+    * only from the files the record lists) */
   private[search] def liveDocstats(spark: SparkSession,
                                    handle: IndexHandle): DataFrame =
     IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,

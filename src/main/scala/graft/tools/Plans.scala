@@ -35,34 +35,25 @@ object Plans {
     }
     val handle = Searcher.open(spark, ix)
 
-    // the query path comes from the layout each writer recorded in the
-    // segment's line of the commit record
-    println(s"==== query path: ${if (handle.segColocated) "colocated (no exchange)"
-      else "exchange"} ====")
-    IndexBuilder.readManifests(fs, ix).foreach { m =>
-      println(s"segment ${m.segId}: " + m.layout.fold("no recorded layout")(l =>
-        s"${l.files} file(s), ${l.rowGroups} row group(s)"))
-    }
-
     println("==== lexicon df lookup plan (expect PushedFilters: In(term, ...)) ====")
     handle.lexiconRows.filter(org.apache.spark.sql.functions.col("term")
       .isin("w0001", "w0042")).explain("formatted")
 
-    println("==== segment scan for query terms (expect pushed In + pruned ReadSchema) ====")
-    handle.segments.filter(org.apache.spark.sql.functions.col("term")
-      .isin("w0001", "w0042"))
-      .select("term", "df", "maxTf", "blocks", "segId").explain("formatted")
-
-    println("==== full search plan (kernel + TakeOrderedAndProject; no Exchange " +
-      "below it on the colocated path) ====")
-    Searcher.search(spark, handle, "w0001 OR w0042", 10).explain("formatted")
-
-    println("==== match-all plan (D14: PERSISTED Every pseudo rows ride the " +
-      "pushed term IN — expect NO docstats relation in this plan) ====")
-    Searcher.search(spark, handle, "* NOT w0001", 10).explain("formatted")
-
-    println("==== span query plan (same pruned scan + kernel shape as AND/OR) ====")
-    Searcher.search(spark, handle, "w0001 ONEAR/4 w0042", 10).explain("formatted")
+    // each query's tasks: whole segments, packed by the bytes the commit
+    // record lists, then its plan (kernel + TakeOrderedAndProject, no
+    // Exchange)
+    Seq("w0001 OR w0042" -> "full search",
+      "* NOT w0001" -> "match-all (D14: PERSISTED Every pseudo rows, no docstats relation)",
+      "w0001 ONEAR/4 w0042" -> "span query (same read + kernel shape as AND/OR)").foreach {
+      case (q, title) =>
+        println(s"==== $title: '$q' ====")
+        Searcher.segmentGroups(spark, Seq(graft.search.Q.DefaultField -> handle))
+          .zipWithIndex.foreach { case (g, i) =>
+            println(s"task $i: segments ${g.map(_._1).mkString(",")}, " +
+              s"${g.flatMap(_._2).map(_._3).sum} bytes")
+          }
+        Searcher.search(spark, handle, q, 10).explain("formatted")
+    }
 
     println("==== ANN probe plan (expect PushedFilters: In(sig, ...), no object map) ====")
     import spark.implicits._
@@ -82,9 +73,8 @@ object Plans {
     graft.ops.Similarity.srpTopKIndexed(spark, annDir, qv, 10, radius = 2)
       .explain("formatted")
 
-    println("==== batch search plan (ONE segment scan for many queries, the " +
-      "kernel inside it on the colocated path; the only exchange feeds the " +
-      "per-query window over the tiny candidate set) ====")
+    println("==== batch search plan (ONE segment read for many queries; the " +
+      "only exchange feeds the per-query window over the tiny candidate set) ====")
     Searcher.searchMany(spark, handle,
       Seq("a" -> "w0001", "b" -> "w0042 AND w0007", "c" -> "w0003 OR w0009"), 10)
       .explain("formatted")

@@ -1012,6 +1012,41 @@ class OpsSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("pplBuckets: repeated calls leave no broadcast behind") {
+    import spark.implicits._
+    import graft.ops.Selection
+    import org.apache.spark.GraftTestAccess.broadcastBlocks
+    val docs = (0L until 200L).map(i => (i, s"w${i % 13} w${(i * 7) % 29} tok$i", s"l${i % 3}"))
+      .toDF("doc_id", "text", "lang").repartition(4)
+    // collected task binaries and finished plans go at GC (the context
+    // cleaner); what a held result still pins stays
+    def settled(): Int = {
+      var (last, n, same) = (-1, 0, 0)
+      while (same < 3 && n < 100) {
+        System.gc(); Thread.sleep(100); n += 1
+        val now = broadcastBlocks()
+        same = if (now == last) same + 1 else 0
+        last = now
+      }
+      last
+    }
+    // no broadcast join (nor the scorer's broadcast hint): a held result
+    // then pins only what pplBuckets itself made
+    val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.disableHints" -> "true")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val before = settled()
+      val held = (0 until 4).map(_ => Selection.pplBuckets(docs, "doc_id", "text", "lang", 3))
+      val answers = held.map(_.as[(Long, String, Double, Int, String)].collect().toSet)
+      assert(answers.distinct.size == 1 && answers.head.size == 200)
+      val after = settled()
+      assert(after <= before, s"broadcast blocks grew from $before to $after over 4 calls")
+      assert(held.size == 4) // the results stay reachable until here
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   test("ntileBucket r6: formula == SQL NTILE for every (n, buckets, rank)") {
     import graft.ops.Selection
     for (n <- 1L to 40L; k <- 1 to 7) {

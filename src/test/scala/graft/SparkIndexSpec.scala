@@ -671,15 +671,19 @@ class SparkIndexSpec extends AnyFunSuite {
     val lexMin = spark.read.parquet(IndexBuilder.lexiconDir(dir))
       .agg(org.apache.spark.sql.functions.min($"term")).head().getString(0)
     assert(lexMin >= graft.search.Q.RealTermMin)
-    // the query plan for a pure-NOT (Every-backed) query touches ONLY the
-    // segments relation with a pushed term IN filter — no docstats scan
+    // a pure-NOT (Every-backed) query reads ONLY the segments' rows: its
+    // plan scans no file relation (the kernel's task reads the segment
+    // files), and it still answers as RefModel with the docstats sidecar gone
     val q = QueryParser.parse("NOT search")
     val plan = Searcher.searchQ(spark, handle, q, 10)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("docstats"), s"docstats scan in Every plan:\n$plan")
-    assert(plan.contains("segments"))
-    assert(plan.contains("isin") || plan.contains("In(term") || plan.contains("IN ("),
-      s"no pushed term filter in:\n$plan")
+    assert(!plan.contains("docstats") && !plan.contains("FileScan"),
+      s"file scan in Every plan:\n$plan")
+    val oracle = new RefModel(refDocs(fixtureRows)).search("NOT search", 10)
+    assert(oracle.nonEmpty)
+    fsOf(dir).delete(new Path(IndexBuilder.docstatsDir(dir)), true)
+    val hits = Searcher.searchQ(spark, Searcher.open(spark, dir), q, 10).collect().toSeq
+    assert(hits.map(_.docId) == oracle.map(_._1), s"$hits vs $oracle")
   }
 
   test("delete-by-query: bulk tombstones, hidden at query, purged at compaction") {
@@ -721,50 +725,108 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(live2.map(_.docId).toSet == docs.map(_._1).toSet -- expectedDel)
   }
 
-  test("colocated kernel r6: exchange-free path == shuffle path; merge flips the guard") {
+  test("one query path: every layout and two fields answer as RefModel, no Exchange") {
     import spark.implicits._
-    val dir = SparkTestBase.tmpDir("coloc")
-    val corpus = CorpusSource.synth(spark, 600, 42L, 6)
-    IndexBuilder.build(spark, corpus, dir, IndexConfig(segSize = 100))
-    val h = Searcher.open(spark, dir)
-    // fresh build writes one file + one row group per segment
-    assert(h.segColocated, "fresh build should take the colocated path")
-    // the same handle with the guard forced off runs the r5 shuffle path;
-    // every query must agree hit-for-hit and score-for-score
-    val hShuffle = new Searcher.IndexHandle(h.indexDir, h.stats, h.segSize,
-      h.segments, h.lexicon, h.delRanges, h.chain, h.lexgrams, h.liveSegIds,
-      segColocated = false)
-    val queries = TestFixtures.querySet.map(_._2) ++
-      Seq("w0000 OR w0001", "NOT w0004", "*", "w0000 NEAR/5 w0001")
-    val colocated = queries.map { q =>
-      val a = Searcher.search(spark, h, q, 10).collect().toSeq
-      val b = Searcher.search(spark, hShuffle, q, 10).collect().toSeq
-      assert(a == b, s"colocated != shuffle for '$q'")
-      a
+    val dir = SparkTestBase.tmpDir("onepath")
+    val cfg = IndexConfig(segSize = 32)
+    def rows(from: Int, until: Int): Seq[CorpusRow] = (from until until).map { i =>
+      CorpusRow(f"r${i % 5}", f"f$i%05d.txt", f"$i%040x", "text",
+        graft.corpus.SynthCorpus.doc(42L, i.toLong))
     }
-    // one shuffle partition: one exchange-path task holds all six
-    // segments and folds them one at a time
+    val queries = TestFixtures.querySet.map(_._2) ++ Seq("*", "NOT w0004",
+      "w0000 AND w0001", "w0000 OR w0001", "w0000 NEAR/5 w0001", "\"needle alpha beta\"")
     val partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try queries.zip(colocated).foreach { case (q, a) =>
-      assert(Searcher.search(spark, hShuffle, q, 10).collect().toSeq == a,
-        s"one-task shuffle path != colocated for '$q'")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
-    // the colocated plan has no exchange; the fallback plan has one
-    val pa = Searcher.search(spark, h, "w0000 AND w0001", 10)
-      .queryExecution.executedPlan.toString
-    val pb = Searcher.search(spark, hShuffle, "w0000 AND w0001", 10)
-      .queryExecution.executedPlan.toString
-    assert(!pa.contains("Exchange"), s"colocated plan has an exchange:\n$pa")
-    assert(pb.contains("Exchange"))
-    // a term-range-partitioned merge writes several files per segment:
-    // reopen must fall back to the shuffle path, results unchanged
-    val before = Searcher.search(spark, h, "w0001", 10).collect().toSeq
+    // each (engine query, oracle query) at 1 and 8 shuffle partitions: the
+    // same answers, RefModel's over `docs`, and no Exchange in any plan
+    def check(state: String, docs: Seq[(Long, String)], pairs: Seq[(String, String)])(
+        search: String => org.apache.spark.sql.Dataset[Searcher.SearchHit]) = {
+      val got = Seq("1", "8").map { p =>
+        spark.conf.set("spark.sql.shuffle.partitions", p)
+        try pairs.map { case (q, _) =>
+          val ds = search(q)
+          val plan = ds.queryExecution.executedPlan.toString
+          assert(!plan.contains("Exchange"), s"[$state '$q'] plan has an exchange:\n$plan")
+          ds.collect().toSeq
+        } finally spark.conf.set("spark.sql.shuffle.partitions", partitions)
+      }
+      assert(got(0) == got(1), s"[$state] answers depend on the shuffle partitions")
+      val ref = new RefModel(docs)
+      pairs.zip(got(0)).foreach { case ((q, oq), hits) =>
+        val oracle = ref.search(oq, 10)
+        assert(hits.map(_.docId) == oracle.map(_._1), s"[$state '$q'] $hits vs $oracle")
+        hits.zip(oracle).foreach { case (h, (_, sc)) =>
+          assert(math.abs(h.score - sc) <= 1e-6, s"[$state '$q'] ${h.score} vs $sc")
+        }
+      }
+      got(0)
+    }
+    def single(state: String, docs: Seq[(Long, String)]) = {
+      val h = Searcher.open(spark, dir)
+      check(state, docs, queries.map(q => q -> q))(Searcher.search(spark, h, _, 10))
+    }
+    // build: three segments; two appends: the uncovered delta segments 3
+    // (docIds from 96) and 4 (from 128, the next segment boundary)
+    IndexBuilder.build(spark, rows(0, 96).toDS(), dir, cfg)
+    val built = refDocs(rows(0, 96))
+    single("build", built)
+    graft.streaming.StreamingIngest.append(spark, rows(96, 120).toDS(), dir, cfg)
+    graft.streaming.StreamingIngest.append(spark, rows(120, 136).toDS(), dir, cfg)
+    val docs = built ++ refDocs(rows(96, 120)).map { case (i, c) => (i + 96, c) } ++
+      refDocs(rows(120, 136)).map { case (i, c) => (i + 128, c) }
+    single("append", docs)
+    assert(Merger.mergeSmall(spark, dir) == Seq(5))
+    val merged = single("mergeSmall", docs)
+    // compaction writes term-range files: one segment of >= 2 files
     Merger.compact(spark, dir)
-    val h2 = Searcher.open(spark, dir)
-    assert(!h2.segColocated,
-      "term-range-partitioned merge output must flip to the shuffle path")
-    assert(Searcher.search(spark, h2, "w0001", 10).collect().toSeq == before)
+    val compacted = IndexBuilder.readManifests(fsOf(dir), dir)
+    assert(compacted.size == 1 && compacted.head.files.exists(_.size >= 2), compacted)
+    assert(single("compact", docs) == merged)
+    // two fields, each its own index of the same text (segIds align, like
+    // the benchmark's composed handle): a query over both reads both
+    // fields' files of each segment in one task and scores as one field
+    val copy = SparkTestBase.tmpDir("onepath-body") + "/ix"
+    org.apache.hadoop.fs.FileUtil.copy(fsOf(dir), new Path(dir), fsOf(dir), new Path(copy),
+      false, true, spark.sparkContext.hadoopConfiguration)
+    val mh = new graft.search.MultiFieldSearcher.MultiHandle(dir,
+      Seq(graft.build.MultiFieldIndex.FieldSpec("content", _.content),
+        graft.build.MultiFieldIndex.FieldSpec("body", _.content)),
+      Map("content" -> Searcher.open(spark, dir), "body" -> Searcher.open(spark, copy)))
+    check("two fields", docs, Seq("w0000 OR body:w0001" -> "w0000 OR w0001",
+      "w0000 AND body:w0001" -> "w0000 AND w0001", "body:w0002 NOT w0004" -> "w0002 NOT w0004",
+      "NOT body:w0004" -> "NOT w0004", "*" -> "*"))(
+      graft.search.MultiFieldSearcher.search(spark, mh, _, 10))
+  }
+
+  test("a handle opened before a compaction fails with a reopen error") {
+    import spark.implicits._
+    val dir = SparkTestBase.tmpDir("stale")
+    val corpus = CorpusSource.synth(spark, 200, 42L, 4)
+    IndexBuilder.build(spark, corpus, dir, IndexConfig(segSize = 50))
+    val stale = Searcher.open(spark, dir)
+    Merger.compact(spark, dir)
+    val e = intercept[Exception](Searcher.search(spark, stale, "w0001", 10).collect())
+    assert(e.getMessage.contains("reopen") && e.getMessage.contains("segment "), e.getMessage)
+    val oracle = new RefModel(refDocs(corpus.collect().toSeq)).search("w0001", 10)
+    val hits = Searcher.search(spark, Searcher.open(spark, dir), "w0001", 10).collect().toSeq
+    assert(hits.map(_.docId) == oracle.map(_._1))
+    hits.zip(oracle).foreach { case (h, (_, sc)) => assert(math.abs(h.score - sc) <= 1e-6) }
+  }
+
+  test("open makes the same FS calls on 4 and on 16 segments") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set(s"fs.${CountingFileSystem.Scheme}.impl", classOf[CountingFileSystem].getName)
+    // the same corpus, so the same lexicon files; only the segments differ
+    def openCalls(segSize: Int): (Long, Long, Long) = {
+      val dir = SparkTestBase.tmpDir(s"fscalls$segSize")
+      IndexBuilder.build(spark, CorpusSource.synth(spark, 320, 42L, 4), dir,
+        IndexConfig(segSize = segSize))
+      assert(IndexBuilder.readManifests(fsOf(dir), dir).size == 320 / segSize)
+      CountingFileSystem.callsDuring(
+        Searcher.open(spark, s"${CountingFileSystem.Scheme}://$dir"))
+    }
+    val (four, sixteen) = (openCalls(80), openCalls(20))
+    info(s"(listStatus, getFileStatus, open) calls: 4 segments $four, 16 segments $sixteen")
+    assert(four == sixteen)
   }
 
   test("open reads no segment file: garbage segment files still open colocated") {

@@ -17,9 +17,16 @@ object SparkTestBase {
     s
   }
 
-  def tmpDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft-$name").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
+  /** one root per test run holds every tmpDir; it is deleted with its
+    * contents when the JVM exits (File.deleteOnExit removes only empty
+    * dirs, so per-dir registration left every index behind) */
+  private lazy val runRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-test-run")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile): Unit))
+    root
   }
+
+  def tmpDir(name: String): String =
+    java.nio.file.Files.createTempDirectory(runRoot, s"graft-$name").toFile.getAbsolutePath
 }

@@ -575,45 +575,62 @@ class StreamingIngestSpec extends AnyFunSuite {
     graft.build.Deletes.add(spark, cogDir, dels)
     sameHits()
 
-    // one file, one row group: the reopened tail index keeps the
-    // exchange-free path; the cogroup shape writes term-range files
-    val ht = Searcher.open(spark, tailDir)
-    assert(ht.segColocated, "a tail merge must keep the colocated layout")
-    assert(!Searcher.open(spark, cogDir).segColocated)
-    val plan = Searcher.search(spark, ht, "w0000 AND w0001", 10)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"tail-merged plan has an exchange:\n$plan")
+    // the tail writes one file, the cogroup shape term-range files; both
+    // are read whole per segment, with no exchange
+    assert(manifest(tailDir).files.map(_.size).contains(1))
+    assert(manifest(cogDir).files.exists(_.size >= 2))
+    Seq(tailDir, cogDir).foreach { dir =>
+      val plan = Searcher.search(spark, Searcher.open(spark, dir), "w0000 AND w0001", 10)
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"merged plan has an exchange:\n$plan")
+    }
   }
 
-  test("every writer records its segments' layout; lines without it open on the exchange path") {
-    val dir = tailIndex("layout", 29L)
+  test("every writer records its segments' files; older lines open by listing") {
+    val dir = tailIndex("files", 29L)
     val fs = fsOf(dir)
-    def layouts() = IndexBuilder.readManifests(fs, dir).map(m => m.segId -> m.layout)
-    val one = Some(graft.model.SegmentLayout(1, 1))
+    // the record's files of each live segment == the parquet files in its dir
+    def recordedMatchesDirs(): Unit = IndexBuilder.readManifests(fs, dir).foreach { m =>
+      val inDir = fs.listStatus(new org.apache.hadoop.fs.Path(
+          s"${IndexBuilder.segmentsDir(dir)}/segId=${m.segId}"))
+        .map(f => f.getPath.getName -> f.getLen)
+        .filter(_._1.endsWith(".parquet")).toSeq.sortBy(_._1)
+      assert(inDir.nonEmpty && m.files.contains(inDir),
+        s"segment ${m.segId}: ${m.files} vs $inDir")
+    }
     // build (segments 0, 1) and three appends (2-4)
-    assert(layouts() == (0 to 4).map(_ -> one))
+    assert(IndexBuilder.readManifests(fs, dir).map(_.segId) == (0 to 4))
+    recordedMatchesDirs()
     assert(graft.merge.Merger.mergeSmall(spark, dir) == Seq(5))
-    assert(layouts() == Seq(0 -> one, 1 -> one, 5 -> one))
-    val h = Searcher.open(spark, dir)
-    assert(h.segColocated)
+    recordedMatchesDirs()
     val queries = TestFixtures.querySet.map(_._2) ++
       Seq("*", "NOT w0004", "w0000 AND w0001", "w0000 OR w0001")
     def hits(h: Searcher.IndexHandle) =
       queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq)
+    val h = Searcher.open(spark, dir)
     val expected = hits(h)
-    // a record whose lines carry no layout opens on the exchange path
-    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
-    IndexBuilder.commitRecord(fs, dir, st, live.map(_.copy(layout = None)))
-    assert(layouts().forall(_._2.isEmpty))
-    val hBare = Searcher.open(spark, dir)
-    assert(!hBare.segColocated)
-    assert(hits(hBare) == expected)
-    // compaction writes term-range files: at least two for the merged segment
+    // a record whose lines carry the older "files"/"rowGroups" counts and no
+    // file list opens by listing each segment's dir, with the same hits
+    val record = new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(dir))
+    val text = {
+      val in = fs.open(record)
+      try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    }
+    val older = text.replaceAll(""""files":\[[^\]]*\]""", """"files":1,"rowGroups":1""")
+    assert(older != text && !older.contains("\"name\""))
+    val out = fs.create(record, true)
+    out.write(older.getBytes("UTF-8"))
+    out.close()
+    assert(IndexBuilder.readManifests(fs, dir).forall(_.files.isEmpty))
+    val hOlder = Searcher.open(spark, dir)
+    assert(hOlder.segmentFiles == h.segmentFiles && h.segmentFiles.forall(_._2.size == 1))
+    assert(hits(hOlder) == expected)
+    // compaction writes term-range files: at least two for the merged
+    // segment, all recorded
     graft.merge.Merger.compact(spark, dir)
     val compacted = IndexBuilder.readManifests(fs, dir)
-    assert(compacted.size == 1 && compacted.head.layout.exists(_.files >= 2), compacted)
-    val hCompacted = Searcher.open(spark, dir)
-    assert(!hCompacted.segColocated)
-    assert(hits(hCompacted) == expected)
+    assert(compacted.size == 1 && compacted.head.files.exists(_.size >= 2), compacted)
+    recordedMatchesDirs()
+    assert(hits(Searcher.open(spark, dir)) == expected)
   }
 }
