@@ -124,9 +124,7 @@ object Engine {
   /** get_document: stored fields for one docId (None if absent/deleted) */
   def getDocument(spark: SparkSession, indexDir: String,
                   docId: Long): Option[org.apache.spark.sql.Row] = {
-    val handle = Searcher.open(spark, indexDir)
-    if (handle.liveSegIds.isEmpty) None
-    else Searcher.getDocuments(spark, handle, Seq(docId)).collect().headOption
+    Searcher.getDocuments(spark, Searcher.open(spark, indexDir), Seq(docId)).collect().headOption
   }
 
   /** delete_documents by id: tombstoned now, purged at optimize */

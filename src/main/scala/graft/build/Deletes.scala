@@ -29,13 +29,18 @@ object Deletes {
   private def rangePath(indexDir: String, rid: Long) =
     new Path(dir(indexDir), s"range-$rid.dlv")
 
-  def add(spark: SparkSession, indexDir: String, ids: Seq[Long]): Unit = {
-    if (ids.isEmpty) return
-    val fs = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
+  /** the index's file system and segSize, with the deletes dir made */
+  private def prepare(spark: SparkSession, indexDir: String): (FileSystem, Int) = {
+    val fs = FileSystem.get(new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
     val segSize = IndexBuilder.readStats(fs, indexDir).segSize
     val d = new Path(dir(indexDir))
     if (!fs.exists(d)) fs.mkdirs(d)
+    (fs, segSize)
+  }
+
+  def add(spark: SparkSession, indexDir: String, ids: Seq[Long]): Unit = {
+    if (ids.isEmpty) return
+    val (fs, segSize) = prepare(spark, indexDir)
     ids.groupBy(_ / segSize).foreach { case (rid, newIds) =>
       val merged = (readRange(fs, indexDir, rid) ++ newIds).distinct.sorted
       writeRange(fs, indexDir, rid, merged.toArray)
@@ -50,17 +55,14 @@ object Deletes {
   def addBulk(spark: SparkSession, indexDir: String,
               ids: org.apache.spark.sql.Dataset[Long]): Unit = {
     import spark.implicits._
-    val fs = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
-    val segSize = IndexBuilder.readStats(fs, indexDir).segSize
-    val d = new Path(dir(indexDir))
-    if (!fs.exists(d)) fs.mkdirs(d)
-    val dirLocal = indexDir
+    val segSize = prepare(spark, indexDir)._2
+    // executors open the sidecars through the session's Hadoop conf
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf())
     ids.groupByKey(_ / segSize).mapGroups { (rid, it) =>
-      val efs = FileSystem.get(new java.net.URI(dirLocal),
-        new org.apache.hadoop.conf.Configuration())
-      val merged = (readRange(efs, dirLocal, rid) ++ it).distinct.sorted
-      writeRange(efs, dirLocal, rid, merged)
+      val efs = FileSystem.get(new java.net.URI(indexDir), conf.value)
+      val merged = (readRange(efs, indexDir, rid) ++ it).distinct.sorted
+      writeRange(efs, indexDir, rid, merged)
       rid
     }.count() // force the writes; nothing ships to the driver
     ()

@@ -1,7 +1,11 @@
 package graft.build
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, PartitionPath, PartitionSpec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -30,9 +34,10 @@ import graft.model._
   *    streamingly; run-boundary invariance is property-tested;
   *  - commit: `stats.json` is the index's one commit record ([W]
   *    whoosh/index.py TOC): the stats header, then one manifest line per
-  *    live segment. Writers promote staging -> final (rename), then commit
-  *    the whole record with one overwriting rename, so a reader sees the old
-  *    record or the new one; dirs no record lists are garbage;
+  *    live segment, listing its files. Writers promote staging -> final
+  *    (rename), then commit the whole record with one overwriting rename,
+  *    so a reader sees the old record or the new one; readers open only
+  *    the files it lists, so dirs no record lists are garbage;
   *  - resume: a segment the record lists is never rebuilt; a multi-batch
   *    build commits after every batch (its checkpoint);
   *  - shuffles: ONE wide exchange per batch (compressed runs -> segments),
@@ -78,9 +83,10 @@ object IndexBuilder {
   // The schema of every parquet table graft writes, exactly as Spark would
   // infer it from the files (columns nullable, segId the trailing
   // partition column). Every read of graft's own files passes its table's
-  // schema (readTable), so no read opens a footer or runs a one-task
-  // schema-inference job; StreamingIngestSpec checks each constant against
-  // a fresh inference, so a writer change cannot silently diverge.
+  // schema (readTable, readFiles), so no read opens a footer or runs a
+  // one-task schema-inference job; StreamingIngestSpec checks each
+  // constant against a fresh inference, so a writer change cannot silently
+  // diverge.
   private def table(cols: (String, DataType)*): StructType =
     StructType(cols.map { case (n, t) => StructField(n, t, nullable = true) })
   /** segments/segId=N: one posting-list row per (segment, term) */
@@ -96,13 +102,45 @@ object IndexBuilder {
   /** lexgrams/: 3-gram -> term */
   val LexgramsSchema: StructType = table("gram" -> StringType, "term" -> StringType)
 
-  /** One of graft's own tables, read with its known schema. A non-empty
-    * `segIds` narrows the read to those `segId=N` partition dirs of `root`
-    * (only they are listed); segId still comes from the directory names. */
-  private[graft] def readTable(spark: SparkSession, schema: StructType, root: String,
-                               segIds: Seq[Int] = Seq.empty): DataFrame =
-    spark.read.schema(schema).option("basePath", root)
-      .parquet((if (segIds.isEmpty) Seq(root) else segIds.map(id => s"$root/segId=$id")): _*)
+  /** A whole unpartitioned table (the lexicon, the gram sidecar), read
+    * with its known schema */
+  private[graft] def readTable(spark: SparkSession, schema: StructType, root: String): DataFrame =
+    spark.read.schema(schema).parquet(root)
+
+  /** A segment table's rows (SegmentsSchema or DocstatsSchema under
+    * `root`) from the files of the given segments, (segId, [(name, bytes)])
+    * as a commit record or a writer's listing of its staged dirs names
+    * them. The file index is seeded with exactly those files and their
+    * `segId` partition values, so building, planning and scanning the
+    * relation lists nothing and starts no discovery job; a listed file that
+    * is gone fails the read, naming the file. */
+  private[graft] def readFiles(spark: SparkSession, schema: StructType, root: String,
+                               segs: Seq[(Int, Seq[(String, Long)])]): DataFrame = {
+    val dirs = segs.collect { case (segId, files) if files.nonEmpty =>
+      val dir = new Path(s"$root/segId=$segId")
+      PartitionPath(InternalRow(segId), dir) ->
+        files.map { case (n, b) => new FileStatus(b, false, 1, b, 0L, new Path(dir, n)) }.toArray
+    }
+    val leafFiles = dirs.map { case (part, files) => part.path -> files }.toMap
+    val recorded = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leafFiles.get(path)
+      def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val (partCols, dataCols) = schema.partition(_.name == "segId")
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new InMemoryFileIndex(spark, dirs.map(_._1.path), Map.empty, Some(schema), recorded,
+        Some(PartitionSpec(StructType(partCols), dirs.map(_._1)))),
+      StructType(partCols), StructType(dataCols), None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** the posting / docstats rows of `segs`, from the files their record lines list */
+  private[graft] def segmentRows(spark: SparkSession, ix: String,
+                                 segs: Seq[SegmentManifest]): DataFrame =
+    readFiles(spark, SegmentsSchema, segmentsDir(ix), segs.map(m => m.segId -> m.files))
+  private[graft] def docstatsRows(spark: SparkSession, ix: String,
+                                  segs: Seq[SegmentManifest]): DataFrame =
+    readFiles(spark, DocstatsSchema, docstatsDir(ix), segs.map(m => m.segId -> m.docstats))
 
   /** Deterministic dense docIds (decision D1): global rank in
     * (repo, path, commit) order. Range-partitioned sort keeps it scalable;
@@ -470,27 +508,31 @@ object IndexBuilder {
           .write.mode(SaveMode.Overwrite).partitionBy("segId")
           .parquet(s"$staging/docstats"))
 
-      // per-segment posting metrics for the manifest, from the written files
-      val segAgg = postingMetrics(spark, s"$staging/segments")
+      // each staged segment's files, listed once for the record (a segment
+      // with postings has docs, so docAgg names it), and its posting metrics
+      val staged = batch.getOrElse(docAgg.keySet.toSeq).sorted.map { segId =>
+        (segId, listFiles(fs, s"$staging/segments/segId=$segId"),
+          listFiles(fs, s"$staging/docstats/segId=$segId"))
+      }
+      val segAgg = postingMetrics(spark, s"$staging/segments", staged.map(s => s._1 -> s._2))
 
       // promote staging -> final; the caller's record commit makes them live
-      val built = batch.getOrElse((segAgg.keySet ++ docAgg.keySet).toSeq).sorted.map { segId =>
+      val built = staged.map { case (segId, files, docstats) =>
         val (rowsN, bytesN, digest) = segAgg.getOrElse(segId, (0L, 0L, "0" * 32))
         val (docCount, lo, hi, rawLenSum) = docAgg.getOrElse(segId,
           (0L, segId.toLong * segSize, segId.toLong * segSize, 0L))
-        val files = listFiles(fs, s"$staging/segments/segId=$segId")
         promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
         promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
         SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source,
-          files = Some(files))
+          files, docstats)
       }
       fs.delete(new Path(staging), true)
       built
     } finally analyzed.unpersist()
   }
 
-  /** The parquet files of a segment dir as (name, bytes), sorted: one
-    * listing, which writers pay for the dir they staged so that readers
+  /** The parquet files of a staged segment dir as (name, bytes), sorted:
+    * one listing, which writers pay for the dir they staged so that readers
     * never list. A segment with no rows has no dir and no files. */
   private[graft] def listFiles(fs: FileSystem, dir: String): Seq[(String, Long)] = {
     val p = new Path(dir)
@@ -500,14 +542,16 @@ object IndexBuilder {
     }.sortBy(_._1)
   }
 
-  /** Per-segment posting metrics from written segment files:
+  /** Per-segment posting metrics from the segment files a writer just
+    * staged under `root` (segId -> its listed files):
     * segId -> (rows, bytes, digest). The digest is order-independent (XOR
     * of per-row sha256(term, df, maxTf, blocks) prefixes) so it witnesses
     * bit-determinism across parallelism levels; Merger recomputes the same
     * metrics for merged segments so the manifest contract survives
     * compaction. */
-  private[graft] def postingMetrics(spark: SparkSession,
-                                    path: String): Map[Int, (Long, Long, String)] = {
+  private[graft] def postingMetrics(spark: SparkSession, root: String,
+                                    files: Seq[(Int, Seq[(String, Long)])])
+      : Map[Int, (Long, Long, String)] = {
     import spark.implicits._
     // The per-row fold is an order-independent XOR, i.e. a commutative
     // associative monoid — so it runs as a per-PARTITION partial (guide
@@ -519,7 +563,7 @@ object IndexBuilder {
     // partial rows. Result is bit-identical (SparkIndexSpec asserts it
     // against an in-test reference fold; the cross-round index digest is
     // the standing witness).
-    readTable(spark, SegmentsSchema, path)
+    readFiles(spark, SegmentsSchema, root, files)
       // manifest metrics stay REAL-postings-only: the D14 pseudo rows are
       // derived data (a pure function of the segment's doc set), so
       // excluding them keeps digests comparable across format revisions
@@ -571,8 +615,8 @@ object IndexBuilder {
     * doc_frequency over its segments' own term tables): the base lexicon
     * records in `_covers.json` the build-layout cover ids whose stats it
     * holds. Live segments whose covers lie outside that set are the DELTA
-    * lexicon: their own (term, df, cf, maxTf) columns are read directly
-    * (`segmentLexicon`; `blocks` is never read, column pruning), so an
+    * lexicon: their own (term, df, cf, maxTf) columns are read from their
+    * recorded files (`segmentLexicon`; `blocks` is never read), so an
     * append writes no lexicon file at all. Readers fold base + delta
     * segments (Searcher.open); MERGE_SMALL / compact fold them into the
     * base (foldLexiconDeltas) BEFORE they merge, so a merged segment never
@@ -589,30 +633,23 @@ object IndexBuilder {
     * caller is about to commit) */
   private[graft] def writeLexiconOf(spark: SparkSession, fs: FileSystem, indexDir: String,
                                     live: Seq[SegmentManifest]): Unit = {
-    // segId-filtered: orphaned dirs a crashed merge left behind must not
-    // double-count into the global df
-    val segments = readTable(spark, SegmentsSchema, segmentsDir(indexDir))
-      .filter(col("segId").isin(live.map(_.segId): _*))
-    commitLexicon(spark, fs, indexDir, aggregateLexicon(lexiconRowsOf(segments)),
+    // the segments' recorded files only: dirs a crashed merge left behind
+    // are never read, so they cannot double-count into the global df
+    commitLexicon(spark, fs, indexDir, aggregateLexicon(segmentLexicon(spark, indexDir, live)),
       grams = None, live.flatMap(_.coverSet).toSet)
   }
 
-  /** The lexicon rows of a segments relation, read from each segment's own
-    * term stats (D14 pseudo rows excluded; `blocks` pruned away): one row
-    * per (segment, term) — aggregate with `aggregateLexicon`, or sum on the
-    * driver for a pruned lookup. */
-  private def lexiconRowsOf(segments: DataFrame): DataFrame =
-    segments.filter(col("term") >= graft.search.Q.RealTermMin)
+  /** The lexicon rows of the given segments, read from their recorded
+    * files (D14 pseudo rows excluded; `blocks` pruned away): one row per
+    * (segment, term) — aggregate with `aggregateLexicon`, or sum on the
+    * driver for a pruned lookup. `segs` are the delta lexicon (the live
+    * segments the base does not cover yet), or every live segment for a
+    * full rebuild. */
+  private[graft] def segmentLexicon(spark: SparkSession, indexDir: String,
+                                    segs: Seq[SegmentManifest]): DataFrame =
+    segmentRows(spark, indexDir, segs).filter(col("term") >= graft.search.Q.RealTermMin)
       .select(col("term"), col("df").cast("long").as("df"), col("cf"),
         col("maxTf").cast("long").as("maxTf"))
-
-  /** The delta lexicon: the lexicon rows of the given segments (the live
-    * ones the base does not cover yet), listing only their dirs */
-  private[graft] def segmentLexicon(spark: SparkSession, indexDir: String,
-                                    segIds: Seq[Int]): DataFrame =
-    if (segIds.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LexiconSchema)
-    else lexiconRowsOf(readTable(spark, SegmentsSchema, segmentsDir(indexDir), segIds))
 
   /** term -> summed df and cf, max maxTf ([W] whoosh TermInfo max_weight:
     * the driver-side query upper-bound input, Searcher.termStats) */
@@ -670,7 +707,7 @@ object IndexBuilder {
     val covered = lexiconCovers(fs, indexDir).getOrElse(return false)
     val deltas = lexiconDeltaSegments(live, covered)
     if (deltas.isEmpty) return false
-    val delta = segmentLexicon(spark, indexDir, deltas.map(_.segId))
+    val delta = segmentLexicon(spark, indexDir, deltas)
     val grams = readTable(spark, LexgramsSchema, lexgramsDir(indexDir))
       .unionByName(gramRowsOf(delta.select($"term").as[String]))
       .distinct()
@@ -743,7 +780,8 @@ object IndexBuilder {
   // Line 1 is the flat stats header; one manifest line per live segment
   // follows, sorted by segId, and the header's numSegments is their count.
   // A manifest line ends with the segment's parquet files, name and bytes,
-  // as its writer listed them ("files"): all readers need to find its rows.
+  // as its writer listed them: "files" (segments/) and "docstats"
+  // (docstats/). Every reader finds the segment's rows through them.
   // Every commit point (build batch, append, merge, compact,
   // Engine.createIndex) rewrites the whole record through commitRecord, so
   // the segment set and the counts readers score with change together.
@@ -753,8 +791,10 @@ object IndexBuilder {
        |"rawLenSum":${m.rawLenSum},"postingRows":${m.postingRows},"postingBytes":${m.postingBytes},
        |"digest":"${m.digest}","source":"${m.source}",
        |"covers":[${m.coverSet.mkString(",")}]""".stripMargin.replace("\n", "") +
-      m.files.fold("")(_.map { case (n, b) => s"""{"name":"$n","bytes":$b}""" }
-        .mkString(""","files":[""", ",", "]")) + "}"
+      Seq("files" -> m.files, "docstats" -> m.docstats).map { case (key, files) =>
+        files.map { case (n, b) => s"""{"name":"$n","bytes":$b}""" }
+          .mkString(s""","$key":[""", ",", "]")
+      }.mkString + "}"
 
   /** Commit `segments` (every live segment, promoted already) with the
     * counts of `st` as the index's record: written to a tmp file, then
@@ -810,18 +850,17 @@ object IndexBuilder {
     def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     def s(k: String): String = requiredField(json, path, k, "\"([^\"]*)\"")
     val segId = l("segId").toInt
+    def files(k: String): Seq[(String, Long)] =
+      """\{"name":"([^"]*)","bytes":(\d+)\}""".r
+        .findAllMatchIn(requiredField(json, path, k, "\\[([^\\]]*)\\]"))
+        .map(f => f.group(1) -> f.group(2).toLong).toSeq
     // fields parse in record order, so a truncated line names its first
     // missing key
-    val m = SegmentManifest(segId, l("docLo"), l("docHi"), l("docCount"),
-      l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"))
-    val covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
-      .split(',').toSeq.filter(_.nonEmpty).map(_.toInt)
-    // the file list is optional: a line without it (or with the older
-    // "files" count) is read by listing its segment's dir
-    val files = """"files":\[([^\]]*)\]""".r.findFirstMatchIn(json).map(l =>
-      """\{"name":"([^"]*)","bytes":(\d+)\}""".r.findAllMatchIn(l.group(1))
-        .map(f => f.group(1) -> f.group(2).toLong).toSeq)
-    m.copy(covers = if (covers.isEmpty) Seq(segId) else covers, files = files)
+    SegmentManifest(segId, l("docLo"), l("docHi"), l("docCount"),
+      l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"),
+      covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
+        .split(',').toSeq.filter(_.nonEmpty).map(_.toInt),
+      files = files("files"), docstats = files("docstats"))
   }
 
   private def parseStats(json: String, path: String): IndexStats = {
@@ -876,10 +915,7 @@ object IndexBuilder {
   private[graft] def promoteDir(fs: FileSystem, from: String, to: String): Unit = {
     val src = new Path(from)
     val dst = new Path(to)
-    if (!fs.exists(src)) {
-      fs.mkdirs(dst) // empty segment (no docs in range): still committed
-      return
-    }
+    if (!fs.exists(src)) return // an empty segment has no files: nothing to read
     val parent = dst.getParent
     if (!fs.exists(parent)) fs.mkdirs(parent)
     if (fs.exists(dst)) {

@@ -74,26 +74,19 @@ object Merger {
     val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
     // GC crash leftovers BEFORE picking the target id: a crash between
     // promote and record commit leaves segId dirs no record lists — a
-    // rerun recomputes the same target (max live segId + 1). Readers trust
-    // the record only, so any segments/docstats dir it does not list is
-    // garbage (this also sweeps the group dirs a crash after the commit
-    // left, which would otherwise double-count into the next lexicon
-    // rebuild).
+    // rerun recomputes the same target (max live segId + 1). Readers open
+    // only recorded files, so this sweep only frees disk.
     gcOrphanDirs(fs, indexDir, live.map(_.segId).toSet)
-    val target = live.map(_.segId).max + 1
+    val targetId = live.map(_.segId).max + 1
     val manifests = live.filter(m => sorted.contains(m.segId))
     require(manifests.size == sorted.size, s"missing segments for $sorted")
 
     // tombstones ride as a broadcast SORTED ARRAY probed by binary search
     // (exactly like the query kernel) — never as Catalyst literals: a full
     // compaction of a heavily-deleted index can carry 10^5-10^6 ids, and an
-    // `isin` of that many literals bloats the plan toward driver OOM
-    val delB = spark.sparkContext.broadcast {
-      val a = deletes.toArray
-      java.util.Arrays.sort(a)
-      a
-    }
-    val targetId = target
+    // `isin` of that many literals bloats the plan toward driver OOM. Only
+    // a purge broadcasts, and destroys it once the writes are done.
+    val delB = Option.when(deletes.nonEmpty)(spark.sparkContext.broadcast(deletes.toArray.sorted))
 
     // concatenation order = docId order = the segments' docLo order. With
     // fresh merge segIds this is NOT segId order: a second-level merge can
@@ -114,10 +107,11 @@ object Merger {
     val mergeRuns: (String, Seq[SegRead]) => Option[SegRow] = (term, runs) => {
       // concatenate in docLo order (== docId order); re-encode; drop deletes
       val ordered = runs.sortBy(r => docLoRank(r.segId))
-      val dels = delB.value
       val it = ordered.iterator.flatMap(r => PostingsCodec.decodeIterator(r.blocks))
-        .filterNot(p => java.util.Arrays.binarySearch(dels, p.docId) >= 0)
-      val enc = PostingsCodec.encode(it)
+      val enc = PostingsCodec.encode(delB.fold(it) { b =>
+        val dels = b.value
+        it.filterNot(p => java.util.Arrays.binarySearch(dels, p.docId) >= 0)
+      })
       if (enc.df == 0) None
       else Some(SegRow(targetId, term, enc.df, enc.maxTf, enc.cf, enc.bytes))
     }
@@ -127,11 +121,13 @@ object Merger {
     fs.delete(new Path(staging), true)
     fs.delete(new Path(dsStaging), true)
     val purgedCounts =
-      if (tail) {
-        writeTail(spark, fs, indexDir, sorted, targetId, mergeRuns, staging, dsStaging)
-        None
-      } else writeCogroup(spark, indexDir, sorted, targetId, mergeRuns, staging, dsStaging,
-        deletes, delB)
+      try {
+        if (tail) {
+          writeTail(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging)
+          None
+        } else writeCogroup(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
+          delB)
+      } finally delB.foreach(_.destroy())
     // one count rule for both shapes: a merge that purges nothing keeps
     // every member doc, so the members' line sums are the merged counts
     val (mergedDocCount, mergedRawLen) = purgedCounts.getOrElse(
@@ -140,12 +136,13 @@ object Merger {
     // real metrics for the merged manifest — same digest/row/byte contract
     // as a fresh build (BASELINE.json "per-partition lineage and
     // row-count/sha256 metrics" must survive compaction) — and the files
-    // the merge wrote. A fully-tombstoned group writes no files at all —
-    // empty metrics.
+    // the merge staged, listed once for the record. A fully-tombstoned
+    // group writes no files at all — empty metrics.
     val files = IndexBuilder.listFiles(fs, s"$staging/segId=$targetId")
+    val docstats = IndexBuilder.listFiles(fs, s"$dsStaging/segId=$targetId")
     val (postRows, postBytes, digest) =
       if (files.isEmpty) (0L, 0L, "0" * 32)
-      else IndexBuilder.postingMetrics(spark, staging)
+      else IndexBuilder.postingMetrics(spark, staging, Seq(targetId -> files))
         .getOrElse(targetId, (0L, 0L, "0" * 32))
 
     // 1. promote into place under the fresh segId (a group whose docs were
@@ -168,7 +165,7 @@ object Merger {
       digest = digest,
       source = s"merge(${sorted.mkString(",")})",
       covers = manifests.flatMap(_.coverSet).distinct.sorted,
-      files = Some(files))
+      files = files, docstats = docstats)
     IndexBuilder.commitRecord(fs, indexDir, st,
       live.filterNot(l => sorted.contains(l.segId)) :+ m)
 
@@ -184,16 +181,16 @@ object Merger {
     * write `max(2, group.size)` term-range files under `staging/segId=N`;
     * the docstats sidecars are re-keyed under the fresh segId (the sidecar
     * is keyed by docId; segId is only physical placement) minus the purged
-    * docs. Returns the merged (docCount, rawLenSum) when it purged deletes
-    * (one count job over the kept docstats), else None. */
-  private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[Int],
+    * docs (`delB`). Returns the merged (docCount, rawLenSum) when it purged
+    * deletes (one count job over the kept docstats), else None. */
+  private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[SegmentManifest],
                            targetId: Int, mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
-                           staging: String, dsStaging: String, deletes: Set[Long],
-                           delB: org.apache.spark.broadcast.Broadcast[Array[Long]]): Option[(Long, Long)] = {
+                           staging: String, dsStaging: String,
+                           delB: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]])
+      : Option[(Long, Long)] = {
     import spark.implicits._
-    val segs = group.map { id =>
-      IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
-          IndexBuilder.segmentsDir(indexDir), Seq(id))
+    val segs = group.map { m =>
+      IndexBuilder.segmentRows(spark, indexDir, Seq(m))
         .select($"term", $"df", $"maxTf", $"blocks", $"segId")
         .as[SegRead]
     }
@@ -212,19 +209,17 @@ object Merger {
       .sortWithinPartitions("term")
       .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(staging)
 
-    val docstats = IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
-      IndexBuilder.docstatsDir(indexDir), group)
-    val filtered = if (deletes.isEmpty) docstats
-      else {
-        // same broadcast binary-search probe as mergeRuns (bounded by the
-        // group's ranges but NOT by literal-count — see delB note above)
-        val docIdIdx = docstats.schema.fieldIndex("docId")
-        docstats.filter((r: org.apache.spark.sql.Row) =>
-          java.util.Arrays.binarySearch(delB.value, r.getLong(docIdIdx)) < 0)
-      }
+    val docstats = IndexBuilder.docstatsRows(spark, indexDir, group)
+    // same broadcast binary-search probe as mergeRuns (bounded by the
+    // group's ranges but NOT by literal-count — see delB note above)
+    val filtered = delB.fold(docstats) { b =>
+      val docIdIdx = docstats.schema.fieldIndex("docId")
+      docstats.filter((r: org.apache.spark.sql.Row) =>
+        java.util.Arrays.binarySearch(b.value, r.getLong(docIdIdx)) < 0)
+    }
     filtered.withColumn("segId", lit(targetId))
       .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
-    Option.when(deletes.nonEmpty) {
+    Option.when(delB.nonEmpty) {
       val r = filtered.agg(count(lit(1)), sum($"rawLen")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
@@ -236,48 +231,38 @@ object Merger {
     * file with one row group lands in `staging/segId=N`. The docstats
     * sidecars are coalesced into one docId-sorted file the same way, in a
     * concurrent job. */
-  private def writeTail(spark: SparkSession, fs: FileSystem, indexDir: String,
-                        group: Seq[Int], targetId: Int,
+  private def writeTail(spark: SparkSession, indexDir: String,
+                        group: Seq[SegmentManifest], targetId: Int,
                         mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
                         staging: String, dsStaging: String): Unit = {
     import spark.implicits._
-    // one file per segment dir, like a build's partitioned write (no
-    // per-dir `_SUCCESS` marker)
-    def writeOne(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
-      df.write.mode(SaveMode.Overwrite).parquet(dir)
-      fs.delete(new Path(dir, "_SUCCESS"), false)
-      ()
-    }
     IndexBuilder.concurrently("graft-merge-docstats")(
-      writeOne(
-        IndexBuilder.readTable(spark, IndexBuilder.SegmentsSchema,
-            IndexBuilder.segmentsDir(indexDir), group)
-          .select($"term", $"df", $"maxTf", $"blocks", $"segId").as[SegRead]
-          .coalesce(1)
-          .sortWithinPartitions("term")
-          .mapPartitions { it =>
-            val rows = it.buffered
-            Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
-              val term = r.head.term
-              val run = scala.collection.mutable.ArrayBuffer.empty[SegRead]
-              while (r.hasNext && r.head.term == term) run += r.next()
-              mergeRuns(term, run.toSeq)
-            }
+      IndexBuilder.segmentRows(spark, indexDir, group)
+        .select($"term", $"df", $"maxTf", $"blocks", $"segId").as[SegRead]
+        .coalesce(1)
+        .sortWithinPartitions("term")
+        .mapPartitions { it =>
+          val rows = it.buffered
+          Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
+            val term = r.head.term
+            val run = scala.collection.mutable.ArrayBuffer.empty[SegRead]
+            while (r.hasNext && r.head.term == term) run += r.next()
+            mergeRuns(term, run.toSeq)
           }
-          .drop("segId"),
-        s"$staging/segId=$targetId"),
-      writeOne(
-        IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
-            IndexBuilder.docstatsDir(indexDir), group)
-          .drop("segId")
-          .coalesce(1)
-          .sortWithinPartitions("docId"),
-        s"$dsStaging/segId=$targetId"))
+        }
+        .drop("segId")
+        .write.mode(SaveMode.Overwrite).parquet(s"$staging/segId=$targetId"),
+      IndexBuilder.docstatsRows(spark, indexDir, group)
+        .drop("segId")
+        .coalesce(1)
+        .sortWithinPartitions("docId")
+        .write.mode(SaveMode.Overwrite).parquet(s"$dsStaging/segId=$targetId"))
     ()
   }
 
   /** delete segments/docstats `segId=N` dirs whose N the record does not
-    * list (single-writer assumption: no build or merge runs concurrently) */
+    * list (single-writer assumption: no build or merge runs concurrently):
+    * the one code that lists these dirs, freeing disk no reader reads */
   private[graft] def gcOrphanDirs(fs: FileSystem, indexDir: String,
                                   live: Set[Int]): Unit = {
     Seq(IndexBuilder.segmentsDir(indexDir), IndexBuilder.docstatsDir(indexDir))

@@ -57,16 +57,16 @@ final case class LexRow(term: String, df: Long, cf: Long, maxTf: Long)
   * ranges. `source` names the writer: the build's IndexConfig.source, or
   * `merge(a,b,...)` with the group a merge replaced.
   *
-  * `files` = the segment's parquet files (name in the segment dir, bytes)
-  * as its writer listed them. Readers read exactly these (Searcher) and
-  * never list the dir; a line without them (written before writers
-  * recorded them) is read by listing that one segment's dir. */
+  * `files` / `docstats` = the segment's parquet files (name, bytes) in its
+  * segments/ and docstats/ dirs, as its writer listed them when it staged
+  * them: every reader finds the segment's rows through these lists. */
 final case class SegmentManifest(segId: Int, docLo: Long, docHi: Long,
                                  docCount: Long, rawLenSum: Long,
                                  postingRows: Long, postingBytes: Long,
                                  digest: String, source: String,
-                                 covers: Seq[Int] = Seq.empty,
-                                 files: Option[Seq[(String, Long)]] = None) {
+                                 files: Seq[(String, Long)],
+                                 docstats: Seq[(String, Long)],
+                                 covers: Seq[Int] = Seq.empty) {
   def coverSet: Seq[Int] = if (covers.isEmpty) Seq(segId) else covers
 }
 
@@ -88,6 +88,9 @@ object IndexStats {
     * reader would not count, so it must be rebuilt);
     * 9 = one commit record: stats.json lists the live segments after its
     * header, and the per-segment manifests/ dir and the toc.json cache are
-    * gone (a v8 index keeps its segment set in files this reader ignores). */
-  final val CurrentFormat = 9
+    * gone (a v8 index keeps its segment set in files this reader ignores);
+    * 10 = every segment line lists its posting and docstats files, and
+    * readers find the rows through those lists only (a v9 line may lack
+    * them, and nothing lists a segment dir to make up for it). */
+  final val CurrentFormat = 10
 }

@@ -166,7 +166,7 @@ object Highlight {
       QueryRewrite.expandPrefixes(q0, mq => Searcher.scanMulti(spark, handle, mq))
     else q0
     val terms = q.positiveTerms
-    val keys = Searcher.liveDocstats(spark, handle)
+    val keys = handle.docstats
       .filter(col("docId").isin(docIds: _*))
       .select("docId", "repo", "path", "commit")
     val fLocal = fragmenter

@@ -70,7 +70,7 @@ object KeyTerms {
               corpus: Dataset[CorpusRow], docIds: Dataset[java.lang.Long],
               numTerms: Int): DataFrame = {
     import spark.implicits._
-    val keys = Searcher.liveDocstats(spark, handle)
+    val keys = handle.docstats
       .join(docIds.toDF("docId"), Seq("docId"))
       .select("repo", "path", "commit")
     val chain = handle.chain
@@ -91,7 +91,7 @@ object KeyTerms {
     import spark.implicits._
     require(docIds.size <= 100000,
       "driver-held id list too large - pass a Dataset[java.lang.Long] instead")
-    val keys = Searcher.liveDocstats(spark, handle)
+    val keys = handle.docstats
       .filter(col("docId").isin(docIds: _*))
       .select("repo", "path", "commit")
     val chain = handle.chain
@@ -128,7 +128,7 @@ object KeyTerms {
                         corpus: Dataset[CorpusRow], docId: Long,
                         numTerms: Int = 5): Q = {
     import spark.implicits._
-    val keys = Searcher.liveDocstats(spark, handle)
+    val keys = handle.docstats
       .filter(col("docId") === docId)
       .select("repo", "path", "commit")
     val texts = corpus.toDF()

@@ -2,15 +2,16 @@ package graft.search
 
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession, sources}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, sources}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.build.IndexBuilder
-import graft.model.LexRow
+import graft.model.{LexRow, SegmentManifest}
 
 /** Distributed BM25 top-k search over the segmented index (SURVEY.md §3.2).
   *
@@ -44,8 +45,9 @@ object Searcher {
 
   final case class SearchHit(docId: Long, score: Double)
 
-  /** Opened once per index: corpus stats and each live segment's files
-    * from the commit record, the lexicon relations, the deletion-sidecar
+  /** Opened once per index: corpus stats and the live segments with their
+    * files (`manifests`) from the commit record, the lexicon relations, the
+    * relations over those files (built once, on first use), the deletion-sidecar
     * map (S6 — segId -> tombstone range files; the tombstones themselves
     * are loaded per segment INSIDE the kernel, never collected to the
     * driver), and a df memo (the index is immutable under a handle).
@@ -58,34 +60,31 @@ object Searcher {
     * (multiterm expansion, suggest, key terms, reader stats). With no
     * deltas all three are the bare base scan.
     *
-    * SNAPSHOT SEMANTICS: a handle pins the segment files that existed at
-    * open time. Merge/compaction REPLACES segment files, so a query through
-    * a pre-compaction handle fails with an error that names the missing
-    * file and asks for a reopen (the reference behaves the same: searchers
+    * SNAPSHOT SEMANTICS: a handle pins the segment and docstats files that
+    * existed at open time. Merge/compaction REPLACES them, so a query,
+    * lookup or facet through a pre-compaction handle fails with an error
+    * that names the missing file (the reference behaves the same: searchers
     * are reopened after optimize). At cluster scale, leave superseded
     * segment files in place until readers drain before GC'ing them. */
   final class IndexHandle(val indexDir: String, val stats: BM25.CorpusStats,
                           val segSize: Int,
-                          /** live segId -> its files (absolute path, bytes) */
-                          val segmentFiles: Seq[(Int, Seq[(String, Long)])],
+                          /** the record's live segments, with their files */
+                          val manifests: Seq[SegmentManifest],
                           val lexiconBase: DataFrame,
                           val delRanges: Map[Int, Seq[Long]],
                           val chain: graft.analysis.Chain = graft.analysis.Chain.Standard,
                           val lexgrams: Option[DataFrame] = None,
                           val lexDelta: Option[DataFrame] = None) {
     def hasDeletes: Boolean = delRanges.nonEmpty
-    val liveSegIds: Seq[Int] = segmentFiles.map(_._1)
+    val liveSegIds: Seq[Int] = manifests.map(_.segId)
     /** every query runs with no exchange below the kernel (one path) */
     val segColocated: Boolean = true
-    /** the live segments' posting rows as a relation over the recorded
-      * files (tools and measurement; queries read through perSegment) */
-    lazy val segments: DataFrame = {
-      val (spark, paths) = (lexiconBase.sparkSession, segmentFiles.flatMap(_._2.map(_._1)))
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], IndexBuilder.SegmentsSchema)
-      else spark.read.schema(IndexBuilder.SegmentsSchema)
-        .option("basePath", IndexBuilder.segmentsDir(indexDir)).parquet(paths: _*)
-    }
+    /** posting rows (tools and measurement; queries read via perSegment) */
+    lazy val segments: DataFrame =
+      IndexBuilder.segmentRows(lexiconBase.sparkSession, indexDir, manifests)
+    /** docstats rows: every stored-field lookup, facet and sort key */
+    lazy val docstats: DataFrame =
+      IndexBuilder.docstatsRows(lexiconBase.sparkSession, indexDir, manifests)
     val lexiconRows: DataFrame = lexDelta.fold(lexiconBase)(lexiconBase.unionByName(_))
     val lexicon: DataFrame =
       if (lexDelta.isEmpty) lexiconBase else IndexBuilder.aggregateLexicon(lexiconRows)
@@ -94,16 +93,14 @@ object Searcher {
 
   /** Open an index from its commit record: stats, live segments and their
     * files come from ONE read of stats.json; open writes nothing, lists no
-    * segment dir and reads no segment file (a corrupt one fails only the
-    * queries that read it), and it starts no Spark job. */
+    * segment dir (appended ones add no FS call) and reads no segment file (a
+    * corrupt one fails only the queries that read it), and starts no job. */
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     // Fail FAST on a foreign layout (round-5 advice): an older index would
-    // silently answer wrong (a v8 one keeps its segment set in files this
-    // reader ignores), so it asks for a rebuild. A crashed merge or append
-    // can leave segment dirs no record lists (GC'd by the next merge) —
-    // readers trust only the record's segments and files.
+    // silently answer wrong (a v9 line may not list its files, which this
+    // reader never looks for elsewhere), so it asks for a rebuild.
     val (st, manifests) = IndexBuilder.readCurrentRecord(fs, indexDir)
     // deletes: one listing; per-segment sidecars resolve through the
     // manifest's build-layout `covers` so tombstones stay addressable after
@@ -121,7 +118,7 @@ object Searcher {
       else None
     // LSM lexicon: the base plus the term stats of the live segments its
     // `_covers.json` does not name (appended since the last fold), read
-    // straight from those segments (IndexBuilder.segmentLexicon); an index
+    // from their recorded files (IndexBuilder.segmentLexicon); an index
     // with no segments yet (Engine.createIndex) gets an empty relation
     val (lexiconBase, lexDelta) =
       if (manifests.isEmpty) {
@@ -133,23 +130,15 @@ object Searcher {
         val covered = IndexBuilder.lexiconCovers(fs, indexDir).getOrElse(
           throw new IllegalStateException(s"index at $indexDir has segments but no " +
             "lexicon: an unfinished build — rerun IndexBuilder.build to finish it"))
-        val deltas = IndexBuilder.lexiconDeltaSegments(manifests, covered).map(_.segId)
+        val deltas = IndexBuilder.lexiconDeltaSegments(manifests, covered)
         (IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema,
           IndexBuilder.lexiconDir(indexDir)),
           Option.when(deltas.nonEmpty)(IndexBuilder.segmentLexicon(spark, indexDir, deltas)))
       }
     new IndexHandle(indexDir, BM25.CorpusStats(st.numDocs, st.totalFieldLen),
-      st.segSize, manifests.map { m =>
-        // a line written before writers recorded the files: list its dir
-        val dir = s"${IndexBuilder.segmentsDir(indexDir)}/segId=${m.segId}"
-        m.segId -> m.files.getOrElse(IndexBuilder.listFiles(fs, dir))
-          .map { case (n, b) => s"$dir/$n" -> b }
-      },
-      lexiconBase,
-      delRanges,
+      st.segSize, manifests, lexiconBase, delRanges,
       new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(st.analyzer)),
-      lexgrams,
-      lexDelta)
+      lexgrams, lexDelta)
   }
 
   /** Multiterm expansion against the global lexicon: matching terms in
@@ -380,19 +369,19 @@ object Searcher {
 
   /** Executor-side tombstone probe for one segment: loads only the range
     * sidecars the segment's manifest covers (each bounded by segSize
-    * entries) — no tombstone set ever rides the driver or a closure. */
-  private def tombstoneProbe(delRanges: Map[Int, Seq[Long]],
+    * entries), opened through the session's Hadoop conf — no tombstone set
+    * ever rides the driver or a closure. None: the index has no deletes. */
+  private def tombstoneProbe(deletes: Option[(Map[Int, Seq[Long]], SerializableConfiguration)],
                              indexDir: String, segId: Int): Long => Boolean =
-    delRanges.get(segId) match {
-      case None => Kernel.NoDeletes
-      case Some(rids) =>
-        val fs = FileSystem.get(new java.net.URI(indexDir),
-          new org.apache.hadoop.conf.Configuration())
+    deletes.flatMap { case (delRanges, conf) =>
+      delRanges.get(segId).map { rids =>
+        val fs = FileSystem.get(new java.net.URI(indexDir), conf.value)
         val tomb: Array[Long] = rids.iterator
           .flatMap(graft.build.Deletes.readRange(fs, indexDir, _)).toArray
         java.util.Arrays.sort(tomb)
-        id => java.util.Arrays.binarySearch(tomb, id) >= 0
-    }
+        (id: Long) => java.util.Arrays.binarySearch(tomb, id) >= 0
+      }
+    }.getOrElse(Kernel.NoDeletes)
 
   /** The per-segment runner, the one place a query meets the segments.
     *
@@ -433,7 +422,8 @@ object Searcher {
         StructType(fileSchema.filter(_.name != "cf")),
         Seq(sources.In("term", reads.values.flatten.toSet.toArray[Any])),
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
-    val delRanges = fs.defaultHandle.delRanges
+    val deletes = Some(fs.defaultHandle.delRanges).filter(_.nonEmpty)
+      .map(_ -> new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val dirLocal = fs.defaultHandle.indexDir
     implicit val tag: scala.reflect.ClassTag[T] = implicitly[org.apache.spark.sql.Encoder[T]].clsTag
     spark.createDataset(spark.sparkContext.parallelize(groups, groups.size)
@@ -459,19 +449,20 @@ object Searcher {
           }
         }
         if (lists.isEmpty) Iterator.empty
-        else f(lists.toMap, tombstoneProbe(delRanges, dirLocal, segId))
+        else f(lists.toMap, tombstoneProbe(deletes, dirLocal, segId))
       }))
   }
 
   /** The tasks of a query that reads the given (field, handle)s: whole
-    * segments, each with its (field, file, bytes) over the fields, packed
-    * largest-first by bytes into at most `defaultParallelism` groups (each
-    * into the one with the fewest bytes so far), segId order within one. */
+    * segments, each with its recorded (field, file, bytes) over the fields,
+    * packed largest-first by bytes into at most `defaultParallelism` groups
+    * (each into the one with the fewest bytes so far), segId order within. */
   private[graft] def segmentGroups(spark: SparkSession, handles: Seq[(String, IndexHandle)])
       : Seq[Seq[(Int, Seq[(String, String, Long)])]] = {
     val segs = handles.flatMap { case (field, h) =>
-      h.segmentFiles.flatMap { case (segId, files) =>
-        files.map { case (path, bytes) => segId -> ((field, path, bytes)) }
+      h.manifests.flatMap { m =>
+        val dir = s"${IndexBuilder.segmentsDir(h.indexDir)}/segId=${m.segId}"
+        m.files.map { case (name, bytes) => m.segId -> ((field, s"$dir/$name", bytes)) }
       }
     }.groupMap(_._1)(_._2).toSeq
     val slots = math.min(segs.size, spark.sparkContext.defaultParallelism)
@@ -533,7 +524,7 @@ object Searcher {
                       weighting: Weighting = BM25Weighting): DataFrame = {
     import spark.implicits._
     val hits = scoredMatches(spark, handle, query, weighting).toDF()
-    val joined = liveDocstats(spark, handle)
+    val joined = handle.docstats
       .select(col("docId"), col(field))
       .join(hits, Seq("docId"))
     val w = org.apache.spark.sql.expressions.Window
@@ -703,13 +694,8 @@ object Searcher {
     * Same scale shape as facetCounts: kernel match pass, one docId
     * equi-join against docstats, one aggregation; content never read. */
   def facetCountsExpr(spark: SparkSession, handle: IndexHandle, query: String,
-                      key: org.apache.spark.sql.Column, name: String): DataFrame = {
-    val ids = matchingIds(spark, handle, query).toDF("docId")
-    liveDocstats(spark, handle)
-      .join(ids, Seq("docId"))
-      .groupBy(key.as(name))
-      .agg(count(lit(1)).as("count"))
-  }
+                      key: org.apache.spark.sql.Column, name: String): DataFrame =
+    countMatchesBy(spark, handle, query, Seq(key.as(name)))
 
   /** RangeFacet ([W] whoosh/sorting.py RangeFacet(field, start, end, gap)):
     * numeric binning — matches with field value in [start, end) counted
@@ -718,14 +704,10 @@ object Searcher {
                        field: String, start: Double, end: Double,
                        gap: Double): DataFrame = {
     require(gap > 0 && end > start, s"bad range facet: [$start, $end) gap $gap")
-    val ids = matchingIds(spark, handle, query).toDF("docId")
     val v = col(field).cast("double")
-    liveDocstats(spark, handle)
-      .join(ids, Seq("docId"))
-      .filter(v >= start && v < end)
-      .groupBy((floor((v - lit(start)) / lit(gap)) * lit(gap) + lit(start))
-        .as(s"${field}_lo"))
-      .agg(count(lit(1)).as("count"))
+    countMatchesBy(spark, handle, query,
+      Seq((floor((v - lit(start)) / lit(gap)) * lit(gap) + lit(start)).as(s"${field}_lo")),
+      v >= start && v < end)
   }
 
   /** MultiFacet ([W] whoosh/sorting.py MultiFacet): compound facet key —
@@ -733,12 +715,19 @@ object Searcher {
   def facetCountsMulti(spark: SparkSession, handle: IndexHandle, query: String,
                        fields: Seq[String]): DataFrame = {
     require(fields.nonEmpty)
-    val ids = matchingIds(spark, handle, query).toDF("docId")
-    liveDocstats(spark, handle)
-      .join(ids, Seq("docId"))
-      .groupBy(fields.map(col): _*)
-      .agg(count(lit(1)).as("count"))
+    countMatchesBy(spark, handle, query, fields.map(col))
   }
+
+  /** the one facet-count body: every match of `query` joined on docId with
+    * docstats, the rows `where` keeps counted per value of `keys` */
+  private def countMatchesBy(spark: SparkSession, handle: IndexHandle, query: String,
+                             keys: Seq[org.apache.spark.sql.Column],
+                             where: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    handle.docstats
+      .join(matchingIds(spark, handle, query).toDF("docId"), Seq("docId"))
+      .filter(where)
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("count"))
 
   /** Combined groupedby + sortedby in ONE pass ([W] whoosh search supports
     * facets and sort keys on the same call — round-5 verdict item 5; the
@@ -779,7 +768,7 @@ object Searcher {
     // it the static planner broadcast-collected the docstats side on every
     // call (measured +~250 ms per faceted query once the r6 exchange-free
     // kernel removed the shuffle AQE used to re-plan around).
-    val matches = liveDocstats(spark, handle)
+    val matches = handle.docstats
       .select(col("docId") +: need: _*)
       .join(hitsDf.repartition(col("docId")), Seq("docId"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -802,22 +791,12 @@ object Searcher {
     require(keys.nonEmpty)
     val ids = matchingIds(spark, handle, query).toDF("docId")
     val order = keys.map { case (f, asc) => if (asc) col(f).asc else col(f).desc }
-    liveDocstats(spark, handle)
+    handle.docstats
       .join(ids, Seq("docId"))
       .select(col("docId") +: keys.map(kf => col(kf._1)): _*)
       .orderBy(order :+ col("docId").asc: _*)
       .limit(k)
   }
-
-  /** the docstats sidecar restricted to the record's live segments: a
-    * crashed merge can leave segId dirs behind until the next GC, and an
-    * unfiltered read would double-count their docs (the segments are read
-    * only from the files the record lists) */
-  private[search] def liveDocstats(spark: SparkSession,
-                                   handle: IndexHandle): DataFrame =
-    IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
-        IndexBuilder.docstatsDir(handle.indexDir))
-      .filter(col("segId").isin(handle.liveSegIds: _*))
 
   /** S4 as an API: the reference's `get_document(id)` point lookup —
     * stored fields for explicit docIds. One pruned docstats scan: the
@@ -838,7 +817,7 @@ object Searcher {
           rangeIds.filter(id => java.util.Arrays.binarySearch(tomb, id) < 0)
         }.toSeq
       }
-    liveDocstats(spark, handle)
+    handle.docstats
       .select("docId", "repo", "path", "commit", "lang", "sha", "rawLen")
       .filter(col("docId").isin(live: _*))
   }
@@ -848,7 +827,7 @@ object Searcher {
   def searchWithFields(spark: SparkSession, handle: IndexHandle, query: String,
                        k: Int = 10): DataFrame = {
     val hits = search(spark, handle, query, k).toDF()
-    val docstats = liveDocstats(spark, handle)
+    val docstats = handle.docstats
       .select("docId", "repo", "path", "commit", "lang", "sha")
     docstats.join(broadcast(hits), Seq("docId"), "inner")
       .orderBy(col("score").desc, col("docId").asc)

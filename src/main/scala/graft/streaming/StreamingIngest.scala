@@ -31,7 +31,7 @@ import graft.model.{CorpusRow, IndexStats}
   * (stats.json): the whole batch becomes visible at once, or none of it.
   * The small segments appends leave are merged by MERGE_SMALL's
   * single-task tail merge, which first folds the deltas into the base
-  * lexicon and keeps the segments in the exchange-free query layout.
+  * lexicon.
   */
 object StreamingIngest {
 
@@ -96,23 +96,14 @@ object StreamingIngest {
              cfg: IndexConfig = IndexConfig()): IndexStats = {
     import spark.implicits._
     val keys = batch.select($"repo", $"path", $"commit").distinct()
-    // live-segment filter (same defense as every docstats consumer): a
-    // crashed merge or append can leave segId dirs no record lists until
-    // GC, and an unfiltered key lookup would return their docIds too.
-    // readManifests refuses a foreign format before the tombstones are
-    // written.
-    val fsUp = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
-    val liveSegs = IndexBuilder.readManifests(fsUp, indexDir).map(_.segId)
-    // a created-but-empty index has no docstats yet: nothing to replace
-    val existing =
-      if (liveSegs.isEmpty) Array.empty[Long]
-      else IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema,
-          IndexBuilder.docstatsDir(indexDir))
-        .filter($"segId".isin(liveSegs: _*))
-        .select($"docId", $"repo", $"path", $"commit")
-        .join(org.apache.spark.sql.functions.broadcast(keys), Seq("repo", "path", "commit"))
-        .select($"docId").as[Long].collect()
+    // the live segments' recorded docstats files only (readManifests
+    // refuses a foreign format before the tombstones are written)
+    val live = IndexBuilder.readManifests(FileSystem.get(new java.net.URI(indexDir),
+      spark.sparkContext.hadoopConfiguration), indexDir)
+    val existing = IndexBuilder.docstatsRows(spark, indexDir, live)
+      .select($"docId", $"repo", $"path", $"commit")
+      .join(org.apache.spark.sql.functions.broadcast(keys), Seq("repo", "path", "commit"))
+      .select($"docId").as[Long].collect()
     if (existing.nonEmpty) graft.build.Deletes.add(spark, indexDir, existing.toSeq)
     append(spark, batch, indexDir, cfg)
   }

@@ -779,7 +779,7 @@ class SparkIndexSpec extends AnyFunSuite {
     // compaction writes term-range files: one segment of >= 2 files
     Merger.compact(spark, dir)
     val compacted = IndexBuilder.readManifests(fsOf(dir), dir)
-    assert(compacted.size == 1 && compacted.head.files.exists(_.size >= 2), compacted)
+    assert(compacted.size == 1 && compacted.head.files.size >= 2, compacted)
     assert(single("compact", docs) == merged)
     // two fields, each its own index of the same text (segIds align, like
     // the benchmark's composed handle): a query over both reads both
@@ -806,6 +806,21 @@ class SparkIndexSpec extends AnyFunSuite {
     Merger.compact(spark, dir)
     val e = intercept[Exception](Searcher.search(spark, stale, "w0001", 10).collect())
     assert(e.getMessage.contains("reopen") && e.getMessage.contains("segment "), e.getMessage)
+    // the docstats readers fail too, naming a file the compaction removed,
+    // instead of answering from the files that are left
+    val gone = stale.manifests.flatMap(m => m.files ++ m.docstats).map(_._1)
+    def failsNamingAGoneFile(read: => Any): Unit = {
+      val err = intercept[Exception](read)
+      val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString("\n")
+      assert(gone.exists(msgs.contains), msgs)
+    }
+    failsNamingAGoneFile(Searcher.getDocuments(spark, stale, Seq(0L, 1L, 150L)).collect())
+    failsNamingAGoneFile(Searcher.searchSortedBy(spark, stale, "w0001", "rawLen").collect())
+    failsNamingAGoneFile {
+      val faceted = Searcher.searchFaceted(spark, stale, "w0001", "lang")
+      try faceted.facets.collect() finally faceted.close()
+    }
     val oracle = new RefModel(refDocs(corpus.collect().toSeq)).search("w0001", 10)
     val hits = Searcher.search(spark, Searcher.open(spark, dir), "w0001", 10).collect().toSeq
     assert(hits.map(_.docId) == oracle.map(_._1))
@@ -815,18 +830,52 @@ class SparkIndexSpec extends AnyFunSuite {
   test("open makes the same FS calls on 4 and on 16 segments") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set(s"fs.${CountingFileSystem.Scheme}.impl", classOf[CountingFileSystem].getName)
+    def openCalls(dir: String): (Long, Long, Long) =
+      CountingFileSystem.callsDuring(
+        Searcher.open(spark, s"${CountingFileSystem.Scheme}://$dir"))
     // the same corpus, so the same lexicon files; only the segments differ
-    def openCalls(segSize: Int): (Long, Long, Long) = {
+    def built(segSize: Int): String = {
       val dir = SparkTestBase.tmpDir(s"fscalls$segSize")
       IndexBuilder.build(spark, CorpusSource.synth(spark, 320, 42L, 4), dir,
         IndexConfig(segSize = segSize))
       assert(IndexBuilder.readManifests(fsOf(dir), dir).size == 320 / segSize)
-      CountingFileSystem.callsDuring(
-        Searcher.open(spark, s"${CountingFileSystem.Scheme}://$dir"))
+      dir
     }
-    val (four, sixteen) = (openCalls(80), openCalls(20))
+    val dir = built(80)
+    val (four, sixteen) = (openCalls(dir), openCalls(built(20)))
     info(s"(listStatus, getFileStatus, open) calls: 4 segments $four, 16 segments $sixteen")
     assert(four == sixteen)
+    // three appends: the delta lexicon reads their segments' recorded files
+    (0 until 3).foreach { k =>
+      graft.streaming.StreamingIngest.append(spark, CorpusSource.synth(spark, 20, 50L + k, 2),
+        dir, IndexConfig(segSize = 80))
+    }
+    val covered = IndexBuilder.lexiconCovers(fsOf(dir), dir).get
+    assert(IndexBuilder.lexiconDeltaSegments(IndexBuilder.readManifests(fsOf(dir), dir),
+      covered).size == 3)
+    val appended = openCalls(dir)
+    info(s"(listStatus, getFileStatus, open) calls: 0 delta segments $four, 3 delta $appended")
+    assert(appended == four)
+  }
+
+  test("executors read tombstones through the session's Hadoop conf") {
+    SessionOnlyFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val dir = SparkTestBase.tmpDir("sessionconf")
+    IndexBuilder.build(spark, CorpusSource.synth(spark, 120, 42L, 4), dir,
+      IndexConfig(segSize = 40))
+    val uri = s"${SessionOnlyFileSystem.Scheme}://$dir"
+    def hits(q: String, k: Int) =
+      Searcher.search(spark, Searcher.open(spark, uri), q, k).collect().map(_.docId).toSeq
+    // the kernel's tombstone probe: a deleted hit vanishes, the rest stay
+    val before = hits("w0001", 11)
+    assert(before.size == 11)
+    graft.build.Deletes.add(spark, uri, Seq(before.head))
+    assert(hits("w0001", 10) == before.tail)
+    // the bulk writer's executor tasks
+    assert(hits("w0002", 10).nonEmpty)
+    graft.build.Deletes.byQuery(spark, uri, "w0002")
+    assert(hits("w0002", 10).isEmpty)
+    assert(hits("w0001", 10).forall(id => !graft.build.Deletes.read(spark, dir).contains(id)))
   }
 
   test("open reads no segment file: garbage segment files still open colocated") {
@@ -850,7 +899,8 @@ class SparkIndexSpec extends AnyFunSuite {
     val dir = SparkTestBase.tmpDir("pmref")
     val corpus = spark.createDataset(fixtureRows)
     IndexBuilder.build(spark, corpus, dir, IndexConfig(segSize = 2))
-    val got = IndexBuilder.postingMetrics(spark, IndexBuilder.segmentsDir(dir))
+    val got = IndexBuilder.postingMetrics(spark, IndexBuilder.segmentsDir(dir),
+      IndexBuilder.readManifests(fsOf(dir), dir).map(m => m.segId -> m.files))
     // reference: the r5 per-segment sequential fold, driver-side
     val rows = spark.read.parquet(IndexBuilder.segmentsDir(dir))
       .filter($"term" >= graft.search.Q.RealTermMin)

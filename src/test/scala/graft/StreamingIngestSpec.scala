@@ -43,12 +43,13 @@ class StreamingIngestSpec extends AnyFunSuite {
   private def fsOf(dir: String) = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** segIds of the delta lexicon: live segments the base does not cover */
-  private def deltaSegs(dir: String): Seq[Int] = {
+  /** the delta lexicon: live segments the base does not cover */
+  private def deltaManifests(dir: String): Seq[graft.model.SegmentManifest] = {
     val fs = fsOf(dir)
     IndexBuilder.lexiconDeltaSegments(IndexBuilder.readManifests(fs, dir),
-      IndexBuilder.lexiconCovers(fs, dir).getOrElse(Set.empty)).map(_.segId)
+      IndexBuilder.lexiconCovers(fs, dir).getOrElse(Set.empty))
   }
+  private def deltaSegs(dir: String): Seq[Int] = deltaManifests(dir).map(_.segId)
 
   private def lexSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Long)] = {
     import spark.implicits._
@@ -268,7 +269,7 @@ class StreamingIngestSpec extends AnyFunSuite {
     // the handle's folded view (base + delta segments) == a full rebuild
     val h = Searcher.open(spark, dir)
     val viaDeltas = lexSet(h.lexicon)
-    val appendedTerms = IndexBuilder.segmentLexicon(spark, dir, deltaSegs(dir))
+    val appendedTerms = IndexBuilder.segmentLexicon(spark, dir, deltaManifests(dir))
       .select($"term").as[String].collect().toSet
     assert(appendedTerms.nonEmpty)
     val dfsBefore = Searcher.termDfs(spark, h, appendedTerms)
@@ -526,7 +527,7 @@ class StreamingIngestSpec extends AnyFunSuite {
         assert(inferred == schema, s"$path: inferred $inferred, constant $schema")
       }
       // the delta lexicon's rows have the lexicon's schema
-      val delta = IndexBuilder.segmentLexicon(spark, dir, deltaSegs(dir)).schema
+      val delta = IndexBuilder.segmentLexicon(spark, dir, deltaManifests(dir)).schema
       assert(delta.map(f => (f.name, f.dataType)) ==
         IndexBuilder.LexiconSchema.map(f => (f.name, f.dataType)))
     }
@@ -577,8 +578,8 @@ class StreamingIngestSpec extends AnyFunSuite {
 
     // the tail writes one file, the cogroup shape term-range files; both
     // are read whole per segment, with no exchange
-    assert(manifest(tailDir).files.map(_.size).contains(1))
-    assert(manifest(cogDir).files.exists(_.size >= 2))
+    assert(manifest(tailDir).files.size == 1)
+    assert(manifest(cogDir).files.size >= 2)
     Seq(tailDir, cogDir).foreach { dir =>
       val plan = Searcher.search(spark, Searcher.open(spark, dir), "w0000 AND w0001", 10)
         .queryExecution.executedPlan.toString
@@ -586,17 +587,63 @@ class StreamingIngestSpec extends AnyFunSuite {
     }
   }
 
-  test("every writer records its segments' files; older lines open by listing") {
+  test("merges leave no broadcast behind") {
+    import spark.implicits._
+    import org.apache.spark.GraftTestAccess
+    // collected task binaries and finished plans go at GC (the context
+    // cleaner); what a merge leaves pinned stays
+    def settled(): Int = {
+      var (last, n, same) = (-1, 0, 0)
+      while (same < 3 && n < 100) {
+        System.gc(); Thread.sleep(100); n += 1
+        val now = GraftTestAccess.broadcastBlocks()
+        same = if (now == last) same + 1 else 0
+        last = now
+      }
+      last
+    }
+    // the tombstone arrays a merge leaves, counted before any GC can
+    // collect an undestroyed one
+    def tombstoneArrays(): Int = GraftTestAccess.broadcastValuesOf(classOf[Array[Long]])
+    def grownBy(op: => Any): (Int, Int) = {
+      val (blocks, arrays) = (settled(), tombstoneArrays())
+      op
+      val left = tombstoneArrays() - arrays
+      (settled() - blocks, left)
+    }
+    val dir = SparkTestBase.tmpDir("mergebcast")
+    val cfg = IndexConfig(segSize = 32)
+    IndexBuilder.build(spark, spark.createDataset(mkRows(43L, 0, 64)), dir, cfg)
+    val grown = (0 until 2).flatMap { round =>
+      (0 until 2).foreach { k =>
+        val from = 64 + 16 * round + 8 * k
+        StreamingIngest.append(spark, spark.createDataset(mkRows(43L, from, from + 8)), dir, cfg)
+      }
+      val tail = grownBy(assert(graft.merge.Merger.mergeSmall(spark, dir).nonEmpty))
+      val ms = IndexBuilder.readManifests(fsOf(dir), dir)
+      graft.build.Deletes.add(spark, dir, ms.map(_.docLo))
+      val purge = grownBy(graft.merge.Merger.compact(spark, dir, applyDeletes = true))
+      assert(IndexBuilder.readManifests(fsOf(dir), dir).size == 1)
+      Seq(tail, purge)
+    }
+    assert(grown.forall { case (blocks, arrays) => blocks <= 0 && arrays == 0 },
+      s"(broadcast blocks, tombstone arrays) grown per merge: $grown")
+  }
+
+  test("every writer records its segments' posting and docstats files") {
     val dir = tailIndex("files", 29L)
     val fs = fsOf(dir)
-    // the record's files of each live segment == the parquet files in its dir
+    // the record's files of each live segment == the parquet files in its
+    // segments/ and docstats/ dirs
     def recordedMatchesDirs(): Unit = IndexBuilder.readManifests(fs, dir).foreach { m =>
-      val inDir = fs.listStatus(new org.apache.hadoop.fs.Path(
-          s"${IndexBuilder.segmentsDir(dir)}/segId=${m.segId}"))
-        .map(f => f.getPath.getName -> f.getLen)
-        .filter(_._1.endsWith(".parquet")).toSeq.sortBy(_._1)
-      assert(inDir.nonEmpty && m.files.contains(inDir),
-        s"segment ${m.segId}: ${m.files} vs $inDir")
+      Seq(IndexBuilder.segmentsDir(dir) -> m.files, IndexBuilder.docstatsDir(dir) -> m.docstats)
+        .foreach { case (root, recorded) =>
+          val inDir = fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/segId=${m.segId}"))
+            .map(f => f.getPath.getName -> f.getLen)
+            .filter(_._1.endsWith(".parquet")).toSeq.sortBy(_._1)
+          assert(inDir.nonEmpty && recorded == inDir,
+            s"segment ${m.segId} under $root: $recorded vs $inDir")
+        }
     }
     // build (segments 0, 1) and three appends (2-4)
     assert(IndexBuilder.readManifests(fs, dir).map(_.segId) == (0 to 4))
@@ -607,30 +654,27 @@ class StreamingIngestSpec extends AnyFunSuite {
       Seq("*", "NOT w0004", "w0000 AND w0001", "w0000 OR w0001")
     def hits(h: Searcher.IndexHandle) =
       queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq)
-    val h = Searcher.open(spark, dir)
-    val expected = hits(h)
-    // a record whose lines carry the older "files"/"rowGroups" counts and no
-    // file list opens by listing each segment's dir, with the same hits
+    val expected = hits(Searcher.open(spark, dir))
+    // compaction writes term-range files: at least two for the merged
+    // segment, all recorded
+    graft.merge.Merger.compact(spark, dir)
+    val compacted = IndexBuilder.readManifests(fs, dir)
+    assert(compacted.size == 1 && compacted.head.files.size >= 2, compacted)
+    recordedMatchesDirs()
+    assert(hits(Searcher.open(spark, dir)) == expected)
+    // a line without its docstats list is refused, naming the key: no
+    // reader lists a dir to make up for it
     val record = new org.apache.hadoop.fs.Path(IndexBuilder.statsPath(dir))
     val text = {
       val in = fs.open(record)
       try scala.io.Source.fromInputStream(in).mkString finally in.close()
     }
-    val older = text.replaceAll(""""files":\[[^\]]*\]""", """"files":1,"rowGroups":1""")
-    assert(older != text && !older.contains("\"name\""))
+    val noDocstats = text.replaceAll(""","docstats":\[[^\]]*\]""", "")
+    assert(noDocstats != text)
     val out = fs.create(record, true)
-    out.write(older.getBytes("UTF-8"))
+    out.write(noDocstats.getBytes("UTF-8"))
     out.close()
-    assert(IndexBuilder.readManifests(fs, dir).forall(_.files.isEmpty))
-    val hOlder = Searcher.open(spark, dir)
-    assert(hOlder.segmentFiles == h.segmentFiles && h.segmentFiles.forall(_._2.size == 1))
-    assert(hits(hOlder) == expected)
-    // compaction writes term-range files: at least two for the merged
-    // segment, all recorded
-    graft.merge.Merger.compact(spark, dir)
-    val compacted = IndexBuilder.readManifests(fs, dir)
-    assert(compacted.size == 1 && compacted.head.files.exists(_.size >= 2), compacted)
-    recordedMatchesDirs()
-    assert(hits(Searcher.open(spark, dir)) == expected)
+    val e = intercept[IllegalStateException](Searcher.open(spark, dir))
+    assert(e.getMessage.contains("\"docstats\""), e.getMessage)
   }
 }
