@@ -11,7 +11,7 @@ import graft.model.IndexStats
   * `MultiFieldIndex.build`). Driver-side metadata operations only. */
 object IndexAdmin {
 
-  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+  private[graft] def fsOf(spark: SparkSession, dir: String): FileSystem =
     FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
   /** an index exists where its commit record (stats.json) does. A

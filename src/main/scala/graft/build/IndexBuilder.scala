@@ -34,7 +34,8 @@ import graft.model._
   *    streamingly; run-boundary invariance is property-tested;
   *  - commit: `stats.json` is the index's one commit record ([W]
   *    whoosh/index.py TOC): the stats header, then one manifest line per
-  *    live segment, listing its files. Writers promote staging -> final
+  *    live segment, listing its files and the counts and digest its write
+  *    tasks folded (`SegmentFacts`). Writers promote staging -> final
   *    (rename), then commit the whole record with one overwriting rename,
   *    so a reader sees the old record or the new one; readers open only
   *    the files it lists, so dirs no record lists are garbage;
@@ -63,8 +64,7 @@ object IndexBuilder {
       persistAnalyzed: Boolean = true,
       /** the field's analysis chain ([R] cockatrice/schema.py registry);
         * persisted in stats.json so the query side analyzes identically */
-      analyzer: graft.analysis.AnalyzerSpec = graft.analysis.AnalyzerSpec.Standard,
-      source: String = "corpus")
+      analyzer: graft.analysis.AnalyzerSpec = graft.analysis.AnalyzerSpec.Standard)
 
   final case class BuildReport(stats: IndexStats, builtSegments: Seq[Int],
                                skippedSegments: Seq[Int])
@@ -109,11 +109,10 @@ object IndexBuilder {
 
   /** A segment table's rows (SegmentsSchema or DocstatsSchema under
     * `root`) from the files of the given segments, (segId, [(name, bytes)])
-    * as a commit record or a writer's listing of its staged dirs names
-    * them. The file index is seeded with exactly those files and their
-    * `segId` partition values, so building, planning and scanning the
-    * relation lists nothing and starts no discovery job; a listed file that
-    * is gone fails the read, naming the file. */
+    * as their record lines name them. The file index is seeded with exactly
+    * those files and their `segId` partition values, so building, planning
+    * and scanning the relation lists nothing and starts no discovery job; a
+    * listed file that is gone fails the read, naming the file. */
   private[graft] def readFiles(spark: SparkSession, schema: StructType, root: String,
                                segs: Seq[(Int, Seq[(String, Long)])]): DataFrame = {
     val dirs = segs.collect { case (segId, files) if files.nonEmpty =>
@@ -229,7 +228,7 @@ object IndexBuilder {
     * sides fail, `main`'s failure wins and carries the side's as
     * suppressed. The side runs inside a FutureTask, so the call sites of
     * its Spark jobs carry that frame (a per-phase trace attributes the
-    * overlapped jobs by it). */
+    * overlapped jobs by it). On return, both sides' `SegmentFacts` are in. */
   private[graft] def concurrently[A, B](sideThread: String)(main: => A, side: => B): (A, B) = {
     val task = new java.util.concurrent.FutureTask[B](() => side)
     val t = new Thread(task, sideThread)
@@ -333,7 +332,8 @@ object IndexBuilder {
   /** Builds and promotes the segments of `batch` (None: ALL segments found
     * in `docs`, in one pass) and returns their manifests, sorted by segId.
     * Nothing is committed: the caller (build, or a streaming append with
-    * an already stamped, docId-shifted batch) puts them in the record. */
+    * an already stamped, docId-shifted batch) puts them in the record.
+    * The write tasks fold the manifests' facts (`SegmentFacts`). */
   private[graft] def buildBatch(spark: SparkSession, fs: FileSystem, docs: Dataset[Doc],
                                 indexDir: String, batch: Option[Seq[Int]],
                                 cfg: IndexConfig): Seq[SegmentManifest] = {
@@ -374,32 +374,16 @@ object IndexBuilder {
         blob = TermsBlob.encode(a))
     }
     if (cfg.persistAnalyzed) analyzed.persist(StorageLevel.MEMORY_AND_DISK)
+    val facts = new SegmentFacts
+    spark.sparkContext.register(facts)
 
     try {
-      // the manifest's per-segment doc metrics (docCount, docId range,
-      // rawLen sum) as per-partition partials merged on the driver: ONE
-      // job, no exchange, three columns decoded. It also materializes the
-      // analyzed cache, so the two consumers below (docstats sidecar,
-      // postings build) can run CONCURRENTLY against it (guide §2.6
-      // overlap: the small docstats write back-fills executors left idle by
-      // the postings job's tail) without racing the cache computation
-      // partition by partition.
-      val docAgg: Map[Int, (Long, Long, Long, Long)] = {
-        // (count, lo, hi, rawLenSum), folded map-side and again on the driver
-        val combine = (a: (Long, Long, Long, Long), b: (Long, Long, Long, Long)) =>
-          (a._1 + b._1, math.min(a._2, b._2), math.max(a._3, b._3), a._4 + b._4)
-        analyzed.select($"segId", $"docId", $"rawLen").as[(Int, Long, Int)]
-          .mapPartitions { it =>
-            val acc = scala.collection.mutable.HashMap.empty[Int, (Long, Long, Long, Long)]
-            it.foreach { case (segId, docId, rawLen) =>
-              val one = (1L, docId, docId, rawLen.toLong)
-              acc(segId) = acc.get(segId).fold(one)(combine(_, one))
-            }
-            acc.iterator
-          }
-          .collect()
-          .groupMapReduce(_._1)(_._2)(combine)
-      }
+      // materialize the analyzed cache (ONE job, no exchange: an RDD count
+      // of no columns; Dataset.count plans one), so the two consumers
+      // below run CONCURRENTLY against it (guide §2.6 overlap: the small
+      // docstats write back-fills executors left idle by the postings
+      // job's tail) without racing the cache computation
+      if (cfg.persistAnalyzed) analyzed.select().queryExecution.toRdd.count()
 
       // Phase 1 (map-side combine, G1/G2): per input partition, stream docs
       // in docId order and append each (docId, tf, lenByte, positions) to a
@@ -467,11 +451,12 @@ object IndexBuilder {
         if (cfg.phase2Partitions > 0) cfg.phase2Partitions
         else batch.map(b => math.max(1, b.size))
           .getOrElse(spark.sessionState.conf.numShufflePartitions * 4)
+      // posting facts fold here: the result stage, after the one exchange
       lazy val segRows = runs
         .repartition(numParts, $"segId")
         .sortWithinPartitions("segId", "term", "salt")
         .mapPartitions { it =>
-          new Iterator[SegRow] {
+          facts.postings(new Iterator[SegRow] {
             private var lookahead: Run = if (it.hasNext) it.next() else null
             def hasNext: Boolean = lookahead != null
             def next(): SegRow = {
@@ -492,7 +477,7 @@ object IndexBuilder {
                 SegRow(first.segId, first.term, enc.df, enc.maxTf, enc.cf, enc.bytes)
               }
             }
-          }
+          })
         }
 
       // the big postings job, overlapped with the docstats write. The two
@@ -503,28 +488,22 @@ object IndexBuilder {
         segRows.write.mode(SaveMode.Overwrite).partitionBy("segId")
           .parquet(s"$staging/segments"),
         analyzed
-          .map(a => DocStat(a.segId, a.docId, a.repo, a.path, a.commit, a.lang,
-            a.sha, a.rawLen, a.lenByte))
+          .mapPartitions(it => facts.docs(it.map(a => DocStat(a.segId, a.docId, a.repo,
+            a.path, a.commit, a.lang, a.sha, a.rawLen, a.lenByte))))
           .write.mode(SaveMode.Overwrite).partitionBy("segId")
           .parquet(s"$staging/docstats"))
 
-      // each staged segment's files, listed once for the record (a segment
-      // with postings has docs, so docAgg names it), and its posting metrics
-      val staged = batch.getOrElse(docAgg.keySet.toSeq).sorted.map { segId =>
-        (segId, listFiles(fs, s"$staging/segments/segId=$segId"),
-          listFiles(fs, s"$staging/docstats/segId=$segId"))
-      }
-      val segAgg = postingMetrics(spark, s"$staging/segments", staged.map(s => s._1 -> s._2))
-
-      // promote staging -> final; the caller's record commit makes them live
-      val built = staged.map { case (segId, files, docstats) =>
-        val (rowsN, bytesN, digest) = segAgg.getOrElse(segId, (0L, 0L, "0" * 32))
-        val (docCount, lo, hi, rawLenSum) = docAgg.getOrElse(segId,
-          (0L, segId.toLong * segSize, segId.toLong * segSize, 0L))
+      // promote staging -> final, each segment's files listed once for the
+      // record; the caller's record commit makes them live
+      val built = batch.getOrElse(facts.value.keySet.toSeq).sorted.map { segId =>
+        val f = facts(segId)
+        val (lo, hi) = if (f.docCount > 0) (f.docLo, f.docHi)
+          else (segId.toLong * segSize, segId.toLong * segSize)
+        val files = listFiles(fs, s"$staging/segments/segId=$segId")
+        val docstats = listFiles(fs, s"$staging/docstats/segId=$segId")
         promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
         promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
-        SegmentManifest(segId, lo, hi, docCount, rawLenSum, rowsN, bytesN, digest, cfg.source,
-          files, docstats)
+        f.line(segId, lo, hi, "corpus", files, docstats)
       }
       fs.delete(new Path(staging), true)
       built
@@ -540,69 +519,6 @@ object IndexBuilder {
     fs.listStatus(p).toSeq.map(f => f.getPath.getName -> f.getLen).filter { case (n, _) =>
       n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
     }.sortBy(_._1)
-  }
-
-  /** Per-segment posting metrics from the segment files a writer just
-    * staged under `root` (segId -> its listed files):
-    * segId -> (rows, bytes, digest). The digest is order-independent (XOR
-    * of per-row sha256(term, df, maxTf, blocks) prefixes) so it witnesses
-    * bit-determinism across parallelism levels; Merger recomputes the same
-    * metrics for merged segments so the manifest contract survives
-    * compaction. */
-  private[graft] def postingMetrics(spark: SparkSession, root: String,
-                                    files: Seq[(Int, Seq[(String, Long)])])
-      : Map[Int, (Long, Long, String)] = {
-    import spark.implicits._
-    // The per-row fold is an order-independent XOR, i.e. a commutative
-    // associative monoid — so it runs as a per-PARTITION partial (guide
-    // §2.3 "aggregate before you shuffle") and the partials merge on the
-    // driver. The r1-r5 groupByKey(_.segId).mapGroups shape shuffled every
-    // segment's full `blocks` payload (the whole index, again) into one
-    // task per segment just to fold it; this shape shuffles nothing at all
-    // (zero Exchange) and collects only <= partitions x segments tiny
-    // partial rows. Result is bit-identical (SparkIndexSpec asserts it
-    // against an in-test reference fold; the cross-round index digest is
-    // the standing witness).
-    readFiles(spark, SegmentsSchema, root, files)
-      // manifest metrics stay REAL-postings-only: the D14 pseudo rows are
-      // derived data (a pure function of the segment's doc set), so
-      // excluding them keeps digests comparable across format revisions
-      // and keeps postingRows == distinct indexed terms
-      .filter($"term" >= graft.search.Q.RealTermMin)
-      .select($"term", $"df", $"maxTf", $"blocks", $"segId").as[SegRead]
-      .mapPartitions { it =>
-        val md = java.security.MessageDigest.getInstance("SHA-256")
-        val ints = java.nio.ByteBuffer.allocate(8)
-        val acc = new java.util.HashMap[Int, (Array[Byte], Long, Long)]()
-        it.foreach { r =>
-          md.reset()
-          md.update(r.term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          md.update(0.toByte)
-          ints.clear()
-          md.update(ints.putInt(r.df).putInt(r.maxTf).array())
-          md.update(r.blocks)
-          val h = md.digest()
-          val cur = acc.get(r.segId)
-          val (dig, n, bytes) =
-            if (cur == null) (new Array[Byte](16), 0L, 0L) else cur
-          var i = 0
-          while (i < 16) { dig(i) = (dig(i) ^ h(i)).toByte; i += 1 }
-          acc.put(r.segId, (dig, n + 1L, bytes + r.blocks.length.toLong))
-        }
-        import scala.jdk.CollectionConverters._
-        acc.entrySet().iterator().asScala
-          .map(e => (e.getKey.intValue(), e.getValue._2, e.getValue._3, e.getValue._1))
-      }
-      .collect()
-      .groupBy(_._1)
-      .map { case (segId, partials) =>
-        val dig = new Array[Byte](16)
-        partials.foreach { p =>
-          var i = 0
-          while (i < 16) { dig(i) = (dig(i) ^ p._4(i)).toByte; i += 1 }
-        }
-        segId -> ((partials.map(_._2).sum, partials.map(_._3).sum, toHex(dig)))
-      }
   }
 
   /** Global lexicon: term -> corpus-wide df, cf and maxTf,

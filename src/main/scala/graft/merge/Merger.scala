@@ -2,9 +2,8 @@ package graft.merge
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.build.IndexBuilder
+import graft.build.{IndexAdmin, IndexBuilder, SegmentFacts}
 import graft.codec.PostingsCodec
 import graft.model._
 
@@ -15,8 +14,10 @@ import graft.model._
   * (decision D1), no docnum remap is needed — runs concatenate in docLo
   * order (`mergeRuns`).
   *
-  * Two merge shapes share that per-term concatenation and one commit
-  * protocol; the CALLER picks the shape, no option does:
+  * Two merge shapes share that per-term concatenation, one commit protocol
+  * and the build's one count rule (their write tasks fold the merged
+  * line's counts and digest, `SegmentFacts`, purge or not); the CALLER
+  * picks the shape, no option does:
   *  - COGROUP (`mergeGroup`, used by `compact`/`optimize`): a sort-merge
   *    cogroup on `term` — pairwise KeyValueGroupedDataset.cogroup
   *    (BASELINE.json:6), wider groups one union + groupByKey pass (an n-ary
@@ -45,8 +46,9 @@ object Merger {
     *
     * Crash-safe commit protocol (mirrors the build's promote-then-commit,
     * shared with the TAIL shape):
-    *   1. write merged postings + docstats to staging, promote both into
-    *      place under the FRESH segId (no collision with live dirs);
+    *   1. write merged postings + docstats to staging, folding the
+    *      merged line's facts, and promote both into place under the
+    *      FRESH segId (no collision with live dirs);
     *   2. commit the record with `live - group + merged` and the header
     *      counts carried over — THE commit point; the merged segment's
     *      `covers` carries the transitive build-layout lineage for resume;
@@ -56,30 +58,40 @@ object Merger {
     *      index. */
   def mergeGroup(spark: SparkSession, indexDir: String, group: Seq[Int],
                  deletes: Set[Long] = Set.empty): Int = {
+    members(IndexBuilder.readManifests(IndexAdmin.fsOf(spark, indexDir), indexDir), group)
     // fold first: the merged segment must not mix covers the base lexicon
     // holds with covers it does not
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
     merge(spark, indexDir, group, deletes, tail = false)
   }
 
+  /** The record lines of `group`, sorted by segId; fails, naming the ids,
+    * unless `group` names live segments, each once. */
+  private def members(live: Seq[SegmentManifest], group: Seq[Int]): Seq[SegmentManifest] = {
+    val byId = live.map(m => m.segId -> m).toMap
+    val notLive = group.filterNot(byId.contains).distinct
+    val repeated = group.diff(group.distinct).distinct
+    require(group.nonEmpty && notLive.isEmpty && repeated.isEmpty,
+      s"cannot merge segments [${group.mkString(",")}]: not live: ${notLive.mkString(",")}; " +
+        s"repeated: ${repeated.mkString(",")}")
+    group.sorted.map(byId)
+  }
+
   /** one merge of `group` in the COGROUP or TAIL shape; returns the fresh
     * segId */
   private def merge(spark: SparkSession, indexDir: String, group: Seq[Int],
                     deletes: Set[Long], tail: Boolean): Int = {
-    require(group.nonEmpty)
     require(!tail || deletes.isEmpty, "a tail merge purges no deletes")
-    val fs = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
-    val sorted = group.sorted
+    val fs = IndexAdmin.fsOf(spark, indexDir)
     val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
+    val manifests = members(live, group)
+    val sorted = manifests.map(_.segId)
     // GC crash leftovers BEFORE picking the target id: a crash between
     // promote and record commit leaves segId dirs no record lists — a
     // rerun recomputes the same target (max live segId + 1). Readers open
     // only recorded files, so this sweep only frees disk.
     gcOrphanDirs(fs, indexDir, live.map(_.segId).toSet)
     val targetId = live.map(_.segId).max + 1
-    val manifests = live.filter(m => sorted.contains(m.segId))
-    require(manifests.size == sorted.size, s"missing segments for $sorted")
 
     // tombstones ride as a broadcast SORTED ARRAY probed by binary search
     // (exactly like the query kernel) — never as Catalyst literals: a full
@@ -120,30 +132,16 @@ object Merger {
     val dsStaging = s"$staging-docstats"
     fs.delete(new Path(staging), true)
     fs.delete(new Path(dsStaging), true)
-    val purgedCounts =
-      try {
-        if (tail) {
-          writeTail(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging)
-          None
-        } else writeCogroup(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
-          delB)
-      } finally delB.foreach(_.destroy())
-    // one count rule for both shapes: a merge that purges nothing keeps
-    // every member doc, so the members' line sums are the merged counts
-    val (mergedDocCount, mergedRawLen) = purgedCounts.getOrElse(
-      (manifests.map(_.docCount).sum, manifests.map(_.rawLenSum).sum))
-
-    // real metrics for the merged manifest — same digest/row/byte contract
-    // as a fresh build (BASELINE.json "per-partition lineage and
-    // row-count/sha256 metrics" must survive compaction) — and the files
-    // the merge staged, listed once for the record. A fully-tombstoned
-    // group writes no files at all — empty metrics.
+    val facts = new SegmentFacts
+    spark.sparkContext.register(facts)
+    try {
+      if (tail) writeTail(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
+        facts)
+      else writeCogroup(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
+        delB, facts)
+    } finally delB.foreach(_.destroy())
     val files = IndexBuilder.listFiles(fs, s"$staging/segId=$targetId")
     val docstats = IndexBuilder.listFiles(fs, s"$dsStaging/segId=$targetId")
-    val (postRows, postBytes, digest) =
-      if (files.isEmpty) (0L, 0L, "0" * 32)
-      else IndexBuilder.postingMetrics(spark, staging, Seq(targetId -> files))
-        .getOrElse(targetId, (0L, 0L, "0" * 32))
 
     // 1. promote into place under the fresh segId (a group whose docs were
     // ALL tombstoned writes no partition dir — commit an empty segment)
@@ -154,18 +152,12 @@ object Merger {
     fs.delete(new Path(staging), true)
     fs.delete(new Path(dsStaging), true)
 
-    // 2. the commit point: the merged segment replaces the group
-    val m = SegmentManifest(
-      segId = targetId,
-      docLo = manifests.map(_.docLo).min,
-      docHi = manifests.map(_.docHi).max,
-      docCount = mergedDocCount,
-      rawLenSum = mergedRawLen,
-      postingRows = postRows, postingBytes = postBytes,
-      digest = digest,
-      source = s"merge(${sorted.mkString(",")})",
-      covers = manifests.flatMap(_.coverSet).distinct.sorted,
-      files = files, docstats = docstats)
+    // 2. the commit point: the merged segment, with its folded facts
+    // (BASELINE.json "row-count/sha256 metrics") and the members' docId
+    // range, replaces the group
+    val m = facts(targetId).line(targetId, manifests.map(_.docLo).min,
+      manifests.map(_.docHi).max, s"merge(${sorted.mkString(",")})", files, docstats,
+      covers = manifests.flatMap(_.coverSet).distinct.sorted)
     IndexBuilder.commitRecord(fs, indexDir, st,
       live.filterNot(l => sorted.contains(l.segId)) :+ m)
 
@@ -181,13 +173,13 @@ object Merger {
     * write `max(2, group.size)` term-range files under `staging/segId=N`;
     * the docstats sidecars are re-keyed under the fresh segId (the sidecar
     * is keyed by docId; segId is only physical placement) minus the purged
-    * docs (`delB`). Returns the merged (docCount, rawLenSum) when it purged
-    * deletes (one count job over the kept docstats), else None. */
+    * docs (`delB`). `facts` folds after the range exchange, never in its
+    * sampling job. */
   private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[SegmentManifest],
                            targetId: Int, mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
                            staging: String, dsStaging: String,
-                           delB: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]])
-      : Option[(Long, Long)] = {
+                           delB: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
+                           facts: SegmentFacts): Unit = {
     import spark.implicits._
     val segs = group.map { m =>
       IndexBuilder.segmentRows(spark, indexDir, Seq(m))
@@ -207,22 +199,16 @@ object Merger {
       }
     merged.repartitionByRange(math.max(2, group.size), $"term")
       .sortWithinPartitions("term")
+      .mapPartitions(facts.postings)
       .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(staging)
 
-    val docstats = IndexBuilder.docstatsRows(spark, indexDir, group)
+    val docstats = IndexBuilder.docstatsRows(spark, indexDir, group).as[DocStat]
     // same broadcast binary-search probe as mergeRuns (bounded by the
     // group's ranges but NOT by literal-count — see delB note above)
-    val filtered = delB.fold(docstats) { b =>
-      val docIdIdx = docstats.schema.fieldIndex("docId")
-      docstats.filter((r: org.apache.spark.sql.Row) =>
-        java.util.Arrays.binarySearch(b.value, r.getLong(docIdIdx)) < 0)
-    }
-    filtered.withColumn("segId", lit(targetId))
+    delB.fold(docstats)(b =>
+        docstats.filter(d => java.util.Arrays.binarySearch(b.value, d.docId) < 0))
+      .mapPartitions(it => facts.docs(it.map(_.copy(segId = targetId))))
       .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
-    Option.when(delB.nonEmpty) {
-      val r = filtered.agg(count(lit(1)), sum($"rawLen")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
   }
 
   /** TAIL shape: ONE task merges the whole group — the members' rows are
@@ -230,11 +216,11 @@ object Merger {
     * exchange), consecutive same-term rows fold with `mergeRuns`, and one
     * file with one row group lands in `staging/segId=N`. The docstats
     * sidecars are coalesced into one docId-sorted file the same way, in a
-    * concurrent job. */
+    * concurrent job. Both jobs are one stage, so `facts` folds there. */
   private def writeTail(spark: SparkSession, indexDir: String,
                         group: Seq[SegmentManifest], targetId: Int,
                         mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
-                        staging: String, dsStaging: String): Unit = {
+                        staging: String, dsStaging: String, facts: SegmentFacts): Unit = {
     import spark.implicits._
     IndexBuilder.concurrently("graft-merge-docstats")(
       IndexBuilder.segmentRows(spark, indexDir, group)
@@ -243,18 +229,19 @@ object Merger {
         .sortWithinPartitions("term")
         .mapPartitions { it =>
           val rows = it.buffered
-          Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
+          facts.postings(Iterator.continually(rows).takeWhile(_.hasNext).flatMap { r =>
             val term = r.head.term
             val run = scala.collection.mutable.ArrayBuffer.empty[SegRead]
             while (r.hasNext && r.head.term == term) run += r.next()
             mergeRuns(term, run.toSeq)
-          }
+          })
         }
         .drop("segId")
         .write.mode(SaveMode.Overwrite).parquet(s"$staging/segId=$targetId"),
-      IndexBuilder.docstatsRows(spark, indexDir, group)
-        .drop("segId")
+      IndexBuilder.docstatsRows(spark, indexDir, group).as[DocStat]
         .coalesce(1)
+        .mapPartitions(it => facts.docs(it.map(_.copy(segId = targetId))))
+        .drop("segId")
         .sortWithinPartitions("docId")
         .write.mode(SaveMode.Overwrite).parquet(s"$dsStaging/segId=$targetId"))
     ()
@@ -307,8 +294,7 @@ object Merger {
   def mergeSmall(spark: SparkSession, indexDir: String, smallDocs: Long = 0,
                  groupSize: Int = 8): Seq[Int] = {
     require(groupSize >= 2)
-    val fs = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = IndexAdmin.fsOf(spark, indexDir)
     val (st, ms) = IndexBuilder.readCurrentRecord(fs, indexDir)
     val target = if (smallDocs > 0) smallDocs else st.segSize.toLong
     // the fold writes no record, so `ms` stays the live set
@@ -346,8 +332,7 @@ object Merger {
   def compact(spark: SparkSession, indexDir: String, groupSize: Int = 8,
               applyDeletes: Boolean = false): Unit = {
     require(groupSize >= 2)
-    val fs = FileSystem.get(new java.net.URI(indexDir),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = IndexAdmin.fsOf(spark, indexDir)
     var ms = IndexBuilder.readCurrentRecord(fs, indexDir)._2
     // fold before merging (see mergeSmall)
     IndexBuilder.foldLexiconDeltas(spark, indexDir)

@@ -47,14 +47,15 @@ final case class SegRead(term: String, df: Int, maxTf: Int,
   * score upper bound: w.upperBound(idf(df), maxTf) needs no segment read) */
 final case class LexRow(term: String, df: Long, cf: Long, maxTf: Long)
 
-/** per-segment manifest (SURVEY.md S5): lineage + row-count/digest metrics,
-  * one line of the index's commit record (stats.json) per live segment —
-  * the checkpoint unit for resumable builds.
+/** per-segment manifest (SURVEY.md S5): lineage + row-count/digest metrics
+  * (folded by the tasks that wrote its files, `SegmentFacts`, one rule for
+  * every writer), one line of the index's commit record (stats.json) per
+  * live segment — the checkpoint unit for resumable builds.
   *
   * `covers` = the ORIGINAL build-layout segIds whose docId ranges this
   * segment contains (transitive through merges) — resume treats every
   * covered segId as built, so a compacted index never re-ingests merged
-  * ranges. `source` names the writer: the build's IndexConfig.source, or
+  * ranges. `source` names the writer: `corpus` for a build or append, or
   * `merge(a,b,...)` with the group a merge replaced.
   *
   * `files` / `docstats` = the segment's parquet files (name, bytes) in its

@@ -894,23 +894,20 @@ class SparkIndexSpec extends AnyFunSuite {
     intercept[Exception](Searcher.search(spark, h, "w0001", 10).collect())
   }
 
-  test("postingMetrics r6: shuffle-free partial fold == per-segment reference fold") {
+  test("record facts == a reference fold of the recorded files, for every writer") {
     import spark.implicits._
-    val dir = SparkTestBase.tmpDir("pmref")
-    val corpus = spark.createDataset(fixtureRows)
-    IndexBuilder.build(spark, corpus, dir, IndexConfig(segSize = 2))
-    val got = IndexBuilder.postingMetrics(spark, IndexBuilder.segmentsDir(dir),
-      IndexBuilder.readManifests(fsOf(dir), dir).map(m => m.segId -> m.files))
-    // reference: the r5 per-segment sequential fold, driver-side
-    val rows = spark.read.parquet(IndexBuilder.segmentsDir(dir))
-      .filter($"term" >= graft.search.Q.RealTermMin)
-      .select($"term", $"df", $"maxTf", $"blocks", $"segId")
-      .as[graft.model.SegRead].collect()
-    val expected = rows.groupBy(_.segId).map { case (segId, rs) =>
+    type Facts = (Long, Long, String, Long, Long)
+    // reference: the r5 per-segment sequential fold, driver-side, over the
+    // rows read from the files one record line lists
+    def reference(dir: String, m: graft.model.SegmentManifest): (Facts, Option[(Long, Long)]) = {
+      val rows = IndexBuilder.segmentRows(spark, dir, Seq(m))
+        .filter($"term" >= graft.search.Q.RealTermMin)
+        .select($"term", $"df", $"maxTf", $"blocks", $"segId")
+        .as[graft.model.SegRead].collect()
       val md = java.security.MessageDigest.getInstance("SHA-256")
       val dig = new Array[Byte](16)
       var bytes = 0L
-      rs.foreach { r =>
+      rows.foreach { r =>
         md.reset()
         md.update(r.term.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         md.update(0.toByte)
@@ -920,12 +917,65 @@ class SparkIndexSpec extends AnyFunSuite {
         (0 until 16).foreach(i => dig(i) = (dig(i) ^ h(i)).toByte)
         bytes += r.blocks.length.toLong
       }
-      segId -> ((rs.length.toLong, bytes, dig.map(b => f"$b%02x").mkString))
+      val docs = IndexBuilder.docstatsRows(spark, dir, Seq(m))
+        .select($"docId", $"rawLen").as[(Long, Int)].collect()
+      val range = Option.when(docs.nonEmpty)((docs.map(_._1).min, docs.map(_._1).max))
+      ((rows.length.toLong, bytes, dig.map(b => f"$b%02x").mkString, docs.length.toLong,
+        docs.map(_._2.toLong).sum), range)
     }
-    assert(got == expected)
-    // manifests carry the same digests (the commit-path consumer)
-    val manifests = IndexBuilder.readManifests(fsOf(dir), dir)
-    manifests.foreach(m => assert(got(m.segId)._3 == m.digest))
+    def lines(dir: String) = IndexBuilder.readManifests(fsOf(dir), dir)
+    def facts(m: graft.model.SegmentManifest): Facts =
+      (m.postingRows, m.postingBytes, m.digest, m.docCount, m.rawLenSum)
+    // every line's facts == the reference fold of its files (docLo/docHi
+    // too for the `built` segments: a merge records its members' range),
+    // and the lines account for every real posting row on disk
+    def check(dir: String, what: String, built: Set[Int]): Unit = {
+      val ms = lines(dir)
+      ms.foreach { m =>
+        val (ref, range) = reference(dir, m)
+        assert(facts(m) == ref, s"$what: segment ${m.segId}")
+        if (built(m.segId)) assert(range.contains((m.docLo, m.docHi)), s"$what: segment ${m.segId}")
+      }
+      assert(ms.map(_.postingRows).sum == spark.read.parquet(IndexBuilder.segmentsDir(dir))
+        .filter($"term" >= graft.search.Q.RealTermMin).count(), what)
+    }
+
+    val corpus = spark.createDataset(fixtureRows)
+    val dir = SparkTestBase.tmpDir("factsref")
+    IndexBuilder.build(spark, corpus, dir, IndexConfig(segSize = 2))
+    check(dir, "single-shot build", Set(0, 1, 2))
+    val batched = SparkTestBase.tmpDir("factsref-batched")
+    IndexBuilder.build(spark, corpus, batched, IndexConfig(segSize = 2, segmentsPerBatch = 1))
+    check(batched, "segmentsPerBatch = 1 build", Set(0, 1, 2))
+    def keyed(d: String) = lines(d).map(m => (m.segId, facts(m), m.docLo, m.docHi))
+    assert(keyed(batched) == keyed(dir))
+
+    val more = (0 until 3).map { i =>
+      CorpusRow("r2/more", f"m$i.txt", f"$i%040x", "text",
+        graft.corpus.SynthCorpus.doc(5L, i.toLong) + " bm25 ranking")
+    }
+    graft.streaming.StreamingIngest.append(spark, spark.createDataset(more), dir,
+      IndexConfig(segSize = 2))
+    assert(lines(dir).map(_.segId) == Seq(0, 1, 2, 3, 4))
+    check(dir, "append", Set(0, 1, 2, 3, 4))
+
+    // tail shape: (0,1) and (2,3) each reach 3 docs; 4 is left alone
+    assert(Merger.mergeSmall(spark, dir, smallDocs = 3) == Seq(5, 6))
+    check(dir, "mergeSmall", Set(4))
+
+    // cogroup shape with a purge, then a group whose every doc is purged
+    val seg6 = lines(dir).find(_.segId == 6).get
+    val purge = Set(seg6.docLo, seg6.docHi)
+    assert(Merger.mergeGroup(spark, dir, Seq(4, 6), purge) == 7)
+    val merged = lines(dir).find(_.segId == 7).get
+    assert(merged.docCount == 3 + 1 - 2)
+    check(dir, "mergeGroup with deletes", Set.empty)
+    val seg5Docs = IndexBuilder.docstatsRows(spark, dir, lines(dir).filter(_.segId == 5))
+      .select($"docId").as[Long].collect().toSet
+    assert(Merger.mergeGroup(spark, dir, Seq(5), seg5Docs) == 8)
+    val empty = lines(dir).find(_.segId == 8).get
+    assert(facts(empty) == ((0L, 0L, "0" * 32, 0L, 0L)) && empty.files.isEmpty)
+    check(dir, "mergeGroup purging every doc", Set.empty)
   }
 
   test("concurrently: both sides joined, a failing side rethrown unwrapped") {

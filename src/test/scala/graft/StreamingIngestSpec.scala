@@ -502,16 +502,53 @@ class StreamingIngestSpec extends AnyFunSuite {
     val dfPlan = h.lexiconRows.filter(col("term").isin("w0000", "w0001"))
       .queryExecution.executedPlan.toString
     val mergeJobs = jobsDuring(graft.merge.Merger.mergeSmall(spark, dir))
-    info(s"jobs: appends $appendJobs, open $openJobs, termDfs $dfJobs, mergeSmall $mergeJobs")
+    // a purging compaction of two segments: one cogroup merge, the stats
+    // refresh and the lexicon rebuild
+    val purgeDir = SparkTestBase.tmpDir("jobs-purge")
+    IndexBuilder.build(spark, spark.createDataset(mkRows(17L, 0, 64)), purgeDir, cfg)
+    graft.build.Deletes.add(spark, purgeDir, Seq(3L, 40L))
+    val purgeJobs = jobsDuring(graft.merge.Merger.compact(spark, purgeDir, applyDeletes = true))
+    assert(IndexBuilder.readStats(fsOf(purgeDir), purgeDir).numDocs == 62)
+    info(s"jobs: appends $appendJobs, open $openJobs, termDfs $dfJobs, mergeSmall $mergeJobs, " +
+      s"purging compact $purgeJobs")
     assert(openJobs == 0, s"Searcher.open started $openJobs jobs")
     assert(dfJobs == 1, s"termDfs started $dfJobs jobs")
     assert(!dfPlan.contains("Exchange"), s"df lookup plan has an exchange:\n$dfPlan")
-    // bounds from this test's counts before the lean write path (CHANGES.md):
-    // open 6 -> 0, each append 25 -> 16, mergeSmall 29 -> 12; an append that
-    // writes no lexicon: 16 -> 8
-    appendJobs.foreach(n => assert(n <= 25 - 6, s"append started $n jobs"))
-    appendJobs.foreach(n => assert(n <= 10, s"append started $n jobs"))
-    assert(mergeJobs <= 29 / 2, s"mergeSmall started $mergeJobs jobs")
+    // bounds from this test's counts (CHANGES.md): the lean write path took
+    // open 6 -> 0, each append 25 -> 16 and mergeSmall 29 -> 12; an append
+    // that writes no lexicon 16 -> 8; record facts folded by the write
+    // tasks each append 8 -> 7, mergeSmall 12 -> 11 and the purging compact
+    // 19 -> 16
+    appendJobs.foreach(n => assert(n <= 7, s"append started $n jobs"))
+    assert(mergeJobs <= 11, s"mergeSmall started $mergeJobs jobs")
+    assert(purgeJobs <= 16, s"purging compact started $purgeJobs jobs")
+  }
+
+  test("a merge group naming no live segment, or one twice, fails before the merge writes") {
+    val empty = SparkTestBase.tmpDir("badgroup-empty") + "/ix"
+    val fs = fsOf(empty)
+    graft.api.Engine.createIndex(spark, empty, IndexConfig(segSize = 32))
+    // a dir no record lists: the merge's orphan sweep would delete it
+    val orphan = new org.apache.hadoop.fs.Path(s"${IndexBuilder.segmentsDir(empty)}/segId=9")
+    fs.mkdirs(orphan)
+    val none = intercept[IllegalArgumentException](
+      graft.merge.Merger.mergeGroup(spark, empty, Seq(0)))
+    assert(none.getMessage.contains("segments [0]") && none.getMessage.contains("not live: 0"),
+      none.getMessage)
+    assert(fs.exists(orphan))
+
+    val dir = tailIndex("badgroup-tail", 29L)
+    val before = snapshot(dir)
+    val missing = intercept[IllegalArgumentException](
+      graft.merge.Merger.mergeGroup(spark, dir, Seq(2, 7)))
+    assert(missing.getMessage.contains("segments [2,7]") &&
+      missing.getMessage.contains("not live: 7"), missing.getMessage)
+    val twice = intercept[IllegalArgumentException](
+      graft.merge.Merger.mergeGroup(spark, dir, Seq(3, 2, 3)))
+    assert(twice.getMessage.contains("segments [3,2,3]") &&
+      twice.getMessage.contains("repeated: 3"), twice.getMessage)
+    // not even the lexicon fold ran
+    assert(snapshot(dir) == before)
   }
 
   test("schema constants == the schemas Spark infers from freshly written files") {
