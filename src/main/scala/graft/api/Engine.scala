@@ -34,7 +34,8 @@ object Engine {
       spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new org.apache.hadoop.fs.Path(indexDir))
     IndexBuilder.commitRecord(fs, indexDir, IndexStats(numDocs = 0, totalFieldLen = 0,
-      numSegments = 0, segSize = cfg.segSize, analyzer = cfg.analyzer.asString), Seq.empty)
+      numSegments = 0, segSize = cfg.segSize, analyzer = cfg.analyzer.asString), Seq.empty,
+      Some(graft.model.LexiconFiles(Nil, Nil)))
   }
 
   /** get_index: stats, or None when absent */

@@ -33,12 +33,14 @@ import graft.model._
   *    size, and phase 2 k-way-merges the <=splits-per-segment runs
   *    streamingly; run-boundary invariance is property-tested;
   *  - commit: `stats.json` is the index's one commit record ([W]
-  *    whoosh/index.py TOC): the stats header, then one manifest line per
-  *    live segment, listing its files and the counts and digest its write
-  *    tasks folded (`SegmentFacts`). Writers promote staging -> final
-  *    (rename), then commit the whole record with one overwriting rename,
-  *    so a reader sees the old record or the new one; readers open only
-  *    the files it lists, so dirs no record lists are garbage;
+  *    whoosh/index.py TOC, Lucene `segments_N`): the stats header naming
+  *    the lexicon's files, then one manifest line per live segment,
+  *    listing its files, its tombstone files and the counts and digest its
+  *    write tasks folded (`SegmentFacts`). Every file is written once;
+  *    writers put new files in place, then commit the whole record with
+  *    one overwriting rename, so a reader sees the old record or the new
+  *    one; readers open only the files it names, and `gc` deletes the
+  *    rest;
   *  - resume: a segment the record lists is never rebuilt; a multi-batch
   *    build commits after every batch (its checkpoint);
   *  - shuffles: ONE wide exchange per batch (compressed runs -> segments),
@@ -70,7 +72,6 @@ object IndexBuilder {
                                skippedSegments: Seq[Int])
 
   // ---- layout ----
-  def docsDir(ix: String) = s"$ix/docs"
   def segmentsDir(ix: String) = s"$ix/segments"
   def docstatsDir(ix: String) = s"$ix/docstats"
   def lexiconDir(ix: String) = s"$ix/lexicon"
@@ -83,7 +84,7 @@ object IndexBuilder {
   // The schema of every parquet table graft writes, exactly as Spark would
   // infer it from the files (columns nullable, segId the trailing
   // partition column). Every read of graft's own files passes its table's
-  // schema (readTable, readFiles), so no read opens a footer or runs a
+  // schema (readFiles, readFlat), so no read opens a footer or runs a
   // one-task schema-inference job; StreamingIngestSpec checks each
   // constant against a fresh inference, so a writer change cannot silently
   // diverge.
@@ -102,25 +103,38 @@ object IndexBuilder {
   /** lexgrams/: 3-gram -> term */
   val LexgramsSchema: StructType = table("gram" -> StringType, "term" -> StringType)
 
-  /** A whole unpartitioned table (the lexicon, the gram sidecar), read
-    * with its known schema */
-  private[graft] def readTable(spark: SparkSession, schema: StructType, root: String): DataFrame =
-    spark.read.schema(schema).parquet(root)
-
   /** A segment table's rows (SegmentsSchema or DocstatsSchema under
     * `root`) from the files of the given segments, (segId, [(name, bytes)])
-    * as their record lines name them. The file index is seeded with exactly
-    * those files and their `segId` partition values, so building, planning
-    * and scanning the relation lists nothing and starts no discovery job; a
-    * listed file that is gone fails the read, naming the file. */
+    * as their record lines name them, with their `segId` partition values. */
   private[graft] def readFiles(spark: SparkSession, schema: StructType, root: String,
                                segs: Seq[(Int, Seq[(String, Long)])]): DataFrame = {
     val dirs = segs.collect { case (segId, files) if files.nonEmpty =>
-      val dir = new Path(s"$root/segId=$segId")
-      PartitionPath(InternalRow(segId), dir) ->
-        files.map { case (n, b) => new FileStatus(b, false, 1, b, 0L, new Path(dir, n)) }.toArray
+      (new Path(s"$root/segId=$segId"), files, segId)
     }
-    val leafFiles = dirs.map { case (part, files) => part.path -> files }.toMap
+    seeded(spark, schema, dirs.map(d => d._1 -> d._2),
+      dirs.map { case (dir, _, segId) => PartitionPath(InternalRow(segId), dir) })
+  }
+
+  /** An unpartitioned table (the lexicon, the gram sidecar) from the files
+    * (name, bytes) the record names under `root`. Its root is qualified:
+    * Spark looks an unpartitioned table's files up by its qualified root. */
+  private[graft] def readFlat(spark: SparkSession, schema: StructType, root: String,
+                              files: Seq[(String, Long)]): DataFrame = {
+    val dir = new Path(root)
+    val q = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+    seeded(spark, schema, Seq(q -> files), Nil)
+  }
+
+  /** A parquet relation over exactly the files of `dirs` (dir -> [(name,
+    * bytes)]) and the partitions `parts`: its file index is seeded with
+    * them, so building, planning and scanning it lists nothing and starts
+    * no discovery job; a named file that is gone fails the read, naming
+    * the file. */
+  private def seeded(spark: SparkSession, schema: StructType,
+                     dirs: Seq[(Path, Seq[(String, Long)])], parts: Seq[PartitionPath]): DataFrame = {
+    val leafFiles = dirs.map { case (dir, files) =>
+      dir -> files.map { case (n, b) => new FileStatus(b, false, 1, b, 0L, new Path(dir, n)) }.toArray
+    }.toMap
     val recorded = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leafFiles.get(path)
       def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
@@ -128,8 +142,8 @@ object IndexBuilder {
     }
     val (partCols, dataCols) = schema.partition(_.name == "segId")
     spark.baseRelationToDataFrame(HadoopFsRelation(
-      new InMemoryFileIndex(spark, dirs.map(_._1.path), Map.empty, Some(schema), recorded,
-        Some(PartitionSpec(StructType(partCols), dirs.map(_._1)))),
+      new InMemoryFileIndex(spark, dirs.map(_._1), Map.empty, Some(schema), recorded,
+        Some(PartitionSpec(StructType(partCols), parts))),
       StructType(partCols), StructType(dataCols), None, new ParquetFileFormat, Map.empty)(spark))
   }
 
@@ -260,20 +274,22 @@ object IndexBuilder {
     * docIds are a pure function of the corpus (D1), so a resumed run
     * re-derives identical ids.
     *
-    * A single-shot build commits once, after its lexicon, so a record means
+    * A single-shot build commits once, with its lexicon, so a record means
     * a finished index. A multi-batch build commits after every batch (its
-    * checkpoint) and writes the lexicon last: until then Searcher.open
-    * refuses the index and asks for this build to be rerun. A directory
-    * holding another on-disk format is refused, naming it for deletion. */
+    * checkpoint) and writes the lexicon last: until a record names one,
+    * Searcher.open and the merges refuse the index and ask for this build
+    * to be rerun. A directory holding another on-disk format is refused,
+    * naming it for deletion. */
   def build(spark: SparkSession, corpus: Dataset[CorpusRow], indexDir: String,
             cfg: IndexConfig = IndexConfig()): BuildReport = {
     val fs = FileSystem.get(new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(statsPath(indexDir)))) {
+    val prior = if (!fs.exists(new Path(statsPath(indexDir)))) None else {
       val fv = readStats(fs, indexDir).formatVersion
       require(fv == IndexStats.CurrentFormat,
         s"$indexDir holds an index in on-disk format $fv, this code builds format " +
           s"${IndexStats.CurrentFormat} and cannot resume it — delete $indexDir and " +
           "rerun IndexBuilder.build")
+      Some(readRecord(fs, indexDir))
     }
 
     // NOT cached: at scale the stamped corpus is too large to pin, and the
@@ -281,42 +297,43 @@ object IndexBuilder {
     // each batch re-derives it. The docstats sidecar doubles as the doc-key
     // map (docId, repo, path, commit, lang, sha) — no separate write.
     def stampedDocs: Dataset[Doc] = stampDocIds(corpus, cfg.sortPartitions)
-    def commit(live: Seq[SegmentManifest]): IndexStats = commitRecord(fs, indexDir,
-      IndexStats(numDocs = live.map(_.docCount).sum,
-        totalFieldLen = live.map(_.rawLenSum).sum, numSegments = live.size,
-        segSize = cfg.segSize, analyzer = cfg.analyzer.asString), live)
+    def stats(live: Seq[SegmentManifest]) = IndexStats(numDocs = live.map(_.docCount).sum,
+      totalFieldLen = live.map(_.rawLenSum).sum, numSegments = live.size,
+      segSize = cfg.segSize, analyzer = cfg.analyzer.asString)
 
     // resume skips every BUILD-LAYOUT segId already covered by a live
     // segment — after compaction the merged segment's `covers` keeps the
     // merged ranges from being re-ingested (docIds are a pure function
     // of the corpus, so coverage by range == coverage by layout segId)
-    val committed = readManifests(fs, indexDir)
+    val committed = prior.fold(Seq.empty[SegmentManifest])(_.segments)
     val done = committed.flatMap(_.coverSet).toSet
     val (live, todo) =
       if (done.isEmpty && cfg.segmentsPerBatch == Int.MaxValue) {
         // fresh single-shot build: NO corpus count, no docId predicate —
         // one pass builds every segment, segIds discovered from the output
         // (a count of a generated/typed-mapped source costs a full scan)
-        val built = buildBatch(spark, fs, stampedDocs, indexDir, None, cfg)
+        val built = buildBatch(spark, fs, stampedDocs, indexDir, None, cfg, committed)
         (built, built.map(_.segId))
       } else {
-        // resume / explicit checkpoint batching: layout from the row count
+        // resume / explicit checkpoint batching: layout from the row count;
+        // each checkpoint keeps the lexicon the record names (none yet for
+        // a fresh build), its new segments outside it
         val numDocs = corpus.count()
         val numSegments = math.max(1, ((numDocs + cfg.segSize - 1) / cfg.segSize).toInt)
         val remaining = (0 until numSegments).filterNot(done)
         val all = remaining.grouped(cfg.segmentsPerBatch).foldLeft(committed) { (live, batch) =>
-          val next = (live ++ buildBatch(spark, fs, stampedDocs, indexDir, Some(batch), cfg))
+          val next = (live ++ buildBatch(spark, fs, stampedDocs, indexDir, Some(batch), cfg, live))
             .sortBy(_.segId)
-          commit(next)
+          commitRecord(fs, indexDir, stats(next), next, prior.flatMap(_.lexicon))
           next
         }
         (all, remaining)
       }
 
     // the lexicon (cheap relative to the build) is redone at the end of
-    // every (re)run so a resumed build finishes identically
-    writeLexiconOf(spark, fs, indexDir, live)
-    BuildReport(commit(live), todo, done.toSeq.sorted)
+    // every (re)run so a resumed build finishes identically; it commits
+    // with the segments
+    BuildReport(writeLexiconOf(spark, fs, indexDir, stats(live), live), todo, done.toSeq.sorted)
   }
 
   /** one pseudo posting: tf 1, position 0, the doc's real lenByte (Every
@@ -332,11 +349,13 @@ object IndexBuilder {
   /** Builds and promotes the segments of `batch` (None: ALL segments found
     * in `docs`, in one pass) and returns their manifests, sorted by segId.
     * Nothing is committed: the caller (build, or a streaming append with
-    * an already stamped, docId-shifted batch) puts them in the record.
+    * an already stamped, docId-shifted batch) puts them in the record,
+    * whose lines are `live` now (no promote replaces one of them).
     * The write tasks fold the manifests' facts (`SegmentFacts`). */
   private[graft] def buildBatch(spark: SparkSession, fs: FileSystem, docs: Dataset[Doc],
                                 indexDir: String, batch: Option[Seq[Int]],
-                                cfg: IndexConfig): Seq[SegmentManifest] = {
+                                cfg: IndexConfig,
+                                live: Seq[SegmentManifest]): Seq[SegmentManifest] = {
     import spark.implicits._
     val segSize = cfg.segSize
     val staging = stagingDir(indexDir)
@@ -499,10 +518,7 @@ object IndexBuilder {
         val f = facts(segId)
         val (lo, hi) = if (f.docCount > 0) (f.docLo, f.docHi)
           else (segId.toLong * segSize, segId.toLong * segSize)
-        val files = listFiles(fs, s"$staging/segments/segId=$segId")
-        val docstats = listFiles(fs, s"$staging/docstats/segId=$segId")
-        promoteDir(fs, s"$staging/segments/segId=$segId", s"${segmentsDir(indexDir)}/segId=$segId")
-        promoteDir(fs, s"$staging/docstats/segId=$segId", s"${docstatsDir(indexDir)}/segId=$segId")
+        val (files, docstats) = promoteSegment(fs, staging, indexDir, segId, live)
         f.line(segId, lo, hi, "corpus", files, docstats)
       }
       fs.delete(new Path(staging), true)
@@ -528,39 +544,40 @@ object IndexBuilder {
     * lookup instead of a full lexicon pass (Searcher.scanMulti).
     *
     * LSM shape, Whoosh-style ([W] whoosh/reading.py MultiReader sums
-    * doc_frequency over its segments' own term tables): the base lexicon
-    * records in `_covers.json` the build-layout cover ids whose stats it
-    * holds. Live segments whose covers lie outside that set are the DELTA
+    * doc_frequency over its segments' own term tables): the record's header
+    * names the lexicon's files, and each line says whether the lexicon
+    * holds its stats (`inLexicon`). The lines outside it are the DELTA
     * lexicon: their own (term, df, cf, maxTf) columns are read from their
     * recorded files (`segmentLexicon`; `blocks` is never read), so an
     * append writes no lexicon file at all. Readers fold base + delta
     * segments (Searcher.open); MERGE_SMALL / compact fold them into the
     * base (foldLexiconDeltas) BEFORE they merge, so a merged segment never
-    * mixes covered and uncovered covers.
+    * mixes segments inside and outside the lexicon.
     *
-    * This full rebuild covers every live segment. */
+    * This full rebuild covers every live segment and commits the record. */
   def writeLexicon(spark: SparkSession, indexDir: String): Unit = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    writeLexiconOf(spark, fs, indexDir, readManifests(fs, indexDir))
+    val rec = readRecord(fs, indexDir)
+    writeLexiconOf(spark, fs, indexDir, rec.stats, rec.segments)
+    ()
   }
 
-  /** writeLexicon over the segments `live` (the record's, or the ones a
-    * caller is about to commit) */
+  /** writeLexicon over the segments `live`, committed with them and the
+    * stats `st` as the index's record */
   private[graft] def writeLexiconOf(spark: SparkSession, fs: FileSystem, indexDir: String,
-                                    live: Seq[SegmentManifest]): Unit = {
+                                    st: IndexStats, live: Seq[SegmentManifest]): IndexStats =
     // the segments' recorded files only: dirs a crashed merge left behind
     // are never read, so they cannot double-count into the global df
-    commitLexicon(spark, fs, indexDir, aggregateLexicon(segmentLexicon(spark, indexDir, live)),
-      grams = None, live.flatMap(_.coverSet).toSet)
-  }
+    commitLexicon(spark, fs, indexDir, st, live,
+      aggregateLexicon(segmentLexicon(spark, indexDir, live)), grams = None)
 
   /** The lexicon rows of the given segments, read from their recorded
     * files (D14 pseudo rows excluded; `blocks` pruned away): one row per
     * (segment, term) — aggregate with `aggregateLexicon`, or sum on the
     * driver for a pruned lookup. `segs` are the delta lexicon (the live
-    * segments the base does not cover yet), or every live segment for a
-    * full rebuild. */
+    * segments outside the lexicon), or every live segment for a full
+    * rebuild. */
   private[graft] def segmentLexicon(spark: SparkSession, indexDir: String,
                                     segs: Seq[SegmentManifest]): DataFrame =
     segmentRows(spark, indexDir, segs).filter(col("term") >= graft.search.Q.RealTermMin)
@@ -574,76 +591,44 @@ object IndexBuilder {
       sum(col("cf")).cast("long").as("cf"),
       max(col("maxTf")).cast("long").as("maxTf"))
 
-  private def coversPath(indexDir: String) = new Path(lexiconDir(indexDir), "_covers.json")
+  /** the lexicon and gram sidecar tables over the files `lex` names */
+  private[graft] def lexiconTables(spark: SparkSession, indexDir: String,
+                                   lex: LexiconFiles): (DataFrame, DataFrame) =
+    (readFlat(spark, LexiconSchema, lexiconDir(indexDir), lex.lexicon),
+      readFlat(spark, LexgramsSchema, lexgramsDir(indexDir), lex.lexgrams))
 
-  /** The cover ids whose stats the base lexicon holds (its `_covers.json`,
-    * written as contiguous `lo-hi` runs); None when no base exists yet. A
-    * base without the marker is not this format's and is refused. */
-  private[graft] def lexiconCovers(fs: FileSystem, indexDir: String): Option[Set[Int]] = {
-    if (!fs.exists(new Path(lexiconDir(indexDir)))) return None
-    val p = coversPath(indexDir)
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"$p: missing (a lexicon from another format?) — rebuild the index " +
-        "(IndexBuilder.build) to migrate")
-    val runs = requiredField(readText(fs, p), p.toString, "covers", "\"([0-9,-]*)\"")
-    Some(runs.split(',').iterator.filter(_.nonEmpty).flatMap { r =>
-      r.split('-') match {
-        case Array(lo, hi) => lo.toInt to hi.toInt
-        case _ => throw new IllegalStateException(s"$p: malformed cover run \"$r\"")
-      }
-    }.toSet)
-  }
-
-  /** The live segments whose stats the base lexicon does not hold: those
-    * whose covers are disjoint from `covered` (every segment when there is
-    * no base). A segment with covers on both sides would be counted half
-    * in the base and whole as a delta, so it fails, naming the segment. */
-  private[graft] def lexiconDeltaSegments(live: Seq[SegmentManifest],
-                                          covered: Set[Int]): Seq[SegmentManifest] =
-    live.filter { m =>
-      val (in, out) = m.coverSet.partition(covered)
-      if (in.nonEmpty && out.nonEmpty) throw new IllegalStateException(
-        s"segment ${m.segId} mixes covers the base lexicon holds (${in.mkString(",")}) " +
-          s"with covers it does not (${out.mkString(",")}) — rebuild the lexicon " +
-          "(IndexBuilder.writeLexicon)")
-      in.isEmpty
-    }
-
-  /** Fold the delta segments into the base lexicon (the LSM compaction
-    * step, run by Merger.mergeSmall/compact before they merge): base ∪ the
-    * delta segments' rows, re-aggregated, committed with the new marker.
-    * The gram sidecar becomes the distinct union of the base grams and the
-    * delta terms' 3-grams. Returns true if anything was folded. */
+  /** Fold the delta segments into the lexicon (the LSM compaction step,
+    * run by Merger.mergeSmall/compact before they merge): the lexicon ∪
+    * the delta segments' rows, re-aggregated, committed with every line
+    * inside it. The gram sidecar becomes the distinct union of its grams
+    * and the delta terms' 3-grams. Returns true if anything was folded.
+    * An unfinished build (its record names no lexicon yet) is refused. */
   def foldLexiconDeltas(spark: SparkSession, indexDir: String): Boolean = {
     import spark.implicits._
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
-    val live = readManifests(fs, indexDir)
-    // no base yet: nothing to fold into
-    val covered = lexiconCovers(fs, indexDir).getOrElse(return false)
-    val deltas = lexiconDeltaSegments(live, covered)
+    val rec = readRecord(fs, indexDir)
+    val lex = lexiconOf(rec, indexDir)
+    val deltas = rec.segments.filterNot(_.inLexicon)
     if (deltas.isEmpty) return false
     val delta = segmentLexicon(spark, indexDir, deltas)
-    val grams = readTable(spark, LexgramsSchema, lexgramsDir(indexDir))
-      .unionByName(gramRowsOf(delta.select($"term").as[String]))
-      .distinct()
-    commitLexicon(spark, fs, indexDir,
-      aggregateLexicon(readTable(spark, LexiconSchema, lexiconDir(indexDir)).unionByName(delta)),
-      Some(grams), live.flatMap(_.coverSet).toSet)
+    val (lexicon, grams) = lexiconTables(spark, indexDir, lex)
+    commitLexicon(spark, fs, indexDir, rec.stats, rec.segments,
+      aggregateLexicon(lexicon.unionByName(delta)),
+      Some(grams.unionByName(gramRowsOf(delta.select($"term").as[String])).distinct()))
     true
   }
 
-  /** Stage the aggregated lexicon `agg` with the marker `covers`, and the
-    * gram sidecar (`grams`, or the 3-grams of every `agg` term), then
-    * promote GRAMS FIRST and the base second. A crash between the two
-    * promotes leaves the old base, whose marker still names the delta
-    * segments, next to a sidecar that already holds their terms' grams: a
-    * superset, so the gram probe still finds every term; a rerun converges.
-    * A crash before either promote leaves only staging dirs, which the
-    * next commit clears. */
+  /** Stage the aggregated lexicon `agg` and the gram sidecar (`grams`, or
+    * the 3-grams of every `agg` term), move each staged parquet file, under
+    * its unique Spark-generated name, into the flat lexicon/ and lexgrams/
+    * dirs, then commit `live` (every line inside the new lexicon) with the
+    * stats `st`: ONE record rename makes both tables live, and `gc` deletes
+    * the old files. A crash before the rename leaves the old record; the
+    * moved files are garbage the next gc deletes. */
   private def commitLexicon(spark: SparkSession, fs: FileSystem, indexDir: String,
-                            agg: DataFrame, grams: Option[DataFrame],
-                            covers: Set[Int]): Unit = {
+                            st: IndexStats, live: Seq[SegmentManifest],
+                            agg: DataFrame, grams: Option[DataFrame]): IndexStats = {
     import spark.implicits._
     val lexPartitions = math.max(1, spark.sessionState.conf.numShufflePartitions / 4)
     val lexStaging = s"${stagingDir(indexDir)}-lexicon"
@@ -668,15 +653,20 @@ object IndexBuilder {
           .sortWithinPartitions("gram", "term")
           .write.mode(SaveMode.Overwrite).parquet(gramStaging))
     } finally { cached.unpersist(); () }
-    // the marker rides the atomic base promote (underscore prefix: parquet
-    // readers skip it)
-    val runs = contiguousRuns(covers.toSeq)
-      .map { case (lo, hi) => s"$lo-$hi" }.mkString(",")
-    val out = fs.create(new Path(lexStaging, "_covers.json"), true)
-    out.write(s"""{"covers":"$runs"}""".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    promoteDir(fs, gramStaging, lexgramsDir(indexDir))
-    promoteDir(fs, lexStaging, lexiconDir(indexDir))
+    def moveInto(staged: String, dir: String): Seq[(String, Long)] = {
+      val files = listFiles(fs, staged)
+      fs.mkdirs(new Path(dir))
+      files.foreach(f => require(fs.rename(new Path(staged, f._1), new Path(dir, f._1)),
+        s"move failed: $staged/${f._1} -> $dir"))
+      fs.delete(new Path(staged), true)
+      files
+    }
+    val lex = LexiconFiles(moveInto(lexStaging, lexiconDir(indexDir)),
+      moveInto(gramStaging, lexgramsDir(indexDir)))
+    val committed = live.map(_.copy(inLexicon = true))
+    val out = commitRecord(fs, indexDir, st, committed, Some(lex))
+    gc(fs, indexDir, Record(out, Some(lex), committed))
+    out
   }
 
   /** (gram, term) sidecar rows of `terms` */
@@ -693,60 +683,59 @@ object IndexBuilder {
 
   // ---- the commit record (stats.json) ----
   //
-  // Line 1 is the flat stats header; one manifest line per live segment
-  // follows, sorted by segId, and the header's numSegments is their count.
-  // A manifest line ends with the segment's parquet files, name and bytes,
-  // as its writer listed them: "files" (segments/) and "docstats"
-  // (docstats/). Every reader finds the segment's rows through them.
-  // Every commit point (build batch, append, merge, compact,
-  // Engine.createIndex) rewrites the whole record through commitRecord, so
-  // the segment set and the counts readers score with change together.
+  // Line 1 is the flat stats header, ending with the lexicon's files once
+  // a lexicon is written; one manifest line per live segment follows,
+  // sorted by segId (numSegments is their count). Each file list is
+  // (name, bytes) as its writer listed it, and readers find every file
+  // through these lists. Every commit point rewrites the whole record
+  // through commitRecord, so the live files and the counts readers score
+  // with change together.
+
+  private def filesJson(key: String, files: Seq[(String, Long)]): String =
+    files.map { case (n, b) => s"""{"name":"$n","bytes":$b}""" }
+      .mkString(s""","$key":[""", ",", "]")
 
   private def manifestJson(m: SegmentManifest): String =
     s"""{"segId":${m.segId},"docLo":${m.docLo},"docHi":${m.docHi},"docCount":${m.docCount},
        |"rawLenSum":${m.rawLenSum},"postingRows":${m.postingRows},"postingBytes":${m.postingBytes},
        |"digest":"${m.digest}","source":"${m.source}",
        |"covers":[${m.coverSet.mkString(",")}]""".stripMargin.replace("\n", "") +
-      Seq("files" -> m.files, "docstats" -> m.docstats).map { case (key, files) =>
-        files.map { case (n, b) => s"""{"name":"$n","bytes":$b}""" }
-          .mkString(s""","$key":[""", ",", "]")
-      }.mkString + "}"
+      filesJson("files", m.files) + filesJson("docstats", m.docstats) +
+      filesJson("deletes", m.deletes) + s""","inLexicon":${m.inLexicon}}"""
 
-  /** Commit `segments` (every live segment, promoted already) with the
-    * counts of `st` as the index's record: written to a tmp file, then
-    * renamed over stats.json — THE commit point, so a crash leaves the old
-    * record or the new one. The header's numSegments is `segments.size`.
-    * Returns the committed stats. */
+  /** Commit `segments` (every live segment, its files in place already),
+    * the counts of `st` and the lexicon files `lexicon` (None: none yet,
+    * an unfinished build) as the index's record: written to a tmp file,
+    * then renamed over stats.json — THE commit point, so a crash leaves the
+    * old record or the new one. The header's numSegments is
+    * `segments.size`. Returns the committed stats. */
   def commitRecord(fs: FileSystem, indexDir: String, st: IndexStats,
-                   segments: Seq[SegmentManifest]): IndexStats = {
+                   segments: Seq[SegmentManifest],
+                   lexicon: Option[LexiconFiles] = None): IndexStats = {
     val committed = st.copy(numSegments = segments.size)
     val header = s"""{"formatVersion":${st.formatVersion},""" +
       s""""numDocs":${st.numDocs},"totalFieldLen":${st.totalFieldLen},""" +
       s""""numSegments":${committed.numSegments},"segSize":${st.segSize},""" +
-      s""""analyzer":"${st.analyzer}"}"""
+      s""""analyzer":"${st.analyzer}"""" +
+      lexicon.fold("")(l => filesJson("lexicon", l.lexicon) + filesJson("lexgrams", l.lexgrams)) +
+      "}"
     val record = (header +: segments.sortBy(_.segId).map(manifestJson)).mkString("", "\n", "\n")
     val tmp = new Path(indexDir, ".stats.json.tmp")
     val out = fs.create(tmp, true)
     out.write(record.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
-    overwriteRename(fs, tmp, new Path(statsPath(indexDir)))
+    // OVERWRITING rename: a delete-then-rename pair leaves a crash window
+    // with NO record, which un-commits the whole index until a rebuild
+    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
+      .rename(tmp, new Path(statsPath(indexDir)), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     committed
   }
 
-  /** OVERWRITING rename (same pattern as Deletes.writeRange): a
-    * delete-then-rename pair leaves a crash window with NO file at the
-    * destination — for the record that window un-commits the whole index
-    * until a rebuild. */
-  private def overwriteRename(fs: FileSystem, tmp: Path, dst: Path): Unit = {
-    org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** The record's live segments; none when no record exists yet. Refuses
-    * an index in another on-disk format, like readCurrentRecord. */
+    * an index in another on-disk format, like readRecord. */
   def readManifests(fs: FileSystem, indexDir: String): Seq[SegmentManifest] =
     if (!fs.exists(new Path(statsPath(indexDir)))) Seq.empty
-    else readCurrentRecord(fs, indexDir)._2
+    else readRecord(fs, indexDir).segments
 
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
@@ -762,21 +751,25 @@ object IndexBuilder {
       throw new IllegalStateException(
         s"$path: missing or malformed \"$key\" (truncated or foreign file?)"))
 
+  /** the required (name, bytes) list `key` of `json` */
+  private def fileList(json: String, path: String, key: String): Seq[(String, Long)] =
+    """\{"name":"([^"]*)","bytes":(\d+)\}""".r
+      .findAllMatchIn(requiredField(json, path, key, "\\[([^\\]]*)\\]"))
+      .map(f => f.group(1) -> f.group(2).toLong).toSeq
+
   private def parseManifest(json: String, path: String): SegmentManifest = {
     def l(k: String): Long = requiredField(json, path, k, "(-?\\d+)").toLong
     def s(k: String): String = requiredField(json, path, k, "\"([^\"]*)\"")
     val segId = l("segId").toInt
-    def files(k: String): Seq[(String, Long)] =
-      """\{"name":"([^"]*)","bytes":(\d+)\}""".r
-        .findAllMatchIn(requiredField(json, path, k, "\\[([^\\]]*)\\]"))
-        .map(f => f.group(1) -> f.group(2).toLong).toSeq
     // fields parse in record order, so a truncated line names its first
     // missing key
     SegmentManifest(segId, l("docLo"), l("docHi"), l("docCount"),
       l("rawLenSum"), l("postingRows"), l("postingBytes"), s("digest"), s("source"),
       covers = requiredField(json, path, "covers", "\\[([0-9,]*)\\]")
         .split(',').toSeq.filter(_.nonEmpty).map(_.toInt),
-      files = files("files"), docstats = files("docstats"))
+      files = fileList(json, path, "files"), docstats = fileList(json, path, "docstats"),
+      deletes = fileList(json, path, "deletes"),
+      inLexicon = requiredField(json, path, "inLexicon", "(true|false)").toBoolean)
   }
 
   private def parseStats(json: String, path: String): IndexStats = {
@@ -784,7 +777,7 @@ object IndexBuilder {
     val analyzer = """"analyzer":"([^"]*)"""".r.findFirstMatchIn(json)
       .map(_.group(1)).getOrElse(graft.analysis.AnalyzerSpec.Standard.asString)
     // unstamped stats.json = a pre-round-5 (<=v6) layout; callers that care
-    // (readCurrentRecord) reject, metadata-only readers still get the numbers
+    // (readRecord) reject, metadata-only readers still get the numbers
     val fv = """"formatVersion":(-?\d+)""".r.findFirstMatchIn(json)
       .map(_.group(1).toInt).getOrElse(0)
     IndexStats(l("numDocs"), l("totalFieldLen"), l("numSegments").toInt,
@@ -799,49 +792,92 @@ object IndexBuilder {
     parseStats(readText(fs, new Path(path)).linesIterator.nextOption().getOrElse(""), path)
   }
 
-  /** The record of an index in THIS code's on-disk format — its stats and
-    * live segments from one read — else a fail-fast "rebuild" error: the
-    * one format check shared by the reader (Searcher.open) and the writers
-    * (append, upsert, merges, compact), so an older index is never
-    * silently relabelled as the current format. Nothing is written before
-    * the check. */
-  def readCurrentRecord(fs: FileSystem, indexDir: String): (IndexStats, Seq[SegmentManifest]) = {
+  /** The record of an index in THIS code's on-disk format — its stats, the
+    * lexicon files its header names and its live segments, from one read —
+    * else a fail-fast "rebuild" error: the one format check shared by the
+    * reader (Searcher.open) and the writers (append, upsert, deletes,
+    * merges, compact), so an older index is never silently relabelled as
+    * the current format. Nothing is written before the check. */
+  def readRecord(fs: FileSystem, indexDir: String): Record = {
     val path = statsPath(indexDir)
     val lines = readText(fs, new Path(path)).linesIterator.toVector
-    val st = parseStats(lines.headOption.getOrElse(""), path)
+    val header = lines.headOption.getOrElse("")
+    val st = parseStats(header, path)
     require(st.formatVersion == IndexStats.CurrentFormat,
       s"index at $indexDir has on-disk formatVersion ${st.formatVersion}, " +
         s"this code needs ${IndexStats.CurrentFormat} — " +
         "rebuild the index (IndexBuilder.build) to migrate")
+    val lexicon = Option.when(header.contains("\"lexicon\":"))(
+      LexiconFiles(fileList(header, path, "lexicon"), fileList(header, path, "lexgrams")))
     val segments = lines.iterator.zipWithIndex.drop(1)
       .map { case (line, i) => parseManifest(line, s"$path line ${i + 1}") }.toVector
     if (segments.size != st.numSegments) throw new IllegalStateException(
       s"$path: \"numSegments\" is ${st.numSegments} but ${segments.size} segment lines " +
         "follow (truncated or foreign file?)")
-    (st, segments)
+    Record(st, lexicon, segments)
   }
 
-  /** Staging -> final dir promote. An occupied destination is replaced by a
-    * RENAME SWAP (dst -> dot-prefixed trash, src -> dst, delete trash)
-    * rather than delete-then-rename (round-5 hygiene, matching the
-    * FileContext OVERWRITE used for the record): the no-file-at-dst
-    * crash window shrinks from a full recursive delete to the instant
-    * between two renames, and a crash leaves the old data recoverable in
-    * the trash dir (swept on the next promote of the same destination). */
-  private[graft] def promoteDir(fs: FileSystem, from: String, to: String): Unit = {
-    val src = new Path(from)
-    val dst = new Path(to)
-    if (!fs.exists(src)) return // an empty segment has no files: nothing to read
-    val parent = dst.getParent
-    if (!fs.exists(parent)) fs.mkdirs(parent)
-    if (fs.exists(dst)) {
-      val trash = new Path(parent, s".promote-trash-${dst.getName}")
-      fs.delete(trash, true) // stale leftover from a prior crash
-      require(fs.rename(dst, trash), s"promote swap-out failed: $to")
-      require(fs.rename(src, dst), s"promote failed: $from -> $to")
-      fs.delete(trash, true)
-    } else require(fs.rename(src, dst), s"promote failed: $from -> $to")
-    ()
+  /** The lexicon files `rec` names, else the "unfinished build" error: a
+    * multi-batch build names its lexicon last, so until its rerun finishes
+    * it, no reader opens the index and no merge rewrites it. */
+  def lexiconOf(rec: Record, indexDir: String): LexiconFiles =
+    rec.lexicon.getOrElse(throw new IllegalStateException(s"index at $indexDir has " +
+      "segments but no lexicon: an unfinished build — rerun IndexBuilder.build to finish it"))
+
+  /** readRecord's stats and live segments */
+  def readCurrentRecord(fs: FileSystem, indexDir: String): (IndexStats, Seq[SegmentManifest]) = {
+    val rec = readRecord(fs, indexDir)
+    (rec.stats, rec.segments)
+  }
+
+  /** Promotes segment `segId`'s staged `staging/{segments,docstats}/segId=N`
+    * dirs into place and returns their (posting, docstats) files, listed
+    * once here so that readers never list. It refuses a segId a `live`
+    * line has (a promote never replaces a live segment) and deletes what a
+    * crash left at the target before its rename. */
+  private[graft] def promoteSegment(fs: FileSystem, staging: String, indexDir: String,
+                                    segId: Int, live: Seq[SegmentManifest])
+      : (Seq[(String, Long)], Seq[(String, Long)]) = {
+    require(!live.exists(_.segId == segId),
+      s"segment $segId is live: a promote never replaces a live segment")
+    def promote(table: String, root: String): Seq[(String, Long)] = {
+      val src = new Path(s"$staging/$table/segId=$segId")
+      val dst = new Path(s"$root/segId=$segId")
+      val files = listFiles(fs, src.toString)
+      fs.delete(dst, true)
+      if (fs.exists(src)) {
+        fs.mkdirs(dst.getParent)
+        require(fs.rename(src, dst), s"promote failed: $src -> $dst")
+      }
+      files
+    }
+    (promote("segments", segmentsDir(indexDir)), promote("docstats", docstatsDir(indexDir)))
+  }
+
+  /** The one GC rule (single writer): delete every segments/ and docstats/
+    * `segId=N` dir no line of `rec` lists, and every file under deletes/,
+    * lexicon/ and lexgrams/ `rec` does not name (hidden checksum files go
+    * with their file), crash leftovers included. Writers run it right
+    * after a commit that stops naming files: a merge, a fold, a lexicon
+    * write or a purge. */
+  private[graft] def gc(fs: FileSystem, indexDir: String, rec: Record): Unit = {
+    def sweep(dir: String)(keep: String => Boolean): Unit = {
+      val p = new Path(dir)
+      if (fs.exists(p)) fs.listStatus(p).foreach { f =>
+        if (!keep(f.getPath.getName)) fs.delete(f.getPath, true)
+      }
+    }
+    val live = rec.segments.map(_.segId).toSet
+    Seq(segmentsDir(indexDir), docstatsDir(indexDir)).foreach(sweep(_) { n =>
+      !n.startsWith("segId=") || n.stripPrefix("segId=").toIntOption.forall(live)
+    })
+    val lex = rec.lexicon.getOrElse(LexiconFiles(Nil, Nil))
+    Seq(Deletes.dir(indexDir) -> rec.segments.flatMap(_.deletes),
+      lexiconDir(indexDir) -> lex.lexicon, lexgramsDir(indexDir) -> lex.lexgrams)
+      .foreach { case (dir, named) =>
+        val names = named.map(_._1).toSet
+        sweep(dir)(n => names(n) || n.startsWith("."))
+      }
   }
 
   private def contiguousRuns(ids: Seq[Int]): Seq[(Int, Int)] = {

@@ -39,12 +39,6 @@ object MultiFieldIndex {
       if (ftype == TextType) analyzer else graft.analysis.AnalyzerSpec.Keyword
   }
 
-  /** the default two-field source-code schema: the file body plus its
-    * tokenized path (what a cockatrice user typically declares) */
-  def contentAndPath: Seq[FieldSpec] = Seq(
-    FieldSpec("content", _.content),
-    FieldSpec("path", _.path))
-
   def fieldDir(root: String, name: String): String = s"$root/fields/$name"
 
   /** build every field's index (one full single-field build per field over

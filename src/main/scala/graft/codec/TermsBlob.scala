@@ -32,15 +32,9 @@ object TermsBlob {
     w.toBytes
   }
 
-  /** one decoded entry; posOff/posLen delimit the wire-form positions bytes */
-  final case class Entry(term: String, tf: Int, posOff: Int, posLen: Int)
-
-  def foreachEntry(blob: Array[Byte])(f: Entry => Unit): Unit =
-    foreachEntryFields(blob)((term, tf, posOff, posLen) =>
-      f(Entry(term, tf, posOff, posLen)))
-
-  /** allocation-lean variant: fields passed positionally (no Entry box) —
-    * the build's hot path visits one entry per (doc, distinct term) */
+  /** each entry's (term, tf, posOff, posLen), posOff/posLen delimiting its
+    * wire-form positions bytes, passed positionally (no box) — the build's
+    * hot path visits one entry per (doc, distinct term) */
   def foreachEntryFields(blob: Array[Byte])(f: (String, Int, Int, Int) => Unit): Unit = {
     val r = new Varint.Reader(blob)
     val numTerms = r.readVarInt()
@@ -56,15 +50,5 @@ object TermsBlob {
       f(term, tf, posOff, r.pos - posOff)
       i += 1
     }
-  }
-
-  /** decode positions of one entry (oracle/tests) */
-  def positions(blob: Array[Byte], e: Entry): Array[Int] = {
-    val r = new Varint.Reader(blob, e.posOff)
-    val out = new Array[Int](e.tf)
-    out(0) = r.readVarInt()
-    var j = 1
-    while (j < e.tf) { out(j) = out(j - 1) + r.readVarInt(); j += 1 }
-    out
   }
 }

@@ -64,7 +64,6 @@ object Varint {
     @inline def readVarInt(): Int = readVarLong().toInt
     @inline def readRawByte(): Int = { val b = buf(pos) & 0xff; pos += 1; b }
     @inline def skip(n: Int): Unit = pos += n
-    @inline def hasMore(limit: Int): Boolean = pos < limit
   }
 
   /** Stand-alone helpers (tests / small utilities). */

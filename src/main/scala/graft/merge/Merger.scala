@@ -1,9 +1,9 @@
 package graft.merge
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 
-import graft.build.{IndexAdmin, IndexBuilder, SegmentFacts}
+import graft.build.{Deletes, IndexAdmin, IndexBuilder, SegmentFacts}
 import graft.codec.PostingsCodec
 import graft.model._
 
@@ -39,30 +39,36 @@ object Merger {
 
   /** Merge a group of segIds into one NEW segment with the COGROUP shape
     * (fresh segId = max live segId + 1 — never an in-place overwrite),
-    * optionally dropping a deletion set (M2: purge at merge). The merged
-    * postings are written as `max(2, group.size)` term-range-partitioned,
-    * term-sorted files inside the one segment dir (parquet min/max stats on
-    * `term` stay sharp per file).
+    * optionally dropping a deletion set (M2: purge at merge). A purge drops
+    * the group's recorded tombstones too, so the merged line lists none;
+    * without `deletes` the merged line carries its members' tombstone
+    * files. The merged postings are written as `max(2, group.size)`
+    * term-range-partitioned, term-sorted files inside the one segment dir
+    * (parquet min/max stats on `term` stay sharp per file).
     *
-    * Crash-safe commit protocol (mirrors the build's promote-then-commit,
-    * shared with the TAIL shape):
+    * Crash-safe commit protocol (the build's promote-then-commit, shared
+    * with the TAIL shape):
     *   1. write merged postings + docstats to staging, folding the
     *      merged line's facts, and promote both into place under the
-    *      FRESH segId (no collision with live dirs);
+    *      FRESH segId (no record lists it; a crash leftover there goes);
     *   2. commit the record with `live - group + merged` and the header
-    *      counts carried over — THE commit point; the merged segment's
-    *      `covers` carries the transitive build-layout lineage for resume;
-    *   3. delete the group's segment dirs — pure GC. A crash before step 2
-    *      leaves promoted dirs no record lists, which the next merge's
-    *      gcOrphanDirs sweeps; a crash anywhere leaves a readable, correct
-    *      index. */
+    *      counts and lexicon carried over — THE commit point; the merged
+    *      segment's `covers` carries the transitive build-layout lineage
+    *      for resume;
+    *   3. `gc`: the group's dirs and any tombstone file the record stopped
+    *      naming go. A crash before step 2 leaves files no record names,
+    *      which the next gc deletes; a crash anywhere leaves a readable,
+    *      correct index, and a rerun mints the same segId.
+    * Every merge folds the delta lexicon first, so an unfinished
+    * multi-batch build (no lexicon yet) is refused before anything is
+    * written or a segId the build's rerun would build is minted. */
   def mergeGroup(spark: SparkSession, indexDir: String, group: Seq[Int],
                  deletes: Set[Long] = Set.empty): Int = {
     members(IndexBuilder.readManifests(IndexAdmin.fsOf(spark, indexDir), indexDir), group)
-    // fold first: the merged segment must not mix covers the base lexicon
-    // holds with covers it does not
+    // fold first: every member of the merged segment must be inside the
+    // lexicon
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
-    merge(spark, indexDir, group, deletes, tail = false)
+    merge(spark, indexDir, group, deletes, purge = deletes.nonEmpty, tail = false)
   }
 
   /** The record lines of `group`, sorted by segId; fails, naming the ids,
@@ -77,21 +83,22 @@ object Merger {
     group.sorted.map(byId)
   }
 
-  /** one merge of `group` in the COGROUP or TAIL shape; returns the fresh
-    * segId */
+  /** one merge of `group` in the COGROUP or TAIL shape, purging (with
+    * `purge`) the group's recorded tombstones plus `extra`; returns the
+    * fresh segId */
   private def merge(spark: SparkSession, indexDir: String, group: Seq[Int],
-                    deletes: Set[Long], tail: Boolean): Int = {
-    require(!tail || deletes.isEmpty, "a tail merge purges no deletes")
+                    extra: Set[Long], purge: Boolean, tail: Boolean): Int = {
+    require(!tail || !purge, "a tail merge purges no deletes")
     val fs = IndexAdmin.fsOf(spark, indexDir)
-    val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
+    val rec = IndexBuilder.readRecord(fs, indexDir)
+    val live = rec.segments
     val manifests = members(live, group)
+    require(manifests.forall(_.inLexicon),
+      s"segments [${group.mkString(",")}]: fold the delta lexicon before merging")
     val sorted = manifests.map(_.segId)
-    // GC crash leftovers BEFORE picking the target id: a crash between
-    // promote and record commit leaves segId dirs no record lists — a
-    // rerun recomputes the same target (max live segId + 1). Readers open
-    // only recorded files, so this sweep only frees disk.
-    gcOrphanDirs(fs, indexDir, live.map(_.segId).toSet)
     val targetId = live.map(_.segId).max + 1
+    val deletes =
+      if (purge) extra ++ manifests.flatMap(Deletes.ofLine(fs, indexDir, _)) else Set.empty[Long]
 
     // tombstones ride as a broadcast SORTED ARRAY probed by binary search
     // (exactly like the query kernel) — never as Catalyst literals: a full
@@ -129,55 +136,44 @@ object Merger {
     }
 
     val staging = s"${IndexBuilder.stagingDir(indexDir)}-merge"
-    val dsStaging = s"$staging-docstats"
     fs.delete(new Path(staging), true)
-    fs.delete(new Path(dsStaging), true)
     val facts = new SegmentFacts
     spark.sparkContext.register(facts)
     try {
-      if (tail) writeTail(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
-        facts)
-      else writeCogroup(spark, indexDir, manifests, targetId, mergeRuns, staging, dsStaging,
-        delB, facts)
+      if (tail) writeTail(spark, indexDir, manifests, targetId, mergeRuns, staging, facts)
+      else writeCogroup(spark, indexDir, manifests, targetId, mergeRuns, staging, delB, facts)
     } finally delB.foreach(_.destroy())
-    val files = IndexBuilder.listFiles(fs, s"$staging/segId=$targetId")
-    val docstats = IndexBuilder.listFiles(fs, s"$dsStaging/segId=$targetId")
 
     // 1. promote into place under the fresh segId (a group whose docs were
     // ALL tombstoned writes no partition dir — commit an empty segment)
-    IndexBuilder.promoteDir(fs, s"$staging/segId=$targetId",
-      s"${IndexBuilder.segmentsDir(indexDir)}/segId=$targetId")
-    IndexBuilder.promoteDir(fs, s"$dsStaging/segId=$targetId",
-      s"${IndexBuilder.docstatsDir(indexDir)}/segId=$targetId")
+    val (files, docstats) = IndexBuilder.promoteSegment(fs, staging, indexDir, targetId, live)
     fs.delete(new Path(staging), true)
-    fs.delete(new Path(dsStaging), true)
 
     // 2. the commit point: the merged segment, with its folded facts
-    // (BASELINE.json "row-count/sha256 metrics") and the members' docId
-    // range, replaces the group
+    // (BASELINE.json "row-count/sha256 metrics"), the members' docId range
+    // and, unless it purged them, their tombstone files, replaces the group
     val m = facts(targetId).line(targetId, manifests.map(_.docLo).min,
       manifests.map(_.docHi).max, s"merge(${sorted.mkString(",")})", files, docstats,
       covers = manifests.flatMap(_.coverSet).distinct.sorted)
-    IndexBuilder.commitRecord(fs, indexDir, st,
-      live.filterNot(l => sorted.contains(l.segId)) :+ m)
+      .copy(deletes = if (purge) Nil else manifests.flatMap(_.deletes), inLexicon = true)
+    val committed = live.filterNot(l => sorted.contains(l.segId)) :+ m
+    IndexBuilder.commitRecord(fs, indexDir, rec.stats, committed, rec.lexicon)
 
-    // 3. GC the group's dirs
-    sorted.foreach { id =>
-      fs.delete(new Path(s"${IndexBuilder.segmentsDir(indexDir)}/segId=$id"), true)
-      fs.delete(new Path(s"${IndexBuilder.docstatsDir(indexDir)}/segId=$id"), true)
-    }
+    // 3. GC what the record stopped naming
+    IndexBuilder.gc(fs, indexDir, rec.copy(segments = committed))
     targetId
   }
 
   /** COGROUP shape: shuffle the group's rows by term, fold each term's runs,
-    * write `max(2, group.size)` term-range files under `staging/segId=N`;
+    * write `max(2, group.size)` term-range files under
+    * `staging/segments/segId=N`;
     * the docstats sidecars are re-keyed under the fresh segId (the sidecar
     * is keyed by docId; segId is only physical placement) minus the purged
     * docs (`delB`). `facts` folds after the range exchange, never in its
     * sampling job. */
   private def writeCogroup(spark: SparkSession, indexDir: String, group: Seq[SegmentManifest],
                            targetId: Int, mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
-                           staging: String, dsStaging: String,
+                           staging: String,
                            delB: Option[org.apache.spark.broadcast.Broadcast[Array[Long]]],
                            facts: SegmentFacts): Unit = {
     import spark.implicits._
@@ -200,7 +196,7 @@ object Merger {
     merged.repartitionByRange(math.max(2, group.size), $"term")
       .sortWithinPartitions("term")
       .mapPartitions(facts.postings)
-      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(staging)
+      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(s"$staging/segments")
 
     val docstats = IndexBuilder.docstatsRows(spark, indexDir, group).as[DocStat]
     // same broadcast binary-search probe as mergeRuns (bounded by the
@@ -208,19 +204,19 @@ object Merger {
     delB.fold(docstats)(b =>
         docstats.filter(d => java.util.Arrays.binarySearch(b.value, d.docId) < 0))
       .mapPartitions(it => facts.docs(it.map(_.copy(segId = targetId))))
-      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(dsStaging)
+      .write.mode(SaveMode.Overwrite).partitionBy("segId").parquet(s"$staging/docstats")
   }
 
   /** TAIL shape: ONE task merges the whole group — the members' rows are
     * coalesced into one partition and sorted by term (spillable, no
     * exchange), consecutive same-term rows fold with `mergeRuns`, and one
-    * file with one row group lands in `staging/segId=N`. The docstats
+    * file with one row group lands in `staging/segments/segId=N`. The docstats
     * sidecars are coalesced into one docId-sorted file the same way, in a
     * concurrent job. Both jobs are one stage, so `facts` folds there. */
   private def writeTail(spark: SparkSession, indexDir: String,
                         group: Seq[SegmentManifest], targetId: Int,
                         mergeRuns: (String, Seq[SegRead]) => Option[SegRow],
-                        staging: String, dsStaging: String, facts: SegmentFacts): Unit = {
+                        staging: String, facts: SegmentFacts): Unit = {
     import spark.implicits._
     IndexBuilder.concurrently("graft-merge-docstats")(
       IndexBuilder.segmentRows(spark, indexDir, group)
@@ -237,31 +233,14 @@ object Merger {
           })
         }
         .drop("segId")
-        .write.mode(SaveMode.Overwrite).parquet(s"$staging/segId=$targetId"),
+        .write.mode(SaveMode.Overwrite).parquet(s"$staging/segments/segId=$targetId"),
       IndexBuilder.docstatsRows(spark, indexDir, group).as[DocStat]
         .coalesce(1)
         .mapPartitions(it => facts.docs(it.map(_.copy(segId = targetId))))
         .drop("segId")
         .sortWithinPartitions("docId")
-        .write.mode(SaveMode.Overwrite).parquet(s"$dsStaging/segId=$targetId"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$staging/docstats/segId=$targetId"))
     ()
-  }
-
-  /** delete segments/docstats `segId=N` dirs whose N the record does not
-    * list (single-writer assumption: no build or merge runs concurrently):
-    * the one code that lists these dirs, freeing disk no reader reads */
-  private[graft] def gcOrphanDirs(fs: FileSystem, indexDir: String,
-                                  live: Set[Int]): Unit = {
-    Seq(IndexBuilder.segmentsDir(indexDir), IndexBuilder.docstatsDir(indexDir))
-      .foreach { d =>
-        val p = new Path(d)
-        if (fs.exists(p)) fs.listStatus(p).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("segId=") &&
-              n.stripPrefix("segId=").toIntOption.exists(id => !live.contains(id)))
-            fs.delete(st.getPath, true)
-        }
-      }
   }
 
   /** Size-tiered incremental merge policy ([W] whoosh/writing.py
@@ -294,19 +273,18 @@ object Merger {
   def mergeSmall(spark: SparkSession, indexDir: String, smallDocs: Long = 0,
                  groupSize: Int = 8): Seq[Int] = {
     require(groupSize >= 2)
-    val fs = IndexAdmin.fsOf(spark, indexDir)
-    val (st, ms) = IndexBuilder.readCurrentRecord(fs, indexDir)
-    val target = if (smallDocs > 0) smallDocs else st.segSize.toLong
-    // the fold writes no record, so `ms` stays the live set
+    val rec = IndexBuilder.readRecord(IndexAdmin.fsOf(spark, indexDir), indexDir)
+    val target = if (smallDocs > 0) smallDocs else rec.stats.segSize.toLong
+    // the fold commits the same segments, so `rec.segments` stays the live set
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
     val minted = scala.collection.mutable.ArrayBuffer.empty[Int]
     var run = List.empty[SegmentManifest]
     def flush(): Unit = {
       if (run.size >= 2)
-        minted += merge(spark, indexDir, run.map(_.segId), Set.empty, tail = true)
+        minted += merge(spark, indexDir, run.map(_.segId), Set.empty, purge = false, tail = true)
       run = Nil
     }
-    ms.sortBy(m => (m.docLo, m.segId)).foreach { m =>
+    rec.segments.sortBy(m => (m.docLo, m.segId)).foreach { m =>
       if (m.docCount >= target) flush() // a large segment breaks the run
       else {
         run = run :+ m
@@ -327,59 +305,40 @@ object Merger {
 
   /** hierarchical compaction with the COGROUP shape: repeatedly merge
     * adjacent groups of `groupSize` until one segment remains (reference
-    * `optimize_index`). With `applyDeletes`, the index's tombstone set is
-    * purged during the merge and cleared once fully compacted (M2). */
+    * `optimize_index`). With `applyDeletes`, every merge purges its group's
+    * tombstones (M2), the lines the merges left that still have tombstones
+    * are purged alone, and the stats and the lexicon are refreshed in one
+    * commit. */
   def compact(spark: SparkSession, indexDir: String, groupSize: Int = 8,
               applyDeletes: Boolean = false): Unit = {
     require(groupSize >= 2)
     val fs = IndexAdmin.fsOf(spark, indexDir)
-    var ms = IndexBuilder.readCurrentRecord(fs, indexDir)._2
+    var ms = IndexBuilder.readManifests(fs, indexDir)
     // fold before merging (see mergeSmall)
     IndexBuilder.foldLexiconDeltas(spark, indexDir)
-    val delRids = if (applyDeletes) graft.build.Deletes.listRanges(fs, indexDir)
-      else Set.empty[Long]
-    val hadDeletes = delRids.nonEmpty
-    val purged = scala.collection.mutable.Set.empty[Int]
+    val hadDeletes = applyDeletes && ms.exists(_.deletes.nonEmpty)
     while (ms.size > 1) {
       // group segments ADJACENT IN docId ORDER (docLo), the LSM invariant:
       // merged ranges stay concatenable at every level regardless of the
-      // fresh segIds merges mint
-      val byId = ms.map(m => m.segId -> m).toMap
+      // fresh segIds merges mint; a purge set is bounded by its group's
+      // tombstones, never the index-wide count
       ms.sortBy(m => (m.docLo, m.segId)).map(_.segId).grouped(groupSize).foreach { g =>
-        if (g.size > 1) {
-          // purge set bounded by THIS group's doc ranges (per-range
-          // sidecars), never the index-wide tombstone count
-          val dels = if (applyDeletes)
-            graft.build.Deletes.forCovers(fs, indexDir, g.flatMap(byId(_).coverSet))
-          else Set.empty[Long]
-          val merged = merge(spark, indexDir, g, dels, tail = false)
-          if (applyDeletes) purged += merged
-        }
+        if (g.size > 1) merge(spark, indexDir, g, Set.empty, purge = applyDeletes, tail = false)
       }
       ms = IndexBuilder.readManifests(fs, indexDir)
     }
     if (hadDeletes) {
       // segments the merge loop never rewrote (odd leftovers, or an index
-      // already compacted to one segment) still hold tombstoned postings:
-      // rewrite each one whose covered ranges intersect the tombstones —
-      // without this, the clear() below would silently DROP deletions
-      IndexBuilder.readManifests(fs, indexDir)
-        .filterNot(m => purged.contains(m.segId))
-        .filter(m => m.coverSet.exists(r => delRids.contains(r.toLong)))
-        .foreach { m =>
-          val dels = graft.build.Deletes.forCovers(fs, indexDir, m.coverSet)
-          if (dels.nonEmpty) merge(spark, indexDir, Seq(m.segId), dels, tail = false)
-        }
-    }
-    if (hadDeletes) {
+      // already compacted to one segment) still hold tombstoned postings
+      ms.filter(_.deletes.nonEmpty).foreach { m =>
+        merge(spark, indexDir, Seq(m.segId), Set.empty, purge = true, tail = false)
+      }
       // stats refresh after physical purge (N/avgfl shrink with the purge)
-      val (st, live) = IndexBuilder.readCurrentRecord(fs, indexDir)
-      IndexBuilder.commitRecord(fs, indexDir, st.copy(
-        numDocs = live.map(_.docCount).sum,
-        totalFieldLen = live.map(_.rawLenSum).sum), live)
-      // the purge shrank dfs: full lexicon rebuild
-      IndexBuilder.writeLexiconOf(spark, fs, indexDir, live)
-      graft.build.Deletes.clear(spark, indexDir)
+      // and a full lexicon rebuild (the purge shrank dfs), one commit
+      val rec = IndexBuilder.readRecord(fs, indexDir)
+      IndexBuilder.writeLexiconOf(spark, fs, indexDir, rec.stats.copy(
+        numDocs = rec.segments.map(_.docCount).sum,
+        totalFieldLen = rec.segments.map(_.rawLenSum).sum), rec.segments)
     }
   }
 }

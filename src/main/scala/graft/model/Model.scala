@@ -60,16 +60,31 @@ final case class LexRow(term: String, df: Long, cf: Long, maxTf: Long)
   *
   * `files` / `docstats` = the segment's parquet files (name, bytes) in its
   * segments/ and docstats/ dirs, as its writer listed them when it staged
-  * them: every reader finds the segment's rows through these lists. */
+  * them: every reader finds the segment's rows through these lists.
+  * `deletes` = its tombstone files (name, bytes) in the flat deletes/ dir,
+  * each written once (Deletes); `inLexicon` = the record's lexicon holds
+  * its term stats (else it is part of the delta lexicon). */
 final case class SegmentManifest(segId: Int, docLo: Long, docHi: Long,
                                  docCount: Long, rawLenSum: Long,
                                  postingRows: Long, postingBytes: Long,
                                  digest: String, source: String,
                                  files: Seq[(String, Long)],
                                  docstats: Seq[(String, Long)],
-                                 covers: Seq[Int] = Seq.empty) {
+                                 covers: Seq[Int] = Seq.empty,
+                                 deletes: Seq[(String, Long)] = Seq.empty,
+                                 inLexicon: Boolean = false) {
   def coverSet: Seq[Int] = if (covers.isEmpty) Seq(segId) else covers
 }
+
+/** The lexicon's parquet files (name, bytes) in the flat lexicon/ and
+  * lexgrams/ dirs, as the record's header names them. */
+final case class LexiconFiles(lexicon: Seq[(String, Long)], lexgrams: Seq[(String, Long)])
+
+/** The index's commit record (stats.json): its stats header, the lexicon
+  * the header names (None: a multi-batch build that has not written it
+  * yet), and one line per live segment. */
+final case class Record(stats: IndexStats, lexicon: Option[LexiconFiles],
+                        segments: Seq[SegmentManifest])
 
 final case class IndexStats(numDocs: Long, totalFieldLen: Long,
                             numSegments: Int, segSize: Int,
@@ -84,7 +99,7 @@ object IndexStats {
     * History: <=6 unstamped (v6 = persisted pseudo rows + lexicon maxTf);
     * 7 = v6 + the optional LSM delta-lexicon dir (lexdeltas) and TOC cache;
     * 8 = segment-backed deltas: appends write no lexicon, the base lexicon
-    * carries `_covers.json` and readers fold it with the uncovered
+    * carries a covers marker file and readers fold it with the uncovered
     * segments' own term stats (a v7 index may hold pending lexdeltas this
     * reader would not count, so it must be rebuilt);
     * 9 = one commit record: stats.json lists the live segments after its
@@ -92,6 +107,11 @@ object IndexStats {
     * gone (a v8 index keeps its segment set in files this reader ignores);
     * 10 = every segment line lists its posting and docstats files, and
     * readers find the rows through those lists only (a v9 line may lack
-    * them, and nothing lists a segment dir to make up for it). */
-  final val CurrentFormat = 10
+    * them, and nothing lists a segment dir to make up for it);
+    * 11 = the record names every live file: each line lists its tombstone
+    * files and whether the lexicon holds it, the header the lexicon's and
+    * the gram sidecar's files, so no reader lists a dir (a v10 index keeps
+    * its tombstones in range files and its lexicon coverage in a marker
+    * file this reader ignores). */
+  final val CurrentFormat = 11
 }

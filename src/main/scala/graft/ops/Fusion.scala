@@ -102,22 +102,6 @@ object Fusion {
       .orderBy(col("bm25_rank"))
   }
 
-  /** Convenience wrapper: run the engine search for `query` (top `kLex`),
-    * map docIds to embedding ids via `idMap` (null = identity), then mine
-    * hard negatives against `queryVec`. */
-  def mineHardNegatives(spark: SparkSession, handle: Searcher.IndexHandle,
-                        query: String, idMap: DataFrame,
-                        emb: DataFrame, idCol: String, vecCol: String,
-                        queryVec: Array[Float], kLex: Int = 100,
-                        simCutoff: Double = 0.30,
-                        weighting: Weighting = BM25Weighting): DataFrame = {
-    val hits0 = Searcher.search(spark, handle, query, kLex, weighting = weighting)
-    val lexical =
-      (if (idMap == null) hits0.select(col("docId").as("id"), col("score"))
-       else hits0.join(idMap, Seq("docId")).select(col("id"), col("score")))
-    hardNegatives(lexical, emb, idCol, vecCol, queryVec, simCutoff)
-  }
-
   /** Hybrid top-k: the engine's BM25 hits for `query` fused with exact
     * cosine top-k around `queryVec`, RRF-combined on a shared id space.
     *

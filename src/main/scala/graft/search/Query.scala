@@ -681,16 +681,6 @@ object QueryParser {
       case TNear(_, _) => QEmpty // leading NEAR: missing left operand
     }
 
-    // `"a b"^2` lexes the boost as a separate trailing word token
-    def trailingBoost(): Double = peek match {
-      case Some(Word(w)) if w.startsWith("^") && w.length > 1 =>
-        w.substring(1).toDoubleOption.filter(_ > 0.0) match {
-          case Some(b) => pop(); b
-          case None    => 1.0
-        }
-      case _ => 1.0
-    }
-
     // `"a b"~2`, `"a b"^3`, `"a b"~2^3`: slop and/or boost lex as one
     // trailing word token after the closing quote
     def trailingMods(): (Int, Double) = peek match {

@@ -46,36 +46,38 @@ object Searcher {
   final case class SearchHit(docId: Long, score: Double)
 
   /** Opened once per index: corpus stats and the live segments with their
-    * files (`manifests`) from the commit record, the lexicon relations, the
-    * relations over those files (built once, on first use), the deletion-sidecar
-    * map (S6 — segId -> tombstone range files; the tombstones themselves
-    * are loaded per segment INSIDE the kernel, never collected to the
-    * driver), and a df memo (the index is immutable under a handle).
+    * files and tombstone files (`manifests`) from the commit record, the
+    * lexicon relations over the files its header names, the relations over
+    * the segment files (built once, on first use), and a df memo (the
+    * index is immutable under a handle). The tombstones themselves are
+    * loaded per segment INSIDE the kernel, never collected to the driver.
     *
-    * Lexicon: `lexiconBase` is the base lexicon, `lexDelta` the term stats
-    * of the live segments it does not cover yet (appended since the last
-    * fold; IndexBuilder.writeLexicon). `lexiconRows` is their union, one row
+    * Lexicon: `lexiconBase` is the lexicon, `lexDelta` the term stats of
+    * the live segments outside it (appended since the last fold;
+    * IndexBuilder.writeLexicon). `lexiconRows` is their union, one row
     * per (source, term) — pruned lookups sum it on the driver (termDfs,
     * termStats); `lexicon` is the grouped one-row-per-term view, for scans
     * (multiterm expansion, suggest, key terms, reader stats). With no
-    * deltas all three are the bare base scan.
+    * deltas all three are the bare lexicon scan.
     *
-    * SNAPSHOT SEMANTICS: a handle pins the segment and docstats files that
-    * existed at open time. Merge/compaction REPLACES them, so a query,
-    * lookup or facet through a pre-compaction handle fails with an error
-    * that names the missing file (the reference behaves the same: searchers
-    * are reopened after optimize). At cluster scale, leave superseded
-    * segment files in place until readers drain before GC'ing them. */
+    * SNAPSHOT SEMANTICS: a handle reads only the files its record named —
+    * segments, docstats, tombstones and lexicon — and every file is
+    * written once, so later deletes, upserts and appends do not change its
+    * answers. Merges, folds and lexicon rebuilds delete the files their
+    * new record no longer names, so a query, lookup or facet through a
+    * handle opened before one fails with an error that names the missing
+    * file (the reference behaves the same: searchers are reopened after
+    * optimize). At cluster scale, leave superseded files in place until
+    * readers drain before GC'ing them. */
   final class IndexHandle(val indexDir: String, val stats: BM25.CorpusStats,
                           val segSize: Int,
                           /** the record's live segments, with their files */
                           val manifests: Seq[SegmentManifest],
                           val lexiconBase: DataFrame,
-                          val delRanges: Map[Int, Seq[Long]],
-                          val chain: graft.analysis.Chain = graft.analysis.Chain.Standard,
-                          val lexgrams: Option[DataFrame] = None,
-                          val lexDelta: Option[DataFrame] = None) {
-    def hasDeletes: Boolean = delRanges.nonEmpty
+                          val chain: graft.analysis.Chain,
+                          val lexgrams: DataFrame,
+                          val lexDelta: Option[DataFrame]) {
+    def hasDeletes: Boolean = manifests.exists(_.deletes.nonEmpty)
     val liveSegIds: Seq[Int] = manifests.map(_.segId)
     /** every query runs with no exchange below the kernel (one path) */
     val segColocated: Boolean = true
@@ -91,54 +93,31 @@ object Searcher {
     private[search] val dfCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   }
 
-  /** Open an index from its commit record: stats, live segments and their
-    * files come from ONE read of stats.json; open writes nothing, lists no
-    * segment dir (appended ones add no FS call) and reads no segment file (a
-    * corrupt one fails only the queries that read it), and starts no job. */
+  /** Open an index from its commit record: stats, live segments, their
+    * files and tombstone files and the lexicon's files come from ONE read
+    * of stats.json; open writes nothing, lists no dir and reads no other
+    * file (a corrupt one fails only the queries that read it), and starts
+    * no job. */
   def open(spark: SparkSession, indexDir: String): IndexHandle = {
     val fs = FileSystem.get(new java.net.URI(indexDir),
       spark.sparkContext.hadoopConfiguration)
     // Fail FAST on a foreign layout (round-5 advice): an older index would
-    // silently answer wrong (a v9 line may not list its files, which this
-    // reader never looks for elsewhere), so it asks for a rebuild.
-    val (st, manifests) = IndexBuilder.readCurrentRecord(fs, indexDir)
-    // deletes: one listing; per-segment sidecars resolve through the
-    // manifest's build-layout `covers` so tombstones stay addressable after
-    // compactions that mint fresh segIds
-    val delRids = graft.build.Deletes.listRanges(fs, indexDir)
-    val delRanges: Map[Int, Seq[Long]] =
-      if (delRids.isEmpty) Map.empty
-      else manifests.iterator.map { m =>
-        m.segId -> m.coverSet.map(_.toLong).filter(delRids)
-      }.filter(_._2.nonEmpty).toMap
-    val lexgrams =
-      if (fs.exists(new org.apache.hadoop.fs.Path(IndexBuilder.lexgramsDir(indexDir))))
-        Some(IndexBuilder.readTable(spark, IndexBuilder.LexgramsSchema,
-          IndexBuilder.lexgramsDir(indexDir)))
-      else None
-    // LSM lexicon: the base plus the term stats of the live segments its
-    // `_covers.json` does not name (appended since the last fold), read
-    // from their recorded files (IndexBuilder.segmentLexicon); an index
-    // with no segments yet (Engine.createIndex) gets an empty relation
-    val (lexiconBase, lexDelta) =
-      if (manifests.isEmpty) {
-        import spark.implicits._
-        (spark.emptyDataset[LexRow].toDF(), None)
-      } else {
-        // a multi-batch build commits after every batch and writes the
-        // lexicon last: segments without a lexicon are an unfinished build
-        val covered = IndexBuilder.lexiconCovers(fs, indexDir).getOrElse(
-          throw new IllegalStateException(s"index at $indexDir has segments but no " +
-            "lexicon: an unfinished build — rerun IndexBuilder.build to finish it"))
-        val deltas = IndexBuilder.lexiconDeltaSegments(manifests, covered)
-        (IndexBuilder.readTable(spark, IndexBuilder.LexiconSchema,
-          IndexBuilder.lexiconDir(indexDir)),
-          Option.when(deltas.nonEmpty)(IndexBuilder.segmentLexicon(spark, indexDir, deltas)))
-      }
-    new IndexHandle(indexDir, BM25.CorpusStats(st.numDocs, st.totalFieldLen),
-      st.segSize, manifests, lexiconBase, delRanges,
-      new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(st.analyzer)),
-      lexgrams, lexDelta)
+    // silently answer wrong (a v10 record names no tombstone or lexicon
+    // file, which this reader never looks for elsewhere), so it asks for a
+    // rebuild.
+    val rec = IndexBuilder.readRecord(fs, indexDir)
+    // a multi-batch build commits after every batch and names the lexicon
+    // last: segments without a lexicon are an unfinished build
+    val lex = IndexBuilder.lexiconOf(rec, indexDir)
+    // LSM lexicon: the lexicon plus the term stats of the live segments
+    // outside it (appended since the last fold), read from their recorded
+    // files (IndexBuilder.segmentLexicon)
+    val deltas = rec.segments.filterNot(_.inLexicon)
+    val (lexicon, lexgrams) = IndexBuilder.lexiconTables(spark, indexDir, lex)
+    new IndexHandle(indexDir, BM25.CorpusStats(rec.stats.numDocs, rec.stats.totalFieldLen),
+      rec.stats.segSize, rec.segments, lexicon,
+      new graft.analysis.Chain(graft.analysis.AnalyzerSpec.fromString(rec.stats.analyzer)),
+      lexgrams, Option.when(deltas.nonEmpty)(IndexBuilder.segmentLexicon(spark, indexDir, deltas)))
   }
 
   /** Multiterm expansion against the global lexicon: matching terms in
@@ -150,8 +129,7 @@ object Searcher {
     *     (pushed gram IN (...)), superset-guaranteed — a fuzzy within d
     *     edits of t shares a 3-gram of t when len(t) >= 3d + 3; a wildcard
     *     match contains every gram of its longest literal run;
-    *  3. full lexicon pass — only for terms too short for the guarantee or
-    *     indexes without the sidecar. */
+    *  3. full lexicon pass — only for terms too short for the guarantee. */
   private[graft] def scanMulti(spark: SparkSession, handle: IndexHandle,
                                mq: QMulti): Seq[String] = {
     import spark.implicits._
@@ -160,7 +138,7 @@ object Searcher {
         .select($"term").as[String].collect().toSeq
 
     def gramProbe(grams: Seq[String]): Option[DataFrame] =
-      if (grams.isEmpty) None else gramTerms(handle, grams)
+      Option.when(grams.nonEmpty)(gramTerms(handle, grams))
 
     mq match {
       case v: QVariations => // D16: a small enumerated set -> pushed IN
@@ -192,14 +170,12 @@ object Searcher {
 
   /** The distinct candidate terms sharing one of `grams`: the gram
     * sidecar's pruned probe, plus every term of the delta segments (the
-    * sidecar holds only base terms; the delta's term set is tail-sized, and
-    * every caller filters candidates exactly). None without a sidecar. */
-  private def gramTerms(handle: IndexHandle, grams: Seq[String]): Option[DataFrame] =
-    handle.lexgrams.map { lg =>
-      val probed = lg.filter(col("gram").isin(grams: _*)).select(col("term"))
-      handle.lexDelta.fold(probed)(d => probed.unionByName(d.select(col("term"))))
-        .distinct()
-    }
+    * sidecar holds only the lexicon's terms; the delta's term set is
+    * tail-sized, and every caller filters candidates exactly). */
+  private def gramTerms(handle: IndexHandle, grams: Seq[String]): DataFrame = {
+    val probed = handle.lexgrams.filter(col("gram").isin(grams: _*)).select(col("term"))
+    handle.lexDelta.fold(probed)(d => probed.unionByName(d.select(col("term")))).distinct()
+  }
 
   /** Spelling suggestions (Whoosh `Searcher.suggest`): lexicon terms within
     * `maxDist` edits of `word`, ranked (distance asc, df desc, term asc) —
@@ -213,8 +189,7 @@ object Searcher {
     val w = word.toLowerCase(java.util.Locale.ROOT)
     val base =
       if (w.length >= 3 * maxDist + 3)
-        gramTerms(handle, IndexBuilder.grams3(w).toIndexedSeq)
-          .map(handle.lexicon.join(_, Seq("term"))).getOrElse(handle.lexicon)
+        handle.lexicon.join(gramTerms(handle, IndexBuilder.grams3(w).toIndexedSeq), Seq("term"))
       else handle.lexicon
     base
       .filter(abs(length($"term") - lit(w.length)) <= maxDist)
@@ -367,18 +342,16 @@ object Searcher {
         })
     }
 
-  /** Executor-side tombstone probe for one segment: loads only the range
-    * sidecars the segment's manifest covers (each bounded by segSize
-    * entries), opened through the session's Hadoop conf — no tombstone set
-    * ever rides the driver or a closure. None: the index has no deletes. */
-  private def tombstoneProbe(deletes: Option[(Map[Int, Seq[Long]], SerializableConfiguration)],
+  /** Executor-side tombstone probe for one segment: loads only the
+    * tombstone files the segment's record line lists (the handle's), opened
+    * through the session's Hadoop conf — no tombstone set ever rides the
+    * driver or a closure. None: the index has no deletes. */
+  private def tombstoneProbe(deletes: Option[(Map[Int, SegmentManifest], SerializableConfiguration)],
                              indexDir: String, segId: Int): Long => Boolean =
-    deletes.flatMap { case (delRanges, conf) =>
-      delRanges.get(segId).map { rids =>
-        val fs = FileSystem.get(new java.net.URI(indexDir), conf.value)
-        val tomb: Array[Long] = rids.iterator
-          .flatMap(graft.build.Deletes.readRange(fs, indexDir, _)).toArray
-        java.util.Arrays.sort(tomb)
+    deletes.flatMap { case (lines, conf) =>
+      lines.get(segId).map { m =>
+        val tomb = graft.build.Deletes.ofLine(
+          FileSystem.get(new java.net.URI(indexDir), conf.value), indexDir, m)
         (id: Long) => java.util.Arrays.binarySearch(tomb, id) >= 0
       }
     }.getOrElse(Kernel.NoDeletes)
@@ -422,7 +395,8 @@ object Searcher {
         StructType(fileSchema.filter(_.name != "cf")),
         Seq(sources.In("term", reads.values.flatten.toSet.toArray[Any])),
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
-    val deletes = Some(fs.defaultHandle.delRanges).filter(_.nonEmpty)
+    val deletes = Some(fs.defaultHandle.manifests.filter(_.deletes.nonEmpty)
+        .map(m => m.segId -> m).toMap).filter(_.nonEmpty)
       .map(_ -> new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val dirLocal = fs.defaultHandle.indexDir
     implicit val tag: scala.reflect.ClassTag[T] = implicitly[org.apache.spark.sql.Encoder[T]].clsTag
@@ -807,15 +781,15 @@ object Searcher {
     val live =
       if (!handle.hasDeletes) ids
       else {
-        // only the requested ids' ranges are consulted (driver-side, but
-        // bounded by |ids| sidecar files, not by the tombstone count)
+        // only the tombstones of the segments whose docId ranges hold the
+        // requested ids are read (driver-side, but bounded by those
+        // segments' files, not by the tombstone count)
         val fs = FileSystem.get(new java.net.URI(handle.indexDir),
           spark.sparkContext.hadoopConfiguration)
-        val byRange = ids.groupBy(_ / handle.segSize)
-        byRange.iterator.flatMap { case (rid, rangeIds) =>
-          val tomb = graft.build.Deletes.readRange(fs, handle.indexDir, rid)
-          rangeIds.filter(id => java.util.Arrays.binarySearch(tomb, id) < 0)
-        }.toSeq
+        val tomb = handle.manifests
+          .filter(m => m.deletes.nonEmpty && ids.exists(id => id >= m.docLo && id <= m.docHi))
+          .flatMap(graft.build.Deletes.ofLine(fs, handle.indexDir, _)).toSet
+        ids.filterNot(tomb)
       }
     handle.docstats
       .select("docId", "repo", "path", "commit", "lang", "sha", "rawLen")

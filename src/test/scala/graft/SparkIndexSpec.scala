@@ -171,7 +171,7 @@ class SparkIndexSpec extends AnyFunSuite {
       "s17" -> "w0001~1")                   // short term: full-scan fallback
     assertSearchesMatchOracle(dir, docs, queries)
     // the gram sidecar exists and the long-term fuzzy actually matches
-    assert(Searcher.open(spark, dir).lexgrams.nonEmpty)
+    assert(!Searcher.open(spark, dir).lexgrams.isEmpty)
     val h = Searcher.open(spark, dir)
     assert(Searcher.search(spark, h, "needla~1", 5).count() > 0)
   }
@@ -276,6 +276,77 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(key(dirB) == key(dirA))
     assert(IndexBuilder.readStats(fs, dirB) == IndexBuilder.readStats(fsOf(dirA), dirA))
     assertSearchesMatchOracle(dirB, refDocs(fixtureRows), TestFixtures.querySet.take(5))
+  }
+
+  test("merges refuse an unfinished multi-batch build; the rerun finishes it") {
+    import spark.implicits._
+    val corpus = spark.createDataset(fixtureRows)
+    val cfg = IndexConfig(segSize = 2, segmentsPerBatch = 1)
+    val dir = SparkTestBase.tmpDir("unfinmerge")
+    val ref = SparkTestBase.tmpDir("unfinmerge-ref")
+    IndexBuilder.build(spark, corpus, dir, cfg)
+    IndexBuilder.build(spark, corpus, ref, cfg)
+    // the state after batch 1 of 3: the record lists segment 0, no lexicon
+    val fs = fsOf(dir)
+    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
+    IndexBuilder.commitRecord(fs, dir, st, live.take(1))
+    Seq(IndexBuilder.lexiconDir(dir), IndexBuilder.lexgramsDir(dir),
+      s"${IndexBuilder.segmentsDir(dir)}/segId=1", s"${IndexBuilder.docstatsDir(dir)}/segId=1",
+      s"${IndexBuilder.segmentsDir(dir)}/segId=2", s"${IndexBuilder.docstatsDir(dir)}/segId=2")
+      .foreach(d => fs.delete(new Path(d), true))
+    def files(): Set[(String, Long)] = {
+      val it = fs.listFiles(new Path(dir), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => f.getPath.toString -> f.getModificationTime).toSet
+    }
+    val before = files()
+    // a merge would mint segId 1, the id the rerun builds next
+    Seq[(String, () => Any)](
+      "mergeGroup" -> (() => Merger.mergeGroup(spark, dir, Seq(0))),
+      "mergeSmall" -> (() => Merger.mergeSmall(spark, dir, smallDocs = 3)),
+      "compact" -> (() => Merger.compact(spark, dir))).foreach { case (what, merge) =>
+      val e = intercept[IllegalStateException](merge())
+      assert(e.getMessage.contains("rerun IndexBuilder.build"), s"$what: ${e.getMessage}")
+    }
+    assert(files() == before, "a refused merge changed the index")
+    val report = IndexBuilder.build(spark, corpus, dir, cfg)
+    assert(report.builtSegments == Seq(1, 2))
+    def key(d: String) = IndexBuilder.readManifests(fsOf(d), d)
+      .map(m => (m.segId, m.digest, m.postingRows, m.docCount))
+    assert(key(dir) == key(ref))
+    assertSearchesMatchOracle(dir, refDocs(fixtureRows), TestFixtures.querySet.take(5))
+  }
+
+  test("a handle answers as at open after later deletes and upserts") {
+    import spark.implicits._
+    val rows = (0 until 200).map { i =>
+      CorpusRow("r0", f"f$i%04d.txt", f"$i%040x", "text",
+        graft.corpus.SynthCorpus.doc(47L, i.toLong))
+    }
+    val dir = SparkTestBase.tmpDir("pinned")
+    val cfg = IndexConfig(segSize = 50)
+    IndexBuilder.build(spark, spark.createDataset(rows), dir, cfg)
+    // segment 1 (docIds 50-99) has a tombstone when h1 opens
+    graft.build.Deletes.add(spark, dir, Seq(60L))
+    val h1 = Searcher.open(spark, dir)
+    val queries = Seq("w0001", "w0002 OR w0003", "*")
+    def answers(h: Searcher.IndexHandle) =
+      queries.map(q => Searcher.search(spark, h, q, 300).collect().toSeq)
+    val atOpen = answers(h1)
+    val victim = atOpen.head.map(_.docId).find(id => id >= 50 && id < 100).get
+    assert(!atOpen.last.map(_.docId).contains(60L))
+    // a later delete and a later upsert, both in segment 1
+    graft.build.Deletes.add(spark, dir, Seq(victim))
+    assert(answers(h1) == atOpen, "a later delete changed an open handle's answers")
+    val replaced = rows(70).copy(content = rows(70).content + " qqfresh")
+    graft.streaming.StreamingIngest.upsert(spark, Seq(replaced).toDS(), dir, cfg)
+    assert(answers(h1) == atOpen, "a later upsert changed an open handle's answers")
+    assert(Searcher.search(spark, h1, "qqfresh", 10).count() == 0)
+    // a fresh open sees both
+    val h2 = Searcher.open(spark, dir)
+    val all = Searcher.search(spark, h2, "*", 300).collect().map(_.docId).toSet
+    assert(!all(60L) && !all(victim) && !all(70L) && all.size == 200 - 3 + 1)
+    assert(Searcher.search(spark, h2, "qqfresh", 10).collect().map(_.docId).toSeq == Seq(200L))
   }
 
   test("deletion lifecycle: query-time tombstones, purge at compact, stats refresh") {
@@ -845,14 +916,19 @@ class SparkIndexSpec extends AnyFunSuite {
     val (four, sixteen) = (openCalls(dir), openCalls(built(20)))
     info(s"(listStatus, getFileStatus, open) calls: 4 segments $four, 16 segments $sixteen")
     assert(four == sixteen)
+    // the record names every file open needs: it lists no dir
+    assert(four._1 == 0, s"open listed $four")
+    // tombstones in two segments: the kernels read their lines' files
+    graft.build.Deletes.add(spark, dir, Seq(1L, 200L))
+    val deleted = openCalls(dir)
+    info(s"(listStatus, getFileStatus, open) calls: no tombstones $four, tombstones $deleted")
+    assert(deleted == four)
     // three appends: the delta lexicon reads their segments' recorded files
     (0 until 3).foreach { k =>
       graft.streaming.StreamingIngest.append(spark, CorpusSource.synth(spark, 20, 50L + k, 2),
         dir, IndexConfig(segSize = 80))
     }
-    val covered = IndexBuilder.lexiconCovers(fsOf(dir), dir).get
-    assert(IndexBuilder.lexiconDeltaSegments(IndexBuilder.readManifests(fsOf(dir), dir),
-      covered).size == 3)
+    assert(IndexBuilder.readManifests(fsOf(dir), dir).count(!_.inLexicon) == 3)
     val appended = openCalls(dir)
     info(s"(listStatus, getFileStatus, open) calls: 0 delta segments $four, 3 delta $appended")
     assert(appended == four)
@@ -875,7 +951,9 @@ class SparkIndexSpec extends AnyFunSuite {
     assert(hits("w0002", 10).nonEmpty)
     graft.build.Deletes.byQuery(spark, uri, "w0002")
     assert(hits("w0002", 10).isEmpty)
-    assert(hits("w0001", 10).forall(id => !graft.build.Deletes.read(spark, dir).contains(id)))
+    // the record is read through the scheme that wrote it: its checksum
+    // file, from the build through the plain path, is stale
+    assert(hits("w0001", 10).forall(id => !graft.build.Deletes.read(spark, uri).contains(id)))
   }
 
   test("open reads no segment file: garbage segment files still open colocated") {

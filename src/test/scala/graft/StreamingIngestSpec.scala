@@ -43,12 +43,9 @@ class StreamingIngestSpec extends AnyFunSuite {
   private def fsOf(dir: String) = org.apache.hadoop.fs.FileSystem.get(
     new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
-  /** the delta lexicon: live segments the base does not cover */
-  private def deltaManifests(dir: String): Seq[graft.model.SegmentManifest] = {
-    val fs = fsOf(dir)
-    IndexBuilder.lexiconDeltaSegments(IndexBuilder.readManifests(fs, dir),
-      IndexBuilder.lexiconCovers(fs, dir).getOrElse(Set.empty))
-  }
+  /** the delta lexicon: live segments outside the lexicon */
+  private def deltaManifests(dir: String): Seq[graft.model.SegmentManifest] =
+    IndexBuilder.readManifests(fsOf(dir), dir).filterNot(_.inLexicon)
   private def deltaSegs(dir: String): Seq[Int] = deltaManifests(dir).map(_.segId)
 
   private def lexSet(df: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Long)] = {
@@ -60,6 +57,33 @@ class StreamingIngestSpec extends AnyFunSuite {
   private def gramRows(dir: String): Seq[(String, String)] = {
     import spark.implicits._
     spark.read.parquet(IndexBuilder.lexgramsDir(dir)).as[(String, String)].collect().toSeq
+  }
+
+  /** a copy of the index at `dir` */
+  private def copyOf(dir: String, name: String): String = {
+    val to = SparkTestBase.tmpDir(name) + "/ix"
+    org.apache.hadoop.fs.FileUtil.copy(fsOf(dir), new org.apache.hadoop.fs.Path(dir), fsOf(to),
+      new org.apache.hadoop.fs.Path(to), false, true, spark.sparkContext.hadoopConfiguration)
+    to
+  }
+
+  /** Runs `op` on a copy of the index at `dir` to count its renames, then
+    * on `dir` through faultfs with rename `pick(count)` failing, and
+    * returns the failure: a crash at that step. */
+  private def crashAt(dir: String, pick: Long => Long)(op: String => Any): Throwable = {
+    FaultyFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val probe = copyOf(dir, "crash-probe")
+    val renames = FaultyFileSystem.renamesDuring(op(FaultyFileSystem.uri(probe)))
+    FaultyFileSystem.failingRename(pick(renames))(op(FaultyFileSystem.uri(dir)))
+  }
+
+  /** What a reader of the index at `dir` sees: the live segments, the
+    * counts, the tombstones, the lexicon and the answers to `queries`. */
+  private def state(dir: String, queries: Seq[String]) = {
+    val h = Searcher.open(spark, dir)
+    (h.manifests.map(m => (m.segId, m.digest, m.docCount, m.inLexicon)),
+      (h.stats.numDocs, h.stats.totalFieldLen), graft.build.Deletes.read(spark, dir),
+      lexSet(h.lexicon), queries.map(q => Searcher.search(spark, h, q, 10).collect().toSeq))
   }
 
   /** every file under `dir` with its length and modification time */
@@ -292,14 +316,10 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(deltaSegs(dir).isEmpty)
   }
 
-  test("crash between the gram promote and the base promote: reopen sees the pre-fold view") {
+  test("fold crash (faultfs): reopen sees the pre-fold view, a rerun converges") {
     import spark.implicits._
     val dir = tailIndex("lexcrash", 29L)
-    val fs = fsOf(dir)
-    val lexDir = new org.apache.hadoop.fs.Path(IndexBuilder.lexiconDir(dir))
-    val saved = new org.apache.hadoop.fs.Path(SparkTestBase.tmpDir("lexcrash-base"), "lexicon")
-    org.apache.hadoop.fs.FileUtil.copy(fs, lexDir, fs, saved, false, true,
-      spark.sparkContext.hadoopConfiguration)
+    val ref = copyOf(dir, "lexcrash-ref")
     val terms = spark.read.parquet(IndexBuilder.segmentsDir(dir)).select($"term")
       .filter($"term" >= graft.search.Q.RealTermMin).distinct().as[String].collect().toSet
     val multis = Seq(QPrefix("w00"), QWildcard("*000*"), QFuzzy("needla", 1),
@@ -310,24 +330,107 @@ class StreamingIngestSpec extends AnyFunSuite {
     }
     val pre = view()
     assert(deltaSegs(dir) == Seq(2, 3, 4))
-    assert(IndexBuilder.foldLexiconDeltas(spark, dir))
-    val folded = (lexSet(spark.read.parquet(lexDir.toString)), gramRows(dir).toSet)
-    assert(view() == pre)
+    val fold = (d: String) => IndexBuilder.foldLexiconDeltas(spark, d)
+    // a crash at the record rename, and one at the move of the last gram
+    // file before it: the moved files are named by no record
+    Seq[(String, Long => Long)]("stats.json" -> (n => n), "lexgrams" -> (n => n - 1))
+      .foreach { case (at, pick) =>
+        val e = crashAt(dir, pick)(fold)
+        assert(e.getMessage.contains("injected fault") && e.getMessage.contains(at), e)
+        assert(deltaSegs(dir) == Seq(2, 3, 4))
+        assert(view() == pre, s"reopen after a fold crashed at $at differs from the pre-fold view")
+      }
 
-    // the state a crash after the gram promote and before the base promote
-    // leaves: the new gram sidecar next to the old base and its marker
-    fs.delete(lexDir, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, saved, fs, lexDir, false, true,
-      spark.sparkContext.hadoopConfiguration)
-    assert(deltaSegs(dir) == Seq(2, 3, 4))
-    assert(view() == pre, "reopen after a crashed fold differs from the pre-fold view")
-
-    // a rerun converges to the same base and grams
-    assert(IndexBuilder.foldLexiconDeltas(spark, dir))
-    assert((lexSet(spark.read.parquet(lexDir.toString)), gramRows(dir).toSet) == folded)
-    assert(gramRows(dir).size == folded._2.size, "rerun left duplicate gram rows")
+    // a rerun converges to an uninterrupted fold; gc leaves only the files
+    // the record names
+    assert(fold(dir) && fold(ref))
     assert(deltaSegs(dir).isEmpty)
+    def tables(d: String) = (lexSet(spark.read.parquet(IndexBuilder.lexiconDir(d))), gramRows(d))
+    assert(tables(dir)._1 == tables(ref)._1)
+    assert(tables(dir)._2.sorted == tables(ref)._2.sorted, "rerun left other gram rows")
     assert(view() == pre)
+  }
+
+  test("upsert failed at its record rename: the old version stays live once") {
+    import spark.implicits._
+    val cfg = IndexConfig(segSize = 16)
+    val dir = SparkTestBase.tmpDir("upcrash") + "/ix"
+    val rows = mkRows(53L, 0, 40)
+    IndexBuilder.build(spark, spark.createDataset(rows), dir, cfg)
+    val ref = copyOf(dir, "upcrash-ref")
+    val victim = rows(21)
+    val updated = Seq(victim.copy(content = victim.content + " qqfresh"))
+    val docs = expectedDocs(Seq(rows), 16)
+    val oldId = rows.sortBy(r => (r.repo, r.path, r.commit)).indexOf(victim).toLong
+    val queries = Seq("w0000", "w0001 OR w0003", "qqfresh", "*")
+    val upsert = (d: String) => StreamingIngest.upsert(spark, spark.createDataset(updated), d, cfg)
+
+    val e = crashAt(dir, identity)(upsert)
+    assert(e.getMessage.contains("injected fault") && e.getMessage.contains("stats.json"), e)
+    // reopen: the pre-upsert index, rank- and score-identical to RefModel
+    val h = Searcher.open(spark, dir)
+    val oracle = new RefModel(docs)
+    queries.foreach { q =>
+      val hits = Searcher.search(spark, h, q, 10).collect().toSeq
+      val want = oracle.search(q, 10)
+      assert(hits.map(_.docId) == want.map(_._1), s"'$q': $hits vs $want")
+      hits.zip(want).foreach { case (a, (_, s)) => assert(math.abs(a.score - s) <= 1e-6, q) }
+    }
+    // the victim's key is live exactly once, as its old docId
+    val keyIds = h.docstats.filter($"repo" === victim.repo && $"path" === victim.path &&
+      $"commit" === victim.commit).select($"docId").as[Long].collect().toSet
+    assert(keyIds -- graft.build.Deletes.read(spark, dir) == Set(oldId))
+
+    // the rerun converges to an uninterrupted upsert
+    upsert(dir)
+    upsert(ref)
+    assert(state(dir, queries) == state(ref, queries))
+    assert(graft.build.Deletes.read(spark, dir) == Set(oldId))
+    assert(Searcher.search(spark, Searcher.open(spark, dir), "qqfresh", 10).count() == 1)
+  }
+
+  test("a Deletes.add over several segments is all or nothing") {
+    val dir = tailIndex("delcrash", 59L)
+    val live = IndexBuilder.readManifests(fsOf(dir), dir)
+    val ids = live.map(m => m.docLo + 1) :+ 9999L // 9999: no live segment holds it
+    assert(live.size == 5)
+    val queries = Seq("w0000", "w0001 OR w0003", "*")
+    val pre = state(dir, queries)
+    val add = (d: String) => graft.build.Deletes.add(spark, d, ids)
+    // the tombstone files are written under fresh names: the record rename
+    // is the one rename
+    assert(FaultyFileSystem.renamesDuring(add(FaultyFileSystem.uri(copyOf(dir, "delcount")))) == 1)
+    val e = crashAt(dir, identity)(add)
+    assert(e.getMessage.contains("stats.json"), e)
+    assert(state(dir, queries) == pre, "a crashed delete applied some of its ids")
+    add(dir)
+    assert(graft.build.Deletes.read(spark, dir) == ids.init.toSet)
+    // each line lists one file; the rerun wrote no second one
+    val after = IndexBuilder.readManifests(fsOf(dir), dir)
+    assert(after.forall(_.deletes.size == 1), after.map(_.deletes))
+    add(dir) // every id listed already: nothing written, nothing committed
+    assert(IndexBuilder.readManifests(fsOf(dir), dir) == after)
+  }
+
+  test("byQuery and merges failed at their record rename reopen to the pre-state") {
+    val dir = tailIndex("opcrash", 61L)
+    assert(IndexBuilder.foldLexiconDeltas(spark, dir))
+    val ref = copyOf(dir, "opcrash-ref")
+    val queries = Seq("w0000", "w0001 OR w0003", "\"needle alpha beta\"", "*")
+    Seq[(String, String => Any)](
+      "byQuery" -> (d => graft.build.Deletes.byQuery(spark, d, "w0002")),
+      "purging mergeGroup" -> (d => graft.merge.Merger.mergeGroup(spark, d, Seq(2, 3), Set(3L))),
+      "mergeSmall" -> (d => graft.merge.Merger.mergeSmall(spark, d))
+    ).foreach { case (what, op) =>
+      val pre = state(dir, queries)
+      val e = crashAt(dir, identity)(op)
+      assert(e.getMessage.contains("stats.json"), s"$what: $e")
+      assert(state(dir, queries) == pre, s"$what: reopen after the crash differs from the pre-state")
+      op(dir)
+      op(ref)
+      assert(state(dir, queries) == state(ref, queries), s"$what: the rerun did not converge")
+    }
+    assert(IndexBuilder.readManifests(fsOf(dir), dir).map(_.segId) == Seq(0, 1, 6))
   }
 
   test("tail-only terms expand before the fold, after it and after a full rebuild") {
@@ -362,20 +465,6 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(view() == beforeFold)
     IndexBuilder.writeLexicon(spark, dir)
     assert(view() == beforeFold)
-  }
-
-  test("a manifest mixing covered and uncovered covers fails open, naming the segment") {
-    import spark.implicits._
-    val dir = SparkTestBase.tmpDir("mixedcov")
-    IndexBuilder.build(spark, spark.createDataset(mkRows(37L, 0, 40)), dir,
-      IndexConfig(segSize = 16))
-    val fs = fsOf(dir)
-    val (st, live) = IndexBuilder.readCurrentRecord(fs, dir)
-    val m2 = live.find(_.segId == 2).get
-    IndexBuilder.commitRecord(fs, dir, st,
-      live.filterNot(_.segId == 2) :+ m2.copy(segId = 7, covers = Seq(2, 9)))
-    val e = intercept[IllegalStateException](Searcher.open(spark, dir))
-    assert(e.getMessage.contains("segment 7"), e.getMessage)
   }
 
   test("writers refuse an index in another on-disk format and write nothing") {
@@ -593,7 +682,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       (b.digest, b.postingRows, b.postingBytes, b.docCount, b.rawLenSum))
     assert(a.docCount == 24 && a.source == s"merge(${small.mkString(",")})")
     def docstats(dir: String) =
-      IndexBuilder.readTable(spark, IndexBuilder.DocstatsSchema, IndexBuilder.docstatsDir(dir))
+      spark.read.schema(IndexBuilder.DocstatsSchema).parquet(IndexBuilder.docstatsDir(dir))
         .filter($"segId" === cog).drop("segId").collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
     assert(docstats(tailDir) == docstats(cogDir))
     assert(docstats(tailDir).size == 24)
